@@ -258,38 +258,6 @@ _RENAMES = {
     "yesterday": "yesterday__",
     "now": "current_timestamp",
     "rand": "rand",
-    # cityHash64 is typed-exact through SQL text (functions/cityhash.py
-    # — the v1.0.2 algorithm the reference vendors); combine =
-    # Hash128to64 per FunctionsHashing.h:621
-    "cityhash64": "cityhash64__",
-    # sipHash64 is typed-exact through SQL text: rewritten to
-    # ch_siphash64_typed(CAST(x AS STRING), typeof(x)) with multi-arg
-    # folding through ch_siphash64_combine (session.py registers both;
-    # functions/siphash.py is paper-vector validated)
-    "siphash64": "siphash64__",
-    # xxHash64 is EXACT XXH64 seed-0 through SQL text (round 3 —
-    # previously it silently hit Spark's builtin xxhash64: seed 42
-    # over Spark's row encoding, different values)
-    "xxhash64": "xxhash64ex__",
-    # round-5: the whole FunctionsHashing.h long tail is typed-exact
-    # through SQL text too (session.py registers ch_<fam>_typed +
-    # per-rule combines; functions/hashes_extra2.py / hashes_extra3.py)
-    "farmhash64": "farmhash64__",
-    "farmfingerprint64": "farmfingerprint64__",
-    "metrohash64": "metrohash64__",
-    "wyhash64": "wyhash64__",
-    "xxh3": "xxh3__",
-    "gccmurmurhash": "gccmurmurhash__",
-    "kafkamurmurhash": "kafkamurmurhash__",
-    "murmurhash2_32": "murmurhash2_32__",
-    "murmurhash3_32": "murmurhash3_32__",
-    "xxhash32": "xxhash32__",
-    "javahash": "javahash__",
-    "hivehash": "hivehash__",
-    "urlhash": "urlhash__",
-    "javahashutf16le": "javahashutf16le__",
-    # halfMD5 is exact through SQL text (pure-SQL md5+hex body)
-    "halfmd5": "halfmd5ex__",
     "tostartofday": "tostartofday__",
     "tostartofmonth": "tostartofmonth__",
     "tostartofweek": "tostartofweek__",
@@ -1413,6 +1381,8 @@ def _quantile_exact_tokens(x: list[str], p: list[str], fname: str) -> list[str]:
 
 
 def _rewrite_functions(toks: list[str]) -> list[str]:
+    from clickhouse_25_5_3_75_stable_spark.functions import hashing
+
     out: list[str] = []
     i = 0
     while i < len(toks):
@@ -1652,6 +1622,18 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
             i = close_i + 1
             continue
 
+        if low in hashing.SQL_NAMES:
+            # every exact FunctionsHashing.h name: typed SQL text from the
+            # hash-family table (functions/hashing.py)
+            try:
+                txt = hashing.sql_expr(low, [_join_tokens(a) for a in args])
+            except ValueError as e:
+                raise ChSqlError(str(e)) from None
+            if txt is not None:
+                out.append(txt)
+                i = close_i + 1
+                continue
+
         new = _RENAMES.get(low)
         if new is None:
             out += [tk, "("]
@@ -1677,75 +1659,6 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
             out += ["(", _len_fn(args[0]), "(", *args[0], ")", ">", "0", ")"]
         elif new == "length__":
             out += [_len_fn(args[0]), "(", *args[0], ")"]
-        elif new == "urlhash__":
-            # URLHash(url): string-only — no typed dispatch needed
-            out += ["ch_urlhash", "(", *args[0], ")"]
-        elif new == "javahashutf16le__":
-            out += ["ch_javahashutf16le", "(", *args[0], ")"]
-        elif new in ("siphash64__", "cityhash64__", "xxhash64ex__",
-                     "halfmd5ex__", "farmhash64__", "farmfingerprint64__",
-                     "metrohash64__", "wyhash64__", "xxh3__",
-                     "gccmurmurhash__", "kafkamurmurhash__",
-                     "murmurhash2_32__", "murmurhash3_32__", "xxhash32__",
-                     "javahash__", "hivehash__"):
-            # typed-exact sipHash64/cityHash64 through SQL text:
-            # typeof() of the ORIGINAL expression picks the reference's
-            # typed semantics inside ch_<fn>_typed (session.py DDL);
-            # multi-arg left-folds through the reference's combine
-            # (FunctionsHashing.h:195 sip / :621 city)
-            base = {
-                "siphash64__": "ch_siphash64",
-                "cityhash64__": "ch_cityhash64",
-                "xxhash64ex__": "ch_xxhash64",
-                "halfmd5ex__": "ch_halfmd5",
-                "farmhash64__": "ch_farmhash64",
-                "farmfingerprint64__": "ch_farmfingerprint64",
-                "metrohash64__": "ch_metrohash64",
-                "wyhash64__": "ch_wyhash64",
-                "xxh3__": "ch_xxh3",
-                "gccmurmurhash__": "ch_gccmurmurhash",
-                "kafkamurmurhash__": "ch_kafkamurmurhash",
-                "murmurhash2_32__": "ch_murmurhash2_32",
-                "murmurhash3_32__": "ch_murmurhash3_32",
-                "xxhash32__": "ch_xxhash32",
-                "javahash__": "ch_javahash",
-                "hivehash__": "ch_hivehash",
-            }[new]
-            # per-family combine rule (FunctionsHashing.h): Hash128to64
-            # for city/xx64/farm*/metro/xxh3; the family's own keyed
-            # fold for sip/halfmd5/wy; intHash64^/intHash32^ for gcc
-            # and the 32-bit family; javaHash/hiveHash do not combine
-            combine = {
-                "ch_siphash64": "ch_siphash64_combine",
-                "ch_cityhash64": "ch_cityhash64_combine",
-                "ch_xxhash64": "ch_xxhash64_combine",
-                "ch_halfmd5": "ch_halfmd5_combine",
-                "ch_farmhash64": "ch_cityhash64_combine",
-                "ch_farmfingerprint64": "ch_cityhash64_combine",
-                "ch_metrohash64": "ch_cityhash64_combine",
-                "ch_xxh3": "ch_cityhash64_combine",
-                "ch_wyhash64": "ch_wyhash64_combine",
-                "ch_gccmurmurhash": "ch_int64xor_combine",
-                "ch_kafkamurmurhash": "ch_int32xor_combine",
-                "ch_murmurhash2_32": "ch_int32xor_combine",
-                "ch_murmurhash3_32": "ch_int32xor_combine",
-                "ch_xxhash32": "ch_int32xor_combine",
-            }.get(base)
-            if len(args) > 1 and combine is None:
-                raise ChSqlError(
-                    f"{new[:-2]} is not combineable for multiple arguments "
-                    "(reference NOT_IMPLEMENTED)"
-                )
-
-            def _typed_call(a, _b=base):
-                return [f"{_b}_typed", "(", "CAST", "(", "(", *a, ")",
-                        "AS", "STRING", ")", ",", "typeof", "(", "(", *a, ")",
-                        ")", ")"]
-
-            acc = _typed_call(args[0])
-            for a in args[1:]:
-                acc = [combine, "(", *acc, ",", *_typed_call(a), ")"]
-            out += acc
         elif new == "div__":
             # CH intDiv TRUNCATES toward zero (intDiv(-7,2) = -3):
             # DivisionUtils.h checkedDivision is plain C++ `a / b`
@@ -2896,7 +2809,11 @@ def ch_sql_to_spark(sql: str) -> str:
     toks = _rewrite_ternary(toks)
     toks = _rewrite_functions(toks)
     toks = _rewrite_tuple_access(toks)
-    # cosmetic join
+    return _join_tokens(toks)
+
+
+def _join_tokens(toks: list[str]) -> str:
+    """Cosmetic join: no space before , ) . or after ( ."""
     out = []
     for k, tk in enumerate(toks):
         if k and tk not in (",", ")", ".") and toks[k - 1] not in ("(", "."):

@@ -29,21 +29,13 @@ reference's ImplCityHash64 sets use_int_hash_for_pods=TRUE
 floats) hash via ``intHash64(bit_cast<UInt64>(v) ^ salt)`` — the
 MurmurHash3 finalizer — with ZERO-extension for narrow types
 (base/bit_cast.h), and only String columns go through CityHash64 of
-the bytes. NULL hashes to NULL (FunctionsHashing.h:869). All of that
-is mirrored in cityhash64_auto below.
-
-Zero driver-side work: hashing runs as Arrow-batched pandas UDFs over
-Spark-side-prepared values, so results never depend on batch
-composition and the operator scales with executor count.
+the bytes. NULL hashes to NULL (FunctionsHashing.h:869). The Spark
+surface of all of that is the cityHash64 row of functions/hashing.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 K0 = 0xC3A5C85C97CB3127
 K1 = 0xB492B66FBE98F273
@@ -419,210 +411,3 @@ def _cityhash64_np(data: list[bytes]) -> np.ndarray:
         )
 
     return out
-
-
-# ---------------------------------------------------------------------------
-# Spark surface: binary-input pandas UDF + typed Column/SQL entry
-# points (mirrors functions/siphash.py — the typed encoding is shared).
-# ---------------------------------------------------------------------------
-
-_UDF_CACHE: dict[str, object] = {}
-
-
-def _udf():
-    """Binary-input CityHash64 pandas UDF (the STRING path — the
-    reference applies CityHash64 to string bytes only; POD columns go
-    through _int_udf below). NULL propagates NULL (FunctionsHashing.h:
-    869 'someHash(NULL) is NULL')."""
-    if "binary" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _city_binary(s: pd.Series) -> pd.Series:
-            mask = [v is None for v in s]
-            data = [b"" if v is None else bytes(v) for v in s]
-            out = pd.array(_cityhash64_np(data).astype(np.int64), dtype="Int64")
-            out[np.array(mask, dtype=bool)] = pd.NA
-            return pd.Series(out, dtype="Int64")
-
-        _UDF_CACHE["binary"] = _city_binary
-    return _UDF_CACHE["binary"]
-
-
-def _int_udf():
-    """POD path: value arrives as the zero-extended UInt64 bit pattern
-    (masking happens Spark-side per width); the UDF applies the
-    reference's intHash64(x ^ salt) finalizer. Vectorized, NULL-safe."""
-    if "int" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _city_int(s: pd.Series) -> pd.Series:
-            arr = pd.array(s, dtype="Int64")
-            mask = arr.isna()
-            vals = arr.fillna(0).to_numpy(dtype=np.int64).astype(np.uint64)
-            out = pd.array(_np_inthash64(vals).astype(np.int64), dtype="Int64")
-            out[np.asarray(mask)] = pd.NA
-            return pd.Series(out, dtype="Int64")
-
-        _UDF_CACHE["int"] = _city_int
-    return _UDF_CACHE["int"]
-
-
-def _f64_udf():
-    """Float64 POD path: bit_cast = the raw IEEE-754 bits (the UDF sees
-    the double, so the view is exact; Spark SQL has no doubleToLongBits
-    expression). NULL (None→NaN in pandas) is handled by the
-    expression-level isNull wrap in cityhash64_auto."""
-    if "f64" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _city_f64(s: pd.Series) -> pd.Series:
-            vals = s.to_numpy(dtype=np.float64).view(np.uint64)
-            return pd.Series(_np_inthash64(vals).astype(np.int64))
-
-        _UDF_CACHE["f64"] = _city_f64
-    return _UDF_CACHE["f64"]
-
-
-def _f32_udf():
-    """Float32 POD path: 4-byte IEEE bits, zero-extended to UInt64."""
-    if "f32" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _city_f32(s: pd.Series) -> pd.Series:
-            vals = (
-                s.to_numpy(dtype=np.float32).view(np.uint32).astype(np.uint64)
-            )
-            return pd.Series(_np_inthash64(vals).astype(np.int64))
-
-        _UDF_CACHE["f32"] = _city_f32
-    return _UDF_CACHE["f32"]
-
-
-def _combine_udf():
-    """cityHash64(a, b) combine = Hash128to64(uint128(h1, h2))
-    (FunctionsHashing.h:621). Pure uint64 math — vectorized numpy,
-    NULL propagates."""
-    if "combine" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _city_combine(h1: pd.Series, h2: pd.Series) -> pd.Series:
-            a1 = pd.array(h1, dtype="Int64")
-            a2 = pd.array(h2, dtype="Int64")
-            mask = a1.isna() | a2.isna()
-            a = a1.fillna(0).to_numpy(dtype=np.int64).astype(np.uint64)
-            b = a2.fillna(0).to_numpy(dtype=np.int64).astype(np.uint64)
-            out = pd.array(_np_hash128to64(a, b).astype(np.int64), dtype="Int64")
-            out[np.asarray(mask)] = pd.NA
-            return pd.Series(out, dtype="Int64")
-
-        _UDF_CACHE["combine"] = _city_combine
-    return _UDF_CACHE["combine"]
-
-
-def pod_bits(col: Column, sign_extend: bool) -> Column:
-    """The UInt64 bit pattern of a POD column per typeof, shared by
-    every intHash64-style path (review: three drifting copies existed).
-    Two widening rules exist in the reference and they DIFFER:
-
-    - ``sign_extend=False``: bit_cast semantics (base/bit_cast.h —
-      ZERO-extension; Int32(-7) → 0xFFFFFFF9). Used by FunctionAnyHash
-      use_int_hash_for_pods (cityHash64 on POD columns).
-    - ``sign_extend=True``: plain C++ integral conversion (SIGN-
-      extension; Int32(-7) → 0xFFFF...F9). Used by FunctionIntHash —
-      the SQL intHash64/intHash32 functions (FunctionsHashing.h:753
-      ``Impl::apply(vec_from[i])``).
-
-    Date is UInt16 days and DateTime UInt32 seconds (unsigned — both
-    rules agree); boolean is 0/1."""
-    s = col.cast("string")
-    t = F.call_function("typeof", col)
-    b = s.cast("bigint")
-    if sign_extend:
-        i32, i16, i8 = b, b, b  # bigint cast already sign-extends
-    else:
-        i32 = b.bitwiseAND(F.lit(0xFFFFFFFF))
-        i16 = b.bitwiseAND(F.lit(0xFFFF))
-        i8 = b.bitwiseAND(F.lit(0xFF))
-    return (
-        F.when(t == "bigint", b)
-        .when(t == "int", i32)
-        .when(t == "smallint", i16)
-        .when(t == "tinyint", i8)
-        .when(t == "boolean", s.cast("boolean").cast("bigint"))
-        .when(
-            t == "date",
-            F.datediff(s.cast("date"), F.lit("1970-01-01")).cast("bigint"),
-        )
-        .when(
-            t == "timestamp",
-            F.unix_timestamp(s.cast("timestamp")).bitwiseAND(F.lit(0xFFFFFFFF)),
-        )
-        .otherwise(b)
-    )
-
-
-def cityhash64_auto(col) -> Column:
-    """cityHash64 with the reference's exact typed semantics
-    (FunctionsHashing.h executeIntType): String → CityHash64 of the
-    UTF-8 bytes; every POD type → intHash64 of the ZERO-extended
-    UInt64 bit pattern (bit_cast semantics — Int32(-7) widens to
-    0xFFFFFFF9, not sign-extended); Float64/32 → intHash64 of the IEEE
-    bits; NULL → NULL. Decimal/other types fall back to the string
-    rendering (documented divergence)."""
-    col = F.col(col) if isinstance(col, str) else col
-    s = col.cast("string")
-    t = F.call_function("typeof", col)
-    h = (
-        F.when(t == "string", _udf()(F.encode(s, "UTF-8")))
-        .when(t == "double", _f64_udf()(s.cast("double")))
-        .when(t == "float", _f32_udf()(s.cast("float")))
-        .when(
-            t.isin("bigint", "int", "smallint", "tinyint", "boolean",
-                   "date", "timestamp"),
-            _int_udf()(pod_bits(col, sign_extend=False)),
-        )
-        .otherwise(_udf()(F.encode(s, "UTF-8")))
-    )
-    return F.when(col.isNull(), F.lit(None).cast("long")).otherwise(h)
-
-
-def cityhash64_chain(*cols) -> Column:
-    """Multi-argument cityHash64 exactly as the reference combines it:
-    h = Hash128to64(uint128(h_prev, h_i)), left-folded; any NULL
-    argument makes the whole result NULL (default null behavior)."""
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    hs = [cityhash64_auto(c) for c in cs]
-    h = hs[0]
-    for nxt in hs[1:]:
-        h = _combine_udf()(h, nxt)
-    any_null = cs[0].isNull()
-    for c in cs[1:]:
-        any_null = any_null | c.isNull()
-    return F.when(any_null, F.lit(None).cast("long")).otherwise(h)
-
-
-def cityhash64_sql_ddl() -> list[str]:
-    """SQL entry points (session.py registers them): the chsql shim
-    rewrites cityHash64(x) → ch_cityhash64_typed(CAST(x AS STRING),
-    typeof(x)) and folds multi-arg through ch_cityhash64_combine.
-    The CASE mirrors cityhash64_auto exactly: strings → CityHash64
-    bytes, PODs → intHash64 of the zero-extended bit pattern,
-    floats → IEEE-bits UDFs, NULL → NULL."""
-    enc = """CASE t
-      WHEN 'string' THEN cityHash64_bin(encode(s, 'utf-8'))
-      WHEN 'bigint' THEN cityHash64_pod(CAST(s AS BIGINT))
-      WHEN 'int' THEN cityHash64_pod(CAST(s AS BIGINT) & 4294967295)
-      WHEN 'smallint' THEN cityHash64_pod(CAST(s AS BIGINT) & 65535)
-      WHEN 'tinyint' THEN cityHash64_pod(CAST(s AS BIGINT) & 255)
-      WHEN 'boolean' THEN cityHash64_pod(CAST(CAST(s AS BOOLEAN) AS BIGINT))
-      WHEN 'date' THEN cityHash64_pod(CAST(datediff(CAST(s AS DATE), DATE'1970-01-01') AS BIGINT))
-      WHEN 'timestamp' THEN cityHash64_pod(unix_timestamp(CAST(s AS TIMESTAMP)) & 4294967295)
-      WHEN 'double' THEN cityHash64_f64(CAST(s AS DOUBLE))
-      WHEN 'float' THEN cityHash64_f32(CAST(s AS FLOAT))
-      ELSE cityHash64_bin(encode(s, 'utf-8')) END"""
-    return [
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_cityhash64_typed(s STRING, t STRING) "
-        f"RETURNS BIGINT RETURN IF(s IS NULL, CAST(NULL AS BIGINT), {enc})",
-        # the combine is itself a registered python UDF (pure uint64
-        # math), exposed directly under the SQL name
-    ]

@@ -12,21 +12,14 @@ Usage:
     df.select(ch("toStartOfMonth", F.col("ts")), ch("multiIf", c1, v1, c2, v2, d))
 
 Notes on fidelity:
-- sipHash64 produces EXACT reference values (functions/siphash.py —
-  canonical zero-key SipHash-2-4, paper-vector validated), as do
-  md5/sha*. The encoding is type-dispatched via typeof(): String →
-  UTF-8 bytes, Int64/32/16/8 → native LE widths, Date → UInt16 days,
-  DateTime → UInt32 seconds (FunctionsHashing.h hashes each type's
-  binary representation); multi-arg chains per combineHashesFunc
-  (sipHash64(le8(h1) || le8(h2))); Float64/32 columns hash their raw
-  IEEE bits (dedicated UDF branches); hash(NULL) is NULL like the
-  reference. Exactness scope: typed COLUMNS are bit-exact; integer
-  LITERALS follow Spark typing (CH narrows `1` to UInt8, Spark types
-  it int); decimal inputs fall back to the string rendering; BINARY
-  columns need the explicit siphash64(col, ctype='binary') form.
-  farmHash64/metroHash64 are exact (functions/hashes_extra2.py; their
-  exact algorithms are bundled third-party code the reference snapshot
-  does not ship); cityHash64 is exact — functions/cityhash.py: CityHash v1.0.2 for strings, the reference's intHash64 POD path for numeric/Date/DateTime columns, Hash128to64 combine, NULL → NULL.
+- Every FunctionsHashing.h name (sipHash64, cityHash64, xxHash64, the
+  murmur/farm/metro/wy/xxh3/java families, intHash*, halfMD5, ...)
+  produces EXACT reference values, as do md5/sha*. Their typed
+  encodings, combine rules and NULL handling are one table,
+  functions/hashing.py. Exactness scope: typed COLUMNS are bit-exact;
+  integer LITERALS follow Spark typing (CH narrows `1` to UInt8, Spark
+  types it int); decimal inputs fall back to the string rendering;
+  BINARY columns need hashing.siphash64(col, ctype='binary').
 - toDayOfWeek follows ClickHouse semantics (Mon=1..Sun=7), translated
   from Spark's dayofweek (Sun=1..Sat=7).
 """
@@ -611,108 +604,13 @@ _reg("isValidJSON")(lambda j: F.get_json_object(_c(j), "$").isNotNull())
 # ---------------------------------------------------------------------------
 # Hashing & encoding (src/Functions/FunctionsHashing.h, base64Encode.cpp,
 # hex.cpp). Spark digests for md5/sha* match ClickHouse byte-for-byte;
-# the 64-bit hash family is capability-mapped only.
+# the exact FunctionsHashing.h names are functions/hashing.py
+# (registered in dialect_extras).
 # ---------------------------------------------------------------------------
 
 _reg("MD5", "halfMD5_hex")(lambda a: F.md5(_c(a).cast("binary")))
 _reg("SHA256")(lambda a: F.sha2(_c(a).cast("binary"), 256))
 _reg("SHA512")(lambda a: F.sha2(_c(a).cast("binary"), 512))
-# farmHash64/metroHash64 are EXACT since round 5
-# (functions/hashes_extra2.py — farmhashxo::Hash64 portable dispatch /
-# metrohash64_1 seed-0, Hash128to64 combine, intHash64 POD path);
-# cityHash64 is the exact v1.0.2 algorithm (functions/cityhash.py)
-def _farmhash64(*cols):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra2 import (
-        farmhash64_exact,
-    )
-
-    return farmhash64_exact(*[_c(c) for c in cols])
-
-
-def _metrohash64(*cols):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra2 import (
-        metrohash64_exact,
-    )
-
-    return metrohash64_exact(*[_c(c) for c in cols])
-
-
-_reg("farmHash64")(_farmhash64)
-_reg("metroHash64")(_metrohash64)
-
-
-def _cityhash64_exact(*cols):
-    # EXACT CityHash v1.0.2 (functions/cityhash.py) with the same
-    # typeof() native-width encoding as sipHash64; multi-arg combines
-    # per the reference: Hash128to64(uint128(h1, h2))
-    # (FunctionsHashing.h:621).
-    from clickhouse_25_5_3_75_stable_spark.functions.cityhash import (
-        cityhash64_auto,
-        cityhash64_chain,
-    )
-
-    if len(cols) == 1:
-        return cityhash64_auto(_c(cols[0]))
-    return cityhash64_chain(*[_c(c) for c in cols])
-
-
-_reg("cityHash64")(_cityhash64_exact)
-
-
-def _siphash64_exact(*cols):
-    # EXACT reference values (functions/siphash.py, paper-vector
-    # validated), with the native-width encoding inferred from each
-    # input's Spark type via typeof() dispatch (round-3 advisor fix:
-    # Int/Date/DateTime columns previously hashed their str rendering).
-    # Multi-arg combines exactly like the reference
-    # (FunctionsHashing.h:195): sipHash64(le8(h1) || le8(h2)) folded.
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        siphash64_auto,
-        siphash64_chain,
-    )
-
-    if len(cols) == 1:
-        return siphash64_auto(_c(cols[0]))
-    return siphash64_chain(*[_c(c) for c in cols])
-
-
-_reg("sipHash64")(_siphash64_exact)
-# xxHash64 is EXACT XXH64 seed-0 (functions/hashes_extra.py, anchor-
-# vector validated) — NOT Spark's xxhash64 (seed 42, row encoding);
-# intHash32 is the exact salted Wang mix (IntHash32Impl).
-def _xxhash64_exact(*cols):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        xxhash64_exact,
-    )
-
-    return xxhash64_exact(*[_c(c) for c in cols])
-
-
-def _inthash32_exact(c):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        inthash32_exact,
-    )
-
-    return inthash32_exact(_c(c))
-
-
-_reg("xxHash64")(_xxhash64_exact)
-_reg("intHash32")(_inthash32_exact)
-# 32-bit family — EXACT since round 5 (functions/hashes_extra3.py:
-# XXH32 seed-0 / MurmurHash2-32 seed-0 / MurmurHash3_x86_32 seed-0,
-# intHash32-xor combines, raw-LE-bytes POD rule)
-def _hash32(fname):
-    def wrap(*cols):
-        from clickhouse_25_5_3_75_stable_spark.functions import hashes_extra3
-
-        return getattr(hashes_extra3, fname)(*[_c(c) for c in cols])
-
-    return wrap
-
-
-_reg("xxHash32")(_hash32("xxhash32_exact"))
-_reg("murmurHash2_32")(_hash32("murmur2_32_exact"))
-_reg("murmurHash3_32")(_hash32("murmur3_32_exact"))
 _reg("hex")(lambda a: F.hex(_c(a)))
 _reg("unhex")(lambda a: F.unhex(_c(a)))
 _reg("base64Encode")(lambda a: F.base64(_c(a).cast("binary")))

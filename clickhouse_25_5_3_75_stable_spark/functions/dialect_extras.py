@@ -23,6 +23,7 @@ import socket
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from clickhouse_25_5_3_75_stable_spark.functions import hashing as _hashing
 from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS, _c, _reg
 
 # ---------------------------------------------------------------------------
@@ -800,177 +801,10 @@ _reg("mapPopulateSeries")(
 )
 _reg("MAP_FROM_ARRAYS")(lambda ks, vs: F.map_from_arrays(_c(ks), _c(vs)))
 
-# ---------------------------------------------------------------------------
-# Hashing capability map (FunctionsHashing.h). Exact CH hash values are
-# implementation-defined; we map families onto Spark's xxhash64 / hash /
-# crc32 for capability parity (documented fidelity gap, SURVEY §2.8).
-# ---------------------------------------------------------------------------
-# The whole remaining FunctionsHashing.h long tail is EXACT since
-# round 5 (functions/hashes_extra3.py — see its docstring for the
-# per-name validation statement):
-def _hx3(fname):
-    def wrap(*cs):
-        from clickhouse_25_5_3_75_stable_spark.functions import hashes_extra3
-
-        return getattr(hashes_extra3, fname)(*[_c(c) for c in cs])
-
-    return wrap
-
-
-_reg("gccMurmurHash")(_hx3("gcc_murmur_exact"))
-_reg("kafkaMurmurHash")(_hx3("kafka_murmur_exact"))
-_reg("javaHash")(_hx3("java_hash_exact"))
-_reg("javaHashUTF16LE")(_hx3("java_hash_utf16le_exact"))
-_reg("hiveHash")(_hx3("hive_hash_exact"))
-_reg("URLHash")(_hx3("urlhash_exact"))
-
-
-def _sip_keyed(key_tuple, *cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra3 import (
-        siphash64_keyed_exact,
-    )
-
-    if not (isinstance(key_tuple, (tuple, list)) and len(key_tuple) == 2):
-        raise ValueError("sipHash64Keyed needs a literal (k0, k1) tuple")
-    return siphash64_keyed_exact(int(key_tuple[0]), int(key_tuple[1]),
-                                 *[_c(c) for c in cs])
-
-
-_reg("sipHash64Keyed")(_sip_keyed)
-
-
-# wyHash64 / xxh3 / farmFingerprint64 are EXACT since round 5
-# (functions/hashes_extra2.py — wyhash final-3 seed-0 with the
-# 16-byte-concat combine; XXH3_64bits libxxhash-validated;
-# farmhashna::Hash64 Guava-validated; POD rules per FunctionsHashing.h)
-def _wyhash64(*cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra2 import (
-        wyhash64_exact,
-    )
-
-    return wyhash64_exact(*[_c(c) for c in cs])
-
-
-def _xxh3(*cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra2 import (
-        xxh3_exact,
-    )
-
-    return xxh3_exact(*[_c(c) for c in cs])
-
-
-def _farm_fp64(*cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra2 import (
-        farm_fingerprint64_exact,
-    )
-
-    return farm_fingerprint64_exact(*[_c(c) for c in cs])
-
-
-_reg("wyHash64")(_wyhash64)
-_reg("xxh3")(_xxh3)
-_reg("farmFingerprint64")(_farm_fp64)
-
-
-# EXACT 64-bit family (functions/hashes_extra.py — public algorithms,
-# dual-transcription + anchor-vector validated; round-3): murmur2/3_64
-# hash raw native-width bytes like sipHash64, intHash64 is the POD mix
-def _murmur2_64(*cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        murmurhash2_64_exact,
-    )
-
-    return murmurhash2_64_exact(*[_c(c) for c in cs])
-
-
-def _murmur3_64(*cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        murmurhash3_64_exact,
-    )
-
-    return murmurhash3_64_exact(*[_c(c) for c in cs])
-
-
-def _inthash64(c):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        inthash64_exact,
-    )
-
-    return inthash64_exact(_c(c))
-
-
-def _halfmd5(*cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        halfmd5_exact,
-    )
-
-    return halfmd5_exact(*[_c(c) for c in cs])
-
-
-_reg("murmurHash2_64")(_murmur2_64)
-_reg("murmurHash3_64")(_murmur3_64)
-_reg("intHash64")(_inthash64)
-_reg("halfMD5")(_halfmd5)  # exact: big-endian first 8 MD5 bytes, all JVM
-# EXACT 128-bit family (round 3): CH-legacy sipHash128 (get128 —
-# (v0^v1, v2^v3), NOT the official output), official
-# sipHash128Reference, and full MurmurHash3_x64_128 — all BINARY(16)
-# in the reference's FixedString memory layout, NULL → NULL. The
-# 128-bit Keyed variants are exact since round 6 (below).
-def _siphash128(*cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        siphash128_chain,
-    )
-
-    return siphash128_chain(*[_c(c) for c in cs], reference=False)
-
-
-def _siphash128_ref(*cs):
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        siphash128_chain,
-    )
-
-    return siphash128_chain(*[_c(c) for c in cs], reference=True)
-
-
-def _murmur3_128(c):
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        murmurhash3_128_exact,
-    )
-
-    return murmurhash3_128_exact(_c(c))
-
-
-_reg("sipHash128")(_siphash128)
-_reg("sipHash128Reference")(_siphash128_ref)
-_reg("murmurHash3_128")(_murmur3_128)
-
-
-# 128-bit KEYED variants — EXACT since round 6 (the last capability-
-# mapped hashing names): legacy-get128 / official-128 cores with caller
-# keys, combine = keyed hash over the 32-byte concat
-# (FunctionsHashing.h:306,342 applyKeyed/combineHashesKeyed). The
-# official-output variant is validated against the SipHash reference
-# implementation's published vectors_sip128 (tests/test_hashes_extra3).
-def _sip128_keyed(reference):
-    def fn(key_tuple, *cs):
-        from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-            siphash128_keyed_chain,
-        )
-
-        if not (isinstance(key_tuple, (tuple, list)) and len(key_tuple) == 2):
-            raise ValueError(
-                "sipHash128Keyed needs a literal (k0, k1) tuple"
-            )
-        return siphash128_keyed_chain(
-            int(key_tuple[0]), int(key_tuple[1]),
-            *[_c(c) for c in cs], reference=reference,
-        )
-
-    return fn
-
-
-_reg("sipHash128Keyed")(_sip128_keyed(False))
-_reg("sipHash128ReferenceKeyed")(_sip128_keyed(True))
+# Every exact FunctionsHashing.h name: the hash-family table and its
+# special cases (functions/hashing.py)
+for _name, _fn in _hashing.COLUMN_FUNCTIONS.items():
+    _reg(_name)(_fn)
 # encoding / checksum / space-filling-curve long tail — EXACT since
 # round 5 (functions/encodings.py; reference src/Functions/CRC.cpp,
 # base58Encode.cpp, base32Encode.cpp, mortonEncode.cpp,
@@ -1028,17 +862,6 @@ _reg("decrypt")(_aes("decrypt"))
 _reg("tryDecrypt")(_aes("try_decrypt"))
 _reg("aes_encrypt_mysql")(_aes("aes_encrypt_mysql"))
 _reg("aes_decrypt_mysql")(_aes("aes_decrypt_mysql"))
-def _jump_ch(key, n):
-    # EXACT Lamping-Veach jump hash (jumpConsistentHash.cpp:11 — the
-    # published arXiv:1406.2294 algorithm over the integer key value)
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        jump_consistent_hash_exact,
-    )
-
-    return jump_consistent_hash_exact(_c(key), _c(n) if isinstance(n, Column) else n)
-
-
-_reg("jumpConsistentHash")(_jump_ch)
 _reg("kostikConsistentHash", "yandexConsistentHash")(
     # capability form: stable bucket in [0, n) from a 64-bit key
     lambda key, n: F.pmod(F.xxhash64(_c(key)), _c(n) if isinstance(n, Column) else F.lit(n))

@@ -6,8 +6,7 @@ Reference semantics (/root/reference/src/Functions/FunctionsHashing.h):
 - ``xxHash64``  (ImplXxHash64:693): XXH64(bytes, seed=0); PODs hash
   raw LE native-width bytes (use_int_hash_for_pods=false); combine =
   CityHash Hash128to64. NOTE: Spark's built-in ``xxhash64()`` is NOT
-  this (seed 42 over Spark's internal row encoding) — the dialect used
-  it as a capability map until this module.
+  this (seed 42 over Spark's internal row encoding).
 - ``murmurHash2_64`` (MurmurHash2Impl64:390): MurmurHash64A(bytes, 0);
   combine = intHash64(h1) ^ h2.
 - ``murmurHash3_64`` (MurmurHash3Impl64:473): low64 ^ high64 of
@@ -24,17 +23,13 @@ batch path (masked block loops across rows) is the execution path,
 the two are cross-validated over every length class, plus published
 anchor vectors for XXH64 and algebraically-forced empty-input values.
 
-NULL hashes to NULL (FunctionsHashing.h:869), via the same
-expression-level isNull wrap as sipHash64/cityHash64.
+NULL hashes to NULL (FunctionsHashing.h:869); the Spark surface of
+every family here is functions/hashing.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _M64 = (1 << 64) - 1
 _U = np.uint64
@@ -434,192 +429,10 @@ def _murmur3_state_np(data: list[bytes]):
 
 
 # ---------------------------------------------------------------------------
-# Spark surface: byte-input UDFs + typed dispatch reusing sipHash64's
-# native-width encoding (these hashes share use_int_hash_for_pods=false
-# with sipHash64, so _encode_auto IS the correct POD treatment).
-# ---------------------------------------------------------------------------
-
-_UDF_CACHE: dict[str, object] = {}
-
-_NP_FNS = {
-    "xxh64": _xxh64_np,
-    "murmur2_64": _murmur2_64a_np,
-    "murmur3_64": _murmur3_64_np,
-}
-
-
-def _bytes_udf(kind: str):
-    if kind not in _UDF_CACHE:
-        fn = _NP_FNS[kind]
-
-        @pandas_udf("long")
-        def _hash_binary(s: pd.Series) -> pd.Series:
-            mask = np.array([v is None for v in s], dtype=bool)
-            data = [b"" if v is None else bytes(v) for v in s]
-            out = pd.array(fn(data).astype(np.int64), dtype="Int64")
-            out[mask] = pd.NA
-            return pd.Series(out, dtype="Int64")
-
-        _UDF_CACHE[kind] = _hash_binary
-    return _UDF_CACHE[kind]
-
-
-def _int_mix_udf(kind: str):
-    """intHash64/intHash32 over the zero-extended UInt64 bit pattern."""
-    if kind not in _UDF_CACHE:
-        from clickhouse_25_5_3_75_stable_spark.functions.cityhash import (
-            _np_inthash64,
-        )
-
-        mix = _np_inthash64 if kind == "inthash64" else _np_inthash32
-        ret = "long" if kind == "inthash64" else "bigint"
-
-        @pandas_udf(ret)
-        def _ih(s: pd.Series) -> pd.Series:
-            arr = pd.array(s, dtype="Int64")
-            mask = arr.isna()
-            vals = arr.fillna(0).to_numpy(dtype=np.int64).astype(np.uint64)
-            out = pd.array(mix(vals).astype(np.int64), dtype="Int64")
-            out[np.asarray(mask)] = pd.NA
-            return pd.Series(out, dtype="Int64")
-
-        _UDF_CACHE[kind] = _ih
-    return _UDF_CACHE[kind]
-
-
-def _pod_bits(col: Column) -> Column:
-    """FunctionIntHash bit pattern: SIGN-extension (plain C++ integral
-    conversion in ``Impl::apply(vec_from[i])``, FunctionsHashing.h:753)
-    — review finding: this is NOT the bit_cast zero-extension that
-    cityHash64's POD path uses; intHash64(toInt32(-7)) hashes
-    0xFFFF...F9, not 0x00000000FFFFFFF9."""
-    from clickhouse_25_5_3_75_stable_spark.functions.cityhash import pod_bits
-
-    return pod_bits(col, sign_extend=True)
-
-
-def _float_udf(kind: str, width: int):
-    """Float64/32 columns hash their raw IEEE bits (use_int_hash_for_
-    pods=false — same contract as sipHash64's f64/f32 branches)."""
-    key = f"{kind}_f{width}"
-    if key not in _UDF_CACHE:
-        fn = _NP_FNS[kind]
-
-        @pandas_udf("long")
-        def _hf(s: pd.Series) -> pd.Series:
-            if width == 64:
-                vals = s.to_numpy(dtype=np.float64).view(np.uint64)
-                data = [int(v).to_bytes(8, "little") for v in vals]
-            else:
-                vals = s.to_numpy(dtype=np.float32).view(np.uint32)
-                data = [int(v).to_bytes(4, "little") for v in vals]
-            return pd.Series(fn(data).astype(np.int64))
-
-        _UDF_CACHE[key] = _hf
-    return _UDF_CACHE[key]
-
-
-def _typed_hash(kind: str, col) -> Column:
-    """One value hashed with sipHash64's typed byte encoding (these
-    impls all hash raw native-width bytes for PODs), float columns via
-    their IEEE bits, + per-kind UDF; NULL → NULL."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import _encode_auto
-
-    col = F.col(col) if isinstance(col, str) else col
-    s = col.cast("string")
-    t = F.call_function("typeof", col)
-    h = (
-        F.when(t == "double", _float_udf(kind, 64)(s.cast("double")))
-        .when(t == "float", _float_udf(kind, 32)(s.cast("float")))
-        .otherwise(_bytes_udf(kind)(_encode_auto(col)))
-    )
-    return F.when(col.isNull(), F.lit(None).cast("long")).otherwise(h)
-
-
-def _combine_city(h1: Column, h2: Column) -> Column:
-    from clickhouse_25_5_3_75_stable_spark.functions.cityhash import _combine_udf
-
-    return _combine_udf()(h1, h2)
-
-
-def _combine_intxor(h1: Column, h2: Column) -> Column:
-    # intHash64(h1) ^ h2 (MurmurHash2Impl64:400 / MurmurHash3Impl64:489)
-    return _int_mix_udf("inthash64")(h1).bitwiseXOR(h2)
-
-
-def xxhash64_exact(*cols) -> Column:
-    """xxHash64 — exact XXH64 seed-0 values (NOT Spark's xxhash64,
-    which is seed 42 over Spark's row encoding); combine per the
-    reference = Hash128to64."""
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    h = _typed_hash("xxh64", cs[0])
-    for c in cs[1:]:
-        h = _combine_city(h, _typed_hash("xxh64", c))
-    return _wrap_null(h, cs)
-
-
-def murmurhash2_64_exact(*cols) -> Column:
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    h = _typed_hash("murmur2_64", cs[0])
-    for c in cs[1:]:
-        h = _combine_intxor(h, _typed_hash("murmur2_64", c))
-    return _wrap_null(h, cs)
-
-
-def murmurhash3_64_exact(*cols) -> Column:
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    h = _typed_hash("murmur3_64", cs[0])
-    for c in cs[1:]:
-        h = _combine_intxor(h, _typed_hash("murmur3_64", c))
-    return _wrap_null(h, cs)
-
-
-def _m3_128_udf():
-    if "m3_128" not in _UDF_CACHE:
-
-        @pandas_udf("binary")
-        def _m3(s: pd.Series) -> pd.Series:
-            vals = [None if v is None else bytes(v) for v in s]
-            data = [b"" if v is None else v for v in vals]
-            hashed = _murmur3_128_np(data)
-            return pd.Series(
-                [None if v is None else h for v, h in zip(vals, hashed)]
-            )
-
-        _UDF_CACHE["m3_128"] = _m3
-    return _UDF_CACHE["m3_128"]
-
-
-def murmurhash3_128_exact(col) -> Column:
-    """murmurHash3_128 — the full 16-byte MurmurHash3_x64_128 output
-    (MurmurHash3Impl128; FixedString(16) memory layout, h1 LE ++ h2
-    LE); typed encoding shared with sipHash64; NULL → NULL."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import _encode_auto
-
-    col = F.col(col) if isinstance(col, str) else col
-    h = _m3_128_udf()(_encode_auto(col))
-    return F.when(col.isNull(), F.lit(None).cast("binary")).otherwise(h)
-
-
-def inthash64_exact(col) -> Column:
-    """intHash64(x) — IntHash64Impl over the zero-extended bit pattern."""
-    col = F.col(col) if isinstance(col, str) else col
-    h = _int_mix_udf("inthash64")(_pod_bits(col))
-    return F.when(col.isNull(), F.lit(None).cast("long")).otherwise(h)
-
-
-def inthash32_exact(col) -> Column:
-    """intHash32(x) — IntHash32Impl (salted Wang mix, UInt32 result)."""
-    col = F.col(col) if isinstance(col, str) else col
-    h = _int_mix_udf("inthash32")(_pod_bits(col))
-    return F.when(col.isNull(), F.lit(None).cast("bigint")).otherwise(h)
-
-
-# ---------------------------------------------------------------------------
 # halfMD5 (HalfMD5Impl:240): UInt64 from the FIRST 8 bytes of the MD5
-# digest, big-endian. Fully JVM-side: md5() over the typed encoding,
-# first 16 hex chars → two 32-bit halves → shiftleft|or (no UDF at
-# all). Combine (HalfMD5Impl:272) = halfMD5(le8(h1) || le8(h2)).
+# digest, big-endian. The Spark path is JVM expressions only (md5 + hex
+# math, functions/hashing.py); combine (HalfMD5Impl:272) =
+# halfMD5(le8(h1) || le8(h2)).
 # ---------------------------------------------------------------------------
 
 
@@ -627,32 +440,6 @@ def halfmd5_py(data: bytes) -> int:
     import hashlib
 
     return int.from_bytes(hashlib.md5(data).digest()[:8], "big")
-
-
-def _hex16_to_i64(hex16: Column) -> Column:
-    hi = F.conv(F.substring(hex16, 1, 8), 16, 10).cast("bigint")
-    lo = F.conv(F.substring(hex16, 9, 8), 16, 10).cast("bigint")
-    return F.shiftleft(hi, 32).bitwiseOR(lo)
-
-
-def _halfmd5_bytes(b: Column) -> Column:
-    return _hex16_to_i64(F.substring(F.md5(b), 1, 16))
-
-
-def halfmd5_exact(*cols) -> Column:
-    """halfMD5 — exact reference values, zero Python (md5 + hex math
-    are all JVM expressions); typed encoding shared with sipHash64."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        _encode_auto,
-        _le_bytes,
-    )
-
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    h = _halfmd5_bytes(_encode_auto(cs[0]))
-    for c in cs[1:]:
-        nxt = _halfmd5_bytes(_encode_auto(c))
-        h = _halfmd5_bytes(F.concat(_le_bytes(h, 8), _le_bytes(nxt, 8)))
-    return _wrap_null(h, cs)
 
 
 # ---------------------------------------------------------------------------
@@ -686,79 +473,3 @@ def _np_jump(keys: np.ndarray, buckets: np.ndarray) -> np.ndarray:
         j = np.where(active, jf, j)
         active = j < buckets
     return b
-
-
-def _jump_udf():
-    if "jump" not in _UDF_CACHE:
-
-        @pandas_udf("int")
-        def _jump(k: pd.Series, n: pd.Series) -> pd.Series:
-            ka = pd.array(k, dtype="Int64")
-            na = pd.array(n, dtype="Int64")
-            mask = ka.isna() | na.isna()
-            keys = ka.fillna(0).to_numpy(dtype=np.int64).astype(np.uint64)
-            buckets = na.fillna(1).to_numpy(dtype=np.int64)
-            out = pd.array(_np_jump(keys, buckets).astype(np.int32), dtype="Int32")
-            out[np.asarray(mask)] = pd.NA
-            return pd.Series(out, dtype="Int32")
-
-        _UDF_CACHE["jump"] = _jump
-    return _UDF_CACHE["jump"]
-
-
-def jump_consistent_hash_exact(key, n) -> Column:
-    key = F.col(key) if isinstance(key, str) else key
-    n = n if isinstance(n, Column) else F.lit(n)
-    return _jump_udf()(key.cast("bigint"), n.cast("bigint"))
-
-
-def xxhash64_sql_ddl() -> list[str]:
-    """SQL entry point: the chsql shim rewrites xxHash64(x) →
-    ch_xxhash64_typed(CAST(x AS STRING), typeof(x)) and folds
-    multi-arg through ch_xxhash64_combine (Hash128to64, the same
-    python UDF as cityHash64's combine — registered under this alias
-    in session.py)."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        typed_hash_sql_case,
-    )
-
-    return [
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_xxhash64_typed(s STRING, t STRING) "
-        "RETURNS BIGINT RETURN IF(s IS NULL, CAST(NULL AS BIGINT), "
-        f"{typed_hash_sql_case('xxHash64')})",
-    ]
-
-
-def _half_md5_of_sql(bin_expr: str) -> str:
-    hx = f"substring(md5({bin_expr}), 1, 16)"
-    return (
-        f"(shiftleft(CAST(conv(substring({hx}, 1, 8), 16, 10) AS BIGINT), 32)"
-        f" | CAST(conv(substring({hx}, 9, 8), 16, 10) AS BIGINT))"
-    )
-
-
-def halfmd5_sql_ddl() -> list[str]:
-    """SQL entry point for exact halfMD5 — pure SQL body (md5 + hex
-    math, no python UDF at all); combine = halfMD5(le8(h1)||le8(h2))
-    per HalfMD5Impl:272."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        _le_bytes_sql,
-        typed_bytes_sql_case,
-    )
-
-    combine_bytes = f"concat({_le_bytes_sql('h1', 8)}, {_le_bytes_sql('h2', 8)})"
-    return [
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_halfmd5_typed(s STRING, t STRING) "
-        "RETURNS BIGINT RETURN IF(s IS NULL, CAST(NULL AS BIGINT), "
-        f"{_half_md5_of_sql('(' + typed_bytes_sql_case() + ')')})",
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_halfmd5_combine(h1 BIGINT, h2 BIGINT) "
-        "RETURNS BIGINT RETURN IF(h1 IS NULL OR h2 IS NULL, CAST(NULL AS BIGINT), "
-        f"{_half_md5_of_sql(combine_bytes)})",
-    ]
-
-
-def _wrap_null(h: Column, cs: list[Column]) -> Column:
-    any_null = cs[0].isNull()
-    for c in cs[1:]:
-        any_null = any_null | c.isNull()
-    return F.when(any_null, F.lit(None).cast("long")).otherwise(h)

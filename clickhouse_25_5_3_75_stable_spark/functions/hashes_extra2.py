@@ -56,7 +56,7 @@ truth*):
   wyHash64('ClickHouse') = 12336419557878201794 — which also pins the
   vendored version to final 3.
 
-NULL hashes to NULL (same isNull wrap as sipHash64/cityHash64). Each
+NULL hashes to NULL; the Spark surface is functions/hashing.py. Each
 family has an imperative Python reference transcription and a
 numpy-vectorized batch path (masked block loops across rows), cross-
 validated per length class in tests/test_hashes_extra2.py.
@@ -65,22 +65,16 @@ validated per length class in tests/test_hashes_extra2.py.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
     _byte_matrix,
     _np_fetch,
     _np_rotl,
-    _wrap_null,
 )
 
 _M64 = (1 << 64) - 1
 _M32 = (1 << 32) - 1
 _U = np.uint64
-_UDF_CACHE: dict[str, object] = {}
 
 
 def _rotr(v: int, s: int) -> int:
@@ -1293,208 +1287,4 @@ def _xxh3_np(data: list[bytes]) -> np.ndarray:
                 acc[:, 2 * i + 1] ^ sec64(19 + 16 * i))
         out[idx] = np_aval(result)
     _ = sec
-    return out
-
-
-# ===========================================================================
-# Spark wiring: typed hash Columns + combines (NULL → NULL)
-# ===========================================================================
-
-_NP2_FNS = {
-    "farm_fp": _farm_na_np,
-    "farm_xo": _farm_xo_np,
-    "metro64": _metro64_np,
-    "wyhash": _wyhash_np,
-    "xxh3": _xxh3_np,
-}
-
-_PY_FNS = {
-    "farm_fp": farmhash_na_py,
-    "farm_xo": farmhash_xo_py,
-    "metro64": metrohash64_1_py,
-    "wyhash": wyhash_py,
-    "xxh3": xxh3_64_py,
-}
-
-
-def _register_raw_pod_kinds() -> None:
-    """xxh3 / wyHash64 have use_int_hash_for_pods=false → they share
-    hashes_extra's typed encoding (raw LE native-width bytes, float
-    IEEE bits). Registering the batch fns into its _NP_FNS lets us
-    reuse _typed_hash verbatim."""
-    from clickhouse_25_5_3_75_stable_spark.functions import hashes_extra
-
-    hashes_extra._NP_FNS.setdefault("xxh3", _xxh3_np)
-    hashes_extra._NP_FNS.setdefault("wyhash", _wyhash_np)
-
-
-_register_raw_pod_kinds()
-
-
-def _bytes_udf(kind: str):
-    if kind not in _UDF_CACHE:
-        fn = _NP2_FNS[kind]
-
-        @pandas_udf("long")
-        def _hash_binary(s: pd.Series) -> pd.Series:
-            mask = np.array([v is None for v in s], dtype=bool)
-            data = [b"" if v is None else bytes(v) for v in s]
-            out = pd.array(fn(data).astype(np.int64), dtype="Int64")
-            out[mask] = pd.NA
-            return pd.Series(out, dtype="Int64")
-
-        _UDF_CACHE[kind] = _hash_binary
-    return _UDF_CACHE[kind]
-
-
-def _int_pod_auto(kind: str, col) -> Column:
-    """use_int_hash_for_pods=true family (farm*, metro): POD columns
-    hash IntHash64Impl(bit_cast) — byte-identical to cityHash64's POD
-    path — and only the String/FixedString path differs per family."""
-    from clickhouse_25_5_3_75_stable_spark.functions.cityhash import (
-        _f32_udf,
-        _f64_udf,
-        _int_udf,
-        pod_bits,
-    )
-
-    col = F.col(col) if isinstance(col, str) else col
-    s = col.cast("string")
-    t = F.call_function("typeof", col)
-    h = (
-        F.when(t == "string", _bytes_udf(kind)(F.encode(s, "UTF-8")))
-        .when(t == "double", _f64_udf()(s.cast("double")))
-        .when(t == "float", _f32_udf()(s.cast("float")))
-        .when(
-            t.isin("bigint", "int", "smallint", "tinyint", "boolean",
-                   "date", "timestamp"),
-            _int_udf()(pod_bits(col, sign_extend=False)),
-        )
-        .otherwise(_bytes_udf(kind)(F.encode(s, "UTF-8")))
-    )
-    return F.when(col.isNull(), F.lit(None).cast("long")).otherwise(h)
-
-
-def _raw_pod_auto(kind: str, col) -> Column:
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        _typed_hash,
-    )
-
-    return _typed_hash(kind, col)
-
-
-def _combine_city(h1: Column, h2: Column) -> Column:
-    from clickhouse_25_5_3_75_stable_spark.functions.cityhash import _combine_udf
-
-    return _combine_udf()(h1, h2)
-
-
-def _wy_combine_udf():
-    if "wy_combine" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _wyc(h1: pd.Series, h2: pd.Series) -> pd.Series:
-            a1 = pd.array(h1, dtype="Int64")
-            a2 = pd.array(h2, dtype="Int64")
-            mask = a1.isna() | a2.isna()
-            va = a1.fillna(0).to_numpy(dtype=np.int64)
-            vb = a2.fillna(0).to_numpy(dtype=np.int64)
-            data = [int(a).to_bytes(8, "little", signed=True)
-                    + int(b).to_bytes(8, "little", signed=True)
-                    for a, b in zip(va, vb)]
-            out = pd.array(_wyhash_np(data).astype(np.int64), dtype="Int64")
-            out[np.asarray(mask)] = pd.NA
-            return pd.Series(out, dtype="Int64")
-
-        _UDF_CACHE["wy_combine"] = _wyc
-    return _UDF_CACHE["wy_combine"]
-
-
-def _chain(cols, one, combine) -> Column:
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    h = one(cs[0])
-    for c in cs[1:]:
-        h = combine(h, one(c))
-    return _wrap_null(h, cs)
-
-
-def farm_fingerprint64_exact(*cols) -> Column:
-    """farmFingerprint64 — FarmHash Fingerprint64 (= farmhashna::Hash64,
-    Guava-validated); combine = Fingerprint(uint128) = Hash128to64."""
-    return _chain(cols, lambda c: _int_pod_auto("farm_fp", c), _combine_city)
-
-
-def farmhash64_exact(*cols) -> Column:
-    """farmHash64 — farmhashxo::Hash64 (portable dispatch; see module
-    docstring for the x86-SIMD platform-variance note); combine =
-    Hash128to64."""
-    return _chain(cols, lambda c: _int_pod_auto("farm_xo", c), _combine_city)
-
-
-def metrohash64_exact(*cols) -> Column:
-    """metroHash64 — metrohash64_1(bytes, seed=0) read LE; combine =
-    Hash128to64."""
-    return _chain(cols, lambda c: _int_pod_auto("metro64", c), _combine_city)
-
-
-def wyhash64_exact(*cols) -> Column:
-    """wyHash64 — wyhash final-3, seed 0, default secret; combine =
-    wyhash over the 16-byte LE concat; PODs hash raw LE bytes."""
-    return _chain(cols, lambda c: _raw_pod_auto("wyhash", c), _wy_combine_udf())
-
-
-def xxh3_exact(*cols) -> Column:
-    """xxh3 — XXH3_64bits seedless (libxxhash-validated); combine =
-    Hash128to64; PODs hash raw LE bytes."""
-    return _chain(cols, lambda c: _raw_pod_auto("xxh3", c), _combine_city)
-
-
-# ---------------------------------------------------------------------------
-# SQL-text entry points (session.py registers; the chsql shim rewrites
-# farmHash64(x) → ch_farmhash64_typed(CAST(x AS STRING), typeof(x))
-# etc., folding multi-arg through each family's combine)
-# ---------------------------------------------------------------------------
-
-def int_pod_hash_sql_case(bin_name: str) -> str:
-    """(s, t)-dispatch CASE for use_int_hash_for_pods=true families:
-    only the String branch differs from cityHash64 — PODs and floats
-    share cityHash64's IntHash64Impl value (same registered UDFs)."""
-    return f"""CASE t
-      WHEN 'string' THEN {bin_name}(encode(s, 'utf-8'))
-      WHEN 'bigint' THEN cityHash64_pod(CAST(s AS BIGINT))
-      WHEN 'int' THEN cityHash64_pod(CAST(s AS BIGINT) & 4294967295)
-      WHEN 'smallint' THEN cityHash64_pod(CAST(s AS BIGINT) & 65535)
-      WHEN 'tinyint' THEN cityHash64_pod(CAST(s AS BIGINT) & 255)
-      WHEN 'boolean' THEN cityHash64_pod(CAST(CAST(s AS BOOLEAN) AS BIGINT))
-      WHEN 'date' THEN cityHash64_pod(CAST(datediff(CAST(s AS DATE), DATE'1970-01-01') AS BIGINT))
-      WHEN 'timestamp' THEN cityHash64_pod(unix_timestamp(CAST(s AS TIMESTAMP)) & 4294967295)
-      WHEN 'double' THEN cityHash64_f64(CAST(s AS DOUBLE))
-      WHEN 'float' THEN cityHash64_f32(CAST(s AS FLOAT))
-      ELSE {bin_name}(encode(s, 'utf-8')) END"""
-
-
-def hash_longtail_sql_ddl() -> list[str]:
-    """DDL for farmHash64 / farmFingerprint64 / metroHash64 (intHash64
-    POD rule, Hash128to64 combine = ch_cityhash64_combine alias) and
-    wyHash64 / xxh3 (raw-LE-bytes POD rule; wy's combine is its own
-    python UDF, xxh3's is Hash128to64)."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        typed_hash_sql_case,
-    )
-
-    out = []
-    for fam, bin_name in (("farmhash64", "farmHash64_bin"),
-                          ("farmfingerprint64", "farmFingerprint64_bin"),
-                          ("metrohash64", "metroHash64_bin")):
-        out.append(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION ch_{fam}_typed(s STRING, t STRING) "
-            "RETURNS BIGINT RETURN IF(s IS NULL, CAST(NULL AS BIGINT), "
-            f"{int_pod_hash_sql_case(bin_name)})"
-        )
-    for fam, prefix in (("wyhash64", "wyHash64"), ("xxh3", "xxh3")):
-        out.append(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION ch_{fam}_typed(s STRING, t STRING) "
-            "RETURNS BIGINT RETURN IF(s IS NULL, CAST(NULL AS BIGINT), "
-            f"{typed_hash_sql_case(prefix)})"
-        )
     return out

@@ -36,16 +36,13 @@ Validation: published anchor vectors (MurmurHash3_x86_32('hello',0)=
 for javaHash (String.hashCode via Spark's JVM in the test suite),
 algebraic identities (hiveHash = javaHash & 0x7FFFFFFF; kafka =
 murmur2_32(seed) & 0x7fffffff), and the repo's standing scalar↔numpy
-dual-path sweeps. NULL hashes to NULL.
+dual-path sweeps. NULL hashes to NULL; the Spark surface is
+functions/hashing.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
     _byte_matrix,
@@ -57,7 +54,6 @@ _M32 = (1 << 32) - 1
 _M64 = (1 << 64) - 1
 _U = np.uint64
 _U32 = np.uint32
-_UDF_CACHE: dict[str, object] = {}
 
 _GCC_SEED = 0xC70F6907
 _KAFKA_SEED = 0x9747B28C
@@ -387,14 +383,8 @@ def _java_np(data: list[bytes]) -> np.ndarray:
 
 
 def _gcc_np(data: list[bytes]) -> np.ndarray:
-    # MurmurHash64A with the gcc seed — reuse hashes_extra's murmur2_64
-    # state machine by re-deriving: h = seed ^ (len * m) initialization
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        _murmur2_64a_np,
-    )
-
-    # _murmur2_64a_np is seed-0; the seed enters only the initial state,
-    # so run a seeded scalar fold vectorized here instead
+    # MurmurHash64A with the gcc seed (hashes_extra._murmur2_64a_np is
+    # seed-0; the seed enters only the initial state)
     buf, lens = _byte_matrix(data)
     n_rows = len(data)
     rows = np.arange(n_rows)
@@ -426,277 +416,4 @@ def _gcc_np(data: list[bytes]) -> np.ndarray:
     h = h ^ (h >> _U(47))
     h = h * m
     h = h ^ (h >> _U(47))
-    _ = _murmur2_64a_np
     return h
-
-
-# ---------------------------------------------------------------------------
-# Spark wiring
-# ---------------------------------------------------------------------------
-
-_NP3_FNS = {
-    "gcc_murmur": _gcc_np,
-    "kafka_murmur": _kafka_np,
-    "murmur2_32": _murmur2_32_seed0_np,
-    "murmur3_32": _murmur3_32_np,
-    "xxh32": _xxh32_np,
-}
-
-
-def _register_kinds() -> None:
-    """All five use use_int_hash_for_pods=false → share hashes_extra's
-    raw-LE-bytes typed encoding via its _NP_FNS registry."""
-    from clickhouse_25_5_3_75_stable_spark.functions import hashes_extra
-
-    for k, fn in _NP3_FNS.items():
-        hashes_extra._NP_FNS.setdefault(k, fn)
-
-
-_register_kinds()
-
-
-def _typed(kind: str, col) -> Column:
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        _typed_hash,
-    )
-
-    return _typed_hash(kind, col)
-
-
-def _combine_int64xor(h1: Column, h2: Column) -> Column:
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        _int_mix_udf,
-    )
-
-    return _int_mix_udf("inthash64")(h1).bitwiseXOR(h2)
-
-
-def _combine_int32xor(h1: Column, h2: Column) -> Column:
-    from clickhouse_25_5_3_75_stable_spark.functions.hashes_extra import (
-        _int_mix_udf,
-    )
-
-    # IntHash32Impl::apply(h1) ^ h2, both UInt32 — mask to 32 bits
-    return _int_mix_udf("inthash32")(h1).bitwiseXOR(h2).bitwiseAND(F.lit(0xFFFFFFFF))
-
-
-def _wrap_null(h: Column, cs: list[Column]) -> Column:
-    any_null = cs[0].isNull()
-    for c in cs[1:]:
-        any_null = any_null | c.isNull()
-    return F.when(any_null, F.lit(None).cast("long")).otherwise(h)
-
-
-def _chain(cols, one, combine) -> Column:
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    h = one(cs[0])
-    for c in cs[1:]:
-        h = combine(h, one(c))
-    return _wrap_null(h, cs)
-
-
-def gcc_murmur_exact(*cols) -> Column:
-    return _chain(cols, lambda c: _typed("gcc_murmur", c), _combine_int64xor)
-
-
-def kafka_murmur_exact(*cols) -> Column:
-    return _chain(cols, lambda c: _typed("kafka_murmur", c), _combine_int32xor)
-
-
-def murmur2_32_exact(*cols) -> Column:
-    return _chain(cols, lambda c: _typed("murmur2_32", c), _combine_int32xor)
-
-
-def murmur3_32_exact(*cols) -> Column:
-    return _chain(cols, lambda c: _typed("murmur3_32", c), _combine_int32xor)
-
-
-def xxhash32_exact(*cols) -> Column:
-    return _chain(cols, lambda c: _typed("xxh32", c), _combine_int32xor)
-
-
-def _java_bytes_udf():
-    if "java_bytes" not in _UDF_CACHE:
-
-        @pandas_udf("int")
-        def _jh(s: pd.Series) -> pd.Series:
-            mask = np.array([v is None for v in s], dtype=bool)
-            data = [b"" if v is None else bytes(v) for v in s]
-            out = pd.array(_java_np(data).view(np.int64).astype(np.int32),
-                           dtype="Int32")
-            out[mask] = pd.NA
-            return pd.Series(out, dtype="Int32")
-
-        _UDF_CACHE["java_bytes"] = _jh
-    return _UDF_CACHE["java_bytes"]
-
-
-def _java_utf16_udf():
-    if "java_utf16" not in _UDF_CACHE:
-
-        @pandas_udf("int")
-        def _jh16(s: pd.Series) -> pd.Series:
-            out = [None if v is None else java_hash_utf16le_py(bytes(v))
-                   for v in s]
-            return pd.Series(pd.array(out, dtype="Int32"))
-
-        _UDF_CACHE["java_utf16"] = _jh16
-    return _UDF_CACHE["java_utf16"]
-
-
-def java_hash_exact(col) -> Column:
-    """javaHash with the reference's SPECIAL POD dispatch: int8/16/32
-    pass through, Int64 folds x ^ (x >>> 32), strings fold signed
-    bytes; NULL → NULL."""
-    col = F.col(col) if isinstance(col, str) else col
-    s = col.cast("string")
-    t = F.call_function("typeof", col)
-    b = s.cast("bigint")
-    i64fold = (
-        b.bitwiseAND(F.lit(0xFFFFFFFF))
-        .bitwiseXOR(F.shiftrightunsigned(b, 32))
-        .cast("int")
-    )
-    h = (
-        F.when(t.isin("tinyint", "smallint", "int"), s.cast("int"))
-        .when(t == "bigint", i64fold)
-        .otherwise(_java_bytes_udf()(F.encode(s, "UTF-8")))
-    )
-    return F.when(col.isNull(), F.lit(None).cast("int")).otherwise(h)
-
-
-def java_hash_utf16le_exact(col) -> Column:
-    col = F.col(col) if isinstance(col, str) else col
-    return F.when(col.isNull(), F.lit(None).cast("int")).otherwise(
-        _java_utf16_udf()(F.encode(col.cast("string"), "UTF-16LE"))
-    )
-
-
-def hive_hash_exact(col) -> Column:
-    return java_hash_exact(col).bitwiseAND(F.lit(0x7FFFFFFF))
-
-
-def urlhash_exact(url, level=None) -> Column:
-    """URLHash(url[, level]) — CityHash64 of the URL (or its hierarchy
-    prefix at `level`) with one trailing '/', '?' or '#' dropped."""
-    from clickhouse_25_5_3_75_stable_spark.functions.cityhash import _udf
-
-    url = F.col(url) if isinstance(url, str) else url
-    if level is not None:
-        from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
-
-        lvl = F.col(level) if isinstance(level, str) else F.lit(level) \
-            if not isinstance(level, Column) else level
-        url = F.try_element_at(ch("URLHierarchy", url), lvl.cast("int") + 1)
-    trimmed = F.when(
-        url.rlike("[/?#]$"), F.substring(url, 1, F.length(url) - 1)
-    ).otherwise(url)
-    h = _udf()(F.encode(trimmed, "UTF-8"))
-    return F.when(url.isNull(), F.lit(None).cast("long")).otherwise(h)
-
-
-def siphash64_keyed_exact(k0: int, k1: int, *cols) -> Column:
-    """sipHash64Keyed((k0, k1), args...) with literal keys: the keyed
-    SipHash-2-4 core (functions/siphash.py already carries key
-    support); combine = keyed hash over the 16-byte LE concat."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        _encode_auto,
-        siphash64_py,
-    )
-
-    key = f"sipkeyed_{k0}_{k1}"
-    if key not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _sk(s: pd.Series) -> pd.Series:
-            out = [
-                None if v is None else
-                np.int64(np.uint64(siphash64_py(bytes(v), k0, k1))).item()
-                for v in s
-            ]
-            return pd.Series(pd.array(out, dtype="Int64"))
-
-        _UDF_CACHE[key] = _sk
-    udf = _UDF_CACHE[key]
-
-    def one(c: Column) -> Column:
-        return udf(_encode_auto(c))
-
-    def combine(h1: Column, h2: Column) -> Column:
-        le = F.concat(
-            _le8(h1),
-            _le8(h2),
-        )
-        return udf(le)
-
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    h = one(cs[0])
-    for c in cs[1:]:
-        h = combine(h, one(c))
-    any_null = cs[0].isNull()
-    for c in cs[1:]:
-        any_null = any_null | c.isNull()
-    return F.when(any_null, F.lit(None).cast("long")).otherwise(h)
-
-
-def _le8(h: Column) -> Column:
-    """8 little-endian bytes of a BIGINT column (JVM expressions).
-    Byte order is reversed in HEX space — F.reverse on a BINARY column
-    implicitly casts to string and corrupts non-UTF-8 bytes (review
-    finding: Arrow 'Wrapping ... failed' in the keyed combine)."""
-    hx = F.lpad(F.hex(h), 16, "0")
-    le_hx = F.concat(*[F.substring(hx, i, 2) for i in range(15, 0, -2)])
-    return F.unhex(le_hx)
-
-
-# ---------------------------------------------------------------------------
-# SQL-text entry points (session.py registers; chsql rewrites)
-# ---------------------------------------------------------------------------
-
-def hash32_sql_ddl() -> list[str]:
-    """DDL for gccMurmurHash / kafkaMurmurHash / murmurHash2_32 /
-    murmurHash3_32 / xxHash32 (raw-LE-bytes POD rule; combines are
-    registered python UDFs ch_int64xor_combine / ch_int32xor_combine),
-    javaHash / hiveHash (the SPECIAL POD dispatch, not combineable),
-    and URLHash (string-only, trailing /?# drop over cityHash64)."""
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        typed_hash_sql_case,
-    )
-
-    out = []
-    for fam, prefix in (("gccmurmurhash", "gccMurmurHash"),
-                        ("kafkamurmurhash", "kafkaMurmurHash"),
-                        ("murmurhash2_32", "murmurHash2_32"),
-                        ("murmurhash3_32", "murmurHash3_32"),
-                        ("xxhash32", "xxHash32")):
-        out.append(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION ch_{fam}_typed(s STRING, t STRING) "
-            "RETURNS BIGINT RETURN IF(s IS NULL, CAST(NULL AS BIGINT), "
-            f"{typed_hash_sql_case(prefix)})"
-        )
-    java_case = """CASE t
-      WHEN 'tinyint' THEN CAST(s AS INT)
-      WHEN 'smallint' THEN CAST(s AS INT)
-      WHEN 'int' THEN CAST(s AS INT)
-      WHEN 'bigint' THEN CAST((CAST(s AS BIGINT) & 4294967295) ^ shiftrightunsigned(CAST(s AS BIGINT), 32) AS INT)
-      ELSE javaHash_bin(encode(s, 'utf-8')) END"""
-    out.append(
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_javahash_typed(s STRING, t STRING) "
-        f"RETURNS INT RETURN IF(s IS NULL, CAST(NULL AS INT), {java_case})"
-    )
-    out.append(
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_hivehash_typed(s STRING, t STRING) "
-        "RETURNS INT RETURN ch_javahash_typed(s, t) & 2147483647"
-    )
-    out.append(
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_javahashutf16le(s STRING) "
-        "RETURNS INT RETURN IF(s IS NULL, CAST(NULL AS INT), "
-        "javaHashUTF16_bin(encode(s, 'UTF-16LE')))"
-    )
-    out.append(
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_urlhash(u STRING) "
-        "RETURNS BIGINT RETURN IF(u IS NULL, CAST(NULL AS BIGINT), "
-        "cityHash64_bin(encode(IF(u RLIKE '[/?#]$', "
-        "substring(u, 1, length(u) - 1), u), 'utf-8')))"
-    )
-    return out

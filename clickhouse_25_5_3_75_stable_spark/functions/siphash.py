@@ -12,7 +12,8 @@ Two tiers:
 - `siphash64_py`  — scalar reference (paper-vector validated).
 - `_siphash64_np` — numpy-vectorized across an Arrow batch: the Python
   loop is over 8-byte WORD positions of the longest string in the
-  batch, never over rows. Exposed as `siphash64(col)` (pandas UDF).
+  batch, never over rows. The Spark surface (typed encoding, combine,
+  SQL text) is functions/hashing.py.
 
 This replaces the earlier xxhash64 stand-in: sampling/sharding keys
 computed with sipHash64 in a ClickHouse deployment now reproduce
@@ -22,10 +23,6 @@ exactly, which is what makes a migration's sample sets stable.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _MASK = 0xFFFFFFFFFFFFFFFF
 
@@ -177,41 +174,6 @@ def siphash128_reference_keyed_py(k0: int, k1: int, data: bytes) -> bytes:
     return lo.to_bytes(8, "little") + hi.to_bytes(8, "little")
 
 
-def _udf128_keyed(k0: int, k1: int, reference: bool):
-    """16-byte-output keyed sipHash128 UDF with LITERAL keys (the
-    sipHash64Keyed pattern — keys are baked into the closure)."""
-    key = f"b128keyed_{int(reference)}_{k0}_{k1}"
-    if key not in _UDF_CACHE:
-        core = siphash128_reference_keyed_py if reference else siphash128_keyed_py
-
-        @pandas_udf("binary")
-        def _sk128(s: pd.Series) -> pd.Series:
-            return pd.Series(
-                [None if v is None else core(k0, k1, bytes(v)) for v in s]
-            )
-
-        _UDF_CACHE[key] = _sk128
-    return _UDF_CACHE[key]
-
-
-def siphash128_keyed_chain(k0: int, k1: int, *cols,
-                           reference: bool = False) -> Column:
-    """sipHash128Keyed / sipHash128ReferenceKeyed over typed args:
-    per-arg keyed hash of the typed encoding; multi-arg combine =
-    keyed hash of the 32-byte concat of the two 16-byte hashes
-    (combineHashesKeyed hashes the UInt128 pair's LE memory)."""
-    udf = _udf128_keyed(k0, k1, reference)
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    hs = [udf(_encode_auto(c)) for c in cs]
-    h = hs[0]
-    for nxt in hs[1:]:
-        h = udf(F.concat(h, nxt))
-    any_null = cs[0].isNull()
-    for c in cs[1:]:
-        any_null = any_null | c.isNull()
-    return F.when(any_null, F.lit(None).cast("binary")).otherwise(h)
-
-
 def _np_rotl(x: np.ndarray, b: int) -> np.ndarray:
     b64 = np.uint64(b)
     inv = np.uint64(64 - b)
@@ -315,291 +277,3 @@ def _sip_state_np(data: list[bytes], ref128: bool):
     v2 = v2 ^ np.uint64(0xEE if ref128 else 0xFF)
     rounds(4)
     return v0, v1, v2, v3
-
-
-_UDF_CACHE: dict[str, object] = {}
-
-
-def _udf(kind: str = "binary"):
-    """The UDF only ever receives BINARY — the per-type encoding
-    happens Spark-side (below), so the bytes are deterministic and
-    never depend on which Arrow batch a NULL happened to land in
-    (pandas silently converts a nullable-int batch to float64, which
-    would have rehashed ints as doubles batch-dependently)."""
-    if kind not in _UDF_CACHE:
-        if kind == "str":
-            # SQL-registered form (sipHash64('...') in query text):
-            # UTF-8 of the string rendering; NULL → NULL
-            # (FunctionsHashing.h:869 'someHash(NULL) is NULL')
-            @pandas_udf("long")
-            def _sip_str(s: pd.Series) -> pd.Series:
-                return _null_safe_hash(s, lambda v: str(v).encode("utf-8"))
-
-            _UDF_CACHE[kind] = _sip_str
-        elif kind == "f64":
-            # Float64 column: hash the 8 raw IEEE-754 bytes
-            # (use_int_hash_for_pods=false for sipHash64 — raw LE
-            # bytes at native width; the UDF sees the double so the
-            # bit view is exact)
-            @pandas_udf("long")
-            def _sip_f64(s: pd.Series) -> pd.Series:
-                vals = s.to_numpy(dtype=np.float64).view(np.uint64)
-                data = [int(v).to_bytes(8, "little") for v in vals]
-                return pd.Series(_siphash64_np(data).astype(np.int64))
-
-            _UDF_CACHE[kind] = _sip_f64
-        elif kind == "f32":
-
-            @pandas_udf("long")
-            def _sip_f32(s: pd.Series) -> pd.Series:
-                vals = s.to_numpy(dtype=np.float32).view(np.uint32)
-                data = [int(v).to_bytes(4, "little") for v in vals]
-                return pd.Series(_siphash64_np(data).astype(np.int64))
-
-            _UDF_CACHE[kind] = _sip_f32
-        else:
-
-            @pandas_udf("long")
-            def _sip_binary(s: pd.Series) -> pd.Series:
-                return _null_safe_hash(s, bytes)
-
-            _UDF_CACHE[kind] = _sip_binary
-    return _UDF_CACHE[kind]
-
-
-def _null_safe_hash(s: pd.Series, to_bytes) -> pd.Series:
-    mask = np.array([v is None for v in s], dtype=bool)
-    data = [b"" if v is None else to_bytes(v) for v in s]
-    out = pd.array(_siphash64_np(data).astype(np.int64), dtype="Int64")
-    out[mask] = pd.NA
-    return pd.Series(out, dtype="Int64")
-
-
-def _udf128(reference: bool = False):
-    """16-byte-output sipHash128 UDFs (binary in, binary out)."""
-    key = "b128ref" if reference else "b128"
-    if key not in _UDF_CACHE:
-        core = _siphash128_reference_np if reference else _siphash128_np
-
-        @pandas_udf("binary")
-        def _sip128(s: pd.Series) -> pd.Series:
-            vals = [None if v is None else bytes(v) for v in s]
-            data = [b"" if v is None else v for v in vals]
-            hashed = core(data)
-            return pd.Series(
-                [None if v is None else h for v, h in zip(vals, hashed)]
-            )
-
-        _UDF_CACHE[key] = _sip128
-    return _UDF_CACHE[key]
-
-
-def siphash128_auto(col, reference: bool = False) -> Column:
-    """sipHash128 / sipHash128Reference with the typed encoding —
-    FixedString(16) in CH, BINARY(16) here; NULL → NULL. Multi-arg
-    combine (combineHashesFunc<UInt128>) = sipHash128 of the 32-byte
-    concat of the two LE 16-byte hashes."""
-    col = F.col(col) if isinstance(col, str) else col
-    h = _udf128(reference)(_encode_auto(col))
-    return F.when(col.isNull(), F.lit(None).cast("binary")).otherwise(h)
-
-
-def siphash128_chain(*cols, reference: bool = False) -> Column:
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    hs = [siphash128_auto(c, reference) for c in cs]
-    h = hs[0]
-    for nxt in hs[1:]:
-        h = _udf128(reference)(F.concat(h, nxt))
-    any_null = cs[0].isNull()
-    for c in cs[1:]:
-        any_null = any_null | c.isNull()
-    return F.when(any_null, F.lit(None).cast("binary")).otherwise(h)
-
-
-def _le_bytes(col: Column, n_bytes: int) -> Column:
-    """Little-endian two's-complement bytes of an integer column,
-    built with JVM expressions (hex → byte-swap → unhex)."""
-    width = n_bytes * 2
-    h = F.lpad(F.substring(F.hex(col.cast("bigint")), -width, width), width, "0")
-    pairs = [F.substring(h, i, 2) for i in range(width - 1, 0, -2)]
-    return F.unhex(F.concat(*pairs))
-
-
-def _le_bytes_sql(expr: str, n_bytes: int) -> str:
-    """SQL-text spelling of :func:`_le_bytes` (for the SQL-function
-    entry points registered in session.py)."""
-    width = n_bytes * 2
-    h = (
-        f"lpad(substring(hex(CAST({expr} AS BIGINT)), -{width}, {width}),"
-        f" {width}, '0')"
-    )
-    pairs = ",".join(f"substring({h}, {i}, 2)" for i in range(width - 1, 0, -2))
-    return f"unhex(concat({pairs}))"
-
-
-def typed_bytes_sql_case() -> str:
-    """The (s, t)-dispatch CASE producing the raw ENCODED BYTES (no UDF
-    call) — for hashes whose core is itself a JVM expression (halfMD5:
-    md5 + hex math). Float columns fall back to the string rendering
-    here (no IEEE-bit expression in Spark SQL; the Column API routes
-    floats through dedicated UDFs where exactness matters)."""
-    return f"""CASE t
-      WHEN 'string' THEN encode(s, 'utf-8')
-      WHEN 'bigint' THEN {_le_bytes_sql('s', 8)}
-      WHEN 'int' THEN {_le_bytes_sql('s', 4)}
-      WHEN 'smallint' THEN {_le_bytes_sql('s', 2)}
-      WHEN 'tinyint' THEN {_le_bytes_sql('s', 1)}
-      WHEN 'boolean' THEN {_le_bytes_sql('CAST(CAST(s AS BOOLEAN) AS BIGINT)', 1)}
-      WHEN 'date' THEN {_le_bytes_sql("datediff(CAST(s AS DATE), DATE'1970-01-01')", 2)}
-      WHEN 'timestamp' THEN {_le_bytes_sql('unix_timestamp(CAST(s AS TIMESTAMP))', 4)}
-      ELSE encode(s, 'utf-8') END"""
-
-
-def typed_hash_sql_case(udf_prefix: str) -> str:
-    """The (s, t)-dispatch CASE over <udf_prefix>_bin/_f64/_f32 UDFs —
-    shared by every hash whose POD treatment is raw native-width bytes
-    (use_int_hash_for_pods=false: sipHash64, xxHash64)."""
-    return f"""CASE t
-      WHEN 'double' THEN {udf_prefix}_f64(CAST(s AS DOUBLE))
-      WHEN 'float' THEN {udf_prefix}_f32(CAST(s AS FLOAT))
-      WHEN 'string' THEN {udf_prefix}_bin(encode(s, 'utf-8'))
-      WHEN 'bigint' THEN {udf_prefix}_bin({_le_bytes_sql('s', 8)})
-      WHEN 'int' THEN {udf_prefix}_bin({_le_bytes_sql('s', 4)})
-      WHEN 'smallint' THEN {udf_prefix}_bin({_le_bytes_sql('s', 2)})
-      WHEN 'tinyint' THEN {udf_prefix}_bin({_le_bytes_sql('s', 1)})
-      WHEN 'boolean' THEN {udf_prefix}_bin({_le_bytes_sql('CAST(CAST(s AS BOOLEAN) AS BIGINT)', 1)})
-      WHEN 'date' THEN {udf_prefix}_bin({_le_bytes_sql("datediff(CAST(s AS DATE), DATE'1970-01-01')", 2)})
-      WHEN 'timestamp' THEN {udf_prefix}_bin({_le_bytes_sql('unix_timestamp(CAST(s AS TIMESTAMP))', 4)})
-      ELSE {udf_prefix}_bin(encode(s, 'utf-8')) END"""
-
-
-def siphash64_sql_ddl() -> list[str]:
-    """DDL for the SQL-text entry points (session.py registers these):
-
-    - ch_siphash64_typed(s, t): hash of one value, where t =
-      typeof(original expr) picks the reference's native-width
-      encoding (the chsql shim rewrites sipHash64(x) to
-      ch_siphash64_typed(CAST(x AS STRING), typeof(x)) so typed
-      columns hash bit-exactly through SQL text too);
-    - ch_siphash64_combine(h1, h2): the reference's multi-arg combine
-      (FunctionsHashing.h:195 — sipHash64 of the two LE8 hashes).
-
-    Both are Spark SQL scalar functions whose bodies stay JVM-side up
-    to the single binary-input pandas UDF sipHash64_bin."""
-    return [
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_siphash64_typed(s STRING, t STRING) "
-        "RETURNS BIGINT RETURN IF(s IS NULL, CAST(NULL AS BIGINT), "
-        f"{typed_hash_sql_case('sipHash64')})",
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_siphash64_combine(h1 BIGINT, h2 BIGINT) "
-        "RETURNS BIGINT RETURN IF(h1 IS NULL OR h2 IS NULL, CAST(NULL AS BIGINT), "
-        f"sipHash64_bin(concat({_le_bytes_sql('h1', 8)}, "
-        f"{_le_bytes_sql('h2', 8)})))",
-    ]
-
-
-def _encode_for_hash(col: Column, ctype: str) -> Column:
-    """Spark-side byte encoding per the reference's native widths
-    (FunctionsHashing.h hashes each type's binary representation):
-    strings → UTF-8; Int64/UInt64 → 8 LE bytes; Int32/UInt32 → 4;
-    Int16/UInt16 → 2; DateTime → UInt32 epoch seconds; Date → UInt16
-    days since epoch. Floats are refused: Spark SQL exposes no
-    doubleToLongBits, and float sharding keys are an anti-pattern the
-    reference discourages too."""
-    c = col
-    if ctype == "string":
-        return F.encode(c.cast("string"), "UTF-8")
-    if ctype in ("int64", "uint64"):
-        return _le_bytes(c, 8)
-    if ctype in ("int32", "uint32"):
-        return _le_bytes(c, 4)
-    if ctype in ("int16", "uint16"):
-        return _le_bytes(c, 2)
-    if ctype in ("int8", "uint8"):
-        return _le_bytes(c, 1)
-    if ctype == "datetime":
-        return _le_bytes(F.unix_timestamp(c.cast("timestamp")), 4)
-    if ctype == "date":
-        return _le_bytes(F.datediff(c.cast("date"), F.lit("1970-01-01")), 2)
-    if ctype == "binary":
-        # raw bytes, hashed as-is (review finding: the string round
-        # trip would mangle non-UTF8 payloads)
-        return c
-    raise ValueError(f"siphash64: unsupported ctype {ctype!r}")
-
-
-def _encode_auto(col: Column) -> Column:
-    """Type-dispatched encoding WITHOUT a ctype hint: `typeof(col)`
-    resolves the column's Spark SQL type and picks the reference's
-    native width (round-3 advisor fix — the dialect/SQL entry points
-    previously hashed str(v) for every type). Every branch operates on
-    CAST(col AS STRING), so the expression analyzes on any input type;
-    the string⇄native round-trips are exact for string/int/date/
-    timestamp. Types with no native-width branch (double, decimal)
-    fall back to the UTF-8 rendering — documented divergence (Spark
-    SQL exposes no doubleToLongBits)."""
-    s = col.cast("string")
-    t = F.call_function("typeof", col)
-    return (
-        F.when(t == "string", F.encode(s, "UTF-8"))
-        .when(t == "bigint", _le_bytes(s.cast("bigint"), 8))
-        .when(t == "int", _le_bytes(s.cast("bigint"), 4))
-        .when(t == "smallint", _le_bytes(s.cast("bigint"), 2))
-        .when(t == "tinyint", _le_bytes(s.cast("bigint"), 1))
-        .when(t == "boolean", _le_bytes(s.cast("boolean").cast("bigint"), 1))
-        .when(t == "date", _le_bytes(F.datediff(s.cast("date"), F.lit("1970-01-01")), 2))
-        .when(t == "timestamp", _le_bytes(F.unix_timestamp(s.cast("timestamp")), 4))
-        .otherwise(F.encode(s, "UTF-8"))
-    )
-
-
-def siphash64_auto(col) -> Column:
-    """sipHash64 with the input's native-width encoding inferred from
-    its Spark type — exact reference values for String/Int*/Date/
-    DateTime columns (see _encode_auto) and for Float64/32 columns
-    (raw IEEE bits via dedicated UDF branches). NULL → NULL
-    (FunctionsHashing.h:869). NOTE: integer LITERALS follow Spark
-    typing (`1` is int → 4 bytes) where ClickHouse narrows literals
-    (`1` is UInt8 → 1 byte); typed COLUMNS reproduce exactly. BINARY
-    columns need the explicit siphash64(col, ctype='binary') form —
-    typeof dispatch cannot route them losslessly through the common
-    string cast (documented divergence of the auto path)."""
-    col = F.col(col) if isinstance(col, str) else col
-    s = col.cast("string")
-    t = F.call_function("typeof", col)
-    h = (
-        F.when(t == "double", _udf("f64")(s.cast("double")))
-        .when(t == "float", _udf("f32")(s.cast("float")))
-        .otherwise(_udf()(_encode_auto(col)))
-    )
-    return F.when(col.isNull(), F.lit(None).cast("long")).otherwise(h)
-
-
-def siphash64_chain(*cols) -> Column:
-    """Multi-argument sipHash64 exactly as the reference combines it
-    (FunctionsHashing.h:195 combineHashesFunc): h = sipHash64(
-    le8(h_prev) || le8(h_i)), left-folded over per-argument hashes.
-    Any NULL argument → NULL result (default null behavior)."""
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    hs = [siphash64_auto(c) for c in cs]
-    h = hs[0]
-    for nxt in hs[1:]:
-        h = _udf()(F.concat(_le_bytes(h, 8), _le_bytes(nxt, 8)))
-    any_null = cs[0].isNull()
-    for c in cs[1:]:
-        any_null = any_null | c.isNull()
-    return F.when(any_null, F.lit(None).cast("long")).otherwise(h)
-
-
-def siphash64(col, ctype: str = "string") -> Column:
-    """sipHash64 — exact reference values, as Int64 bit-pattern (CH's
-    UInt64 reinterpreted; compare/joins work unchanged, render via
-    typemap.uint64_col for display parity).
-
-    ``ctype`` picks the reference's native-width encoding: the default
-    "string" hashes the UTF-8 rendering (exact for String columns);
-    pass "int64"/"int32"/"int16"/"datetime"/"date" for typed sharding
-    keys — sipHash64(user_id) with ctype="int64" reproduces the
-    reference bit-for-bit. The encoding runs as JVM expressions, so
-    results never depend on Arrow batch composition."""
-    col = F.col(col) if isinstance(col, str) else col
-    return _udf()(_encode_for_hash(col, ctype))

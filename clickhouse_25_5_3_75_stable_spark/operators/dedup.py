@@ -601,8 +601,12 @@ def duplicated_span_stats(
     # task (guide §2.5), and the driver's 32-core bench read it 1.4x
     # slower even at sf0.1. The aggregate side does re-run the
     # split+slice+md5+explode subtree (two corpus passes), but both
-    # passes partial-aggregate before their shuffle, and the join moves
-    # one (g, c) row per DISTINCT window — skew-safe at every scale.
+    # passes partial-aggregate before their shuffle. The counts side is
+    # one (g, c) row per DISTINCT window, but grams.join(counts, "g")
+    # still hash-partitions every gram instance by g: a hot window-hash
+    # stays safe only because AQE skew-join splitting
+    # (spark.sql.adaptive.skewJoin.enabled, session.py) breaks up the
+    # oversized join partition — a split windows cannot get.
     # (Checkpointing the exploded gram stream to get one pass is ~14x
     # the corpus in bytes — worse than the recompute.)
     counts = grams.groupBy("g").agg(F.count(F.lit(1)).alias("c"))

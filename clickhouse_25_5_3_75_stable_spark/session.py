@@ -17,6 +17,7 @@ Catalyst/Tungsten in Spark; the session config below is the knob layer:
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import SparkSession
 
@@ -83,212 +84,105 @@ def get_spark(
     return spark
 
 
+# h3 index-math getters with pure-SQL bodies (functions/h3.py owns the
+# bit layout; these are the scan-tier names a sharding key uses)
+_SQL_BODIES = {
+    "h3GetResolution": "(h BIGINT) RETURNS INT RETURN CAST((h >> 52) & 15 AS INT)",
+    "h3GetBaseCell": "(h BIGINT) RETURNS INT RETURN CAST((h >> 45) & 127 AS INT)",
+    "h3ToParent": "(h BIGINT, res INT) RETURNS BIGINT RETURN (h & ~(15L << 52)) "
+                  "| (CAST(res AS BIGINT) << 52) | (shiftleft(1L, 3 * (15 - res)) - 1)",
+    "h3ToString": "(h BIGINT) RETURNS STRING RETURN lower(hex(h))",
+    "stringToH3": "(s STRING) RETURNS BIGINT RETURN CAST(conv(s, 16, 10) AS BIGINT)",
+}
+
+
+def _sql_udfs() -> list:
+    """(SQL name, zero-argument factory) of every pandas UDF exposed to
+    SQL text under the reference's own name, or under the ch_* / *_bin
+    name the chsql rewriter targets. These are the same cached UDFs that
+    back the Column API."""
+    from clickhouse_25_5_3_75_stable_spark.functions import (
+        aescrypto,
+        encodings,
+        geohash,
+        h3geo,
+        hashing,
+        s2,
+    )
+    from clickhouse_25_5_3_75_stable_spark.operators import text
+
+    def built(udf):
+        return lambda: udf
+
+    return [
+        *hashing.SQL_UDFS,
+        ("geohashEncode", geohash._encode_udf),
+        ("geohashDecode", geohash._decode_udf),
+        ("geohashesInBox", geohash._boxes_udf),
+        # EXACT Jaro / Jaro-Winkler (FunctionsStringDistance.cpp)
+        ("jaroSimilarity", built(text.jaro_similarity)),
+        ("jaroWinklerSimilarity", built(text.jaro_winkler_similarity)),
+        *[(name, partial(s2.s2_udf, key)) for name, key in (
+            ("geoToS2", "ch_geotos2"),
+            ("s2ToGeo", "ch_s2togeo"),
+            ("s2GetNeighbors", "ch_s2getneighbors"),
+            ("s2CellsIntersect", "ch_s2cellsintersect"),
+            ("s2CapContains", "ch_s2capcontains"),
+            ("s2CapUnion", "ch_s2capunion"),
+            ("s2RectAdd", "ch_s2rectadd"),
+            ("s2RectContains", "ch_s2rectcontains"),
+            ("s2RectUnion", "ch_s2rectunion"),
+            ("s2RectIntersection", "ch_s2rectintersection"),
+        )],
+        # geoToH3 keeps the 25.5 default LAT_LON argument order;
+        # h3ToGeo returns (lat, lon)
+        *[(name, partial(h3geo.h3geo_udf, key)) for name, key in (
+            ("geoToH3", "ch_geotoh3"),
+            ("h3ToGeo", "ch_h3togeo"),
+            ("h3ToGeoBoundary", "ch_h3boundary"),
+            ("h3kRing", "ch_h3kring"),
+            ("h3HexRing", "ch_h3hexring"),
+            ("h3Distance", "ch_h3distance"),
+            ("h3IndexesAreNeighbors", "ch_h3areneighbors"),
+            ("h3GetFaces", "ch_h3getfaces"),
+            ("h3CellAreaM2", "ch_h3aream2"),
+            ("h3CellAreaRads2", "ch_h3arearads2"),
+            ("h3PointDistM", "ch_h3pointdistm"),
+            ("h3PointDistKm", "ch_h3pointdistkm"),
+            ("h3PointDistRads", "ch_h3pointdistrads"),
+            ("h3HexAreaM2", "ch_h3hexaream2"),
+            ("h3HexAreaKm2", "ch_h3hexareakm2"),
+        )],
+        # encoding/checksum/curve long tail; the variadic curve + bitSlice
+        # surfaces are ch_* shims the chsql rewriter targets
+        # (mortonEncode(a,b) -> ch_morton_encode(NULL, array(a,b)) etc)
+        *[(name, partial(encodings.enc_udf, name)) for name in (
+            "base58Encode", "base58Decode", "tryBase58Decode",
+            "base32Encode", "base32Decode", "tryBase32Decode",
+            "CRC32IEEE", "CRC64", "SHA512_256", "RIPEMD160",
+            "keccak256", "ch_morton_encode", "ch_morton_decode",
+            "ch_hilbert_encode", "ch_hilbert_decode", "ch_bitslice",
+            "normalizeUTF8NFC", "normalizeUTF8NFD",
+            "normalizeUTF8NFKC", "normalizeUTF8NFKD",
+            "punycodeEncode", "punycodeDecode", "tryPunycodeDecode",
+            "idnaEncode", "tryIdnaEncode", "idnaDecode",
+            "convertCharset", "MD4", "BLAKE3")],
+        # encrypt/decrypt family; the chsql rewriter pads the optional
+        # iv/aad args with NULL to match the uniform 5-arg UDF shape
+        *[(name, partial(aescrypto.aes_udf, name)) for name in (
+            "ch_encrypt", "ch_decrypt", "ch_try_decrypt",
+            "ch_aes_encrypt_mysql", "ch_aes_decrypt_mysql")],
+    ]
+
+
 def register_sql_udfs(spark: SparkSession) -> None:
-    """Expose pandas-UDF-backed CH functions to SQL text (the chsql
-    shim passes these names through): exact sipHash64, geohash trio."""
-    from clickhouse_25_5_3_75_stable_spark.functions.geohash import (
-        _boxes_udf,
-        _decode_udf,
-        _encode_udf,
-    )
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import _udf as _sip_udf
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import siphash64_sql_ddl
-
-    # sipHash64 bare name: string-rendering semantics (exact for String
-    # inputs) for direct spark.sql() users. The chsql shim rewrites
-    # sipHash64(x) to ch_siphash64_typed(CAST(x AS STRING), typeof(x)),
-    # so CH SQL gets the reference's native-width typed hashing.
-    spark.udf.register("sipHash64", _sip_udf("str"))
-    spark.udf.register("sipHash64_bin", _sip_udf("binary"))
-    spark.udf.register("sipHash64_f64", _sip_udf("f64"))
-    spark.udf.register("sipHash64_f32", _sip_udf("f32"))
-    for ddl in siphash64_sql_ddl():
-        spark.sql(ddl)
-
-    from clickhouse_25_5_3_75_stable_spark.functions import cityhash as _city
-
-    spark.udf.register("cityHash64_bin", _city._udf())
-    spark.udf.register("cityHash64_pod", _city._int_udf())
-    spark.udf.register("cityHash64_f64", _city._f64_udf())
-    spark.udf.register("cityHash64_f32", _city._f32_udf())
-    spark.udf.register("ch_cityhash64_combine", _city._combine_udf())
-    for ddl in _city.cityhash64_sql_ddl():
-        spark.sql(ddl)
-
-    from clickhouse_25_5_3_75_stable_spark.functions import hashes_extra as _hx
-
-    # exact XXH64 through SQL text; combine = Hash128to64 (same python
-    # UDF as cityHash64's, under the xxhash alias)
-    spark.udf.register("xxHash64_bin", _hx._bytes_udf("xxh64"))
-    spark.udf.register("xxHash64_f64", _hx._float_udf("xxh64", 64))
-    spark.udf.register("xxHash64_f32", _hx._float_udf("xxh64", 32))
-    spark.udf.register("ch_xxhash64_combine", _city._combine_udf())
-    for ddl in _hx.xxhash64_sql_ddl():
-        spark.sql(ddl)
-    # exact halfMD5 through SQL text (pure-SQL body, no python UDF)
-    for ddl in _hx.halfmd5_sql_ddl():
-        spark.sql(ddl)
-    # exact jump consistent hash as a plain SQL name (integer args —
-    # no typed rewrite needed)
-    spark.udf.register("jumpConsistentHash", _hx._jump_udf())
-
-    # round-5 hash long tail through SQL text — every FunctionsHashing.h
-    # name reachable from chsql (see each module's *_sql_ddl docstring)
-    from clickhouse_25_5_3_75_stable_spark.functions import (
-        hashes_extra2 as _hx2,
-    )
-    from clickhouse_25_5_3_75_stable_spark.functions import (
-        hashes_extra3 as _hx3,
-    )
-
-    spark.udf.register("farmHash64_bin", _hx2._bytes_udf("farm_xo"))
-    spark.udf.register("farmFingerprint64_bin", _hx2._bytes_udf("farm_fp"))
-    spark.udf.register("metroHash64_bin", _hx2._bytes_udf("metro64"))
-    for kind, prefix in (("wyhash", "wyHash64"), ("xxh3", "xxh3"),
-                         ("gcc_murmur", "gccMurmurHash"),
-                         ("kafka_murmur", "kafkaMurmurHash"),
-                         ("murmur2_32", "murmurHash2_32"),
-                         ("murmur3_32", "murmurHash3_32"),
-                         ("xxh32", "xxHash32")):
-        spark.udf.register(f"{prefix}_bin", _hx._bytes_udf(kind))
-        spark.udf.register(f"{prefix}_f64", _hx._float_udf(kind, 64))
-        spark.udf.register(f"{prefix}_f32", _hx._float_udf(kind, 32))
-    spark.udf.register("javaHash_bin", _hx3._java_bytes_udf())
-    spark.udf.register("javaHashUTF16_bin", _hx3._java_utf16_udf())
-    spark.udf.register("ch_wyhash64_combine", _hx2._wy_combine_udf())
-    # per-rule combines: intHash64(h1)^h2 and (intHash32(h1)^h2)&M32
-    spark.udf.register("ch_inthash64", _hx._int_mix_udf("inthash64"))
-    spark.udf.register("ch_inthash32", _hx._int_mix_udf("inthash32"))
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_int64xor_combine"
-        "(h1 BIGINT, h2 BIGINT) RETURNS BIGINT RETURN "
-        "IF(h1 IS NULL OR h2 IS NULL, CAST(NULL AS BIGINT), "
-        "ch_inthash64(h1) ^ h2)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION ch_int32xor_combine"
-        "(h1 BIGINT, h2 BIGINT) RETURNS BIGINT RETURN "
-        "IF(h1 IS NULL OR h2 IS NULL, CAST(NULL AS BIGINT), "
-        "(ch_inthash32(h1) ^ h2) & 4294967295)"
-    )
-    for ddl in _hx2.hash_longtail_sql_ddl():
-        spark.sql(ddl)
-    for ddl in _hx3.hash32_sql_ddl():
-        spark.sql(ddl)
-
-    spark.udf.register("geohashEncode", _encode_udf())
-    spark.udf.register("geohashDecode", _decode_udf())
-    spark.udf.register("geohashesInBox", _boxes_udf())
-
-    # EXACT Jaro / Jaro-Winkler through SQL text (reference
-    # src/Functions/FunctionsStringDistance.cpp) — the same Arrow-batched
-    # pandas UDFs that back the Column API (operators/text.py), registered
-    # under the reference's own names (round-6: retired the levenshtein
-    # capability map that produced silently different scores).
-    from clickhouse_25_5_3_75_stable_spark.operators.text import (
-        jaro_similarity as _jaro_udf,
-    )
-    from clickhouse_25_5_3_75_stable_spark.operators.text import (
-        jaro_winkler_similarity as _jarow_udf,
-    )
-
-    spark.udf.register("jaroSimilarity", _jaro_udf)
-    spark.udf.register("jaroWinklerSimilarity", _jarow_udf)
-
-    # round-5 s2 family through SQL text: the same cached pandas UDFs
-    # that back the Column API register under the reference's own
-    # names (no chsql rename needed — name resolution is direct).
-    from clickhouse_25_5_3_75_stable_spark.functions import s2 as _s2
-
-    for sql_name, key in (
-        ("geoToS2", "ch_geotos2"),
-        ("s2ToGeo", "ch_s2togeo"),
-        ("s2GetNeighbors", "ch_s2getneighbors"),
-        ("s2CellsIntersect", "ch_s2cellsintersect"),
-        ("s2CapContains", "ch_s2capcontains"),
-        ("s2CapUnion", "ch_s2capunion"),
-        ("s2RectAdd", "ch_s2rectadd"),
-        ("s2RectContains", "ch_s2rectcontains"),
-        ("s2RectUnion", "ch_s2rectunion"),
-        ("s2RectIntersection", "ch_s2rectintersection"),
-    ):
-        spark.udf.register(sql_name, _s2.s2_udf(key))
-
-    # round-6 h3 GEO family through SQL text: the same cached pandas
-    # UDFs that back the Column API (functions/h3geo.py), under the
-    # reference's own names. geoToH3 keeps the 25.5 default LAT_LON
-    # argument order; h3ToGeo returns (lat, lon).
-    from clickhouse_25_5_3_75_stable_spark.functions import h3geo as _h3g
-
-    for sql_name, key in (
-        ("geoToH3", "ch_geotoh3"),
-        ("h3ToGeo", "ch_h3togeo"),
-        ("h3ToGeoBoundary", "ch_h3boundary"),
-        ("h3kRing", "ch_h3kring"),
-        ("h3HexRing", "ch_h3hexring"),
-        ("h3Distance", "ch_h3distance"),
-        ("h3IndexesAreNeighbors", "ch_h3areneighbors"),
-        ("h3GetFaces", "ch_h3getfaces"),
-        ("h3CellAreaM2", "ch_h3aream2"),
-        ("h3CellAreaRads2", "ch_h3arearads2"),
-        ("h3PointDistM", "ch_h3pointdistm"),
-        ("h3PointDistKm", "ch_h3pointdistkm"),
-        ("h3PointDistRads", "ch_h3pointdistrads"),
-        ("h3HexAreaM2", "ch_h3hexaream2"),
-        ("h3HexAreaKm2", "ch_h3hexareakm2"),
-    ):
-        spark.udf.register(sql_name, _h3g.h3geo_udf(key))
-
-    # h3 index-math getters with pure-SQL bodies (functions/h3.py owns
-    # the bit layout; these are the scan-tier names a sharding key uses)
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3GetResolution(h BIGINT) "
-        "RETURNS INT RETURN CAST((h >> 52) & 15 AS INT)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3GetBaseCell(h BIGINT) "
-        "RETURNS INT RETURN CAST((h >> 45) & 127 AS INT)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3ToParent(h BIGINT, res INT) "
-        "RETURNS BIGINT RETURN (h & ~(15L << 52)) | (CAST(res AS BIGINT) << 52) "
-        "| (shiftleft(1L, 3 * (15 - res)) - 1)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION h3ToString(h BIGINT) "
-        "RETURNS STRING RETURN lower(hex(h))"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION stringToH3(s STRING) "
-        "RETURNS BIGINT RETURN CAST(conv(s, 16, 10) AS BIGINT)"
-    )
-
-    # round-5 encoding/checksum/curve long tail (functions/encodings.py).
-    # Fixed-arity names register directly; the variadic curve + bitSlice
-    # surfaces go through ch_* shims the chsql rewriter targets
-    # (mortonEncode(a,b) → ch_morton_encode(NULL, array(a,b)) etc).
-    from clickhouse_25_5_3_75_stable_spark.functions import encodings as _enc
-
-    for sql_name in ("base58Encode", "base58Decode", "tryBase58Decode",
-                     "base32Encode", "base32Decode", "tryBase32Decode",
-                     "CRC32IEEE", "CRC64", "SHA512_256", "RIPEMD160",
-                     "keccak256", "ch_morton_encode", "ch_morton_decode",
-                     "ch_hilbert_encode", "ch_hilbert_decode", "ch_bitslice",
-                     "normalizeUTF8NFC", "normalizeUTF8NFD",
-                     "normalizeUTF8NFKC", "normalizeUTF8NFKD",
-                     "punycodeEncode", "punycodeDecode", "tryPunycodeDecode",
-                     "idnaEncode", "tryIdnaEncode", "idnaDecode",
-                     "convertCharset", "MD4", "BLAKE3"):
-        spark.udf.register(sql_name, _enc.enc_udf(sql_name))
-
-    # encrypt/decrypt family (functions/aescrypto.py); the chsql
-    # rewriter pads the optional iv/aad args with NULL to match the
-    # uniform 5-arg UDF shape
-    from clickhouse_25_5_3_75_stable_spark.functions import aescrypto as _aesm
-
-    for sql_name in ("ch_encrypt", "ch_decrypt", "ch_try_decrypt",
-                     "ch_aes_encrypt_mysql", "ch_aes_decrypt_mysql"):
-        spark.udf.register(sql_name, _aesm.aes_udf(sql_name))
+    """Expose the engine's pandas-UDF-backed CH functions and the h3
+    SQL getters to SQL text (the chsql shim passes these names
+    through or rewrites to them)."""
+    for name, factory in _sql_udfs():
+        spark.udf.register(name, factory())
+    for name, body in _SQL_BODIES.items():
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{body}")
 
 
 def tag_query(spark: SparkSession, query_id: str, description: str = "") -> None:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from clickhouse_25_5_3_75_stable_spark.session import get_spark
@@ -102,7 +104,26 @@ _SLOW_NODEIDS = {
 }
 
 
+def _named_nodeids(config) -> set[str]:
+    """Test ids named on the command line (path::name), relative to the
+    rootdir like item.nodeid."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if not sep:
+            continue
+        p = Path(config.invocation_params.dir, path).resolve()
+        if p.is_relative_to(config.rootpath):
+            named.add(f"{p.relative_to(config.rootpath).as_posix()}::{rest}")
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
+    # a slow test named explicitly on the command line runs even under
+    # the default -m 'not slow' (naming it used to deselect it: exit 5)
+    named = _named_nodeids(config)
     for item in items:
-        if item.nodeid in _SLOW_NODEIDS:
+        if item.nodeid in _SLOW_NODEIDS and not any(
+            item.nodeid == n or item.nodeid.startswith(n + "[") for n in named
+        ):
             item.add_marker(pytest.mark.slow)

@@ -263,9 +263,9 @@ def test_siphash64_exact_reference_values(spark):
     src/Common/SipHash.h)."""
     import numpy as np
 
+    from clickhouse_25_5_3_75_stable_spark.functions.hashing import siphash64
     from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
         _siphash64_np,
-        siphash64,
         siphash64_py,
     )
 
@@ -527,10 +527,8 @@ def test_siphash64_typed_inputs(spark):
     rows' hashes)."""
     import numpy as np
 
-    from clickhouse_25_5_3_75_stable_spark.functions.siphash import (
-        siphash64,
-        siphash64_py,
-    )
+    from clickhouse_25_5_3_75_stable_spark.functions.hashing import siphash64
+    from clickhouse_25_5_3_75_stable_spark.functions.siphash import siphash64_py
 
     def as_i64(v):
         return np.int64(np.uint64(v)).item()

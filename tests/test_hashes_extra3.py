@@ -142,41 +142,45 @@ def test_spark_dispatch_and_combines(spark):
 
 def test_sql_surface_matches_column_api(spark):
     """chsql SQL text must produce the same exact values as the Column
-    API for the whole round-5 hash long tail (round-5 fix: farmHash64
-    in SQL silently hit Spark's builtin xxhash64 before)."""
+    API for every hash-family row (string, bigint, int, double, date and
+    NULL inputs, plus one 2-argument combine per combineable family) and
+    for the special SQL names (round-5 fix: farmHash64 in SQL silently
+    hit Spark's builtin xxhash64 before)."""
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
-    from clickhouse_25_5_3_75_stable_spark.session import register_sql_udfs
+    from clickhouse_25_5_3_75_stable_spark.functions.hashing import FAMILIES
 
-    register_sql_udfs(spark)
-    spark.createDataFrame(
-        [("clickhouse", 42), ("", -7)], "s string, k bigint"
+    # a VALUES relation: the typeof() dispatch must also fold on a local
+    # relation (the optimizer evaluates projections over one early)
+    spark.sql(
+        "SELECT * FROM VALUES "
+        "('clickhouse', 42L, -7, 1.5D, DATE'2024-03-05', 'http://x.y/a/'), "
+        "('', -9223372036854775808L, 2147483647, -0.0D, DATE'1970-01-01', "
+        "'http://x.y/?'), "
+        "(NULL, NULL, NULL, NULL, NULL, NULL) AS t(s, k, i, x, d, u)"
     ).createOrReplaceTempView("hash_sql_tt")
-    names = ["farmHash64", "farmFingerprint64", "metroHash64", "wyHash64",
-             "xxh3", "gccMurmurHash", "kafkaMurmurHash", "murmurHash2_32",
-             "murmurHash3_32", "xxHash32", "javaHash", "hiveHash"]
-    sql_cols = ", ".join(f"{n}(s) AS s_{n}" for n in names) + ", " + \
-        ", ".join(f"{n}(k) AS k_{n}" for n in names if n != "javaHash")
-    got = ch_sql(spark, f"SELECT {sql_cols} FROM hash_sql_tt ORDER BY s").collect()
+    typed = ("s", "k", "i", "x", "d")
+    calls = {f"{c}_{n}": (n, (c,)) for n in (*FAMILIES, "halfMD5") for c in typed}
+    calls.update({f"p_{n}": (n, ("s", "k")) for n, fam in FAMILIES.items()
+                  if fam.combine is not None})
+    calls["p_halfMD5"] = ("halfMD5", ("s", "k"))
+    calls.update({f"{c}_{n}": (n, (c,)) for n in ("intHash64", "intHash32")
+                  for c in ("k", "i", "d")})
+    calls["u_URLHash"] = ("URLHash", ("u",))
+    calls["s_javaHashUTF16LE"] = ("javaHashUTF16LE", ("s",))
+    sql_cols = ", ".join(f"{n}({', '.join(a)}) AS {alias}"
+                         for alias, (n, a) in calls.items())
+    got = ch_sql(
+        spark, f"SELECT s IS NULL AS z, {sql_cols} FROM hash_sql_tt ORDER BY z, s"
+    ).collect()
     want = spark.table("hash_sql_tt").select(
-        *[ch(n, F.col("s")).cast("bigint").alias(f"s_{n}") for n in names],
-        *[ch(n, F.col("k")).cast("bigint").alias(f"k_{n}")
-          for n in names if n != "javaHash"],
-    ).orderBy("s").collect()
+        F.col("s").isNull().alias("z"),
+        *[ch(n, *[F.col(c) for c in a]).alias(alias) for alias, (n, a) in calls.items()],
+    ).orderBy("z", "s").collect()
+    assert len(got) == len(want) == 3
     for g, w in zip(got, want):
         for f in w.asDict():
             assert g[f] == w[f], (f, g[f], w[f])
-    # multi-arg via SQL == Column combine; URLHash string path
-    pair = ch_sql(
-        spark,
-        "SELECT farmHash64(s, s) AS f2, wyHash64(s, s) AS w2, "
-        "URLHash('http://x.y/a/') AS uh FROM hash_sql_tt WHERE s = 'clickhouse'",
-    ).collect()[0]
-    col = spark.table("hash_sql_tt").filter("s = 'clickhouse'").select(
-        ch("farmHash64", F.col("s"), F.col("s")).alias("f2"),
-        ch("wyHash64", F.col("s"), F.col("s")).alias("w2"),
-        ch("URLHash", F.lit("http://x.y/a/")).alias("uh"),
-    ).collect()[0]
-    assert (pair.f2, pair.w2, pair.uh) == (col.f2, col.w2, col.uh)
+    assert all(v is None for f, v in got[-1].asDict().items() if f != "z")
 
 
 # ---------------------------------------------------------------------------
