@@ -20,6 +20,7 @@ import json
 import os
 import re
 import sys
+from collections import deque
 
 
 def _detect_format(sql: str) -> tuple[str, str]:
@@ -117,56 +118,21 @@ def _write_binary_outfile(df, rows, fmt: str, outfile: str) -> bool:
 
 
 def _register_dir(spark, data_dir: str) -> list[str]:
-    names = []
-    for f in sorted(os.listdir(data_dir)):
-        path = os.path.join(data_dir, f)
-        if f.startswith(("_", ".")):
-            continue  # _dropped/_detached_tables/_shadow parking areas
-        if f.endswith(".parquet"):
-            name = f[: -len(".parquet")]
-        elif os.path.isdir(path) and any(
-            p.endswith((".parquet", ".json")) or ("=" in p and os.path.isdir(
-                os.path.join(path, p)))
-            for p in os.listdir(path)
-        ):
-            # DDL table directory: flat parts, the _ddl.json def, OR
-            # col=value partition dirs (a partitioned table has no
-            # root-level parquet once the zero-row markers are gone —
-            # review-found: such tables vanished from the catalog)
-            name = f
-        else:
-            continue
-        try:
-            if os.path.isdir(path):
-                # DDL-managed dirs: declared column order + cast-on-read
-                # type evolution + rename mapping (plain read clobbered
-                # the evolved view at session start otherwise)
-                from clickhouse_25_5_3_75_stable_spark.ddl import (
-                    register_table_view,
-                )
+    from clickhouse_25_5_3_75_stable_spark.sources import catalog
 
-                register_table_view(spark, data_dir, name)
-            else:
-                spark.read.parquet(path).createOrReplaceTempView(name)
-        except Exception:
-            # an unreadable (corrupted) table must not take the whole
-            # session down — CHECK TABLE needs to run to DIAGNOSE it
-            continue
-        names.append(name)
-    return names
+    return catalog.sync(spark, data_dir)
 
 
-_QUERY_LOG: list[tuple] = []  # (statement_kind, query, duration_s, result_rows)
+# (statement_kind, query, duration_s, result_rows), newest last; capped
+# like system_tables._QUERY_LOG so a long-running server stays bounded
+_QUERY_LOG: deque = deque(maxlen=10_000)
 
 
-def _log_query(spark, kind: str, sql: str, dur: float, rows: int) -> None:
+def _log_query(kind: str, sql: str, dur: float, rows: int) -> None:
     """system.query_log analogue (reference
     src/Interpreters/QueryLog.h): per-statement audit rows, exposed as
-    the `query_log` view for the next statement to query."""
+    the `query_log` view to a later statement that names it."""
     _QUERY_LOG.append((kind, sql[:500], round(dur, 4), rows))
-    spark.createDataFrame(
-        _QUERY_LOG, "kind string, query string, duration_s double, result_rows long"
-    ).createOrReplaceTempView("query_log")
 
 
 def _resolve_final(spark, data_dir: str, sql: str) -> str:
@@ -379,6 +345,7 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
     (ddl.py), INSERT INTO ... VALUES/SELECT, SHOW TABLES, DESCRIBE —
     the clickhouse-local statement surface."""
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql_to_spark
+    from clickhouse_25_5_3_75_stable_spark.sources import catalog
 
     own_session = spark is None
     if own_session:
@@ -866,9 +833,6 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
                     r"(?is)^REPLACE\s+PARTITION\s+(.+?)\s+FROM\s+(\w+)\s*$",
                     action)
                 if mv or rp:
-                    from clickhouse_25_5_3_75_stable_spark.ddl import (
-                        register_table_view,
-                    )
                     from clickhouse_25_5_3_75_stable_spark.sources.layout import (
                         move_partition_to_table,
                         replace_partition_from,
@@ -893,13 +857,8 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
                     else:
                         replace_partition_from(
                             tpath, opath, td.partition_by, _pval(rp.group(1)))
-                    for nm, pth, tdn in ((tname, tpath, td), (other, opath, td2)):
-                        try:
-                            register_table_view(spark, data_dir, nm)
-                        except Exception:
-                            spark.createDataFrame(
-                                [], tdn.spark_schema()
-                            ).createOrReplaceTempView(nm)
+                    catalog.register(spark, data_dir, tname)
+                    catalog.register(spark, data_dir, other)
                     _emit([(tname, "Ok")], ["table", "status"], fmt, out)
                     return 0
                 pm2 = re.match(
@@ -920,18 +879,7 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
                     drop_detached_partition(tpath, td.partition_by, val)
                 else:
                     drop_partition(tpath, td.partition_by, val)
-                from clickhouse_25_5_3_75_stable_spark.ddl import (
-                    register_table_view,
-                )
-
-                try:
-                    register_table_view(spark, data_dir, tname)
-                except Exception:
-                    # every partition detached/dropped: an empty view
-                    # with the declared schema, like an empty table
-                    spark.createDataFrame(
-                        [], td.spark_schema()
-                    ).createOrReplaceTempView(tname)
+                catalog.register(spark, data_dir, tname)
             elif up.startswith("DELETE"):
                 dm = re.match(r"(?is)DELETE\s+WHERE\s+(.+)$", action)
                 if not dm:
@@ -1026,8 +974,7 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
                 )
 
                 vname, body = lv.group(1), lv.group(2).strip().rstrip(";")
-                if os.path.isdir(os.path.join(data_dir, vname)) or \
-                        os.path.exists(os.path.join(data_dir, f"{vname}.parquet")):
+                if vname in names:
                     raise ValueError(
                         f"CREATE LIVE VIEW {vname}: a table with that name "
                         "exists")
@@ -1056,13 +1003,16 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
             )
             if mv:
                 vname, body = mv.group(2), mv.group(3)
-                vdf = spark.sql(ch_sql_to_spark(body))
                 if mv.group(1):  # MATERIALIZED: persist the result
-                    path = os.path.join(data_dir, vname)
-                    vdf.write.mode("overwrite").parquet(path)
-                    spark.read.parquet(path).createOrReplaceTempView(vname)
+                    spark.sql(ch_sql_to_spark(body)).write.mode(
+                        "overwrite").parquet(os.path.join(data_dir, vname))
+                    catalog.register(spark, data_dir, vname)
                 else:
-                    vdf.createOrReplaceTempView(vname)
+                    # a plain view is its SQL text, resolved at each
+                    # read like the reference's StorageView; a
+                    # registered DataFrame would pin its tables' files
+                    spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS "
+                              + ch_sql_to_spark(body))
                 _emit([(vname, "Ok")], ["table", "status"], fmt, out)
                 return 0
             # lake ENGINEs (round-9; reference registerStorages.cpp
@@ -1129,13 +1079,16 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
                         TableDef,
                         save_table_def,
                     )
+                    from clickhouse_25_5_3_75_stable_spark.functions.typemap import (
+                        spark_type_to_ch,
+                    )
 
                     save_table_def(
                         data_dir,
                         TableDef(
                             name=tname,
                             columns=[
-                                (f.name, f.dataType.simpleString())
+                                (f.name, spark_type_to_ch(f.dataType))
                                 for f in df.schema.fields
                             ],
                             engine=engine or "MergeTree",
@@ -1147,7 +1100,7 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
                             order_by=order_by,
                         ),
                     )
-                spark.read.parquet(path).createOrReplaceTempView(tname)
+                catalog.register(spark, data_dir, tname)
                 _emit([(tname, "Ok")], ["table", "status"], fmt, out)
                 return 0
 
@@ -1301,20 +1254,13 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
                     for c, f_ in zip(df.columns, target.schema.fields)
                 ]
             )
-            from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
-
             from clickhouse_25_5_3_75_stable_spark.ddl import (
                 append_to_table,
-                register_table_view,
+                load_table_def,
             )
 
-            td = load_table_def(data_dir, tname)
-            if td is not None and td.order_by:
-                sortable = [c for c in td.order_by if c in df.columns]
-                if sortable:
-                    df = df.sortWithinPartitions(*sortable)
-            append_to_table(df, td, path)
-            register_table_view(spark, data_dir, tname)
+            append_to_table(df, load_table_def(data_dir, tname), path)
+            catalog.register(spark, data_dir, tname)
             from clickhouse_25_5_3_75_stable_spark.streaming.liveview import (
                 notify_all_views,
             )
@@ -1510,6 +1456,11 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
         for _nm in list(LIVE_VIEWS):
             if re.search(rf"\b{_nm}\b", sql):
                 LIVE_VIEWS[_nm].read(spark).createOrReplaceTempView(_nm)
+        if re.search(r"\bquery_log\b", sql):
+            spark.createDataFrame(
+                list(_QUERY_LOG),
+                "kind string, query string, duration_s double, result_rows long",
+            ).createOrReplaceTempView("query_log")
         df = _route_projection(spark, data_dir, sql)
         if df is None:
             df = _ch_sql(spark, sql, params=params)
@@ -1534,7 +1485,7 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
             _emit([(outfile, len(rows))], ["outfile", "rows"], "TabSeparated", out)
         else:
             _emit(rows, df.columns, fmt, out)
-        _log_query(spark, "select", sql, _time.perf_counter() - t0, len(rows))
+        _log_query("select", sql, _time.perf_counter() - t0, len(rows))
         return 0
     finally:
         if own_session:

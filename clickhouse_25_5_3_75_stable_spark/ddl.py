@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError, _tokenize
 from clickhouse_25_5_3_75_stable_spark.functions.typemap import ch_type_to_spark
+from clickhouse_25_5_3_75_stable_spark.sources import catalog
 
 _ENGINE_FAMILY = {
     "mergetree", "replacingmergetree", "summingmergetree",
@@ -54,6 +55,9 @@ class TableDef:
     # RENAME COLUMN history: declared name -> former physical names
     # (old parquet files keep writing-time names; reads coalesce)
     renames: dict = field(default_factory=dict)
+    # ADD COLUMN ... DEFAULT: column -> default literal, filled at read
+    # for parts written before the column existed
+    defaults: dict = field(default_factory=dict)
 
     def spark_schema(self, mode: str = "exact") -> str:
         return ", ".join(
@@ -212,31 +216,28 @@ class Database:
         empty = self.spark.createDataFrame([], td.spark_schema(mode))
         empty.write.mode("overwrite").parquet(path)
         save_table_def(self.base, td)
-        self.spark.read.parquet(path).createOrReplaceTempView(td.name)
+        catalog.register(self.spark, self.base, td.name)
         return td
 
     def insert_into(self, name: str, df: DataFrame) -> None:
-        td = self.tables[name]
-        path = os.path.join(self.base, name)
-        if td.order_by:
-            # layout write honors the DDL's sort contract; partition
-            # expressions stay out of append mode (they need a column)
-            sortable = [c for c in td.order_by if c in df.columns]
-            df = df.sortWithinPartitions(*sortable) if sortable else df
-        append_to_table(df, td, path)
-        register_table_view(self.spark, self.base, name)
+        append_to_table(df, self.tables[name], os.path.join(self.base, name))
+        catalog.register(self.spark, self.base, name)
 
     def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.base, name))
+        return catalog.register(self.spark, self.base, name)
 
 
 def append_to_table(df: DataFrame, td: "TableDef | None", path: str) -> None:
-    """The one append-write path (CLI INSERT + Catalog.insert_into): a
+    """The one append-write path (CLI INSERT + Database.insert_into): a
     plain-column PARTITION BY lands as physical col=value dirs — which
     is what makes DETACH/ATTACH/DROP PARTITION O(1) moves. CREATE's
     zero-row root marker is removed AFTER the write and only when
     partition dirs actually exist, so a zero-row INSERT can never strand
-    the table unreadable (review-found)."""
+    the table unreadable (review-found). Rows are sorted within files
+    by the DDL's ORDER BY (the layout's sort contract)."""
+    sortable = [c for c in (td.order_by if td else []) if c in df.columns]
+    if sortable:
+        df = df.sortWithinPartitions(*sortable)
     partitioned = bool(td and td.partition_by and td.partition_by in df.columns)
     writer = df.write.mode("append")
     if partitioned:
@@ -258,8 +259,9 @@ def append_to_table(df: DataFrame, td: "TableDef | None", path: str) -> None:
 
 
 def register_table_view(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
-    """(Re-)register a DDL table's temp view in DECLARED column order,
-    with cast-on-read type evolution and rename mapping.
+    """Read a DDL table dir as its view (sources/catalog.py registers it
+    under the table name): DECLARED columns in declared order, with
+    cast-on-read type evolution, rename mapping and ADD COLUMN fill.
 
     - Physical partitionBy writes move the partition column to the end
       of the parquet-inferred schema; without the reorder, a later
@@ -271,12 +273,11 @@ def register_table_view(spark: SparkSession, base_dir: str, name: str) -> DataFr
       mutation, same visible result).
     - RENAME COLUMN records former physical names; reads coalesce the
       declared name with its former names, so old and new parts serve
-      one logical column."""
+      one logical column.
+    - ADD COLUMN is metadata-only: parts written before it lack the
+      column and read its DEFAULT (NULL without one). DROP COLUMN
+      removes the declaration, so its physical data is never read."""
     from pyspark.sql import functions as F
-
-    from clickhouse_25_5_3_75_stable_spark.functions.typemap import (
-        ch_type_to_spark,
-    )
 
     path = os.path.join(base_dir, name)
     td = load_table_def(base_dir, name)
@@ -292,28 +293,22 @@ def register_table_view(spark: SparkSession, base_dir: str, name: str) -> DataFr
         # every partition detached/dropped: the dir holds no data files
         # — an empty view with the declared schema (fuzz-found: the
         # unguarded read surfaced UNABLE_TO_INFER_SCHEMA)
-        df = spark.createDataFrame([], td.spark_schema())
-        df.createOrReplaceTempView(name)
+        return spark.createDataFrame([], td.spark_schema())
+    if td is None:
         return df
-    if td is not None:
-        phys = set(df.columns)
-        sel = []
-        used = set()
-        for cname, chtype in td.columns:
-            want = ch_type_to_spark(chtype)
-            sources = [c for c in [cname] + td.renames.get(cname, [])
-                       if c in phys]
-            if not sources:
-                continue
-            used.update(sources)
-            cols = [F.col(c).cast(want) for c in sources]
-            expr = cols[0] if len(cols) == 1 else F.coalesce(*cols)
-            sel.append(expr.alias(cname))
-        extra = [F.col(c) for c in df.columns if c not in used
-                 and c not in {n for n, _t in td.columns}]
-        df = df.select(*sel, *extra)
-    df.createOrReplaceTempView(name)
-    return df
+    phys = set(df.columns)
+    sel = []
+    for cname, chtype in td.columns:
+        want = ch_type_to_spark(chtype)
+        cols = [F.col(c).cast(want) for c in [cname] + td.renames.get(cname, [])
+                if c in phys]
+        if cname in td.defaults and not chtype.startswith("Nullable"):
+            # a non-Nullable column holds no NULL: NULL is a part that
+            # predates the column
+            cols.append(F.lit(td.defaults[cname]).cast(want))
+        expr = F.coalesce(*cols) if cols else F.lit(None).cast(want)
+        sel.append(expr.alias(cname))
+    return df.select(*sel)
 
 
 def alter_modify_column(spark: SparkSession, base_dir: str, name: str,
@@ -324,8 +319,6 @@ def alter_modify_column(spark: SparkSession, base_dir: str, name: str,
     mergeSchema cannot reconcile contradictory physical types across
     parts (double vs string), so a metadata-only change would make the
     table unreadable after the next INSERT (review-found)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from clickhouse_25_5_3_75_stable_spark.functions.typemap import (
@@ -338,24 +331,9 @@ def alter_modify_column(spark: SparkSession, base_dir: str, name: str,
     if col not in {c for c, _t in td.columns}:
         raise ValueError(f"MODIFY COLUMN: no column {col!r} in {name}")
     want = ch_type_to_spark(new_type)  # validate BEFORE any disk write
-    path = os.path.join(base_dir, name)
-    df = register_table_view(spark, base_dir, name)
-    out = df.withColumn(col, F.col(col).cast(want))
-    staging = path + "__modifying"
-    writer = out.write.mode("overwrite")
-    if td.partition_by and td.partition_by in out.columns:
-        writer = writer.partitionBy(td.partition_by)
-    writer.parquet(staging)
-    for fname in (_DDL_META, "_mutations.json"):
-        src = os.path.join(path, fname)
-        if os.path.exists(src):
-            shutil.copy(src, os.path.join(staging, fname))
-    shutil.rmtree(path)
-    os.rename(staging, path)
+    df = catalog.register(spark, base_dir, name)
     td.columns = [(c, new_type if c == col else t) for c, t in td.columns]
-    td.renames = {}  # parts are uniform again
-    save_table_def(base_dir, td)
-    register_table_view(spark, base_dir, name)
+    _rewrite(spark, base_dir, name, td, df.withColumn(col, F.col(col).cast(want)))
 
 
 def alter_rename_column(spark: SparkSession, base_dir: str, name: str,
@@ -391,8 +369,10 @@ def alter_rename_column(spark: SparkSession, base_dir: str, name: str,
     td.order_by = [new if c == old else c for c in td.order_by]
     # the new name inherits the old name's full former-name chain
     td.renames[new] = [old] + td.renames.pop(old, [])
+    if old in td.defaults:
+        td.defaults[new] = td.defaults.pop(old)
     save_table_def(base_dir, td)
-    register_table_view(spark, base_dir, name)
+    catalog.register(spark, base_dir, name)
 
 
 def _ddl_extras():  # marker for coverage tooling
@@ -419,10 +399,7 @@ def drop_table(spark: SparkSession, base_dir: str, name: str,
             park = os.path.join(base_dir, "_dropped")
             os.makedirs(park, exist_ok=True)
             shutil.move(path, os.path.join(park, f"{name}.{time.time_ns()}"))
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
+    catalog.forget(spark, base_dir, name)
 
 
 def undrop_table(spark: SparkSession, base_dir: str, name: str) -> None:
@@ -441,7 +418,7 @@ def undrop_table(spark: SparkSession, base_dir: str, name: str) -> None:
             f"UNDROP TABLE {name}: a live table with that name exists "
             "(reference: TABLE_ALREADY_EXISTS)")
     os.rename(os.path.join(park, cands[-1]), os.path.join(base_dir, name))
-    register_table_view(spark, base_dir, name)
+    catalog.register(spark, base_dir, name)
 
 
 def detach_table(spark: SparkSession, base_dir: str, name: str) -> None:
@@ -462,10 +439,7 @@ def detach_table(spark: SparkSession, base_dir: str, name: str) -> None:
             f"DETACH TABLE {name}: an earlier detached incarnation exists "
             "— ATTACH or remove it first")
     shutil.move(path, os.path.join(det, name))
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass
+    catalog.forget(spark, base_dir, name)
 
 
 def attach_table(spark: SparkSession, base_dir: str, name: str) -> None:
@@ -480,7 +454,7 @@ def attach_table(spark: SparkSession, base_dir: str, name: str) -> None:
         raise ValueError(
             f"ATTACH TABLE {name}: a live table with that name exists")
     shutil.move(src, os.path.join(base_dir, name))
-    register_table_view(spark, base_dir, name)
+    catalog.register(spark, base_dir, name)
 
 
 def truncate_table(spark: SparkSession, base_dir: str, name: str) -> None:
@@ -492,7 +466,7 @@ def truncate_table(spark: SparkSession, base_dir: str, name: str) -> None:
     if td is not None:
         td.name = name  # stay correct after RENAME
         save_table_def(base_dir, td)
-    spark.read.parquet(path).createOrReplaceTempView(name)
+    catalog.register(spark, base_dir, name)
 
 
 def rename_table(spark: SparkSession, base_dir: str, old: str, new: str) -> None:
@@ -502,11 +476,8 @@ def rename_table(spark: SparkSession, base_dir: str, old: str, new: str) -> None
     if td is not None:
         td.name = new
         save_table_def(base_dir, td)
-    try:
-        spark.catalog.dropTempView(old)
-    except Exception:
-        pass
-    register_table_view(spark, base_dir, new)
+    catalog.forget(spark, base_dir, old)
+    catalog.register(spark, base_dir, new)
 
 
 def exchange_tables(spark: SparkSession, base_dir: str, a: str, b: str) -> None:
@@ -526,7 +497,7 @@ def exchange_tables(spark: SparkSession, base_dir: str, a: str, b: str) -> None:
         if td is not None:
             td.name = name
             save_table_def(base_dir, td)
-        register_table_view(spark, base_dir, name)
+        catalog.register(spark, base_dir, name)
 
 
 _DDL_META = "_ddl.json"
@@ -540,6 +511,7 @@ def save_table_def(base_dir: str, td: TableDef) -> None:
         "engine_args": td.engine_args, "order_by": td.order_by,
         "partition_by": td.partition_by, "ttl": td.ttl,
         "projections": td.projections, "renames": td.renames,
+        "defaults": td.defaults,
     }
     with open(os.path.join(base_dir, td.name, _DDL_META), "w") as fh:
         json.dump(meta, fh)
@@ -558,7 +530,37 @@ def load_table_def(base_dir: str, name: str) -> TableDef | None:
         engine=m["engine"], engine_args=m["engine_args"],
         order_by=m["order_by"], partition_by=m["partition_by"], ttl=m["ttl"],
         projections=m.get("projections", []), renames=m.get("renames", {}),
+        defaults=m.get("defaults", {}),
     )
+
+
+def _rewrite(spark: SparkSession, base_dir: str, name: str,
+             td: "TableDef | None", out: DataFrame) -> None:
+    """Replace a table's parts with `out` (OPTIMIZE, mutations, MODIFY
+    COLUMN; the reference's part rewrite): write a staging dir in the
+    table's partition layout, carry the DDL def and the mutation
+    journal across, swap, then re-register and rebuild projections.
+    Parts come out in the declared schema, so the rename history is
+    spent."""
+    import shutil
+
+    path = os.path.join(base_dir, name)
+    staging = path + "__rewriting"
+    writer = out.write.mode("overwrite")
+    if td is not None and td.partition_by and td.partition_by in out.columns:
+        writer = writer.partitionBy(td.partition_by)  # keep the layout
+    writer.parquet(staging)
+    for fname in (_DDL_META, "_mutations.json"):
+        src = os.path.join(path, fname)
+        if os.path.exists(src):
+            shutil.copy(src, os.path.join(staging, fname))
+    shutil.rmtree(path)
+    os.rename(staging, path)
+    if td is not None:
+        td.renames = {}
+        save_table_def(base_dir, td)
+    catalog.register(spark, base_dir, name)
+    materialize_projections(spark, base_dir, name)
 
 
 def optimize_table(
@@ -582,8 +584,6 @@ def optimize_table(
         raise ValueError(
             "merges are stopped (SYSTEM STOP MERGES); run SYSTEM START "
             "MERGES first")
-    import shutil
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -593,9 +593,8 @@ def optimize_table(
     )
 
     td = load_table_def(base_dir, name)
-    path = os.path.join(base_dir, name)
     # evolved read: see mutate_table (rename/cast normalization)
-    df = register_table_view(spark, base_dir, name)
+    df = catalog.register(spark, base_dir, name)
     out = df
     if deduplicate:
         out = out.dropDuplicates()
@@ -625,25 +624,7 @@ def optimize_table(
             out = summing_final(
                 out, td.order_by, [F.sum(c).alias(c) for c in num]
             )
-    staging = path + "__optimizing"
-    writer = out.write.mode("overwrite")
-    if td is not None and td.partition_by and td.partition_by in out.columns:
-        writer = writer.partitionBy(td.partition_by)  # keep the layout
-    writer.parquet(staging)
-    meta_src = os.path.join(path, _DDL_META)
-    meta_tmp = None
-    if os.path.exists(meta_src):
-        meta_tmp = staging + ".meta"
-        shutil.copy(meta_src, meta_tmp)
-    shutil.rmtree(path)
-    os.rename(staging, path)
-    if meta_tmp:
-        shutil.move(meta_tmp, os.path.join(path, _DDL_META))
-    if td is not None and td.renames:
-        td.renames = {}  # parts are uniform again
-        save_table_def(base_dir, td)
-    register_table_view(spark, base_dir, name)
-    materialize_projections(spark, base_dir, name)  # merge rewrote parts
+    _rewrite(spark, base_dir, name, td, out)
 
 
 def alter_add_column(
@@ -659,8 +640,10 @@ def alter_add_column(
     if td is None:
         raise ValueError(f"{name}: not a DDL-managed table")
     td.columns.append((col, ch_type))
+    if default is not None:
+        td.defaults[col] = default
     save_table_def(base_dir, td)
-    _reregister_evolved(spark, base_dir, td, defaults={col: default} if default is not None else {})
+    catalog.register(spark, base_dir, name)
 
 
 def alter_drop_column(spark: SparkSession, base_dir: str, name: str, col: str) -> None:
@@ -678,28 +661,10 @@ def alter_drop_column(spark: SparkSession, base_dir: str, name: str, col: str) -
             f"DROP COLUMN: {col!r} is a key column of {name} "
             "(the reference refuses dropping partition/sorting keys too)")
     td.columns = [(n, t) for n, t in td.columns if n != col]
+    td.defaults.pop(col, None)
+    td.renames.pop(col, None)
     save_table_def(base_dir, td)
-    _reregister_evolved(spark, base_dir, td, defaults={})
-
-
-def _reregister_evolved(spark, base_dir: str, td: TableDef, defaults: dict) -> None:
-    from pyspark.sql import functions as F
-
-    path = os.path.join(base_dir, td.name)
-    try:
-        raw = spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception:
-        spark.createDataFrame([], td.spark_schema()).createOrReplaceTempView(td.name)
-        return
-    cols = []
-    for n, t in td.columns:
-        spark_t = ch_type_to_spark(t)
-        if n in raw.columns:
-            cols.append(F.col(n).cast(spark_t).alias(n))
-        else:
-            fill = F.lit(defaults.get(n)).cast(spark_t)
-            cols.append(fill.alias(n))
-    raw.select(*cols).createOrReplaceTempView(td.name)
+    catalog.register(spark, base_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -772,7 +737,7 @@ def restore_table(
 
     start = datetime.datetime.now()
     shutil.copytree(src, dst)
-    spark.read.parquet(dst).createOrReplaceTempView(name)
+    catalog.register(spark, base_dir, name)
     n_files = n_bytes = 0
     for root, _dirs, files in os.walk(dst):
         for f in files:
@@ -811,8 +776,6 @@ def mutate_table(
     copy-on-write part rewrite): applies the mutation operators then
     swaps the rewrite in with the same staging contract as
     optimize_table. Expressions are CH dialect."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from clickhouse_25_5_3_75_stable_spark.operators.mutations import (
@@ -832,7 +795,7 @@ def mutate_table(
     # and silently dropped the other parts' data from the rewrite
     # (review-found); the rewrite normalizes parts to the declared
     # schema, so the rename history is spent afterwards
-    df = register_table_view(spark, base_dir, name)
+    df = catalog.register(spark, base_dir, name)
     pred = F.expr(_expr_to_spark(where))
     if kind == "delete":
         out = mutate_delete(df, pred)
@@ -841,23 +804,7 @@ def mutate_table(
         out = mutate_update(df, pred, exprs)
     else:
         raise ValueError(f"unknown mutation kind {kind!r}")
-    staging = path + "__mutating"
-    writer = out.write.mode("overwrite")
-    if td is not None and td.partition_by and td.partition_by in out.columns:
-        writer = writer.partitionBy(td.partition_by)  # keep the layout
-    writer.parquet(staging)
-    # carry table metadata AND the mutation journal across the swap
-    for side, fname in (("meta", _DDL_META), ("journal", "_mutations.json")):
-        src = os.path.join(path, fname)
-        if os.path.exists(src):
-            shutil.copy(src, os.path.join(staging, fname))
-    shutil.rmtree(path)
-    os.rename(staging, path)
-    if td is not None and td.renames:
-        td.renames = {}  # parts are uniform again
-        save_table_def(base_dir, td)
-    register_table_view(spark, base_dir, name)
-    materialize_projections(spark, base_dir, name)  # mutation rewrote parts
+    _rewrite(spark, base_dir, name, td, out)
     # mutation journal for system.mutations (StorageSystemMutations.cpp)
     import json as _json
     import time as _time
@@ -907,7 +854,7 @@ def add_projection(
         raise ValueError(f"{table}: not a DDL-managed table")
     if any(p["name"] == proj_name for p in td.projections):
         raise ValueError(f"projection {proj_name!r} already exists on {table}")
-    df = spark.read.parquet(os.path.join(base_dir, table))
+    df = catalog.register(spark, base_dir, table)
     proj = build_aggregate_projection(df, keys, sum_cols, minmax_cols)
     proj.write.mode("overwrite").parquet(_projection_path(base_dir, table, proj_name))
     td.projections.append({
@@ -934,7 +881,7 @@ def add_normal_projection(
         raise ValueError(f"{table}: not a DDL-managed table")
     if any(p["name"] == proj_name for p in td.projections):
         raise ValueError(f"projection {proj_name!r} already exists on {table}")
-    df = spark.read.parquet(os.path.join(base_dir, table))
+    df = catalog.register(spark, base_dir, table)
     (df.repartitionByRange(*order_keys)
        .sortWithinPartitions(*order_keys)
        .write.mode("overwrite")
@@ -969,7 +916,7 @@ def materialize_projections(spark: SparkSession, base_dir: str, table: str) -> N
     td = load_table_def(base_dir, table)
     if td is None or not td.projections:
         return
-    df = spark.read.parquet(os.path.join(base_dir, table))
+    df = catalog.register(spark, base_dir, table)
     for p in td.projections:
         if p.get("kind") == "normal":
             (df.repartitionByRange(*p["keys"])

@@ -145,6 +145,34 @@ def ch_type_to_spark(ch_type: str, mode: str = "exact") -> str:
     raise ValueError(f"unmapped ClickHouse type: {ch_type!r}")
 
 
+_SPARK_SCALARS = {
+    "tinyint": "Int8", "smallint": "Int16", "int": "Int32", "bigint": "Int64",
+    "float": "Float32", "double": "Float64", "boolean": "Bool",
+    "string": "String", "date": "Date", "timestamp": "DateTime",
+    "void": "Nothing",
+}
+
+
+def spark_type_to_ch(dt) -> str:
+    """The ClickHouse type declaring a Spark column type: an inverse of
+    ch_type_to_spark, for table schemas inferred from a query (CREATE
+    TABLE ... AS SELECT)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.ArrayType):
+        return f"Array({spark_type_to_ch(dt.elementType)})"
+    if isinstance(dt, T.MapType):
+        return f"Map({spark_type_to_ch(dt.keyType)}, {spark_type_to_ch(dt.valueType)})"
+    if isinstance(dt, T.StructType):
+        return "Tuple(" + ", ".join(
+            f"{f.name} {spark_type_to_ch(f.dataType)}" for f in dt.fields) + ")"
+    if isinstance(dt, T.DecimalType):
+        return f"Decimal({dt.precision}, {dt.scale})"
+    if dt.simpleString() not in _SPARK_SCALARS:
+        raise ValueError(f"no ClickHouse type for Spark type {dt.simpleString()!r}")
+    return _SPARK_SCALARS[dt.simpleString()]
+
+
 def uint64_col(col):
     """Tag an expression as UInt64 in exact mode: DECIMAL(20,0) carries
     the full unsigned domain through aggregation without wrap."""

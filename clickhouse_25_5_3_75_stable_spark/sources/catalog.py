@@ -1,4 +1,6 @@
-"""Parquet catalog over the test star schema.
+"""The catalog of a data dir: which tables it holds and what each
+table's view is. Every front door (CLI, HTTP, ``ch_sql(..., sf_dir)``,
+SQL-path registry queries) and every write registers views here.
 
 The reference's table abstraction is IStorage + StorageMergeTree
 (/root/reference/src/Storages/IStorage.h,
@@ -7,6 +9,12 @@ pruning, PK-range scans. Spark equivalent: parquet (or Delta/Iceberg)
 tables — min/max row-group stats + partition dirs give the same
 pruning; `spark.read.parquet` is the ReadFromMergeTree analogue
 (src/Processors/QueryPlan/ReadFromMergeTree.h:62).
+
+Re-reading every table's footers for every statement cost more than
+most reads, so each table's DataFrame is remembered per SparkSession
+under a fingerprint of its files and read again only when a write
+changes them. A view's plan pins its file listing, so the fingerprint
+(not a plain cache) is what keeps views fresh.
 
 At 100 TB the layout contract is: partition by a coarse time/tenant
 key, sort-within-files by the query's PK analogue so min/max pruning
@@ -17,10 +25,12 @@ parquet files as-is.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the registry's star schema (every sf<N> test dir holds these)
 TABLES = (
     "region",
     "nation",
@@ -34,15 +44,12 @@ TABLES = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at any realistic scale factor —
-# the DirectKeyValueJoin / dictionary analogue
-# (/root/reference/src/Interpreters/DirectJoin.h:19).
-BROADCAST_TABLES = frozenset({"region", "nation"})
+# SparkSession -> {(data_dir, name): (fingerprint, DataFrame)}
+_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    """Read the flat table ``<sf_dir>/<name>.parquet``."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
@@ -67,7 +74,91 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
+def list_tables(data_dir: str) -> list[str]:
+    """Table names in a data dir, sorted: ``<name>.parquet`` files, and
+    dirs that hold parquet parts, ``_ddl.json`` or ``col=value``
+    partition dirs (a partitioned table has no root-level parquet once
+    CREATE's zero-row markers are gone). Names starting with ``_`` or
+    ``.`` are parking areas (_dropped, _detached_tables, _shadow)."""
+    names = []
+    for f in sorted(os.listdir(data_dir)):
+        if f.startswith(("_", ".")):
+            continue
+        path = os.path.join(data_dir, f)
+        if f.endswith(".parquet"):
+            if os.path.isfile(path):
+                names.append(f[: -len(".parquet")])
+        elif os.path.isdir(path) and any(
+            p.endswith(".parquet") or p == "_ddl.json"
+            or ("=" in p and os.path.isdir(os.path.join(path, p)))
+            for p in os.listdir(path)
+        ):
+            names.append(f)
+    return names
+
+
+def table_path(data_dir: str, name: str) -> str:
+    """A table's directory if it has one, else its flat parquet file."""
+    path = os.path.join(data_dir, name)
+    return path if os.path.isdir(path) else path + ".parquet"
+
+
+def _fingerprint(path: str) -> tuple:
+    """Sorted (relative path, size, mtime_ns) of every file under the
+    table path, ``_ddl.json`` included."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((".", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def register(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
+    """Register one table's temp view and return its DataFrame: the
+    remembered one while the table's files are unchanged, else a fresh
+    read — ``load_table`` for a flat file, ``ddl.register_table_view``
+    (declared columns, cast-on-read, rename coalescing) for a dir."""
+    from clickhouse_25_5_3_75_stable_spark import ddl
+
+    path = table_path(data_dir, name)
+    # taken before the read: a write racing the read leaves a stale
+    # fingerprint (a re-read next time), never a stale view
+    fp = _fingerprint(path)
+    views = _VIEWS.setdefault(spark, {})
+    key = (os.path.abspath(data_dir), name)
+    hit = views.get(key)
+    if hit is None or hit[0] != fp:
+        read = ddl.register_table_view if os.path.isdir(path) else load_table
+        hit = views[key] = (fp, read(spark, data_dir, name))
+    hit[1].createOrReplaceTempView(name)
+    return hit[1]
+
+
+def forget(spark: SparkSession, data_dir: str, name: str) -> None:
+    """Drop a table's view and its remembered DataFrame."""
+    _VIEWS.get(spark, {}).pop((os.path.abspath(data_dir), name), None)
+    spark.catalog.dropTempView(name)
+
+
+def sync(spark: SparkSession, data_dir: str) -> list[str]:
+    """Register every table of a data dir; returns the registered names.
+    An unreadable (corrupted) table is skipped: it must not take the
+    whole session down, and CHECK TABLE needs to run to diagnose it."""
+    names = []
+    for name in list_tables(data_dir):
+        try:
+            register(spark, data_dir, name)
+        except Exception:
+            continue
+        names.append(name)
+    return names
+
+
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each table as a temp view so SQL-path queries run."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    sync(spark, sf_dir)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from clickhouse_25_5_3_75_stable_spark.sources.catalog import TABLES, load_table
+from clickhouse_25_5_3_75_stable_spark.sources import catalog
 
 _COLS_SCHEMA = T.StructType(
     [
@@ -33,10 +33,38 @@ def system_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     StorageSystemColumns.cpp): one row per column of every catalog
     table, with 1-based ordinal position and Spark type name."""
     rows = []
-    for name in TABLES:
-        for i, f in enumerate(load_table(spark, sf_dir, name).schema.fields, start=1):
+    for name in catalog.sync(spark, sf_dir):
+        for i, f in enumerate(spark.table(name).schema.fields, start=1):
             rows.append((name, f.name, i, f.dataType.simpleString()))
     return spark.createDataFrame(rows, _COLS_SCHEMA)
+
+
+def _table_parts(data_dir: str, name: str) -> list[tuple[str, list]]:
+    """A catalog table's non-empty parts as (partition, [(file, footer
+    metadata)]): a flat file is the one part `all`; a table dir has
+    `all` for its root files plus one part per partition dir (names
+    starting with `_` are detached parts and projections)."""
+    import pyarrow.parquet as pq
+
+    def files_of(d: str) -> list[str]:
+        return [os.path.join(d, f) for f in sorted(os.listdir(d))
+                if f.endswith(".parquet") and not f.startswith(("_", "."))]
+
+    path = catalog.table_path(data_dir, name)
+    if not os.path.isdir(path):
+        groups = [("all", [path])]
+    else:
+        groups = [("all", files_of(path))] + [
+            (d, files_of(os.path.join(path, d)))
+            for d in sorted(os.listdir(path))
+            if not d.startswith(("_", ".")) and os.path.isdir(os.path.join(path, d))
+        ]
+    parts = []
+    for partition, files in groups:
+        metas = [(f, pq.read_metadata(f)) for f in files]
+        if sum(m.num_rows for _f, m in metas):
+            parts.append((partition, metas))
+    return parts
 
 
 def system_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,31 +121,29 @@ def system_tables_full(spark: SparkSession, sf_dir: str) -> DataFrame:
       reference reports for engines without them.
     """
     import datetime
-    import os
-
-    import pyarrow.parquet as pq
 
     from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
 
     rows = []
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        meta = pq.read_metadata(path)
-        n_rows = meta.num_rows
-        n_bytes = os.path.getsize(path)
+    for name in catalog.sync(spark, sf_dir):
+        path = catalog.table_path(sf_dir, name)
+        parts = _table_parts(sf_dir, name)
+        metas = [(f, m) for _p, fm in parts for f, m in fm]
+        n_rows = sum(m.num_rows for _f, m in metas)
+        n_bytes = sum(os.path.getsize(f) for f, _m in metas)
         uncomp = sum(
-            meta.row_group(g).total_byte_size for g in range(meta.num_row_groups)
+            m.row_group(g).total_byte_size
+            for _f, m in metas for g in range(m.num_row_groups)
         )
+        marks = sum(m.num_row_groups for _f, m in metas)
         mtime = datetime.datetime.fromtimestamp(os.path.getmtime(path))
         td = load_table_def(sf_dir, name)
         engine = td.engine if td else "MergeTree"
         order_by = ", ".join(td.order_by) if td and td.order_by else ""
         partition_by = (td.partition_by or "") if td else ""
-        schema = load_table(spark, sf_dir, name).schema
         cols_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in spark.table(name).schema.fields
         )
         create_q = f"CREATE TABLE default.{name} ({cols_ddl}) ENGINE = {engine}"
         engine_full = engine + (f" ORDER BY ({order_by})" if order_by else "")
@@ -125,7 +151,7 @@ def system_tables_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             "default", name, _NIL_UUID, engine, 0, [path],
             "", mtime, 0, [], [], create_q, engine_full, "", [],
             partition_by, order_by, order_by, "", "default",
-            n_rows, n_bytes, uncomp, 1, 1, meta.num_row_groups,
+            n_rows, n_bytes, uncomp, len(parts), len(parts), marks,
             0, 0, 0, None, None, "", 1, [], [], [], [],
         ))
     out = spark.createDataFrame(rows, _TABLES_FULL_SCHEMA)
@@ -1113,57 +1139,23 @@ def system_quotas(spark: SparkSession) -> DataFrame:
 def system_parts_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """system.parts on the SQL route (round-7; reference
     StorageSystemParts.cpp — the user-facing core columns): one row
-    per data part across the whole catalog. Flat parquet tables are a
-    single always-active part; DDL-managed directory layouts
-    contribute one row per partition directory. All values come from
-    filesystem/footer metadata — never a data scan (the reference's
-    quick-stat contract)."""
+    per data part across the whole catalog. A flat parquet table is a
+    single always-active part; a table directory contributes one part
+    for its root files and one per partition directory. All values
+    come from filesystem/footer metadata — never a data scan (the
+    reference's quick-stat contract)."""
     import datetime
-    import os
-
-    import pyarrow.parquet as pq
-
-    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
 
     rows = []
-
-    def footer(path):
-        meta = pq.read_metadata(path)
-        return meta.num_rows, meta.num_row_groups
-
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        n_rows, marks = footer(path)
-        rows.append((
-            "default", name, "all", "all_1_1_0", "Wide", True, n_rows,
-            os.path.getsize(path), marks,
-            datetime.datetime.fromtimestamp(os.path.getmtime(path))
-            .isoformat(sep=" ", timespec="seconds"),
-        ))
-    for entry in sorted(os.listdir(sf_dir)):
-        tdir = os.path.join(sf_dir, entry)
-        if not os.path.isdir(tdir) or load_table_def(sf_dir, entry) is None:
-            continue
-        for part in sorted(os.listdir(tdir)):
-            pdir = os.path.join(tdir, part)
-            if not os.path.isdir(pdir) or part.startswith("_"):
-                continue
-            pq_files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-            if not pq_files:
-                continue
-            n_rows = marks = 0
-            size = 0
-            for f in pq_files:
-                fr, fm = footer(os.path.join(pdir, f))
-                n_rows += fr
-                marks += fm
-                size += os.path.getsize(os.path.join(pdir, f))
+    for name in catalog.list_tables(sf_dir):
+        for partition, metas in _table_parts(sf_dir, name):
+            mtime = max(os.path.getmtime(f) for f, _m in metas)
             rows.append((
-                "default", entry, part, f"{part}_1_1_0", "Wide", True,
-                n_rows, size, marks,
-                datetime.datetime.fromtimestamp(os.path.getmtime(pdir))
+                "default", name, partition, f"{partition}_1_1_0", "Wide", True,
+                sum(m.num_rows for _f, m in metas),
+                sum(os.path.getsize(f) for f, _m in metas),
+                sum(m.num_row_groups for _f, m in metas),
+                datetime.datetime.fromtimestamp(mtime)
                 .isoformat(sep=" ", timespec="seconds"),
             ))
     return spark.createDataFrame(
@@ -1555,19 +1547,20 @@ def system_view_refreshes(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _ddl_tables(data_dir: str) -> list[tuple[str, str]]:
+    """(name, dir) of every DDL-managed table in the catalog."""
+    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
+
+    return [(n, os.path.join(data_dir, n)) for n in catalog.list_tables(data_dir)
+            if load_table_def(data_dir, n) is not None]
+
+
 def system_detached_parts_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """system.detached_parts on the SQL route: the reference column
     set (system_detached_parts_full) unioned across every DDL-managed
     table in the catalog dir."""
-    import os
-
-    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
-
     out = None
-    for entry in sorted(os.listdir(sf_dir)):
-        tdir = os.path.join(sf_dir, entry)
-        if not os.path.isdir(tdir) or load_table_def(sf_dir, entry) is None:
-            continue
+    for entry, tdir in _ddl_tables(sf_dir):
         df = system_detached_parts_full(spark, tdir, entry)
         out = df if out is None else out.unionByName(df)
     if out is None:
@@ -1579,17 +1572,10 @@ def system_parts_columns_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """system.parts_columns on the SQL route (reference
     StorageSystemPartsColumns.cpp core: per-part per-column footer
     stats): database/table prepended, unioned across DDL tables."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
-
     out = None
-    for entry in sorted(os.listdir(sf_dir)):
-        tdir = os.path.join(sf_dir, entry)
-        if not os.path.isdir(tdir) or load_table_def(sf_dir, entry) is None:
-            continue
+    for entry, tdir in _ddl_tables(sf_dir):
         df = system_parts_columns(spark, tdir).select(
             F.lit("default").alias("database"), F.lit(entry).alias("table"), "*"
         )
@@ -1611,17 +1597,11 @@ def system_projection_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     dirs ddl.add_projection writes beside the data. Footer metadata
     only, never a data scan."""
     import datetime
-    import os
 
     import pyarrow.parquet as pq
 
-    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
-
     rows = []
-    for entry in sorted(os.listdir(sf_dir)):
-        tdir = os.path.join(sf_dir, entry)
-        if not os.path.isdir(tdir) or load_table_def(sf_dir, entry) is None:
-            continue
+    for entry, tdir in _ddl_tables(sf_dir):
         for d in sorted(os.listdir(tdir)):
             if not d.startswith("_projection_"):
                 continue
@@ -1651,17 +1631,10 @@ def system_projection_parts_columns(spark: SparkSession, sf_dir: str) -> DataFra
     """system.projection_parts_columns (reference
     StorageSystemProjectionPartsColumns.cpp core): per-projection
     per-column footer stats."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
-
     out = None
-    for entry in sorted(os.listdir(sf_dir)):
-        tdir = os.path.join(sf_dir, entry)
-        if not os.path.isdir(tdir) or load_table_def(sf_dir, entry) is None:
-            continue
+    for entry, tdir in _ddl_tables(sf_dir):
         for d in sorted(os.listdir(tdir)):
             if not d.startswith("_projection_") or not os.path.isdir(
                 os.path.join(tdir, d)

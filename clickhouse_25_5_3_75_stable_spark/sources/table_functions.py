@@ -89,14 +89,14 @@ def merge(spark: SparkSession, sf_dir: str, table_regex: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from clickhouse_25_5_3_75_stable_spark.sources.catalog import TABLES, load_table
+    from clickhouse_25_5_3_75_stable_spark.sources import catalog
 
-    matched = [n for n in TABLES if re.fullmatch(table_regex, n)]
+    matched = [n for n in catalog.sync(spark, sf_dir) if re.fullmatch(table_regex, n)]
     if not matched:
         raise ValueError(f"merge(): no catalog table matches {table_regex!r}")
     out = None
     for n in matched:
-        df = load_table(spark, sf_dir, n).withColumn("_table", F.lit(n))
+        df = spark.table(n).withColumn("_table", F.lit(n))
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)
     return out
 

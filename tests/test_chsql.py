@@ -1252,6 +1252,15 @@ def test_use_query_cache_populates_process_cache(spark, sf_dir):
     spark.conf.set("spark.chspark.useQueryCache", "0")
 
 
+def test_catalog_view_restored_after_shadowing(spark):
+    """Every ch_sql(..., sf_dir) re-registers the catalog's views, so a
+    table view shadowed with createOrReplaceTempView comes back."""
+    ch_sql(spark, "SELECT count() AS n FROM nation", SF_SMOKE).collect()
+    spark.range(3).createOrReplaceTempView("nation")
+    rows = ch_sql(spark, "SELECT count() AS n FROM nation", SF_SMOKE).collect()
+    assert rows[0].n == 25
+
+
 def test_system_tables_via_sql_text(spark, sf_dir):
     """`SELECT ... FROM system.<name>` works through ch_sql (round-6):
     known system tables rewrite to on-demand temp views; unknown ones

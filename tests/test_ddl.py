@@ -156,6 +156,12 @@ def test_create_view_and_materialized_view(spark, tmp_path):
 
     assert os.path.isdir(os.path.join(d, "mv_sum"))
     assert "mv_sum" in run("SHOW TABLES")
+    # a plain view resolves its tables at each read (reference
+    # StorageView): a later INSERT shows through
+    run("CREATE VIEW v_n AS SELECT count() AS n FROM base")
+    assert run("SELECT n FROM v_n FORMAT CSV").strip() == "3"
+    run("INSERT INTO base VALUES (3, 4.5)")
+    assert run("SELECT n FROM v_n FORMAT CSV").strip() == "4"
 
 
 def test_optimize_final_replacing_and_summing(spark, tmp_path):
@@ -206,6 +212,36 @@ def test_query_log(spark, tmp_path):
     lines = body.strip().splitlines()
     assert any(line == "select,1" for line in lines)
     assert len(lines) >= 2
+
+
+def test_out_of_band_writes_seen_by_next_statement(spark, tmp_path):
+    """The catalog reuses a table's view only while its files are
+    unchanged: a part written behind the engine's back into a DDL table
+    dir, and a replaced flat parquet table, show in the next statement."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+
+    d = str(tmp_path)
+
+    def run(sql):
+        out = io.StringIO()
+        assert run_local(sql, d, spark=spark, out=out) == 0
+        return out.getvalue().strip()
+
+    run("CREATE TABLE t (k Int64, v String) ENGINE = MergeTree ORDER BY k")
+    run("INSERT INTO t VALUES (1, 'a')")
+    pq.write_table(pa.table({"k": [2, 3], "v": ["b", "c"]}),
+                   str(tmp_path / "t" / "part-oob.parquet"))
+    assert run("SELECT count() FROM t FORMAT CSV") == "3"
+    flat = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"x": [1]}), flat)
+    assert run("SELECT sum(x) FROM f FORMAT CSV") == "1"
+    pq.write_table(pa.table({"x": [1, 2, 3]}), flat)
+    assert run("SELECT sum(x) FROM f FORMAT CSV") == "6"
 
 
 def test_alter_add_drop_column(spark, tmp_path):
@@ -430,6 +466,20 @@ def test_cli_alter_mutations(spark, tmp_path):
     ) == 0
     assert "n" not in spark.table("mt").columns
 
+    # both survive into later statements, which re-read the catalog
+    def run(sql):
+        buf = io.StringIO()
+        assert run_local(sql, d, spark=spark, out=buf) == 0
+        return buf.getvalue().strip().splitlines()
+
+    assert run("SELECT * FROM mt ORDER BY k FORMAT CSV") == ["1,A,x", "3,c,x"]
+    assert run("DESCRIBE mt FORMAT CSV") == [
+        "k,bigint", "v,string", "tag,string"]
+    run("ALTER TABLE mt ADD COLUMN c Int32 DEFAULT 5")
+    run("INSERT INTO mt VALUES (4, 'd', 'y', 7)")
+    assert run("SELECT k, c FROM mt ORDER BY k FORMAT CSV") == [
+        "1,5", "3,5", "4,7"]
+
 
 def test_projection_ddl_and_auto_routing(spark, tmp_path):
     """ADD PROJECTION + automatic routing (the reference's
@@ -487,6 +537,11 @@ def test_projection_ddl_and_auto_routing(spark, tmp_path):
                      d, spark=spark, out=out) == 0
     r3 = _route_projection(spark, d, "SELECT g, sum(x) AS s FROM px GROUP BY g")
     assert sorted((r.g, r.s) for r in r3.collect()) == [("a", 20), ("b", 30)]
+    # so does MODIFY COLUMN, which rewrites every part
+    assert run_local("ALTER TABLE px MODIFY COLUMN y Float32",
+                     d, spark=spark, out=out) == 0
+    r4 = _route_projection(spark, d, "SELECT g, sum(x) AS s FROM px GROUP BY g")
+    assert sorted((r.g, r.s) for r in r4.collect()) == [("a", 20), ("b", 30)]
 
     # DROP PROJECTION -> no more routing
     assert run_local("ALTER TABLE px DROP PROJECTION p1",
@@ -497,7 +552,7 @@ def test_projection_ddl_and_auto_routing(spark, tmp_path):
 def test_system_projections_and_mutations(spark, tmp_path):
     """system.projections lists stored projections; system.mutations
     replays the journal mutate_table appends (journal survives the
-    staging swap of later mutations)."""
+    staging swap of later mutations and of OPTIMIZE)."""
     import io
 
     from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
@@ -516,6 +571,7 @@ def test_system_projections_and_mutations(spark, tmp_path):
     run_local("ALTER TABLE sm UPDATE x = x + 1 WHERE k = 1",
               d, spark=spark, out=out)
     run_local("ALTER TABLE sm DELETE WHERE k = 2", d, spark=spark, out=out)
+    run_local("OPTIMIZE TABLE sm FINAL", d, spark=spark, out=out)
 
     projs = system_projections(spark, d).collect()
     assert [(r.table, r.name, r.sum_columns) for r in projs] == [("sm", "p", "x")]

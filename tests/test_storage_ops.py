@@ -116,6 +116,35 @@ def test_system_tables(spark):
     assert system_one(spark).collect()[0].dummy == 0
 
 
+def test_catalog_enumerations_see_ddl_tables(spark, tmp_path):
+    """system.columns, system.tables and merge() enumerate the data
+    dir's catalog, so a dir holding only DDL tables lists them; DESCRIBE
+    and system.columns agree on the type of events.ts."""
+    import io
+
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+    from clickhouse_25_5_3_75_stable_spark.sources.table_functions import merge
+    from tests.conftest import SF_SMOKE
+
+    def run(sql, data_dir=str(tmp_path)):
+        out = io.StringIO()
+        assert run_local(sql, data_dir, spark=spark, out=out) == 0
+        return out.getvalue().strip().splitlines()
+
+    run("CREATE TABLE t (k Int64, v String) ENGINE = MergeTree ORDER BY k")
+    run("INSERT INTO t VALUES (1, 'a')")
+    assert run("SELECT table_name, column_name, data_type FROM system.columns "
+               "ORDER BY pos FORMAT CSV") == ["t,k,bigint", "t,v,string"]
+    assert run("SELECT name, total_rows FROM system.tables FORMAT CSV") == ["t,1"]
+    assert [(r._table, r.k) for r in merge(spark, str(tmp_path), ".*").collect()] == [
+        ("t", 1)]
+    desc = [ln for ln in run("DESCRIBE events FORMAT CSV", SF_SMOKE)
+            if ln.startswith("ts,")]
+    col = run("SELECT data_type FROM system.columns WHERE table_name = 'events' "
+              "AND column_name = 'ts' FORMAT CSV", SF_SMOKE)
+    assert desc == ["ts,timestamp"] and col == ["timestamp"]
+
+
 def test_range_dictionary_lookup(spark):
     from clickhouse_25_5_3_75_stable_spark.operators.dictionary import RangeDictionary
 
