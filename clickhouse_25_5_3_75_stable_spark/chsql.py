@@ -3156,25 +3156,57 @@ def _sql_with_fn_bridge(spark, translated: str):
 @records_errors
 def ch_sql(spark, sql: str, sf_dir: str | None = None,
            params: dict | None = None):
-    """Run ClickHouse-dialect SQL on Spark. If sf_dir is given, the
-    testdata tables are registered as temp views first. `params` binds
-    {name:Type} query parameters (typed-literal substitution).
+    """Run one ClickHouse-dialect statement on Spark and return its
+    result as a DataFrame — the one executor behind the CLI, HTTP and
+    the library. A statement that is not a query (DDL, INSERT, ALTER,
+    SHOW, ...) runs through the statement table in statements.py; any
+    other text takes the query path. The data dir is `sf_dir`, whose
+    tables are registered as temp views first, or else the session's
+    ``spark.chspark.dataDir``. `params` binds {name:Type} query
+    parameters (typed-literal substitution).
 
     A trailing ``SETTINGS k=v, ...`` is honored for the recognized
     subset (_KNOWN_SETTINGS): applied at SESSION scope — Spark plans
     lazily, so a per-query restore would race the action; use
     apply_settings/restore_settings for explicit scoping. Unknown
     settings raise, matching the reference's BAD_ARGUMENTS."""
+    from clickhouse_25_5_3_75_stable_spark import statements
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import begin_query
+
     # ClientInfo scope: assign THIS query's id/start time before any
     # transpile so queryID()/initialQueryStartTime() in the text
     # resolve to the query that contains them
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import begin_query
-
-    begin_query(sql)
+    query_id = begin_query(sql)
     if sf_dir is not None:
         from clickhouse_25_5_3_75_stable_spark.sources.catalog import register_views
 
         register_views(spark, sf_dir)
+        data_dir = sf_dir
+    else:
+        data_dir = spark.conf.get("spark.chspark.dataDir", None)
+    if params or _QPARAM_RE.search(sql):
+        sql = substitute_query_parameters(sql, params)
+    df = statements.execute(spark, sql, data_dir,
+                            lambda body: _query(spark, body, data_dir))
+    if df is None:
+        df = _query(spark, sql, data_dir)
+    # tag the result with ITS query id so a later deferred
+    # explain_analyze (and the CLI's QueryFinish) attributes to this
+    # query. Never overwrite: a query-cache hit returns the SHARED
+    # cached DataFrame, whose first tag — the query that actually
+    # computed the plan — wins.
+    if not hasattr(df, "_ch_query_id"):
+        df._ch_query_id = query_id
+    return df
+
+
+def _query(spark, sql: str, data_dir: str | None):
+    """The query path of ch_sql: system tables, data-dir rewrites (lake
+    time travel, LIVE VIEW refresh, FINAL folding, projection routing),
+    the builder-backed shapes (WITH FILL, ASOF, PASTE JOIN), then the
+    transpiled text."""
+    from clickhouse_25_5_3_75_stable_spark import statements
+
     # `FROM system.<name>` (round-6): Spark temp views carry no schema
     # qualifier, so known system tables rewrite to __system_<name> and
     # materialize on demand (footer/registry metadata — no data scan)
@@ -3185,173 +3217,20 @@ def ch_sql(spark, sql: str, sf_dir: str | None = None,
         )
 
         sql, _sys_names = rewrite_system_refs(sql)
-        materialize_system_views(spark, _sys_names, sf_dir)
-    if params or _QPARAM_RE.search(sql):
-        sql = substitute_query_parameters(sql, params)
-    # access entities (round-9; access.py — CREATE/DROP USER/ROLE,
-    # GRANT/REVOKE, SHOW GRANTS/USERS/ROLES)
-    if re.match(r"^\s*(CREATE\s+(USER|ROLE)|DROP\s+(USER|ROLE)|GRANT\s|"
-                r"REVOKE\s|SHOW\s+(GRANTS|USERS|ROLES))\b",
-                sql, re.IGNORECASE):
-        from clickhouse_25_5_3_75_stable_spark.access import (
-            handle_access_statement,
-        )
-
-        adf = handle_access_statement(spark, sql)
-        if adf is not None:
-            return adf
-    # CREATE/DROP DICTIONARY + dictGet family (round-9;
-    # dictionary_sql.py — InterpreterCreateQuery dictionary branch,
+        materialize_system_views(spark, _sys_names, data_dir)
+    sql = statements.rewrite_query(spark, sql, data_dir)
+    if data_dir is not None:
+        routed = statements._route_projection(spark, data_dir, sql)
+        if routed is not None:
+            return routed
+    # dictGet family (round-9; dictionary_sql.py —
     # FunctionsExternalDictionaries.h)
-    if re.match(r"^\s*CREATE\s+DICTIONARY\b", sql, re.IGNORECASE):
-        from clickhouse_25_5_3_75_stable_spark.dictionary_sql import (
-            parse_create_dictionary,
-            register_dictionary,
-        )
-
-        d = parse_create_dictionary(sql)
-        register_dictionary(spark, d)
-        return spark.createDataFrame([("OK",)], "created string")
-    drop_dict = re.match(
-        r"^\s*DROP\s+DICTIONARY\s+(IF\s+EXISTS\s+)?([A-Za-z_]\w*)\s*;?\s*$",
-        sql, re.IGNORECASE,
-    )
-    if drop_dict is not None:
-        from clickhouse_25_5_3_75_stable_spark.dictionary_sql import (
-            drop_dictionary,
-        )
-
-        drop_dictionary(spark, drop_dict.group(2),
-                        bool(drop_dict.group(1)))
-        return spark.createDataFrame([("OK",)], "dropped string")
-    show_create_dict = re.match(
-        r"^\s*SHOW\s+CREATE\s+DICTIONARY\s+([A-Za-z_]\w*)\s*;?\s*$",
-        sql, re.IGNORECASE)
-    if show_create_dict is not None:
-        # InterpreterShowCreateQuery dictionary branch: one String
-        # column `statement`, replayed from the stored definition
-        from clickhouse_25_5_3_75_stable_spark.dictionary_sql import (
-            SQL_DICTIONARIES,
-        )
-
-        dname = show_create_dict.group(1)
-        d = SQL_DICTIONARIES.get(dname)
-        if d is None:
-            raise ChSqlError(f"SHOW CREATE DICTIONARY: unknown "
-                             f"dictionary {dname!r}")
-        attrs = ", ".join(
-            f"{a} {t}"
-            + (f" DEFAULT {dflt}" if dflt is not None else "")
-            + (" HIERARCHICAL" if a == d.hier_attr else "")
-            for a, (t, dflt) in d.attrs.items())
-        if d.source_file is not None:
-            src_txt = (f"FILE(PATH '{d.source_file[0]}' "
-                       f"FORMAT '{d.source_file[1]}')")
-        else:
-            src_txt = f"CLICKHOUSE(TABLE '{d.source_table}')"
-        stmt = (f"CREATE DICTIONARY {d.name} ({attrs}) "
-                f"PRIMARY KEY {', '.join(d.keys)} "
-                f"SOURCE({src_txt}) "
-                f"LAYOUT({d.layout.upper()}())")
-        if d.range_min:
-            stmt += f" RANGE(MIN {d.range_min} MAX {d.range_max})"
-        return spark.createDataFrame([(stmt,)], "statement string")
-    if re.match(r"^\s*SHOW\s+DICTIONARIES\s*;?\s*$", sql, re.IGNORECASE):
-        # InterpreterShowTablesQuery dictionary branch: name column
-        from clickhouse_25_5_3_75_stable_spark.dictionary_sql import (
-            SQL_DICTIONARIES,
-        )
-
-        return spark.createDataFrame(
-            [(n,) for n in sorted(SQL_DICTIONARIES)], "name string")
-    exists_dict = re.match(
-        r"^\s*EXISTS\s+DICTIONARY\s+([A-Za-z_]\w*)\s*;?\s*$",
-        sql, re.IGNORECASE,
-    )
-    if exists_dict is not None:
-        from clickhouse_25_5_3_75_stable_spark.dictionary_sql import (
-            SQL_DICTIONARIES,
-        )
-
-        return spark.createDataFrame(
-            [(1 if exists_dict.group(1) in SQL_DICTIONARIES else 0,)],
-            "result tinyint")
     if re.search(r"\bdict(Get|Has)", sql):
         from clickhouse_25_5_3_75_stable_spark.dictionary_sql import (
             rewrite_dict_calls,
         )
 
         sql = rewrite_dict_calls(sql)
-    # EXISTS [TABLE] t (src/Interpreters/InterpreterExistsQuery.cpp:
-    # one UInt8 column named `result`)
-    exists_m = re.match(
-        r"^\s*EXISTS\s+(?:TABLE\s+|VIEW\s+)?([A-Za-z_]\w*)\s*;?\s*$",
-        sql, re.IGNORECASE,
-    )
-    if exists_m is not None:
-        try:
-            spark.table(exists_m.group(1))
-            found = 1
-        except Exception:
-            found = 0
-        return spark.createDataFrame([(found,)], "result tinyint")
-    # SHOW PROCESSLIST (InterpreterShowProcesslistQuery.cpp: SELECT *
-    # FROM system.processes)
-    if re.match(r"^\s*SHOW\s+PROCESSLIST\s*;?\s*$", sql, re.IGNORECASE):
-        from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-            system_processes,
-        )
-
-        return system_processes(spark)
-    # SHOW [CHANGED] SETTINGS [LIKE|ILIKE 'p']
-    # (InterpreterShowSettingQuery rewrite onto system.settings)
-    show_set = re.match(
-        r"^\s*SHOW\s+(CHANGED\s+)?SETTINGS(?:\s+(I?LIKE)\s+('[^']*'))?\s*;?\s*$",
-        sql, re.IGNORECASE,
-    )
-    if show_set is not None:
-        # over the engine's RECOGNIZED settings (the reference shows
-        # its Settings.cpp registry): current effective value from the
-        # conf key apply_settings maps each name to
-        conf_of = {
-            "max_threads": "spark.sql.shuffle.partitions",
-            "max_result_rows": "spark.chspark.maxResultRows",
-            "result_overflow_mode": "spark.chspark.resultOverflowMode",
-            "use_query_cache": "spark.chspark.useQueryCache",
-        }
-        defaults = {
-            "max_result_rows": "0", "result_overflow_mode": "throw",
-            "use_query_cache": "0", "dialect": "clickhouse",
-        }
-        rows = []
-        for s in sorted(_KNOWN_SETTINGS):
-            cur = None
-            if s in conf_of:
-                try:
-                    cur = spark.conf.get(conf_of[s])
-                except Exception:
-                    cur = None
-            val = cur if cur is not None else defaults.get(s, "")
-            changed = cur is not None and cur != defaults.get(s, cur)
-            rows.append((s, str(val), bool(changed)))
-        df = spark.createDataFrame(
-            rows, "name string, value string, changed boolean")
-        if show_set.group(1):
-            df = df.filter("changed")
-        if show_set.group(3):
-            op = show_set.group(2).upper()
-            df = df.filter(f"name {op} {show_set.group(3)}")
-        return df
-    # SHOW CREATE TABLE t (InterpreterShowCreateQuery.cpp: one String
-    # column `statement`). DDL-managed tables replay their stored
-    # definition; plain catalog parquet views synthesize one from the
-    # schema with reference type names.
-    show_create = re.match(
-        r"^\s*SHOW\s+CREATE\s+(?:TABLE\s+|VIEW\s+)?([A-Za-z_]\w*)\s*;?\s*$",
-        sql, re.IGNORECASE,
-    )
-    if show_create is not None:
-        return _show_create_table(spark, show_create.group(1), sf_dir)
     sql = _expand_view_table_function(sql)
     sql = _materialize_table_functions(spark, sql)
     sql = _expand_column_transformers(spark, sql)
@@ -3389,7 +3268,7 @@ def ch_sql(spark, sql: str, sf_dir: str | None = None,
         col = fill.group(1)
         desc = (fill.group(2) or "").strip().upper() == "DESC"
         stripped = sql[: fill.end(1) + (len(fill.group(2) or ""))] + sql[fill.end():]
-        base = ch_sql(spark, stripped, None)
+        base = _query(spark, stripped, data_dir)
         return _apply_with_fill(
             spark, base, col, desc, fill.group(3), fill.group(4), fill.group(5),
             interpolate=interp_cols,
@@ -3463,19 +3342,6 @@ def ch_sql(spark, sql: str, sf_dir: str | None = None,
             df = default_cache().get_or_cache(
                 df, query=sql, query_id=current_query_id()
             )
-        # tag the result with ITS query id so a later deferred
-        # explain_analyze attributes QueryFinish to this query, not to
-        # whatever transpiled last (review-found attribution bug).
-        # Never overwrite: a query-cache hit returns the SHARED cached
-        # DataFrame, and re-tagging it would re-attribute the ORIGINAL
-        # query's deferred profile (review-found); the first tag — the
-        # query that actually computed the plan — wins.
-        from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-            current_query_id,
-        )
-
-        if not hasattr(df, "_ch_query_id"):
-            df._ch_query_id = current_query_id()
         return df
     except Exception as e:  # upgrade unresolved CH names to a useful error
         msg = str(e)
@@ -3528,66 +3394,6 @@ _SELECT_TX_RE = re.compile(
 _TX_ITEM_RE = re.compile(
     r"(EXCEPT|REPLACE|APPLY)\s*\(((?:[^()]|\([^()]*\))*)\)", re.IGNORECASE
 )
-
-
-_SPARK_TO_CH_TYPE = {
-    "tinyint": "Int8", "smallint": "Int16", "int": "Int32",
-    "bigint": "Int64", "float": "Float32", "double": "Float64",
-    "string": "String", "boolean": "Bool", "date": "Date",
-    "timestamp": "DateTime", "timestamp_ntz": "DateTime", "binary": "String",
-}
-
-
-def _ch_type_name(spark_type: str) -> str:
-    t = spark_type.lower()
-    if t.startswith("decimal"):
-        return "Decimal" + t[len("decimal"):]
-    if t.startswith("array<") and t.endswith(">"):
-        return f"Array({_ch_type_name(t[6:-1])})"
-    if t.startswith("map<") and t.endswith(">"):
-        k, _, v = t[4:-1].partition(",")
-        return f"Map({_ch_type_name(k.strip())}, {_ch_type_name(v.strip())})"
-    return _SPARK_TO_CH_TYPE.get(t, "String")
-
-
-def _show_create_table(spark, name: str, sf_dir):
-    if sf_dir is None:
-        sf_dir = spark.conf.get("spark.chspark.dataDir", None)
-    td = None
-    if sf_dir is not None:
-        from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
-
-        try:
-            td = load_table_def(sf_dir, name)
-        except Exception:
-            td = None
-    if td is not None:
-        cols = ", ".join(f"{c} {t}" for c, t in td.columns)
-        stmt = f"CREATE TABLE {td.name} ({cols}) ENGINE = {td.engine}"
-        if td.partition_by:
-            stmt += f" PARTITION BY {td.partition_by}"
-        if td.order_by:
-            ob = td.order_by if isinstance(td.order_by, str) else \
-                ", ".join(td.order_by)
-            stmt += f" ORDER BY {ob}"
-        if td.ttl:
-            stmt += f" TTL {td.ttl}"
-    else:
-        try:
-            fields = spark.table(name).schema.fields
-        except Exception:
-            raise ChSqlError(f"SHOW CREATE TABLE: unknown table {name!r}")
-        cols = ", ".join(
-            f"{f.name} "
-            + (f"Nullable({_ch_type_name(f.dataType.simpleString())})"
-               if f.nullable and not f.dataType.simpleString()
-               .startswith(("array", "map"))
-               else _ch_type_name(f.dataType.simpleString()))
-            for f in fields
-        )
-        stmt = (f"CREATE TABLE {name} ({cols}) ENGINE = MergeTree "
-                "ORDER BY tuple()")
-    return spark.createDataFrame([(stmt,)], "statement string")
 
 
 def _expand_view_table_function(sql: str) -> str:

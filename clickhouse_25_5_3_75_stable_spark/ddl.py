@@ -274,9 +274,12 @@ def register_table_view(spark: SparkSession, base_dir: str, name: str) -> DataFr
     - RENAME COLUMN records former physical names; reads coalesce the
       declared name with its former names, so old and new parts serve
       one logical column.
-    - ADD COLUMN is metadata-only: parts written before it lack the
-      column and read its DEFAULT (NULL without one). DROP COLUMN
-      removes the declaration, so its physical data is never read."""
+    - ADD COLUMN leaves older parts without the column: they read its
+      DEFAULT (NULL without one). A Nullable column with a DEFAULT is
+      the exception — ADD COLUMN writes the default into the existing
+      parts, since a read cannot tell a missing value from a NULL.
+      DROP COLUMN rewrites the parts without the column, so a column
+      added later under the same name never reads the dropped data."""
     from pyspark.sql import functions as F
 
     path = os.path.join(base_dir, name)
@@ -358,13 +361,7 @@ def alter_rename_column(spark: SparkSession, base_dir: str, name: str,
             f"RENAME COLUMN: the TTL expression references {old!r} — "
             "REMOVE TTL first (the reference rewrites dependent "
             "expressions; this engine refuses instead of going stale)")
-    for proj in td.projections:
-        refs = ([proj.get("keys", [])] + [proj.get("sums", [])]
-                + [proj.get("minmaxs", [])])
-        if any(old in group for group in refs):
-            raise ValueError(
-                f"RENAME COLUMN: projection {proj.get('name')!r} references "
-                f"{old!r} — DROP PROJECTION first")
+    _refuse_projection_refs(td, old, "RENAME COLUMN")
     td.columns = [(new if c == old else c, t) for c, t in td.columns]
     td.order_by = [new if c == old else c for c in td.order_by]
     # the new name inherits the old name's full former-name chain
@@ -373,6 +370,16 @@ def alter_rename_column(spark: SparkSession, base_dir: str, name: str,
         td.defaults[new] = td.defaults.pop(old)
     save_table_def(base_dir, td)
     catalog.register(spark, base_dir, name)
+
+
+def _refuse_projection_refs(td: TableDef, col: str, what: str) -> None:
+    for proj in td.projections:
+        refs = ([proj.get("keys", [])] + [proj.get("sums", [])]
+                + [proj.get("minmaxs", [])])
+        if any(col in group for group in refs):
+            raise ValueError(
+                f"{what}: projection {proj.get('name')!r} references "
+                f"{col!r} — DROP PROJECTION first")
 
 
 def _ddl_extras():  # marker for coverage tooling
@@ -537,9 +544,10 @@ def load_table_def(base_dir: str, name: str) -> TableDef | None:
 def _rewrite(spark: SparkSession, base_dir: str, name: str,
              td: "TableDef | None", out: DataFrame) -> None:
     """Replace a table's parts with `out` (OPTIMIZE, mutations, MODIFY
-    COLUMN; the reference's part rewrite): write a staging dir in the
-    table's partition layout, carry the DDL def and the mutation
-    journal across, swap, then re-register and rebuild projections.
+    and DROP COLUMN; the reference's part rewrite): write a staging dir
+    in the table's partition layout, carry the DDL def, the mutation
+    journal, detached partitions and FREEZE snapshots across, swap, then
+    re-register and rebuild projections.
     Parts come out in the declared schema, so the rename history is
     spent."""
     import shutil
@@ -550,10 +558,12 @@ def _rewrite(spark: SparkSession, base_dir: str, name: str,
     if td is not None and td.partition_by and td.partition_by in out.columns:
         writer = writer.partitionBy(td.partition_by)  # keep the layout
     writer.parquet(staging)
-    for fname in (_DDL_META, "_mutations.json"):
-        src = os.path.join(path, fname)
-        if os.path.exists(src):
-            shutil.copy(src, os.path.join(staging, fname))
+    # the def, the mutation journal, detached partitions and FREEZE
+    # snapshots outlive the rewrite; projections are rebuilt below
+    for entry in os.listdir(path):
+        if (entry.startswith("_") and not entry.startswith("_projection_")
+                and not os.path.exists(os.path.join(staging, entry))):
+            shutil.move(os.path.join(path, entry), os.path.join(staging, entry))
     shutil.rmtree(path)
     os.rename(staging, path)
     if td is not None:
@@ -632,13 +642,24 @@ def alter_add_column(
     default=None,
 ) -> None:
     """ALTER TABLE ADD COLUMN (reference InterpreterAlterQuery /
-    MergeTree metadata-only ALTER): no data rewrite — existing parquet
-    files simply lack the column; reads fill NULL (or the declared
-    default) via schema merge, exactly the reference's behavior of
-    materializing the default at read until a merge writes it."""
+    MergeTree metadata-only ALTER): existing parquet files lack the
+    column and reads fill the declared default (NULL without one), the
+    reference's materialize-at-read until a merge writes it. A Nullable
+    column with a DEFAULT rewrites the existing parts with the default
+    instead: at read, a part that predates the column and a stored NULL
+    look the same."""
     td = load_table_def(base_dir, name)
     if td is None:
         raise ValueError(f"{name}: not a DDL-managed table")
+    if default is not None and ch_type.startswith("Nullable"):
+        from pyspark.sql import functions as F
+
+        df = catalog.register(spark, base_dir, name)
+        td.columns.append((col, ch_type))
+        td.defaults[col] = default
+        _rewrite(spark, base_dir, name, td, df.withColumn(
+            col, F.lit(default).cast(ch_type_to_spark(ch_type))))
+        return
     td.columns.append((col, ch_type))
     if default is not None:
         td.defaults[col] = default
@@ -647,9 +668,9 @@ def alter_add_column(
 
 
 def alter_drop_column(spark: SparkSession, base_dir: str, name: str, col: str) -> None:
-    """ALTER TABLE DROP COLUMN: metadata-only — the column vanishes
-    from reads immediately; bytes reclaim at the next OPTIMIZE
-    rewrite (same lazy contract as the reference)."""
+    """ALTER TABLE DROP COLUMN (reference DROP_COLUMN mutation): the
+    parts are rewritten without the column, so a later ADD COLUMN of
+    the same name reads its default, not the dropped values."""
     td = load_table_def(base_dir, name)
     if td is None:
         raise ValueError(f"{name}: not a DDL-managed table")
@@ -660,11 +681,11 @@ def alter_drop_column(spark: SparkSession, base_dir: str, name: str, col: str) -
         raise ValueError(
             f"DROP COLUMN: {col!r} is a key column of {name} "
             "(the reference refuses dropping partition/sorting keys too)")
+    _refuse_projection_refs(td, col, "DROP COLUMN")
+    df = catalog.register(spark, base_dir, name)
     td.columns = [(n, t) for n, t in td.columns if n != col]
     td.defaults.pop(col, None)
-    td.renames.pop(col, None)
-    save_table_def(base_dir, td)
-    catalog.register(spark, base_dir, name)
+    _rewrite(spark, base_dir, name, td, df.drop(col))
 
 
 # ---------------------------------------------------------------------------

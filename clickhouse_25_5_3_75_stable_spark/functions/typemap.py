@@ -149,7 +149,7 @@ _SPARK_SCALARS = {
     "tinyint": "Int8", "smallint": "Int16", "int": "Int32", "bigint": "Int64",
     "float": "Float32", "double": "Float64", "boolean": "Bool",
     "string": "String", "date": "Date", "timestamp": "DateTime",
-    "void": "Nothing",
+    "timestamp_ntz": "DateTime", "binary": "String", "void": "Nothing",
 }
 
 

@@ -656,10 +656,8 @@ def storage_projection_auto_route(spark: SparkSession, sf_dir: str) -> DataFrame
     fallback scan). Reference: optimizeUseAggregateProjection.cpp."""
     import io
 
-    from clickhouse_25_5_3_75_stable_spark.__main__ import (
-        _route_projection,
-        run_local,
-    )
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+    from clickhouse_25_5_3_75_stable_spark.statements import _route_projection
 
     d = tempfile.mkdtemp(prefix="chspark_proj_")
     sink = io.StringIO()

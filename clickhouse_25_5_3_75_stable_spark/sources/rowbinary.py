@@ -140,6 +140,27 @@ def encode_rowbinary(rows, schema: list[tuple[str, str]]) -> bytes:
     return bytes(out)
 
 
+_WIRE_TYPES = {  # Spark simpleString -> CH wire type
+    "tinyint": "Int8", "smallint": "Int16", "int": "Int32",
+    "bigint": "Int64", "float": "Float32", "double": "Float64",
+    "string": "String", "date": "Date", "timestamp": "DateTime",
+    "decimal(20,0)": "UInt64",
+}
+
+
+def wire_schema(fields, what: str) -> list[tuple[str, str]]:
+    """(name, CH type) of Spark schema fields for the wire codecs;
+    `what` names the statement in the error for an unmapped type."""
+    out = []
+    for f in fields:
+        t = f.dataType.simpleString()
+        if t not in _WIRE_TYPES:
+            raise ValueError(f"{what}: column {f.name} type {t} has no CH "
+                             "wire mapping — cast it or use Parquet")
+        out.append((f.name, _WIRE_TYPES[t]))
+    return out
+
+
 def _spark_schema(schema: list[tuple[str, str]]) -> str:
     return ", ".join(f"{name} {_SPARK_TYPES[t]}" for name, t in schema)
 

@@ -820,7 +820,9 @@ def record_query(query: str, normalized: str | None = None,
                  query_id: str | None = None) -> None:
     """Append to the session-local query log ring buffer (10k entries)
     and bump the event counters — called by chsql.ch_sql on transpile
-    and by profiler.explain_analyze on measured execution. Deferred
+    (QueryStart), and by the CLI/HTTP front door on a finished statement
+    and profiler.explain_analyze on measured execution (QueryFinish,
+    with duration and result rows). Deferred
     events (QueryFinish on a DataFrame built earlier) pass the
     originating query_id explicitly; otherwise the current scope's id
     applies."""
@@ -829,6 +831,8 @@ def record_query(query: str, normalized: str | None = None,
         kind, query, normalized, duration_ms, result_rows,
         query_id or _CURRENT_QUERY["id"],
     ))
+    if kind == "QueryFinish":
+        return  # counted at its start
     _EVENT_COUNTERS["Query"] = _EVENT_COUNTERS.get("Query", 0) + 1
     head = (query or "").lstrip()[:12].upper()
     key = ("SelectQuery" if head.startswith("SELECT") or head.startswith("WITH")
@@ -2476,9 +2480,6 @@ def materialize_system_views(spark: SparkSession, names, sf_dir=None) -> None:
     for name in names:
         builder, needs_sf = _SQL_SYSTEM_TABLES[name]
         if needs_sf:
-            if sf_dir is None:
-                # the CLI publishes its catalog dir in the session conf
-                sf_dir = spark.conf.get("spark.chspark.dataDir", None)
             if sf_dir is None:
                 raise ChSqlError(
                     f"system.{name} needs a data directory — call "

@@ -614,7 +614,8 @@ def test_cli_show_statements(spark, tmp_path):
     assert run_script(script, data, spark=spark, out=buf) == 0
     text = buf.getvalue()
     assert "CREATE TABLE st" in text and "ReplacingMergeTree" in text
-    assert "ORDER BY (k)" in text
+    assert ("CREATE TABLE st (k Int64, v String) ENGINE = ReplacingMergeTree "
+            "ORDER BY k") in text.splitlines()
     lines = [l for l in text.splitlines() if l.strip() in ("0", "1")]
     assert "1" in [l.strip() for l in lines] and "0" in [l.strip() for l in lines]
     assert "default" in text
@@ -1565,3 +1566,89 @@ def test_arrayfold_sql_translation(spark):
         raise AssertionError("expected refusal")
     except ChSqlError as e:
         assert "ONE array" in str(e)
+
+
+# Each case: statements run first through the door (`{door}` names what
+# they create, so the two doors do not collide), then the statement whose
+# rows are compared, and the rows both doors must give (None: parity only).
+_DOOR_CASES = {
+    "select_final": ([], "SELECT k, v FROM t FINAL ORDER BY k", [("1", "b")]),
+    "insert_select_final": (
+        ["CREATE TABLE u_{door} (k Int64, v String) ENGINE = MergeTree ORDER BY k",
+         "INSERT INTO u_{door} SELECT k, v FROM t FINAL"],
+        "SELECT k, v FROM u_{door} ORDER BY k", [("1", "b")]),
+    "ctas_final": (
+        ["CREATE TABLE w_{door} ENGINE = MergeTree ORDER BY k "
+         "AS SELECT k, v FROM t FINAL"],
+        "SELECT k, v FROM w_{door} ORDER BY k", [("1", "b")]),
+    "materialized_view_final": (
+        ["CREATE MATERIALIZED VIEW m_{door} AS SELECT k, v FROM t FINAL"],
+        "SELECT k, v FROM m_{door} ORDER BY k", [("1", "b")]),
+    "ctas_system_tables": (
+        ["CREATE TABLE s_{door} AS SELECT name FROM system.tables "
+         "WHERE name = 'region'"],
+        "SELECT name FROM s_{door}", [("region",)]),
+    "exists_view": (["CREATE VIEW vv_{door} AS SELECT k FROM t"],
+                    "EXISTS vv_{door}", [("1",)]),
+    "show_create_flat": ([], "SHOW CREATE TABLE region", None),
+    "show_create_replacing": ([], "SHOW CREATE TABLE t", [(
+        "CREATE TABLE t (k Int64, v String, ver Int64) "
+        "ENGINE = ReplacingMergeTree(ver) ORDER BY k",)]),
+    "describe": ([], "DESCRIBE t",
+                 [("k", "bigint"), ("v", "string"), ("ver", "bigint")]),
+    "show_tables": ([], "SHOW TABLES", None),
+}
+
+
+@pytest.fixture(scope="module")
+def door_dir(spark, tmp_path_factory):
+    """A ReplacingMergeTree(ver) table `t` holding two unmerged versions
+    of one key, next to a flat region.parquet."""
+    import io
+    import os
+    import shutil
+
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+
+    d = str(tmp_path_factory.mktemp("doors"))
+    shutil.copy(os.path.join(SF_SMOKE, "region.parquet"), d)
+    for sql in ("CREATE TABLE t (k Int64, v String, ver Int64) "
+                "ENGINE = ReplacingMergeTree(ver) ORDER BY k",
+                "INSERT INTO t VALUES (1, 'a', 1)",
+                "INSERT INTO t VALUES (1, 'b', 2)"):
+        assert run_local(sql, d, spark=spark, out=io.StringIO()) == 0
+    return d
+
+
+@pytest.mark.parametrize("case", sorted(_DOOR_CASES))
+def test_front_doors_agree(spark, door_dir, case):
+    """run_local (the CLI/HTTP door) and ch_sql (the library door) give
+    the same rows for every statement kind: both run it through ch_sql."""
+    import io
+
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+
+    setup, stmt, want = _DOOR_CASES[case]
+
+    def cli(sql):
+        out = io.StringIO()
+        assert run_local(sql + " FORMAT TSV", door_dir, spark=spark, out=out) == 0
+        return [tuple(line.split("\t")) for line in out.getvalue().splitlines()]
+
+    def lib(sql):
+        return [tuple("" if v is None else str(v) for v in r)
+                for r in ch_sql(spark, sql, sf_dir=door_dir).collect()]
+
+    got = {}
+    for door, run in (("cli", cli), ("lib", lib)):
+        for sql in setup:
+            run(sql.format(door=door))
+        got[door] = run(stmt.format(door=door))
+    assert got["cli"] == got["lib"]
+    if want is not None:
+        assert got["cli"] == want
+    if case == "show_create_flat":
+        assert got["cli"][0][0].startswith(
+            "CREATE TABLE region (r_regionkey Nullable(Int")
+    if case == "show_tables":
+        assert {("region",), ("t",)} <= set(got["cli"])

@@ -193,8 +193,8 @@ def test_optimize_final_replacing_and_summing(spark, tmp_path):
 
 
 def test_query_log(spark, tmp_path):
-    """system.query_log analogue: executed SELECTs appear in the
-    query_log view with durations and row counts."""
+    """system.query_log: statements run through the CLI appear as
+    QueryFinish rows with durations and row counts."""
     import io
 
     from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
@@ -208,10 +208,12 @@ def test_query_log(spark, tmp_path):
 
     run("SELECT 1 AS x")
     run("SELECT 2 AS y")
-    body = run("SELECT kind, result_rows FROM query_log ORDER BY query FORMAT CSV")
+    body = run("SELECT query, result_rows, query_duration_ms > 0 "
+               "FROM system.query_log WHERE type = 'QueryFinish' "
+               "AND query IN ('SELECT 1 AS x', 'SELECT 2 AS y') "
+               "ORDER BY query FORMAT CSV")
     lines = body.strip().splitlines()
-    assert any(line == "select,1" for line in lines)
-    assert len(lines) >= 2
+    assert lines[-2:] == ["SELECT 1 AS x,1,True", "SELECT 2 AS y,1,True"]
 
 
 def test_out_of_band_writes_seen_by_next_statement(spark, tmp_path):
@@ -425,6 +427,8 @@ def test_cli_alter_mutations(spark, tmp_path):
     contract; expressions run through the CH dialect."""
     import io
 
+    import os
+
     from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
 
     d = str(tmp_path)
@@ -480,6 +484,21 @@ def test_cli_alter_mutations(spark, tmp_path):
     assert run("SELECT k, c FROM mt ORDER BY k FORMAT CSV") == [
         "1,5", "3,5", "4,7"]
 
+    # a dropped column's values stay dropped when the name is added back;
+    # the rewrite keeps a FREEZE snapshot
+    run("ALTER TABLE mt FREEZE WITH NAME 'before_drop'")
+    run("ALTER TABLE mt DROP COLUMN v")
+    assert os.path.isdir(os.path.join(d, "mt", "_shadow", "before_drop"))
+    run("ALTER TABLE mt ADD COLUMN v String")
+    assert run("SELECT k, v FROM mt ORDER BY k FORMAT CSV") == [
+        "1,", "3,", "4,"]
+    # a Nullable column's DEFAULT reaches the rows that predate it
+    run("ALTER TABLE mt ADD COLUMN x Nullable(Int32) DEFAULT 5")
+    run("INSERT INTO mt VALUES (5, 'e', 6, '', 7)")
+    run("INSERT INTO mt VALUES (6, 'f', 6, '', NULL)")
+    assert run("SELECT k, x FROM mt ORDER BY k FORMAT CSV") == [
+        "1,5", "3,5", "4,5", "5,7", "6,"]
+
 
 def test_projection_ddl_and_auto_routing(spark, tmp_path):
     """ADD PROJECTION + automatic routing (the reference's
@@ -488,10 +507,8 @@ def test_projection_ddl_and_auto_routing(spark, tmp_path):
     states; non-covered queries fall through; mutations rebuild."""
     import io
 
-    from clickhouse_25_5_3_75_stable_spark.__main__ import (
-        _route_projection,
-        run_local,
-    )
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+    from clickhouse_25_5_3_75_stable_spark.statements import _route_projection
 
     d = str(tmp_path)
     out = io.StringIO()
@@ -649,10 +666,8 @@ def test_normal_projection_routing(spark, tmp_path):
     base table."""
     import io
 
-    from clickhouse_25_5_3_75_stable_spark.__main__ import (
-        _route_projection,
-        run_local,
-    )
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+    from clickhouse_25_5_3_75_stable_spark.statements import _route_projection
 
     d = str(tmp_path)
     out = io.StringIO()
