@@ -426,7 +426,6 @@ def test_cli_alter_mutations(spark, tmp_path):
     mutations rewrite the DDL-managed directory with the staging-swap
     contract; expressions run through the CH dialect."""
     import io
-
     import os
 
     from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
