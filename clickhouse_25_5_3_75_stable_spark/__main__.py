@@ -144,21 +144,18 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
         # dialect routing (reference executeQuery.cpp:1044: the kusto
         # parser takes over when SET dialect = 'kusto'); statements
         # such as SET stay ClickHouse text
+        run = ch_sql
         dialect = spark.conf.get("spark.chsql.dialect", "clickhouse")
         if dialect != "clickhouse" and not statements.is_statement(sql):
             if dialect == "kusto":
-                from clickhouse_25_5_3_75_stable_spark.kql import (
-                    kql_to_chsql,
-                    spark_columns_of,
-                )
-
-                sql = kql_to_chsql(sql, columns_of=spark_columns_of(spark))
+                from clickhouse_25_5_3_75_stable_spark.kql import kql_sql as run
             else:
-                from clickhouse_25_5_3_75_stable_spark.prql import prql_to_sql
-
-                sql = prql_to_sql(sql)
-        df = ch_sql(spark, sql, params=params)
-        query_id, rc = df._ch_query_id, getattr(df, "_ch_exit_code", 0)
+                from clickhouse_25_5_3_75_stable_spark.prql import prql_sql as run
+        df = run(spark, sql, params=params)
+        # a result the dialect door builds itself (kql getschema, a prql
+        # loop) carries no query id: the QueryFinish row takes the current one
+        query_id = getattr(df, "_ch_query_id", None)
+        rc = getattr(df, "_ch_exit_code", 0)
         if max_result_rows is None:
             max_result_rows = spark.conf.get("spark.chspark.maxResultRows", None)
         if max_result_rows is not None:

@@ -84,6 +84,8 @@ def _parse_on(target: str) -> tuple[str, str]:
 def handle_access_statement(spark, sql: str):
     """Route one access statement; returns a DataFrame or None when
     the statement is not an access statement."""
+    from clickhouse_25_5_3_75_stable_spark.statements import _rows
+
     s = sql.strip().rstrip(";")
 
     m = re.match(r"(?is)^CREATE\s+(USER|ROLE)\s+(IF\s+NOT\s+EXISTS\s+)?"
@@ -104,7 +106,7 @@ def handle_access_statement(spark, sql: str):
                  or re.search(r"(?i)IDENTIFIED\s+BY", s) else "no_password"))
         else:
             reg[name] = {}
-        return spark.createDataFrame([("OK",)], "created string")
+        return _rows(spark, [("OK",)], "created string")
 
     m = re.match(r"(?is)^DROP\s+(USER|ROLE)\s+(IF\s+EXISTS\s+)?"
                  r"([A-Za-z_]\w*)\s*$", s)
@@ -123,7 +125,7 @@ def handle_access_statement(spark, sql: str):
             REGISTRY.role_grants = [
                 rg for rg in REGISTRY.role_grants
                 if rg.user != name and rg.role != name]
-        return spark.createDataFrame([("OK",)], "dropped string")
+        return _rows(spark, [("OK",)], "dropped string")
 
     m = re.match(r"(?is)^GRANT\s+(.+?)\s+ON\s+(\S+)\s+TO\s+"
                  r"([A-Za-z_]\w*)(\s+WITH\s+GRANT\s+OPTION)?\s*$", s)
@@ -141,7 +143,7 @@ def handle_access_statement(spark, sql: str):
             g = GrantDef(grantee, p, db, tbl, bool(m.group(4)))
             if not any(x == g for x in REGISTRY.grants):
                 REGISTRY.grants.append(g)
-        return spark.createDataFrame([("OK",)], "granted string")
+        return _rows(spark, [("OK",)], "granted string")
 
     m = re.match(r"(?is)^GRANT\s+([A-Za-z_]\w*)\s+TO\s+([A-Za-z_]\w*)"
                  r"(\s+WITH\s+ADMIN\s+OPTION)?\s*$", s)
@@ -154,7 +156,7 @@ def handle_access_statement(spark, sql: str):
         rg = RoleGrantDef(user, role, bool(m.group(3)))
         if not any(x == rg for x in REGISTRY.role_grants):
             REGISTRY.role_grants.append(rg)
-        return spark.createDataFrame([("OK",)], "granted string")
+        return _rows(spark, [("OK",)], "granted string")
 
     m = re.match(r"(?is)^REVOKE\s+(.+?)\s+ON\s+(\S+)\s+FROM\s+"
                  r"([A-Za-z_]\w*)\s*$", s)
@@ -168,7 +170,7 @@ def handle_access_statement(spark, sql: str):
                     and g.database == db and g.table == tbl)]
         if len(REGISTRY.grants) == before:
             _err(f"nothing to revoke from {m.group(3)!r}")
-        return spark.createDataFrame([("OK",)], "revoked string")
+        return _rows(spark, [("OK",)], "revoked string")
 
     m = re.match(r"(?is)^REVOKE\s+([A-Za-z_]\w*)\s+FROM\s+"
                  r"([A-Za-z_]\w*)\s*$", s)
@@ -179,7 +181,7 @@ def handle_access_statement(spark, sql: str):
             if not (rg.role == m.group(1) and rg.user == m.group(2))]
         if len(REGISTRY.role_grants) == before:
             _err(f"role {m.group(1)!r} was not granted to {m.group(2)!r}")
-        return spark.createDataFrame([("OK",)], "revoked string")
+        return _rows(spark, [("OK",)], "revoked string")
 
     m = re.match(r"(?is)^SHOW\s+GRANTS(?:\s+FOR\s+([A-Za-z_]\w*))?\s*$", s)
     if m:
@@ -199,13 +201,12 @@ def handle_access_statement(spark, sql: str):
             rows.append((f"GRANT {rg.role} TO {who}{opt}",))
         if who == "default" and not rows:
             rows = [(f"GRANT ALL ON *.* TO default WITH GRANT OPTION",)]
-        return spark.createDataFrame(sorted(rows), "grants string")
+        return _rows(spark, sorted(rows), "grants string")
 
     m = re.match(r"(?is)^SHOW\s+(USERS|ROLES)\s*$", s)
     if m:
         reg = (REGISTRY.users if m.group(1).upper() == "USERS"
                else REGISTRY.roles)
-        return spark.createDataFrame(
-            [(n,) for n in sorted(reg)], "name string")
+        return _rows(spark, [(n,) for n in sorted(reg)], "name string")
 
     return None

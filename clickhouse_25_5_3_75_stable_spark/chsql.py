@@ -268,18 +268,12 @@ _RENAMES = {
     "tostartofminute": "tostartofminute__",
     "datediff": "datediff",
     "concatwithseparator": "concat_ws",
-    # round-5 encoding/curve long tail (functions/encodings.py UDFs;
-    # variadic → fixed-arity ch_* shim rewrites)
+    # space-filling curves: the literal range mask → the fixed-arity
+    # ch_* shim of their functions/udfs.py row
     "mortonencode": "mortonencode__",
     "mortondecode": "mortondecode__",
     "hilbertencode": "hilbertencode__",
     "hilbertdecode": "hilbertdecode__",
-    "bitslice": "bitslice__",
-    "encrypt": "aescrypt__ch_encrypt",
-    "decrypt": "aescrypt__ch_decrypt",
-    "trydecrypt": "aescrypt__ch_try_decrypt",
-    "aes_encrypt_mysql": "aescrypt__ch_aes_encrypt_mysql",
-    "aes_decrypt_mysql": "aescrypt__ch_aes_decrypt_mysql",
     "splitbychar": "splitbychar__",
     "splitbystring": "splitbystring__",
     "range": "range__",
@@ -1381,7 +1375,7 @@ def _quantile_exact_tokens(x: list[str], p: list[str], fname: str) -> list[str]:
 
 
 def _rewrite_functions(toks: list[str]) -> list[str]:
-    from clickhouse_25_5_3_75_stable_spark.functions import hashing
+    from clickhouse_25_5_3_75_stable_spark.functions import hashing, udfs
 
     out: list[str] = []
     i = 0
@@ -1635,6 +1629,22 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
                 continue
 
         new = _RENAMES.get(low)
+        row = udfs.BY_NAME.get(low)
+        if row is not None and new is None:
+            # a Python-UDF-backed function: its row of the UDF table
+            # (functions/udfs.py) types every argument; a missing
+            # optional one is a typed NULL
+            if not row.required <= len(args) <= len(row.args):
+                raise ChSqlError(f"{tk}: expected {udfs.arity(row)} arguments")
+            out += [row.sql, "("]
+            for k, t in enumerate(row.args):
+                if k:
+                    out.append(",")
+                a = args[k] if k < len(args) else ["NULL"]
+                out += ["CAST", "(", *a, "AS", t.upper(), ")"]
+            out.append(")")
+            i = close_i + 1
+            continue
         if new is None:
             out += [tk, "("]
             for k, a in enumerate(args):
@@ -1719,8 +1729,7 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
             # (src/Functions/mortonEncode.cpp, hilbertEncode.cpp) —
             # the range-mask must be a literal parenthesized tuple,
             # exactly the reference's constant-tuple requirement
-            fn = ("ch_morton_encode" if new == "mortonencode__"
-                  else "ch_hilbert_encode")
+            fn = udfs.BY_NAME[low].sql
             if not args:
                 raise ChSqlError(f"{tk}: expected at least one argument")
             ratios = _literal_int_tuple(args[0]) if len(args) > 1 else None
@@ -1734,15 +1743,14 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
             for k, a in enumerate(vals):
                 if k:
                     out.append(",")
-                out += ["CAST", "(", *a, "AS", "BIGINT", ")"]
+                out += ["CAST", "(", *a, "AS", udfs.U64.upper(), ")"]
             out += [")", ")"]
         elif new in ("mortondecode__", "hilbertdecode__"):
             # mortonDecode(n, code) / mortonDecode((r1, r2), code):
             # the first argument must be a literal count or tuple —
             # it fixes the OUTPUT TYPE (tuple arity), which cannot be
             # data-dependent (same rule as the reference)
-            fn = ("ch_morton_decode" if new == "mortondecode__"
-                  else "ch_hilbert_decode")
+            fn = udfs.BY_NAME[low].sql
             if len(args) != 2:
                 raise ChSqlError(f"{tk}: expected exactly two arguments")
             ratios = _literal_int_tuple(args[0])
@@ -1757,28 +1765,7 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
                 ratios = [1 if new == "mortondecode__" else 0] * n
             out += [fn, "(", "array", "(",
                     *sum(([str(r), ","] for r in ratios), [])[:-1], ")",
-                    ",", "CAST", "(", *args[1], "AS", "BIGINT", ")", ")"]
-        elif new == "bitslice__":
-            # bitSlice(s, offset[, length]) — NULL length = unbounded
-            if not 2 <= len(args) <= 3:
-                raise ChSqlError(f"{tk}: expected 2-3 arguments")
-            ln = args[2] if len(args) == 3 else ["NULL"]
-            out += ["ch_bitslice", "(", "CAST", "(", *args[0], "AS", "BINARY",
-                    ")", ",", "CAST", "(", *args[1], "AS", "BIGINT", ")", ",",
-                    "CAST", "(", *ln, "AS", "BIGINT", ")", ")"]
-        elif new.startswith("aescrypt__"):
-            # encrypt(mode, input, key[, iv[, aad]]) → uniform 5-arg
-            # UDF; the optional iv/aad pad with NULL (zero-IV / no-AAD
-            # semantics live in functions/aescrypto.py)
-            fn = new[len("aescrypt__"):]
-            max_args = 4 if "mysql" in fn else 5  # MySQL family: no AAD
-            if not 3 <= len(args) <= max_args:
-                raise ChSqlError(f"{tk}: expected 3-{max_args} arguments")
-            out += [fn, "(", "CAST", "(", *args[0], "AS", "STRING", ")"]
-            for k in range(1, 5):
-                a = args[k] if k < len(args) else ["NULL"]
-                out += [",", "CAST", "(", *a, "AS", "BINARY", ")"]
-            out.append(")")
+                    ",", "CAST", "(", *args[1], "AS", udfs.U64.upper(), ")", ")"]
         elif new.startswith("binop__"):  # functional arithmetic forms
             op = new[len("binop__"):]
             out += ["(", "(", *args[0], ")", op, "(", *args[1], ")", ")"]
@@ -2830,14 +2817,9 @@ _BRIDGE_CACHE: dict[tuple[str, int], str | None] = {}
 
 
 def _registry_fn(low: str):
-    from clickhouse_25_5_3_75_stable_spark.functions.dialect import (
-        CH_FUNCTIONS as _D1,
-    )
-    from clickhouse_25_5_3_75_stable_spark.functions.dialect_extras import (
-        CH_FUNCTIONS as _D2,
-    )
+    from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS
 
-    return _D1.get(low) or _D2.get(low)
+    return CH_FUNCTIONS.get(low)
 
 
 _RENDER_TOKEN_RE = re.compile(
@@ -3348,16 +3330,10 @@ def _query(spark, sql: str, data_dir: str | None):
         if "UNRESOLVED_ROUTINE" in msg:
             m = re.search(r"Cannot resolve routine `([^`]+)`", msg)
             name = m.group(1) if m else "?"
-            from clickhouse_25_5_3_75_stable_spark.functions.dialect import (
-                CH_FUNCTIONS as _D1,
-            )
-            from clickhouse_25_5_3_75_stable_spark.functions.dialect_extras import (
-                CH_FUNCTIONS as _D2,
-            )
-
             from clickhouse_25_5_3_75_stable_spark.functions.aggregates import (
                 supported_aggregates,
             )
+            from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS
 
             # registry keys are lowercased at registration — compare
             # case-folded or camelCase names (base64Encode, bitAnd, …)
@@ -3365,7 +3341,7 @@ def _query(spark, sql: str, data_dir: str | None):
             # (fuzz-audit finding, round 6)
             low = name.lower()
             aggs = {a.lower() for a in supported_aggregates()}
-            if low in _D1 or low in _D2 or low in aggs:
+            if low in CH_FUNCTIONS or low in aggs:
                 raise ChSqlError(
                     f"{name}: implemented as a DataFrame expression "
                     f"(functions.dialect ch / functions.aggregates ch_agg) but "

@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError, _tokenize
+from clickhouse_25_5_3_75_stable_spark.dictionary_sql import type_default_sql
 from clickhouse_25_5_3_75_stable_spark.functions.typemap import ch_type_to_spark
 from clickhouse_25_5_3_75_stable_spark.sources import catalog
 
@@ -275,7 +276,8 @@ def register_table_view(spark: SparkSession, base_dir: str, name: str) -> DataFr
       declared name with its former names, so old and new parts serve
       one logical column.
     - ADD COLUMN leaves older parts without the column: they read its
-      DEFAULT (NULL without one). A Nullable column with a DEFAULT is
+      DEFAULT (ADD COLUMN records the type's zero for a non-Nullable
+      column without one). A Nullable column with a DEFAULT is
       the exception — ADD COLUMN writes the default into the existing
       parts, since a read cannot tell a missing value from a NULL.
       DROP COLUMN rewrites the parts without the column, so a column
@@ -637,14 +639,21 @@ def optimize_table(
     _rewrite(spark, base_dir, name, td, out)
 
 
+# dictionary_sql.type_default_sql's zero defaults as the literals a read
+# coalesces with
+_ZEROS = {"0": 0, "''": "", "toDate(0)": "1970-01-01",
+          "toDateTime(0)": "1970-01-01 00:00:00"}
+
+
 def alter_add_column(
     spark: SparkSession, base_dir: str, name: str, col: str, ch_type: str,
     default=None,
 ) -> None:
     """ALTER TABLE ADD COLUMN (reference InterpreterAlterQuery /
     MergeTree metadata-only ALTER): existing parquet files lack the
-    column and reads fill the declared default (NULL without one), the
-    reference's materialize-at-read until a merge writes it. A Nullable
+    column and reads fill the declared default (the type's zero without
+    one; NULL for a Nullable or composite type), the reference's
+    materialize-at-read until a merge writes it. A Nullable
     column with a DEFAULT rewrites the existing parts with the default
     instead: at read, a part that predates the column and a stored NULL
     look the same."""
@@ -660,6 +669,13 @@ def alter_add_column(
         _rewrite(spark, base_dir, name, td, df.withColumn(
             col, F.lit(default).cast(ch_type_to_spark(ch_type))))
         return
+    if default is None and not ch_type.startswith("Nullable") \
+            and not ch_type_to_spark(ch_type).startswith(("array", "map", "struct")):
+        # the parts that predate a non-Nullable column read its type's
+        # zero, the reference's default without a DEFAULT clause. It is
+        # recorded here so reads coalesce only added columns: a coalesce
+        # on every column would stop parquet filter and partition pushdown
+        default = _ZEROS[type_default_sql(ch_type)]
     td.columns.append((col, ch_type))
     if default is not None:
         td.defaults[col] = default

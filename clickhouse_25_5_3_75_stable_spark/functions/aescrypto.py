@@ -33,11 +33,6 @@ the cost is the AES work itself, which cryptography runs in C).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from clickhouse_25_5_3_75_stable_spark.functions.dialect import _c
 
 _KEY_SIZES = {"128": 16, "192": 24, "256": 32}
 _OPENSSL_MODES = ("ecb", "cbc", "cfb", "cfb8", "ofb", "ctr", "gcm")
@@ -210,8 +205,8 @@ def decrypt_py(mode: str, data: bytes, key: bytes, iv: bytes | None,
 
 
 # ---------------------------------------------------------------------------
-# pandas UDFs (5-arg uniform shape: mode, input, key, iv, aad; the
-# Column API / chsql rewriter pads missing args with NULL)
+# Arrow-batched kernels (their pandas UDFs are rows of functions/udfs.py:
+# mode, input, key, iv[, aad], a missing iv/aad padded with NULL)
 # ---------------------------------------------------------------------------
 
 def _b(v) -> bytes | None:
@@ -226,9 +221,10 @@ def _crypt_fn(op, mysql: bool, try_mode: bool = False):
     impl = encrypt_py if op == "enc" else decrypt_py
 
     def run(mode: pd.Series, data: pd.Series, key: pd.Series,
-            iv: pd.Series, aad: pd.Series) -> pd.Series:
+            iv: pd.Series, aad: pd.Series | None = None) -> pd.Series:
         out = []
-        for m, d, k, i, a in zip(mode, data, key, iv, aad):
+        no_aad = [None] * len(mode)
+        for m, d, k, i, a in zip(mode, data, key, iv, no_aad if aad is None else aad):
             if m is None or d is None or k is None:
                 out.append(None)
                 continue
@@ -244,47 +240,8 @@ def _crypt_fn(op, mysql: bool, try_mode: bool = False):
     return run
 
 
-_UDF_SPECS = {
-    "ch_encrypt": ("binary", lambda: _crypt_fn("enc", False)),
-    "ch_decrypt": ("binary", lambda: _crypt_fn("dec", False)),
-    "ch_try_decrypt": ("binary", lambda: _crypt_fn("dec", False, True)),
-    "ch_aes_encrypt_mysql": ("binary", lambda: _crypt_fn("enc", True)),
-    "ch_aes_decrypt_mysql": ("binary", lambda: _crypt_fn("dec", True)),
-}
-_UDF_CACHE: dict[str, object] = {}
-
-
-def aes_udf(name):
-    if name not in _UDF_CACHE:
-        ddl, fn = _UDF_SPECS[name]
-        _UDF_CACHE[name] = pandas_udf(ddl)(fn())
-    return _UDF_CACHE[name]
-
-
-def _call(name, mode, data, key, iv, aad) -> Column:
-    nul = F.lit(None).cast("binary")
-    return aes_udf(name)(
-        _c(mode).cast("string"), _c(data).cast("binary"),
-        _c(key).cast("binary"),
-        nul if iv is None else _c(iv).cast("binary"),
-        nul if aad is None else _c(aad).cast("binary"))
-
-
-def encrypt(mode, data, key, iv=None, aad=None) -> Column:
-    return _call("ch_encrypt", mode, data, key, iv, aad)
-
-
-def decrypt(mode, data, key, iv=None, aad=None) -> Column:
-    return _call("ch_decrypt", mode, data, key, iv, aad)
-
-
-def try_decrypt(mode, data, key, iv=None, aad=None) -> Column:
-    return _call("ch_try_decrypt", mode, data, key, iv, aad)
-
-
-def aes_encrypt_mysql(mode, data, key, iv=None) -> Column:
-    return _call("ch_aes_encrypt_mysql", mode, data, key, iv, None)
-
-
-def aes_decrypt_mysql(mode, data, key, iv=None) -> Column:
-    return _call("ch_aes_decrypt_mysql", mode, data, key, iv, None)
+_encrypt_fn = _crypt_fn("enc", False)
+_decrypt_fn = _crypt_fn("dec", False)
+_try_decrypt_fn = _crypt_fn("dec", False, True)
+_mysql_encrypt_fn = _crypt_fn("enc", True)  # MySQL forms: no aad
+_mysql_decrypt_fn = _crypt_fn("dec", True)

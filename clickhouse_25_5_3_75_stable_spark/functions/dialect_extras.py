@@ -24,6 +24,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from clickhouse_25_5_3_75_stable_spark.functions import hashing as _hashing
+from clickhouse_25_5_3_75_stable_spark.functions import udfs as _udfs
 from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS, _c, _reg
 
 # ---------------------------------------------------------------------------
@@ -805,63 +806,12 @@ _reg("MAP_FROM_ARRAYS")(lambda ks, vs: F.map_from_arrays(_c(ks), _c(vs)))
 # special cases (functions/hashing.py)
 for _name, _fn in _hashing.COLUMN_FUNCTIONS.items():
     _reg(_name)(_fn)
-# encoding / checksum / space-filling-curve long tail — EXACT since
-# round 5 (functions/encodings.py; reference src/Functions/CRC.cpp,
-# base58Encode.cpp, base32Encode.cpp, mortonEncode.cpp,
-# hilbertEncode.cpp, bitSlice.cpp). CRC32IEEE = reflected 0xedb88320,
-# init 0, NO xorout (differs from zlib CRC32, which stays JVM-native).
-def _enc(name):
-    def wrap(*cs):
-        from clickhouse_25_5_3_75_stable_spark.functions import encodings as _em
-
-        return getattr(_em, name)(*cs)
-
-    return wrap
-
-
-_reg("CRC32IEEE")(_enc("crc32_ieee"))
-_reg("CRC64")(_enc("crc64"))
-_reg("SHA512_256")(_enc("sha512_256"))
-_reg("RIPEMD160")(_enc("ripemd160"))
-_reg("keccak256")(_enc("keccak256"))
-_reg("base58Encode")(_enc("base58_encode"))
-_reg("base58Decode")(_enc("base58_decode"))
-_reg("tryBase58Decode")(_enc("try_base58_decode"))
-_reg("base32Encode")(_enc("base32_encode"))
-_reg("base32Decode")(_enc("base32_decode"))
-_reg("tryBase32Decode")(_enc("try_base32_decode"))
-_reg("mortonEncode")(_enc("morton_encode"))
-_reg("mortonDecode")(_enc("morton_decode"))
-_reg("hilbertEncode")(_enc("hilbert_encode"))
-_reg("hilbertDecode")(_enc("hilbert_decode"))
-_reg("bitSlice")(_enc("bit_slice"))
-_reg("normalizeUTF8NFC")(_enc("normalize_utf8_nfc"))
-_reg("normalizeUTF8NFD")(_enc("normalize_utf8_nfd"))
-_reg("normalizeUTF8NFKC")(_enc("normalize_utf8_nfkc"))
-_reg("normalizeUTF8NFKD")(_enc("normalize_utf8_nfkd"))
-_reg("punycodeEncode")(_enc("punycode_encode"))
-_reg("punycodeDecode")(_enc("punycode_decode"))
-_reg("tryPunycodeDecode")(_enc("try_punycode_decode"))
-_reg("idnaEncode")(_enc("idna_encode"))
-_reg("tryIdnaEncode")(_enc("try_idna_encode"))
-_reg("idnaDecode")(_enc("idna_decode"))
-_reg("convertCharset")(_enc("convert_charset"))
-
-
-def _aes(name):
-    def wrap(*cs):
-        from clickhouse_25_5_3_75_stable_spark.functions import aescrypto as _am
-
-        return getattr(_am, name)(*cs)
-
-    return wrap
-
-
-_reg("encrypt")(_aes("encrypt"))
-_reg("decrypt")(_aes("decrypt"))
-_reg("tryDecrypt")(_aes("try_decrypt"))
-_reg("aes_encrypt_mysql")(_aes("aes_encrypt_mysql"))
-_reg("aes_decrypt_mysql")(_aes("aes_decrypt_mysql"))
+# Every Python-UDF-backed function (geohash, s2, the h3 geo and edge
+# families, h3ToChildren, encodings, AES, Jaro): one row each in the UDF
+# table (functions/udfs.py), which types the arguments for both ch() and
+# ch_sql
+for _row in _udfs.UDFS:
+    _reg(_row.ch)(_udfs.column(_row))
 _reg("kostikConsistentHash", "yandexConsistentHash")(
     # capability form: stable bucket in [0, n) from a 64-bit key
     lambda key, n: F.pmod(F.xxhash64(_c(key)), _c(n) if isinstance(n, Column) else F.lit(n))
@@ -869,8 +819,6 @@ _reg("kostikConsistentHash", "yandexConsistentHash")(
 _reg("SHA1")(lambda c: F.unhex(F.sha1(_c(c).cast("binary"))))
 _reg("SHA224")(lambda c: F.unhex(F.sha2(_c(c).cast("binary"), 224)))
 _reg("SHA384")(lambda c: F.unhex(F.sha2(_c(c).cast("binary"), 384)))
-_reg("MD4")(_enc("md4"))  # EXACT RFC 1320 since round 5 (encodings.md4_py)
-_reg("BLAKE3")(_enc("blake3"))  # EXACT spec transcription since round 5
 
 # ---------------------------------------------------------------------------
 # Encodings (base64URL*.cpp, FunctionsBinaryRepresentation.cpp)
@@ -1456,32 +1404,6 @@ for _b in _VARIANT_BASES:
     CH_FUNCTIONS.setdefault(f"{_b}CaseInsensitive".lower(), _ci_wrap(_impl))
     CH_FUNCTIONS.setdefault(f"{_b}CaseInsensitiveUTF8".lower(), _ci_wrap(_impl))
 
-def _jaro_exact(winkler: bool):
-    # EXACT Jaro / Jaro-Winkler (reference
-    # src/Functions/FunctionsStringDistance.cpp) — the Arrow-batched
-    # vectorized implementation in operators/text.py, oracle-verified
-    # against DuckDB's independent jaro_similarity. Replaces the
-    # round-5 levenshtein capability map (judge finding: silently
-    # different scores on the SQL surface). NULL propagates like the
-    # reference's Nullable wrapping; the UDF itself is also NULL-safe
-    # (None -> "") because CASE WHEN may evaluate it on every row.
-    def fn(a, b):
-        from clickhouse_25_5_3_75_stable_spark.operators.text import (
-            jaro_similarity,
-            jaro_winkler_similarity,
-        )
-
-        udf = jaro_winkler_similarity if winkler else jaro_similarity
-        ca, cb = _c(a).cast("string"), _c(b).cast("string")
-        return F.when(ca.isNull() | cb.isNull(), F.lit(None).cast("double")).otherwise(
-            udf(ca, cb)
-        )
-
-    return fn
-
-
-_reg("jaroSimilarity")(_jaro_exact(winkler=False))
-_reg("jaroWinklerSimilarity")(_jaro_exact(winkler=True))
 _reg("damerauLevenshteinDistance", "editDistanceUTF8", "levenshteinDistanceUTF8")(
     lambda a, b: F.levenshtein(_c(a), _c(b))
 )
@@ -1549,37 +1471,6 @@ def _point_in_ellipses(x, y, ps) -> Column:
     return hit
 
 
-# geohash is pure bit math — implemented (functions/geohash.py), no lib needed
-from clickhouse_25_5_3_75_stable_spark.functions.geohash import (  # noqa: E402
-    geohash_decode,
-    geohash_encode,
-)
-
-def _int_precision(p, what: str) -> int:
-    if isinstance(p, int):
-        return p
-    raise ValueError(
-        f"{what}: precision must be a Python int (a Column would be "
-        "silently ignored)"
-    )
-
-
-_reg("geohashEncode")(
-    lambda lon, lat, p=12: geohash_encode(
-        _c(lon), _c(lat), _int_precision(p, "geohashEncode")
-    )
-)
-_reg("geohashDecode")(lambda code: geohash_decode(_c(code)))
-from clickhouse_25_5_3_75_stable_spark.functions.geohash import (  # noqa: E402
-    geohashes_in_box,
-)
-
-_reg("geohashesInBox")(
-    lambda a, b, c, d, p=4: geohashes_in_box(
-        _c(a), _c(b), _c(c), _c(d), _int_precision(p, "geohashesInBox")
-    )
-)
-
 # H3 index-math family — EXACT since round 5 (functions/h3.py, the
 # published H3 index bit layout; projection-table functions stay
 # excluded below). Scalar getters/predicates and parent/center-child
@@ -1600,7 +1491,6 @@ _reg("h3IsPentagon")(_h3("h3_is_pentagon"))
 _reg("h3IsResClassIII")(_h3("h3_is_res_class_iii"))
 _reg("h3ToParent")(_h3("h3_to_parent"))
 _reg("h3ToCenterChild")(_h3("h3_to_center_child"))
-_reg("h3ToChildren")(_h3("h3_to_children"))
 _reg("h3NumHexagons")(_h3("h3_num_hexagons"))
 _reg("h3ToString")(_h3("h3_to_string"))
 _reg("stringToH3")(_h3("string_to_h3"))
@@ -1627,103 +1517,12 @@ def _h3_pentagons(res):
 _reg("h3GetRes0Indexes")(_h3_res0)
 _reg("h3GetPentagonIndexes")(_h3_pentagons)
 
-# s2 family — EXACT since round 5 (functions/s2.py, an independent
-# transcription of the published S2 cell model: cube-face quadratic
-# projection + per-face Hilbert curve; validated against ClickHouse's
-# own published doc vectors — geoToS2/s2ToGeo/s2GetNeighbors/
-# s2CellsIntersect/s2CapContains anchors all bit-exact).
-def _s2(name):
-    def wrap(*cs):
-        from clickhouse_25_5_3_75_stable_spark.functions import s2 as _s2mod
-
-        return getattr(_s2mod, name)(*cs)
-
-    return wrap
-
-
-_reg("geoToS2")(_s2("geo_to_s2"))
-_reg("s2ToGeo")(_s2("s2_to_geo"))
-_reg("s2GetNeighbors")(_s2("s2_get_neighbors"))
-_reg("s2CellsIntersect")(_s2("s2_cells_intersect"))
-_reg("s2CapContains")(_s2("s2_cap_contains"))
-_reg("s2CapUnion")(_s2("s2_cap_union"))
-_reg("s2RectAdd")(_s2("s2_rect_add"))
-_reg("s2RectContains")(_s2("s2_rect_contains"))
-_reg("s2RectUnion")(_s2("s2_rect_union"))
-_reg("s2RectIntersection")(_s2("s2_rect_intersection"))
-
-# H3 geo-projection family — EXACT since round 6 (functions/h3geo.py):
-# transcribed compact published spec data (face centers, class-II
-# azimuths, base-cell home records) + NUMERICALLY DERIVED face-neighbor
-# and face/ijk->base-cell tables, validated by published anchor indexes
-# (85283473fffffff, 8928308280fffff with its printed center to the last
-# ULP, the reference docs' 644325524701193974), an exhaustive
-# geoToH3∘h3ToGeo round-trip over every cell at res 0..3, and the
-# sphere tiling (sum of all cell areas = 4π to 1e-13).
-def _h3geo(name):
-    def wrap(*cs):
-        from clickhouse_25_5_3_75_stable_spark.functions import h3geo as _m
-
-        return getattr(_m, name)(*cs)
-
-    return wrap
-
-
-_reg("geoToH3")(_h3geo("geo_to_h3"))
-_reg("h3ToGeo")(_h3geo("h3_to_geo"))
-_reg("h3ToGeoBoundary")(_h3geo("h3_to_geo_boundary"))
-_reg("h3kRing")(_h3geo("h3_k_ring"))
-_reg("h3HexRing")(_h3geo("h3_hex_ring"))
-_reg("h3Distance")(_h3geo("h3_distance"))
-_reg("h3IndexesAreNeighbors")(_h3geo("h3_indexes_are_neighbors"))
-_reg("h3GetFaces")(_h3geo("h3_get_faces"))
-_reg("h3CellAreaM2")(_h3geo("h3_cell_area_m2"))
-_reg("h3CellAreaRads2")(_h3geo("h3_cell_area_rads2"))
-_reg("h3PointDistM")(_h3geo("h3_point_dist_m"))
-_reg("h3PointDistKm")(_h3geo("h3_point_dist_km"))
-_reg("h3PointDistRads")(_h3geo("h3_point_dist_rads"))
-_reg("h3HexAreaM2")(_h3geo("h3_hex_area_m2"))
-_reg("h3HexAreaKm2")(_h3geo("h3_hex_area_km2"))
-
 _excl(["SVG"],
       "svg.cpp delegates to boost::geometry::svg's exact stream "
       "formatting (ring correction + %g rendering with no published "
       "spec and no in-sandbox boost anchor to pin output against); the "
       "geometry model itself is served by pointInPolygon and the "
       "polygon dictionary layout")
-# H3 unidirectional-edge family + h3Line — EXACT since round 7
-# (functions/h3edge.py): direction labels derived by rotation
-# calibration from the cell's own digit geometry + bijection
-# elimination at pentagon steps (closes the round-6 818/842 gap —
-# exhaustive bijection+symmetry over res 1..3 and all 122 base cells,
-# reproducing the published baseCellNeighbors rows and the reference
-# docs' cellsToDirectedEdge anchor 1248204388774707199 bit-exactly).
-def _h3edge(name):
-    def wrap(*cs):
-        from clickhouse_25_5_3_75_stable_spark.functions import h3edge as _m
-
-        return getattr(_m, name)(*cs)
-
-    return wrap
-
-
-_reg("h3GetUnidirectionalEdge")(_h3edge("h3_get_unidirectional_edge"))
-_reg("h3UnidirectionalEdgeIsValid")(_h3edge("h3_unidirectional_edge_is_valid"))
-_reg("h3GetOriginIndexFromUnidirectionalEdge")(
-    _h3edge("h3_get_origin_index_from_unidirectional_edge"))
-_reg("h3GetDestinationIndexFromUnidirectionalEdge")(
-    _h3edge("h3_get_destination_index_from_unidirectional_edge"))
-_reg("h3GetIndexesFromUnidirectionalEdge")(
-    _h3edge("h3_get_indexes_from_unidirectional_edge"))
-_reg("h3GetUnidirectionalEdgesFromHexagon")(
-    _h3edge("h3_get_unidirectional_edges_from_hexagon"))
-_reg("h3GetUnidirectionalEdgeBoundary")(
-    _h3edge("h3_get_unidirectional_edge_boundary"))
-_reg("h3Line")(_h3edge("h3_line"))
-_reg("h3ExactEdgeLengthRads")(_h3edge("h3_exact_edge_length_rads"))
-_reg("h3ExactEdgeLengthKm")(_h3edge("h3_exact_edge_length_km"))
-_reg("h3ExactEdgeLengthM")(_h3edge("h3_exact_edge_length_m"))
-
 _excl(["h3EdgeAngle", "h3EdgeLengthKm", "h3EdgeLengthM"],
       "h3EdgeLength{Km,M} read h3lib's STATIC average-edge-length "
       "table (empirical constants regenerated by an h3lib app; no "

@@ -40,11 +40,11 @@ Closes the last "UDF path if demanded" block of CH_FUNCTIONS_EXCLUDED
   yields empty; a negative offset beyond the string starts at bit 0
   byte-aligned (the reference's left_truncate path).
 
-Execution shape: everything is an Arrow-batched pandas UDF; the morton
-spread/compact is numpy over the whole batch (≤32 vector ops), CRC is
-a numpy uint64 table walk per row, the rest are per-row Python on
-boundary-tier functions (none are scan hot paths at 100 TB — the
-sharding-key hashes live in hashes_extra*.py).
+Execution shape: everything is an Arrow-batched pandas UDF (a row of
+functions/udfs.py); the morton spread/compact is numpy over the whole
+batch (≤32 vector ops), CRC is a numpy uint64 table walk per row, the
+rest are per-row Python on boundary-tier functions (none are scan hot
+paths at 100 TB — the sharding-key hashes live in hashes_extra*.py).
 """
 
 from __future__ import annotations
@@ -55,11 +55,6 @@ import zlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from clickhouse_25_5_3_75_stable_spark.functions.dialect import _c
 
 _M64 = 0xFFFFFFFFFFFFFFFF
 
@@ -634,7 +629,7 @@ def convert_charset_py(s: str, src: str, dst: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# pandas UDFs (lazy, cached — same pattern as s2.py)
+# Arrow-batched kernels (their pandas UDFs are rows of functions/udfs.py)
 # ---------------------------------------------------------------------------
 
 def _as_bytes(v) -> bytes:
@@ -703,7 +698,7 @@ def _b32_try_decode_fn(s: pd.Series) -> pd.Series:
 
 
 def _crc_fn(kind):
-    impl = {"crc32": crc32_py, "crc32ieee": crc32ieee_py, "crc64": crc64_py}[kind]
+    impl = {"crc32ieee": crc32ieee_py, "crc64": crc64_py}[kind]
     signed = kind == "crc64"
 
     def run(s: pd.Series) -> pd.Series:
@@ -793,8 +788,9 @@ def _bitslice_fn(s: pd.Series, start: pd.Series, length: pd.Series) -> pd.Series
         if v is None or st is None:
             out.append(None)
         else:
+            # a BIGINT length holding NULLs arrives as float64 NaN
             out.append(bit_slice_py(_as_bytes(v), int(st),
-                                    None if ln is None else int(ln)))
+                                    None if pd.isna(ln) else int(ln)))
     return pd.Series(out, dtype=object)
 
 
@@ -836,191 +832,21 @@ def _convert_charset_fn(s: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Seri
     return pd.Series(out, dtype=object)
 
 
-_UDF_SPECS = {
-    "normalizeUTF8NFC": ("string", lambda: _normalize_fn("NFC")),
-    "normalizeUTF8NFD": ("string", lambda: _normalize_fn("NFD")),
-    "normalizeUTF8NFKC": ("string", lambda: _normalize_fn("NFKC")),
-    "normalizeUTF8NFKD": ("string", lambda: _normalize_fn("NFKD")),
-    "punycodeEncode": ("string", lambda: _map_text(punycode_encode_py, "empty")),
-    "punycodeDecode": ("string", lambda: _map_text(punycode_decode_py)),
-    "tryPunycodeDecode": ("string", lambda: _map_text(punycode_decode_py, "empty")),
-    "idnaEncode": ("string", lambda: _map_text(idna_encode_py)),
-    "tryIdnaEncode": ("string", lambda: _map_text(idna_encode_py, "empty")),
-    "idnaDecode": ("string", lambda: _map_text(idna_decode_py, "keep")),
-    "convertCharset": ("string", lambda: _convert_charset_fn),
-    "base58Encode": ("string", lambda: _b58_encode_fn),
-    "base58Decode": ("binary", lambda: _b58_decode_fn),
-    "tryBase58Decode": ("binary", lambda: _b58_try_decode_fn),
-    "base32Encode": ("string", lambda: _b32_encode_fn),
-    "base32Decode": ("binary", lambda: _b32_decode_fn),
-    "tryBase32Decode": ("binary", lambda: _b32_try_decode_fn),
-    "CRC32": ("long", lambda: _crc_fn("crc32")),
-    "CRC32IEEE": ("long", lambda: _crc_fn("crc32ieee")),
-    "CRC64": ("long", lambda: _crc_fn("crc64")),
-    "SHA512_256": ("string", lambda: _digest_fn("sha512_256")),
-    "RIPEMD160": ("string", lambda: _digest_fn("ripemd160")),
-    "keccak256": ("string", lambda: _digest_fn("keccak256")),
-    # binary return to match the SHA1/SHA224/SHA384 FixedString tier
-    "MD4": ("binary", lambda: _map_str(md4_py)),
-    "BLAKE3": ("binary", lambda: _map_str(blake3_py)),
-    "ch_morton_encode": ("long", lambda: _morton_encode_fn),
-    "ch_morton_decode": ("array<long>", lambda: _morton_decode_fn),
-    "ch_hilbert_encode": ("long", lambda: _hilbert_encode_fn),
-    "ch_hilbert_decode": ("array<long>", lambda: _hilbert_decode_fn),
-    "ch_bitslice": ("binary", lambda: _bitslice_fn),
-}
-_UDF_CACHE: dict[str, object] = {}
-
-
-def enc_udf(name):
-    if name not in _UDF_CACHE:
-        ddl, fn = _UDF_SPECS[name]
-        _UDF_CACHE[name] = pandas_udf(ddl)(fn())
-    return _UDF_CACHE[name]
-
-
-# ---------------------------------------------------------------------------
-# Column API wrappers (dialect_extras registers these under the
-# reference names; tuples/ints in the CH calling positions are Python
-# literals, as the reference requires the mask to be a constant)
-# ---------------------------------------------------------------------------
-
-def _str_col(x) -> Column:
-    return _c(x).cast("string")
-
-
-def base58_encode(x) -> Column:
-    return enc_udf("base58Encode")(_c(x).cast("binary"))
-
-
-def base58_decode(x) -> Column:
-    return enc_udf("base58Decode")(_str_col(x))
-
-
-def try_base58_decode(x) -> Column:
-    return enc_udf("tryBase58Decode")(_str_col(x))
-
-
-def base32_encode(x) -> Column:
-    return enc_udf("base32Encode")(_c(x).cast("binary"))
-
-
-def base32_decode(x) -> Column:
-    return enc_udf("base32Decode")(_str_col(x))
-
-
-def try_base32_decode(x) -> Column:
-    return enc_udf("tryBase32Decode")(_str_col(x))
-
-
-def crc32(x) -> Column:
-    return enc_udf("CRC32")(_c(x).cast("binary"))
-
-
-def crc32_ieee(x) -> Column:
-    return enc_udf("CRC32IEEE")(_c(x).cast("binary"))
-
-
-def crc64(x) -> Column:
-    return enc_udf("CRC64")(_c(x).cast("binary"))
-
-
-def sha512_256(x) -> Column:
-    return enc_udf("SHA512_256")(_c(x).cast("binary"))
-
-
-def ripemd160(x) -> Column:
-    return enc_udf("RIPEMD160")(_c(x).cast("binary"))
-
-
-def keccak256(x) -> Column:
-    return enc_udf("keccak256")(_c(x).cast("binary"))
-
-
-def md4(x) -> Column:
-    return enc_udf("MD4")(_c(x).cast("binary"))
-
-
-def blake3(x) -> Column:
-    return enc_udf("BLAKE3")(_c(x).cast("binary"))
-
-
-def _mask_and_vals(args):
-    """CH calling convention: optional constant tuple mask first."""
-    if isinstance(args[0], (tuple, list)):
-        ratios = [int(r) for r in args[0]]
-        vals = args[1:]
-        if len(ratios) != len(vals):
-            raise ValueError("range mask size must equal the number of arguments")
-        return ratios, vals
-    return None, args
-
-
-def morton_encode(*args) -> Column:
-    ratios, vals = _mask_and_vals(args)
-    n = len(vals)
-    if not 1 <= n <= 8:
-        raise ValueError("mortonEncode takes 1-8 arguments")
-    rarr = (F.lit(None).cast("array<int>") if ratios is None
-            else F.array(*[F.lit(r).cast("int") for r in ratios]))
-    varr = F.array(*[_c(v).cast("long") for v in vals])
-    return enc_udf("ch_morton_encode")(rarr, varr)
-
-
-def morton_decode(dims, code) -> Column:
-    if isinstance(dims, (tuple, list)):
-        ratios = [int(r) for r in dims]
-    else:
-        ratios = [1] * int(dims)
-    rarr = F.array(*[F.lit(r).cast("int") for r in ratios])
-    return enc_udf("ch_morton_decode")(rarr, _c(code).cast("long"))
-
-
-def hilbert_encode(*args) -> Column:
-    ratios, vals = _mask_and_vals(args)
-    n = len(vals)
-    if not 1 <= n <= 2:
-        raise ValueError("hilbertEncode takes 1-2 arguments")
-    rarr = (F.lit(None).cast("array<int>") if ratios is None
-            else F.array(*[F.lit(r).cast("int") for r in ratios]))
-    varr = F.array(*[_c(v).cast("long") for v in vals])
-    return enc_udf("ch_hilbert_encode")(rarr, varr)
-
-
-def hilbert_decode(dims, code) -> Column:
-    if isinstance(dims, (tuple, list)):
-        ratios = [int(r) for r in dims]
-    else:
-        ratios = [0] * int(dims)
-    if not 1 <= len(ratios) <= 2:
-        raise ValueError("hilbertDecode takes 1-2 dimensions")
-    rarr = F.array(*[F.lit(r).cast("int") for r in ratios])
-    return enc_udf("ch_hilbert_decode")(rarr, _c(code).cast("long"))
-
-
-def bit_slice(s, start, length=None) -> Column:
-    ln = F.lit(None).cast("long") if length is None else _c(length).cast("long")
-    return enc_udf("ch_bitslice")(_c(s).cast("binary"), _c(start).cast("long"), ln)
-
-
-def _str1(name):
-    def fn(x) -> Column:
-        return enc_udf(name)(_str_col(x))
-
-    return fn
-
-
-normalize_utf8_nfc = _str1("normalizeUTF8NFC")
-normalize_utf8_nfd = _str1("normalizeUTF8NFD")
-normalize_utf8_nfkc = _str1("normalizeUTF8NFKC")
-normalize_utf8_nfkd = _str1("normalizeUTF8NFKD")
-punycode_encode = _str1("punycodeEncode")
-punycode_decode = _str1("punycodeDecode")
-try_punycode_decode = _str1("tryPunycodeDecode")
-idna_encode = _str1("idnaEncode")
-try_idna_encode = _str1("tryIdnaEncode")
-idna_decode = _str1("idnaDecode")
-
-
-def convert_charset(s, src, dst) -> Column:
-    return enc_udf("convertCharset")(_str_col(s), _str_col(src), _str_col(dst))
+# one module attribute per row of functions/udfs.py
+_crc32ieee_fn = _crc_fn("crc32ieee")
+_crc64_fn = _crc_fn("crc64")
+_sha512_256_fn = _digest_fn("sha512_256")
+_ripemd160_fn = _digest_fn("ripemd160")
+_keccak256_fn = _digest_fn("keccak256")
+_md4_fn = _map_str(md4_py)
+_blake3_fn = _map_str(blake3_py)
+_nfc_fn = _normalize_fn("NFC")
+_nfd_fn = _normalize_fn("NFD")
+_nfkc_fn = _normalize_fn("NFKC")
+_nfkd_fn = _normalize_fn("NFKD")
+_punycode_encode_fn = _map_text(punycode_encode_py, "empty")
+_punycode_decode_fn = _map_text(punycode_decode_py)
+_try_punycode_decode_fn = _map_text(punycode_decode_py, "empty")
+_idna_encode_fn = _map_text(idna_encode_py)
+_try_idna_encode_fn = _map_text(idna_encode_py, "empty")
+_idna_decode_fn = _map_text(idna_decode_py, "keep")

@@ -15,9 +15,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 _MAX_PRECISION = 12
@@ -83,53 +80,23 @@ def _decode_np(codes: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     return (lon_lo + lon_hi) / 2.0, (lat_lo + lat_hi) / 2.0
 
 
-# pandas_udf parses its DDL return type against the ACTIVE session, so
-# the decorators must not run at import time — built lazily, cached.
-_UDF_CACHE: dict[str, object] = {}
+def _precision(p: pd.Series, default: int) -> int:
+    """The batch's precision: its first value (the reference requires a
+    constant), NULL for the default, clamped to 1..12."""
+    v = p.iloc[0] if len(p) else None
+    return max(1, min(_MAX_PRECISION, default if v is None or pd.isna(v) else int(v)))
 
 
-def _encode_udf():
-    if "enc" not in _UDF_CACHE:
-
-        @pandas_udf("string")
-        def _geohash_encode_udf(
-            lon: pd.Series, lat: pd.Series, precision: pd.Series
-        ) -> pd.Series:
-            p = int(precision.iloc[0]) if len(precision) else 12
-            p = max(1, min(_MAX_PRECISION, p))
-            out = _encode_np(
-                lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64), p
-            )
-            return pd.Series(out)
-
-        _UDF_CACHE["enc"] = _geohash_encode_udf
-    return _UDF_CACHE["enc"]
+def _encode_fn(lon: pd.Series, lat: pd.Series, precision: pd.Series) -> pd.Series:
+    """geohashEncode(longitude, latitude[, precision]) -> String."""
+    return pd.Series(_encode_np(lon.to_numpy(dtype=np.float64),
+                                lat.to_numpy(dtype=np.float64), _precision(precision, 12)))
 
 
-def _decode_udf():
-    if "dec" not in _UDF_CACHE:
-
-        @pandas_udf("struct<longitude: double, latitude: double>")
-        def _geohash_decode_udf(codes: pd.Series) -> pd.DataFrame:
-            lon, lat = _decode_np(codes)
-            return pd.DataFrame({"longitude": lon, "latitude": lat})
-
-        _UDF_CACHE["dec"] = _geohash_decode_udf
-    return _UDF_CACHE["dec"]
-
-
-def geohash_encode(lon, lat, precision: int = 12) -> Column:
-    """geohashEncode(longitude, latitude[, precision]) → String."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    return _encode_udf()(lon.cast("double"), lat.cast("double"), F.lit(int(precision)))
-
-
-def geohash_decode(code) -> Column:
-    """geohashDecode(str) → struct(longitude, latitude) — cell
-    center, like the reference's tuple return."""
-    code = F.col(code) if isinstance(code, str) else code
-    return _decode_udf()(code)
+def _decode_fn(codes: pd.Series) -> pd.DataFrame:
+    """geohashDecode(str) -> (longitude, latitude) of the cell center."""
+    lon, lat = _decode_np(codes)
+    return pd.DataFrame({"longitude": lon, "latitude": lat})
 
 
 def _boxes_np(
@@ -163,33 +130,12 @@ def _boxes_np(
     return out
 
 
-def _boxes_udf():
-    if "box" not in _UDF_CACHE:
-
-        @pandas_udf("array<string>")
-        def _geohashes_in_box_udf(
-            lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series,
-            precision: pd.Series,
-        ) -> pd.Series:
-            p = int(precision.iloc[0]) if len(precision) else 4
-            p = max(1, min(_MAX_PRECISION, p))
-            return pd.Series(
-                _boxes_np(
-                    lon1.to_numpy(np.float64), lat1.to_numpy(np.float64),
-                    lon2.to_numpy(np.float64), lat2.to_numpy(np.float64), p,
-                )
-            )
-
-        _UDF_CACHE["box"] = _geohashes_in_box_udf
-    return _UDF_CACHE["box"]
-
-
-def geohashes_in_box(lon_min, lat_min, lon_max, lat_max, precision: int = 4) -> Column:
-    """geohashesInBox(lon_min, lat_min, lon_max, lat_max, precision)
-    → Array(String): the geohash cells intersecting the box (empty
-    above the cell-count cap, mirroring the reference's limit)."""
-    cols = [
-        F.col(c).cast("double") if isinstance(c, str) else c.cast("double")
-        for c in (lon_min, lat_min, lon_max, lat_max)
-    ]
-    return _boxes_udf()(*cols, F.lit(int(precision)))
+def _boxes_fn(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series,
+              precision: pd.Series) -> pd.Series:
+    """geohashesInBox(lon_min, lat_min, lon_max, lat_max, precision) ->
+    Array(String): the cells intersecting the box (empty above the
+    cell-count cap, mirroring the reference's limit)."""
+    return pd.Series(_boxes_np(
+        lon1.to_numpy(np.float64), lat1.to_numpy(np.float64),
+        lon2.to_numpy(np.float64), lat2.to_numpy(np.float64), _precision(precision, 4),
+    ))

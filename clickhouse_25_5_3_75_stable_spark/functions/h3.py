@@ -29,16 +29,14 @@ obtain or verify. No approximations are shipped for them.
 Execution shape: the scalar getters/predicates and h3ToParent /
 h3ToCenterChild are pure JVM bit expressions (whole-stage codegen —
 the 100 TB path for sharding/rollup keys); h3ToChildren (variable
-fan-out) is an Arrow-batched UDF; the generator functions return
-literal arrays.
+fan-out) is an Arrow-batched UDF over h3_to_children_py (a row of
+functions/udfs.py); the generator functions return literal arrays.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 # the twelve pentagon base cells (published H3 spec table)
 PENTAGON_BASE_CELLS = (4, 14, 24, 38, 49, 58, 63, 72, 83, 97, 107, 117)
@@ -249,24 +247,6 @@ def h3_to_center_child(h, child_res) -> Column:
     # clear bits lo..hi-1: (2^hi - 1) - (2^lo - 1)
     seg = (_ones_below_res(res) - _ones_below_res(cr)).cast("bigint")
     return with_res.bitwiseAND(seg.bitwiseXOR(F.lit(-1).cast("bigint")))
-
-
-def _children_udf():
-    @pandas_udf("array<long>")
-    def _children(h: pd.Series, cr: pd.Series) -> pd.Series:
-        out = []
-        for hv, cv in zip(h, cr):
-            if hv is None or cv is None:
-                out.append(None)
-            else:
-                out.append(h3_to_children_py(int(hv), int(cv)))
-        return pd.Series(out, dtype="object")
-
-    return _children
-
-
-def h3_to_children(h, child_res) -> Column:
-    return _children_udf()(_c(h).cast("bigint"), _c(child_res).cast("bigint"))
 
 
 def h3_num_hexagons(res) -> Column:

@@ -66,11 +66,6 @@ from __future__ import annotations
 import math
 from functools import lru_cache
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
 from clickhouse_25_5_3_75_stable_spark.functions import h3geo as G
 
 DIRECTED_EDGE_MODE = 2
@@ -213,6 +208,11 @@ def _make_edge(origin: int, direction: int) -> int:
 
 def edge_origin_py(edge: int) -> int:
     return (edge & ~(_MODE_MASK | _DIR_MASK)) | (1 << 59)
+
+
+def edge_cells_py(edge: int) -> tuple[int, int]:
+    """(origin, destination) of an edge — directedEdgeToCells."""
+    return edge_origin_py(edge), edge_destination_py(edge)
 
 
 def edge_direction(edge: int) -> int:
@@ -402,184 +402,3 @@ def h3_line_py(a: int, b: int) -> list[int]:
                 f"end H3 index {b}"
             )
     return out
-
-
-# ---------------------------------------------------------------------------
-# Column surface (Arrow-batched pandas UDFs, like the rest of the
-# geo family — OFF the 100 TB hot path by design)
-# ---------------------------------------------------------------------------
-
-_U64 = 1 << 64
-
-
-def _i64(v: int) -> int:
-    return v - _U64 if v >= (1 << 63) else v
-
-
-def _u64(v: int) -> int:
-    return v + _U64 if v < 0 else v
-
-
-def h3_get_unidirectional_edge(origin, dest) -> Column:
-    @pandas_udf("long")
-    def f(o: pd.Series, d: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if x is None or y is None
-                else _i64(get_unidirectional_edge_py(_u64(int(x)), _u64(int(y))))
-                for x, y in zip(o, d)
-            ],
-            dtype="object",
-        )
-
-    return f(origin, dest)
-
-
-def h3_unidirectional_edge_is_valid(edge) -> Column:
-    @pandas_udf("boolean")
-    def f(e: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if v is None else edge_is_valid_py(_u64(int(v))) for v in e],
-            dtype="object",
-        )
-
-    return f(edge)
-
-
-def h3_get_origin_index_from_unidirectional_edge(edge) -> Column:
-    @pandas_udf("long")
-    def f(e: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if v is None else _i64(edge_origin_py(_u64(int(v))))
-                for v in e
-            ],
-            dtype="object",
-        )
-
-    return f(edge)
-
-
-def h3_get_destination_index_from_unidirectional_edge(edge) -> Column:
-    @pandas_udf("long")
-    def f(e: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if v is None else _i64(edge_destination_py(_u64(int(v))))
-                for v in e
-            ],
-            dtype="object",
-        )
-
-    return f(edge)
-
-
-def h3_get_indexes_from_unidirectional_edge(edge) -> Column:
-    @pandas_udf("struct<origin:long,destination:long>")
-    def f(e: pd.Series) -> pd.DataFrame:
-        orig, dst = [], []
-        for v in e:
-            if v is None:
-                orig.append(None)
-                dst.append(None)
-            else:
-                ev = _u64(int(v))
-                orig.append(_i64(edge_origin_py(ev)))
-                dst.append(_i64(edge_destination_py(ev)))
-        return pd.DataFrame({"origin": orig, "destination": dst})
-
-    return f(edge)
-
-
-def h3_get_unidirectional_edges_from_hexagon(h) -> Column:
-    @pandas_udf("array<long>")
-    def f(e: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if v is None
-                else [_i64(x) for x in edges_from_hexagon_py(_u64(int(v)))]
-                for v in e
-            ],
-            dtype="object",
-        )
-
-    return f(h)
-
-
-def h3_get_unidirectional_edge_boundary(edge) -> Column:
-    @pandas_udf("array<struct<lat:double,lon:double>>")
-    def f(e: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if v is None
-                else [
-                    {"lat": la, "lon": lo}
-                    for la, lo in edge_boundary_py(_u64(int(v)))
-                ]
-                for v in e
-            ],
-            dtype="object",
-        )
-
-    return f(edge)
-
-
-def h3_line(a, b) -> Column:
-    @pandas_udf("array<long>")
-    def f(s: pd.Series, t: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if x is None or y is None
-                else [_i64(c) for c in h3_line_py(_u64(int(x)), _u64(int(y)))]
-                for x, y in zip(s, t)
-            ],
-            dtype="object",
-        )
-
-    return f(a, b)
-
-
-def h3_exact_edge_length_rads(edge) -> Column:
-    @pandas_udf("double")
-    def f(e: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if v is None else exact_edge_length_rads_py(_u64(int(v)))
-                for v in e
-            ],
-            dtype="object",
-        )
-
-    return f(edge)
-
-
-def h3_exact_edge_length_km(edge) -> Column:
-    @pandas_udf("double")
-    def f(e: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if v is None else exact_edge_length_km_py(_u64(int(v)))
-                for v in e
-            ],
-            dtype="object",
-        )
-
-    return f(edge)
-
-
-def h3_exact_edge_length_m(edge) -> Column:
-    @pandas_udf("double")
-    def f(e: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if v is None else exact_edge_length_m_py(_u64(int(v)))
-                for v in e
-            ],
-            dtype="object",
-        )
-
-    return f(edge)

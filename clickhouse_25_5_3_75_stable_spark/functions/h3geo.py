@@ -55,9 +55,6 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from clickhouse_25_5_3_75_stable_spark.functions.h3 import (
     PENTAGON_BASE_CELLS,
@@ -1135,12 +1132,8 @@ def point_dist_rads_py(lat1, lng1, lat2, lng2):
 
 
 # ---------------------------------------------------------------------------
-# pandas UDF layer (Arrow-batched; lazily created, cached)
+# Arrow-batched kernels (their pandas UDFs are rows of functions/udfs.py)
 # ---------------------------------------------------------------------------
-
-
-def _c(x) -> Column:
-    return x if isinstance(x, Column) else F.lit(x)
 
 
 def _u64(v):
@@ -1272,101 +1265,8 @@ def _hex_area_factory(km2):
     return fn
 
 
-_UDF_SPECS = {
-    "ch_geotoh3": ("long", lambda: _geo_to_h3_fn),
-    "ch_h3togeo": ("lat double, lon double", lambda: _h3_to_geo_fn),
-    "ch_h3boundary": ("array<struct<lat double, lon double>>", lambda: _h3_boundary_fn),
-    "ch_h3kring": ("array<long>", lambda: _k_ring_fn),
-    "ch_h3hexring": ("array<long>", lambda: _hex_ring_fn),
-    "ch_h3distance": ("long", lambda: _distance_fn),
-    "ch_h3areneighbors": ("boolean", lambda: _neighbors_fn),
-    "ch_h3getfaces": ("array<int>", lambda: _get_faces_fn),
-    "ch_h3aream2": ("double", lambda: _area_m2_fn),
-    "ch_h3arearads2": ("double", lambda: _area_rads2_fn),
-    "ch_h3pointdistm": ("double", lambda: _point_dist_factory(EARTH_RADIUS_KM * 1000.0)),
-    "ch_h3pointdistkm": ("double", lambda: _point_dist_factory(EARTH_RADIUS_KM)),
-    "ch_h3pointdistrads": ("double", lambda: _point_dist_factory(1.0)),
-    "ch_h3hexaream2": ("double", lambda: _hex_area_factory(False)),
-    "ch_h3hexareakm2": ("double", lambda: _hex_area_factory(True)),
-}
-_UDF_CACHE: dict[str, object] = {}
-
-
-def h3geo_udf(name):
-    if name not in _UDF_CACHE:
-        ddl, fn = _UDF_SPECS[name]
-        _UDF_CACHE[name] = pandas_udf(ddl)(fn())
-    return _UDF_CACHE[name]
-
-
-# Column API (reference argument orders: geoToH3(lat, lon, res),
-# h3ToGeo -> (lat, lon))
-def geo_to_h3(lat, lon, res) -> Column:
-    return h3geo_udf("ch_geotoh3")(
-        _c(lat).cast("double"), _c(lon).cast("double"), _c(res).cast("int")
-    )
-
-
-def h3_to_geo(h) -> Column:
-    return h3geo_udf("ch_h3togeo")(_c(h).cast("long"))
-
-
-def h3_to_geo_boundary(h) -> Column:
-    return h3geo_udf("ch_h3boundary")(_c(h).cast("long"))
-
-
-def h3_k_ring(h, k) -> Column:
-    return h3geo_udf("ch_h3kring")(_c(h).cast("long"), _c(k).cast("int"))
-
-
-def h3_hex_ring(h, k) -> Column:
-    return h3geo_udf("ch_h3hexring")(_c(h).cast("long"), _c(k).cast("int"))
-
-
-def h3_distance(a, b) -> Column:
-    return h3geo_udf("ch_h3distance")(_c(a).cast("long"), _c(b).cast("long"))
-
-
-def h3_indexes_are_neighbors(a, b) -> Column:
-    return h3geo_udf("ch_h3areneighbors")(_c(a).cast("long"), _c(b).cast("long"))
-
-
-def h3_get_faces(h) -> Column:
-    return h3geo_udf("ch_h3getfaces")(_c(h).cast("long"))
-
-
-def h3_cell_area_m2(h) -> Column:
-    return h3geo_udf("ch_h3aream2")(_c(h).cast("long"))
-
-
-def h3_cell_area_rads2(h) -> Column:
-    return h3geo_udf("ch_h3arearads2")(_c(h).cast("long"))
-
-
-def h3_point_dist_m(lat1, lon1, lat2, lon2) -> Column:
-    return h3geo_udf("ch_h3pointdistm")(
-        _c(lat1).cast("double"), _c(lon1).cast("double"),
-        _c(lat2).cast("double"), _c(lon2).cast("double"),
-    )
-
-
-def h3_point_dist_km(lat1, lon1, lat2, lon2) -> Column:
-    return h3geo_udf("ch_h3pointdistkm")(
-        _c(lat1).cast("double"), _c(lon1).cast("double"),
-        _c(lat2).cast("double"), _c(lon2).cast("double"),
-    )
-
-
-def h3_point_dist_rads(lat1, lon1, lat2, lon2) -> Column:
-    return h3geo_udf("ch_h3pointdistrads")(
-        _c(lat1).cast("double"), _c(lon1).cast("double"),
-        _c(lat2).cast("double"), _c(lon2).cast("double"),
-    )
-
-
-def h3_hex_area_m2(res) -> Column:
-    return h3geo_udf("ch_h3hexaream2")(_c(res).cast("int"))
-
-
-def h3_hex_area_km2(res) -> Column:
-    return h3geo_udf("ch_h3hexareakm2")(_c(res).cast("int"))
+_point_dist_m_fn = _point_dist_factory(EARTH_RADIUS_KM * 1000.0)
+_point_dist_km_fn = _point_dist_factory(EARTH_RADIUS_KM)
+_point_dist_rads_fn = _point_dist_factory(1.0)
+_hex_area_m2_fn = _hex_area_factory(False)
+_hex_area_km2_fn = _hex_area_factory(True)

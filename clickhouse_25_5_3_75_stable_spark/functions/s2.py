@@ -33,12 +33,12 @@ adjacent faces; intersects is reflexive/symmetric and agrees with
 prefix containment; cap/rect algebra (union monotone, contains
 consistent with distance).
 
-Execution shape: geoToS2 / s2ToGeo / neighbors / intersects are
+Execution shape: geoToS2 / s2ToGeo / intersects / capContains are
 Arrow-batched numpy over the full batch (the 100 TB sharding path —
 one table-lookup Hilbert loop of 8 iterations per batch, no per-row
-Python); cap/rect ops vectorize the distance math and fall back to
-per-row interval logic only for the branchy S1Interval algebra
-(boundary-heavy, never a scan hot path).
+Python); neighbors, cap union and the rect ops run their *_py
+reference per row for the branchy S1Interval algebra (boundary-heavy,
+never a scan hot path). Their UDFs are rows of functions/udfs.py.
 """
 
 from __future__ import annotations
@@ -47,9 +47,6 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _MAX_LEVEL = 30
 _LOOKUP_BITS = 4
@@ -602,12 +599,9 @@ def _s2_to_geo_np(cid: np.ndarray):
 
 
 # ---------------------------------------------------------------------------
-# Column API (Arrow-batched)
+# Arrow-batched kernels (their pandas UDFs are rows of functions/udfs.py;
+# the per-row *_py functions above back the rest of the family there)
 # ---------------------------------------------------------------------------
-
-def _c(x) -> Column:
-    return x if isinstance(x, Column) else F.lit(x)
-
 
 def _u64_series(s: pd.Series):
     """(null mask, uint64 values with 0 at nulls) — robust to int64,
@@ -648,17 +642,6 @@ def _s2_to_geo_fn(c: pd.Series) -> pd.DataFrame:
     return df
 
 
-def _s2_neighbors_fn(c: pd.Series) -> pd.Series:
-    out = []
-    for v in c:
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            out.append(None)
-        else:
-            out.append([int(np.uint64(n).astype(np.int64))
-                        for n in s2_get_neighbors_py(int(v) & 0xFFFFFFFFFFFFFFFF)])
-    return pd.Series(out, dtype=object)
-
-
 def _s2_intersect_fn(x: pd.Series, y: pd.Series) -> pd.Series:
     mx, xa = _u64_series(x)
     my, ya = _u64_series(y)
@@ -693,137 +676,3 @@ def _s2_cap_contains_fn(c: pd.Series, d: pd.Series, p: pd.Series) -> pd.Series:
     s = pd.Series(res.astype(object))
     s[~mask.to_numpy()] = None
     return s
-
-
-def _s2_cap_union_fn(a: pd.Series, x: pd.Series,
-                     b: pd.Series, y: pd.Series) -> pd.DataFrame:
-    cen, rad = [], []
-    for ca, da, cb, db in zip(a, x, b, y):
-        if ca is None or da is None or cb is None or db is None:
-            cen.append(None)
-            rad.append(None)
-        else:
-            ci, rd = s2_cap_union_py(
-                int(ca) & 0xFFFFFFFFFFFFFFFF, float(da),
-                int(cb) & 0xFFFFFFFFFFFFFFFF, float(db))
-            cen.append(int(np.uint64(ci).astype(np.int64)))
-            rad.append(rd)
-    return pd.DataFrame({"center": cen, "radius": rad})
-
-
-# pandas_udf objects are created LAZILY (struct return types need an
-# active SparkSession to parse their DDL) and cached for reuse — the
-# same objects back both the Column API and the SQL registrations
-# (session.register_sql_udfs).
-_UDF_SPECS = {
-    "ch_geotos2": ("long", lambda: _geo_to_s2_fn),
-    "ch_s2togeo": ("lon double, lat double", lambda: _s2_to_geo_fn),
-    "ch_s2getneighbors": ("array<long>", lambda: _s2_neighbors_fn),
-    "ch_s2cellsintersect": ("boolean", lambda: _s2_intersect_fn),
-    "ch_s2capcontains": ("boolean", lambda: _s2_cap_contains_fn),
-    "ch_s2capunion": ("center long, radius double", lambda: _s2_cap_union_fn),
-}
-_UDF_CACHE: dict[str, object] = {}
-
-
-def s2_udf(name):
-    """Cached pandas_udf for one of the _UDF_SPECS entries."""
-    if name not in _UDF_CACHE:
-        ddl, fn = _UDF_SPECS[name]
-        _UDF_CACHE[name] = pandas_udf(ddl)(fn())
-    return _UDF_CACHE[name]
-
-
-def geo_to_s2(lon, lat) -> Column:
-    return s2_udf("ch_geotos2")(_c(lon).cast("double"), _c(lat).cast("double"))
-
-
-def s2_to_geo(cid) -> Column:
-    return s2_udf("ch_s2togeo")(_c(cid).cast("long"))
-
-
-def s2_get_neighbors(cid) -> Column:
-    return s2_udf("ch_s2getneighbors")(_c(cid).cast("long"))
-
-
-def s2_cells_intersect(a, b) -> Column:
-    return s2_udf("ch_s2cellsintersect")(_c(a).cast("long"), _c(b).cast("long"))
-
-
-def s2_cap_contains(center, degrees, point) -> Column:
-    return s2_udf("ch_s2capcontains")(_c(center).cast("long"),
-                                       _c(degrees).cast("double"),
-                                       _c(point).cast("long"))
-
-
-def s2_cap_union(c1, d1, c2, d2) -> Column:
-    return s2_udf("ch_s2capunion")(_c(c1).cast("long"), _c(d1).cast("double"),
-                                    _c(c2).cast("long"), _c(d2).cast("double"))
-
-
-def _rect_rows(fn, cols) -> pd.DataFrame:
-    lo_out, hi_out = [], []
-    for vals in zip(*cols):
-        if any(v is None for v in vals):
-            lo_out.append(None)
-            hi_out.append(None)
-        else:
-            lo, hi = fn(*[int(v) & 0xFFFFFFFFFFFFFFFF for v in vals])
-            lo_out.append(int(np.uint64(lo).astype(np.int64)))
-            hi_out.append(int(np.uint64(hi).astype(np.int64)))
-    return pd.DataFrame({"lo": lo_out, "hi": hi_out})
-
-
-def _s2_rect_add_fn(a: pd.Series, b: pd.Series, p: pd.Series) -> pd.DataFrame:
-    return _rect_rows(s2_rect_add_py, (a, b, p))
-
-
-def _s2_rect_contains_fn(a: pd.Series, b: pd.Series, p: pd.Series) -> pd.Series:
-    out = []
-    for x, y, z in zip(a, b, p):
-        if x is None or y is None or z is None:
-            out.append(None)
-        else:
-            out.append(s2_rect_contains_py(
-                int(x) & 0xFFFFFFFFFFFFFFFF, int(y) & 0xFFFFFFFFFFFFFFFF,
-                int(z) & 0xFFFFFFFFFFFFFFFF))
-    return pd.Series(out, dtype=object)
-
-
-def _s2_rect_union_fn(a: pd.Series, b: pd.Series,
-                      x: pd.Series, y: pd.Series) -> pd.DataFrame:
-    return _rect_rows(s2_rect_union_py, (a, b, x, y))
-
-
-def _s2_rect_intersection_fn(a: pd.Series, b: pd.Series,
-                             x: pd.Series, y: pd.Series) -> pd.DataFrame:
-    return _rect_rows(s2_rect_intersection_py, (a, b, x, y))
-
-
-_UDF_SPECS["ch_s2rectadd"] = ("lo long, hi long", lambda: _s2_rect_add_fn)
-_UDF_SPECS["ch_s2rectcontains"] = ("boolean", lambda: _s2_rect_contains_fn)
-_UDF_SPECS["ch_s2rectunion"] = ("lo long, hi long", lambda: _s2_rect_union_fn)
-_UDF_SPECS["ch_s2rectintersection"] = (
-    "lo long, hi long", lambda: _s2_rect_intersection_fn)
-
-
-def s2_rect_add(lo, hi, point) -> Column:
-    return s2_udf("ch_s2rectadd")(
-        _c(lo).cast("long"), _c(hi).cast("long"), _c(point).cast("long"))
-
-
-def s2_rect_contains(lo, hi, point) -> Column:
-    return s2_udf("ch_s2rectcontains")(
-        _c(lo).cast("long"), _c(hi).cast("long"), _c(point).cast("long"))
-
-
-def s2_rect_union(lo1, hi1, lo2, hi2) -> Column:
-    return s2_udf("ch_s2rectunion")(
-        _c(lo1).cast("long"), _c(hi1).cast("long"),
-        _c(lo2).cast("long"), _c(hi2).cast("long"))
-
-
-def s2_rect_intersection(lo1, hi1, lo2, hi2) -> Column:
-    return s2_udf("ch_s2rectintersection")(
-        _c(lo1).cast("long"), _c(hi1).cast("long"),
-        _c(lo2).cast("long"), _c(hi2).cast("long"))

@@ -19,6 +19,8 @@ default — same operator shape, engine-specific values.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -462,6 +464,12 @@ def _jaro_series(a: pd.Series, b: pd.Series, winkler: bool) -> pd.Series:
             fn(a_list[i], b_list[i]) for i in np.nonzero(long_mask)[0]
         ]
     return pd.Series(out, dtype="float64")
+
+
+# the batch kernels of the jaroSimilarity / jaroWinklerSimilarity rows of
+# functions/udfs.py (NULL -> NULL there)
+_jaro_fn = partial(_jaro_series, winkler=False)
+_jaro_winkler_fn = partial(_jaro_series, winkler=True)
 
 
 @pandas_udf(DoubleType())

@@ -1493,22 +1493,20 @@ def func_h3_geo_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-environment libm divergence — so they now live in
     tests/test_h3geo.py tolerance anchors and in the driver-gated
     func_geo_env_probe, which names any diverging value per-column."""
-    from clickhouse_25_5_3_75_stable_spark.functions import h3geo as _g
-
     df = spark.createDataFrame(
         [(sid, la, lo, r, la + dla, lo + dlo)
          for sid, la, lo, r, dla, dlo, *_ in _H3GEO_FIXTURES],
         "sid int, lat double, lon double, res int, lat2 double, lon2 double",
     )
-    h = _g.geo_to_h3(F.col("lat"), F.col("lon"), F.col("res"))
-    h2 = _g.geo_to_h3(F.col("lat2"), F.col("lon2"), F.col("res"))
+    h = ch("geoToH3", F.col("lat"), F.col("lon"), F.col("res"))
+    h2 = ch("geoToH3", F.col("lat2"), F.col("lon2"), F.col("res"))
     return df.select(
         "sid",
         h.alias("h"),
-        F.concat_ws(",", _g.h3_k_ring(h, F.lit(1))).alias("ring_csv"),
-        _g.h3_distance(h, h2).alias("dist"),
-        F.size(_g.h3_get_faces(h)).alias("nfaces"),
-        F.size(_g.h3_to_geo_boundary(h)).alias("nbverts"),
+        F.concat_ws(",", ch("h3kRing", h, F.lit(1))).alias("ring_csv"),
+        ch("h3Distance", h, h2).alias("dist"),
+        F.size(ch("h3GetFaces", h)).alias("nfaces"),
+        F.size(ch("h3ToGeoBoundary", h)).alias("nbverts"),
     ).orderBy("sid")
 
 
@@ -1738,26 +1736,24 @@ def func_geo_env_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the pinning machine); if the driver environment's libm
     diverges anywhere, THIS query's red names the exact family, sid,
     and column, ending the blind-repin cycle of r05/r06."""
-    from clickhouse_25_5_3_75_stable_spark.functions import h3geo as _g
-
     # --- h3 family over _H3GEO_FIXTURES -------------------------------
     h3df = spark.createDataFrame(
         [(sid, la, lo, r, la + dla, lo + dlo)
          for sid, la, lo, r, dla, dlo, *_ in _H3GEO_FIXTURES],
         "sid int, lat double, lon double, res int, lat2 double, lon2 double",
     )
-    h = _g.geo_to_h3(F.col("lat"), F.col("lon"), F.col("res"))
-    h2 = _g.geo_to_h3(F.col("lat2"), F.col("lon2"), F.col("res"))
-    geo = _g.h3_to_geo(h)
+    h = ch("geoToH3", F.col("lat"), F.col("lon"), F.col("res"))
+    h2 = ch("geoToH3", F.col("lat2"), F.col("lon2"), F.col("res"))
+    geo = ch("h3ToGeo", h)
     h3cols = [
         ("h", h.cast("string")),
         ("clat", geo.getField("lat").cast("decimal(12,6)").cast("string")),
         ("clon", geo.getField("lon").cast("decimal(12,6)").cast("string")),
-        ("ring_csv", F.concat_ws(",", _g.h3_k_ring(h, F.lit(1)))),
-        ("dist", _g.h3_distance(h, h2).cast("string")),
-        ("nfaces", F.size(_g.h3_get_faces(h)).cast("string")),
-        ("nbverts", F.size(_g.h3_to_geo_boundary(h)).cast("string")),
-        ("area_m2", _g.h3_cell_area_m2(h).cast("decimal(20,2)").cast("string")),
+        ("ring_csv", F.concat_ws(",", ch("h3kRing", h, F.lit(1)))),
+        ("dist", ch("h3Distance", h, h2).cast("string")),
+        ("nfaces", F.size(ch("h3GetFaces", h)).cast("string")),
+        ("nbverts", F.size(ch("h3ToGeoBoundary", h)).cast("string")),
+        ("area_m2", ch("h3CellAreaM2", h).cast("decimal(20,2)").cast("string")),
     ]
     h3_long = h3df.select(
         F.lit("h3").alias("family"),
@@ -1889,7 +1885,6 @@ def func_h3_edge_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex). Integer/boolean outputs only, per the round-7 geo gate
     policy; the float boundary coordinates and exact edge lengths are
     pinned in tests/test_h3edge.py tolerance anchors."""
-    from clickhouse_25_5_3_75_stable_spark.functions import h3edge as _e
     from clickhouse_25_5_3_75_stable_spark.functions import h3geo as _g
 
     rows = []
@@ -1908,26 +1903,26 @@ def func_h3_edge_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows, "sid int, h long, la2 double, lo2 double, r int"
     )
     h = F.col("h")
-    h2 = _g.geo_to_h3(F.col("la2"), F.col("lo2"), F.col("r"))
-    edges = _e.h3_get_unidirectional_edges_from_hexagon(h)
+    h2 = ch("geoToH3", F.col("la2"), F.col("lo2"), F.col("r"))
+    edges = ch("h3GetUnidirectionalEdgesFromHexagon", h)
     # first nonzero slot (direction 1, or 2 for the pentagon row)
     e1 = F.filter(edges, lambda x: x != 0)[0]
-    dest = _e.h3_get_destination_index_from_unidirectional_edge(e1)
+    dest = ch("h3GetDestinationIndexFromUnidirectionalEdge", e1)
     return df.select(
         "sid",
         e1.alias("e1"),
-        _e.h3_unidirectional_edge_is_valid(e1).alias("valid"),
-        (_e.h3_get_origin_index_from_unidirectional_edge(e1) == h)
+        ch("h3UnidirectionalEdgeIsValid", e1).alias("valid"),
+        (ch("h3GetOriginIndexFromUnidirectionalEdge", e1) == h)
         .alias("orig_ok"),
         dest.alias("dest"),
-        (_e.h3_get_unidirectional_edge(h, dest) == e1).alias("rt"),
+        (ch("h3GetUnidirectionalEdge", h, dest) == e1).alias("rt"),
         F.concat_ws(",", F.transform(edges, lambda x: x.cast("string")))
         .alias("edges_csv"),
         F.concat_ws(
-            ",", F.transform(_e.h3_line(h, h2), lambda x: x.cast("string"))
+            ",", F.transform(ch("h3Line", h, h2), lambda x: x.cast("string"))
         ).alias("line_csv"),
-        F.size(_e.h3_line(h, h2)).alias("line_len"),
-        F.size(_e.h3_get_unidirectional_edge_boundary(e1)).alias("bverts"),
+        F.size(ch("h3Line", h, h2)).alias("line_len"),
+        F.size(ch("h3GetUnidirectionalEdgeBoundary", e1)).alias("bverts"),
     ).orderBy("sid")
 
 

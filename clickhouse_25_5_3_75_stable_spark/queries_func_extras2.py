@@ -248,15 +248,18 @@ def func_jaro_exact_chsql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """jaroSimilarity / jaroWinklerSimilarity through ClickHouse SQL
     TEXT (reference src/Functions/FunctionsStringDistance.cpp register
     sites): session.register_sql_udfs binds the reference names to the
-    exact vectorized pandas UDFs (operators/text.py), so the dialect
-    shim needs no rename — plain name resolution.  Checked against
-    DuckDB's independent jaro_similarity / jaro_winkler_similarity."""
+    exact vectorized pandas UDFs (their rows of functions/udfs.py, over
+    operators/text.py), and the dialect shim calls them with typed
+    arguments.  Checked against DuckDB's independent jaro_similarity /
+    jaro_winkler_similarity."""
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
+    from clickhouse_25_5_3_75_stable_spark.functions import udfs
 
     # idempotent: the driver harness builds a bare SparkSession that
     # never went through session.get_spark(), so bind the names here
-    spark.udf.register("jaroSimilarity", jaro_similarity)
-    spark.udf.register("jaroWinklerSimilarity", jaro_winkler_similarity)
+    for name, factory in udfs.SQL_UDFS:
+        if name.startswith("jaro"):
+            spark.udf.register(name, factory())
     out = ch_sql(
         spark,
         """

@@ -17,7 +17,6 @@ Catalyst/Tungsten in Spark; the session config below is the knob layer:
 from __future__ import annotations
 
 import os
-from functools import partial
 
 from pyspark.sql import SparkSession
 
@@ -98,81 +97,13 @@ _SQL_BODIES = {
 
 def _sql_udfs() -> list:
     """(SQL name, zero-argument factory) of every pandas UDF exposed to
-    SQL text under the reference's own name, or under the ch_* / *_bin
-    name the chsql rewriter targets. These are the same cached UDFs that
-    back the Column API."""
-    from clickhouse_25_5_3_75_stable_spark.functions import (
-        aescrypto,
-        encodings,
-        geohash,
-        h3geo,
-        hashing,
-        s2,
-    )
-    from clickhouse_25_5_3_75_stable_spark.operators import text
+    SQL text: the hash family's (functions/hashing.py) and one per row of
+    the UDF table (functions/udfs.py), under the reference's own name or
+    the ch_* / *_bin name the chsql rewriter targets. These are the same
+    cached UDFs that back the Column API."""
+    from clickhouse_25_5_3_75_stable_spark.functions import hashing, udfs
 
-    def built(udf):
-        return lambda: udf
-
-    return [
-        *hashing.SQL_UDFS,
-        ("geohashEncode", geohash._encode_udf),
-        ("geohashDecode", geohash._decode_udf),
-        ("geohashesInBox", geohash._boxes_udf),
-        # EXACT Jaro / Jaro-Winkler (FunctionsStringDistance.cpp)
-        ("jaroSimilarity", built(text.jaro_similarity)),
-        ("jaroWinklerSimilarity", built(text.jaro_winkler_similarity)),
-        *[(name, partial(s2.s2_udf, key)) for name, key in (
-            ("geoToS2", "ch_geotos2"),
-            ("s2ToGeo", "ch_s2togeo"),
-            ("s2GetNeighbors", "ch_s2getneighbors"),
-            ("s2CellsIntersect", "ch_s2cellsintersect"),
-            ("s2CapContains", "ch_s2capcontains"),
-            ("s2CapUnion", "ch_s2capunion"),
-            ("s2RectAdd", "ch_s2rectadd"),
-            ("s2RectContains", "ch_s2rectcontains"),
-            ("s2RectUnion", "ch_s2rectunion"),
-            ("s2RectIntersection", "ch_s2rectintersection"),
-        )],
-        # geoToH3 keeps the 25.5 default LAT_LON argument order;
-        # h3ToGeo returns (lat, lon)
-        *[(name, partial(h3geo.h3geo_udf, key)) for name, key in (
-            ("geoToH3", "ch_geotoh3"),
-            ("h3ToGeo", "ch_h3togeo"),
-            ("h3ToGeoBoundary", "ch_h3boundary"),
-            ("h3kRing", "ch_h3kring"),
-            ("h3HexRing", "ch_h3hexring"),
-            ("h3Distance", "ch_h3distance"),
-            ("h3IndexesAreNeighbors", "ch_h3areneighbors"),
-            ("h3GetFaces", "ch_h3getfaces"),
-            ("h3CellAreaM2", "ch_h3aream2"),
-            ("h3CellAreaRads2", "ch_h3arearads2"),
-            ("h3PointDistM", "ch_h3pointdistm"),
-            ("h3PointDistKm", "ch_h3pointdistkm"),
-            ("h3PointDistRads", "ch_h3pointdistrads"),
-            ("h3HexAreaM2", "ch_h3hexaream2"),
-            ("h3HexAreaKm2", "ch_h3hexareakm2"),
-        )],
-        # encoding/checksum/curve long tail; the variadic curve + bitSlice
-        # surfaces are ch_* shims the chsql rewriter targets
-        # (mortonEncode(a,b) -> ch_morton_encode(NULL, array(a,b)) etc)
-        *[(name, partial(encodings.enc_udf, name)) for name in (
-            "base58Encode", "base58Decode", "tryBase58Decode",
-            "base32Encode", "base32Decode", "tryBase32Decode",
-            "CRC32IEEE", "CRC64", "SHA512_256", "RIPEMD160",
-            "keccak256", "ch_morton_encode", "ch_morton_decode",
-            "ch_hilbert_encode", "ch_hilbert_decode", "ch_bitslice",
-            "normalizeUTF8NFC", "normalizeUTF8NFD",
-            "normalizeUTF8NFKC", "normalizeUTF8NFKD",
-            "punycodeEncode", "punycodeDecode", "tryPunycodeDecode",
-            "idnaEncode", "tryIdnaEncode", "idnaDecode",
-            "convertCharset", "MD4", "BLAKE3")],
-        # encrypt/decrypt family; the chsql rewriter pads the optional
-        # iv/aad args with NULL to match the uniform 5-arg UDF shape
-        *[(name, partial(aescrypto.aes_udf, name)) for name in (
-            "ch_encrypt", "ch_decrypt", "ch_try_decrypt",
-            "ch_aes_encrypt_mysql", "ch_aes_decrypt_mysql")],
-    ]
+    return [*hashing.SQL_UDFS, *udfs.SQL_UDFS]
 
 
 def register_sql_udfs(spark: SparkSession) -> None:

@@ -198,25 +198,14 @@ def system_functions(spark: SparkSession) -> DataFrame:
     expression), 'composed' (built from several), or 'excluded' (with
     the documented reason). Driver-built from the registries: O(names),
     no data scan."""
-    from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS as D1
+    from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS
     from clickhouse_25_5_3_75_stable_spark.functions.dialect_extras import (
         CH_FUNCTIONS_EXCLUDED,
     )
-    from clickhouse_25_5_3_75_stable_spark.functions.dialect_extras import (
-        CH_FUNCTIONS as D2,
-    )
 
-    rows = []
-    seen = set()
-    for reg, origin in ((D1, "direct"), (D2, "direct")):
-        for name in reg:
-            if name not in seen:
-                rows.append((name, origin, None))
-                seen.add(name)
-    for name, reason in CH_FUNCTIONS_EXCLUDED.items():
-        if name not in seen:
-            rows.append((name, "excluded", reason))
-            seen.add(name)
+    rows = [(name, "direct", None) for name in CH_FUNCTIONS]
+    rows += [(name, "excluded", reason) for name, reason in CH_FUNCTIONS_EXCLUDED.items()
+             if name not in CH_FUNCTIONS]
     return spark.createDataFrame(
         rows, "name string, origin string, exclusion_reason string"
     )

@@ -497,6 +497,12 @@ def test_cli_alter_mutations(spark, tmp_path):
     run("INSERT INTO mt VALUES (6, 'f', 6, '', NULL)")
     assert run("SELECT k, x FROM mt ORDER BY k FORMAT CSV") == [
         "1,5", "3,5", "4,5", "5,7", "6,"]
+    # a non-Nullable column added without a DEFAULT reads its type's
+    # zero, not NULL: the re-added v above, and s / z added now
+    run("ALTER TABLE mt ADD COLUMN s String")
+    run("ALTER TABLE mt ADD COLUMN z Int32")
+    assert run("SELECT k, v IS NULL, s IS NULL, z FROM mt WHERE k = 1 FORMAT CSV") == [
+        "1,False,False,0"]
 
 
 def test_projection_ddl_and_auto_routing(spark, tmp_path):

@@ -184,18 +184,15 @@ def test_uint64_mode_holds_beyond_int64(spark):
 
 def test_geohash_encode_decode(spark):
     """Known-answer vectors (public geohash examples) + roundtrip."""
-    from clickhouse_25_5_3_75_stable_spark.functions.geohash import (
-        geohash_decode,
-        geohash_encode,
-    )
+    from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
 
     df = spark.createDataFrame(
         [(10.40744, 57.64911), (-5.6, 42.6), (0.0, 0.0)],
         "lon double, lat double",
     )
     out = df.select(
-        geohash_encode("lon", "lat", 11).alias("g11"),
-        geohash_encode("lon", "lat", 5).alias("g5"),
+        ch("geohashEncode", F.col("lon"), F.col("lat"), 11).alias("g11"),
+        ch("geohashEncode", F.col("lon"), F.col("lat"), 5).alias("g5"),
     ).collect()
     assert out[0].g11 == "u4pruydqqvj"      # Wikipedia example
     assert out[1].g5 == "ezs42"             # classic example
@@ -203,7 +200,7 @@ def test_geohash_encode_decode(spark):
 
     dec = (
         spark.createDataFrame([("u4pruydqqvj",), ("ezs42",)], "g string")
-        .select(geohash_decode("g").alias("d"))
+        .select(ch("geohashDecode", F.col("g")).alias("d"))
         .collect()
     )
     assert abs(dec[0].d.longitude - 10.40744) < 1e-4
@@ -220,7 +217,7 @@ def test_geohash_encode_decode(spark):
     rt = grid.select(
         "lon",
         "lat",
-        geohash_decode(geohash_encode("lon", "lat", 12)).alias("d"),
+        ch("geohashDecode", ch("geohashEncode", F.col("lon"), F.col("lat"), 12)).alias("d"),
     ).collect()
     for r in rt:
         assert abs(r.d.longitude - r.lon) < 1e-6
@@ -235,24 +232,22 @@ def test_geohash_encode_decode(spark):
 
 
 def test_geohashes_in_box(spark):
-    from clickhouse_25_5_3_75_stable_spark.functions.geohash import (
-        geohash_encode,
-        geohashes_in_box,
-    )
+    from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
 
     df = spark.createDataFrame(
         [(10.3, 57.5, 10.5, 57.7)], "x1 double, y1 double, x2 double, y2 double"
     )
     row = df.select(
-        geohashes_in_box("x1", "y1", "x2", "y2", 4).alias("cells"),
-        geohash_encode(F.lit(10.40744), F.lit(57.64911), 4).alias("pt"),
+        ch("geohashesInBox", F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2"), 4)
+        .alias("cells"),
+        ch("geohashEncode", F.lit(10.40744), F.lit(57.64911), 4).alias("pt"),
     ).collect()[0]
     assert row.pt in row.cells            # contained point's cell is covered
     assert len(set(row.cells)) == len(row.cells)  # no duplicates
     assert all(len(c) == 4 for c in row.cells)
     # degenerate box: one cell
     one = df.select(
-        geohashes_in_box(F.lit(10.4), F.lit(57.6), F.lit(10.4), F.lit(57.6), 5).alias("c")
+        ch("geohashesInBox", F.lit(10.4), F.lit(57.6), F.lit(10.4), F.lit(57.6), 5).alias("c")
     ).collect()[0].c
     assert len(one) == 1
 

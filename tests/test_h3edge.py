@@ -167,25 +167,27 @@ def test_line_properties():
 
 
 def test_column_surface(spark):
+    from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
+
     df = spark.createDataFrame(
         [(599686042433355775, 599686043507097599)], "o long, d long"
     )
     row = df.select(
-        E.h3_get_unidirectional_edge(F.col("o"), F.col("d")).alias("e"),
-        E.h3_line(F.col("o"), F.col("d")).alias("line"),
+        ch("h3GetUnidirectionalEdge", F.col("o"), F.col("d")).alias("e"),
+        ch("h3Line", F.col("o"), F.col("d")).alias("line"),
     ).collect()[0]
     assert row.e == 1248204388774707199
     assert row.line == [599686042433355775, 599686043507097599]
     row2 = df.select(
-        E.h3_unidirectional_edge_is_valid(F.lit(row.e)).alias("v"),
-        E.h3_get_origin_index_from_unidirectional_edge(F.lit(row.e))
+        ch("h3UnidirectionalEdgeIsValid", F.lit(row.e)).alias("v"),
+        ch("h3GetOriginIndexFromUnidirectionalEdge", F.lit(row.e))
         .alias("o2"),
-        E.h3_get_destination_index_from_unidirectional_edge(F.lit(row.e))
+        ch("h3GetDestinationIndexFromUnidirectionalEdge", F.lit(row.e))
         .alias("d2"),
-        E.h3_get_indexes_from_unidirectional_edge(F.lit(row.e)).alias("od"),
-        E.h3_get_unidirectional_edges_from_hexagon(F.col("o")).alias("es"),
-        E.h3_get_unidirectional_edge_boundary(F.lit(row.e)).alias("b"),
-        E.h3_exact_edge_length_km(F.lit(row.e)).alias("km"),
+        ch("h3GetIndexesFromUnidirectionalEdge", F.lit(row.e)).alias("od"),
+        ch("h3GetUnidirectionalEdgesFromHexagon", F.col("o")).alias("es"),
+        ch("h3GetUnidirectionalEdgeBoundary", F.lit(row.e)).alias("b"),
+        ch("h3ExactEdgeLengthKm", F.lit(row.e)).alias("km"),
     ).collect()[0]
     assert row2.v is True
     assert row2.o2 == 599686042433355775 and row2.d2 == 599686043507097599

@@ -196,13 +196,15 @@ def test_resolution_bounds():
 def test_spark_column_api(spark):
     from pyspark.sql import functions as F
 
+    from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
+
     df = spark.createDataFrame(
         [(37.7752702151959, -122.418307270836, 9),
          (55.71290588, 37.79506683, 15)],
         "lat double, lon double, res int",
     )
     out = df.select(
-        G.geo_to_h3(F.col("lat"), F.col("lon"), F.col("res")).alias("h"),
+        ch("geoToH3", F.col("lat"), F.col("lon"), F.col("res")).alias("h"),
     ).collect()
     assert out[0].h == 0x8928308280FFFFF
     assert out[1].h == 644325524701193974
@@ -210,13 +212,13 @@ def test_spark_column_api(spark):
     row = (
         df.limit(1)
         .select(
-            G.h3_to_geo(F.lit(0x8928308280FFFFF)).alias("g"),
-            G.h3_k_ring(F.lit(0x8928308280FFFFF), F.lit(1)).alias("ring"),
-            G.h3_distance(
+            ch("h3ToGeo", F.lit(0x8928308280FFFFF)).alias("g"),
+            ch("h3kRing", F.lit(0x8928308280FFFFF), F.lit(1)).alias("ring"),
+            ch("h3Distance", 
                 F.lit(0x8928308280FFFFF), F.lit(0x8928308280BFFFF)
             ).alias("d"),
-            G.h3_cell_area_m2(F.lit(0x8928308280FFFFF)).alias("area"),
-            G.h3_indexes_are_neighbors(
+            ch("h3CellAreaM2", F.lit(0x8928308280FFFFF)).alias("area"),
+            ch("h3IndexesAreNeighbors", 
                 F.lit(0x8928308280FFFFF), F.lit(0x8928308280BFFFF)
             ).alias("nb"),
         )

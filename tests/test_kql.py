@@ -406,7 +406,27 @@ def test_review_fixes_prql():
         prql_to_sql("from t\ntake abc")
 
 
-def test_getschema(spark):
+def _kusto_cli(spark, data_dir, text: str) -> list[list[str]]:
+    """`text` through the CLI door after SET dialect = 'kusto': its
+    TabSeparated rows; the QueryFinish row must be logged for it."""
+    import io
+
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+    from clickhouse_25_5_3_75_stable_spark.sources import system_tables
+
+    out = io.StringIO()
+    run_local("SET dialect = 'kusto'", str(data_dir), spark=spark, out=io.StringIO())
+    try:
+        assert run_local(text, str(data_dir), spark=spark, out=out) == 0
+    finally:
+        run_local("SET dialect = 'clickhouse'", str(data_dir), spark=spark,
+                  out=io.StringIO())
+    finish = [e for e in system_tables._QUERY_LOG if e[1] == "QueryFinish"]
+    assert finish[-2][2] == text  # the SET back to clickhouse is the last
+    return [line.split("\t") for line in out.getvalue().splitlines()]
+
+
+def test_getschema(spark, tmp_path):
     from clickhouse_25_5_3_75_stable_spark.kql import kql_sql
 
     rows = kql_sql(spark, """
@@ -419,6 +439,10 @@ def test_getschema(spark):
     assert got["t"][1] == "datetime"
     with pytest.raises(ChSqlError):
         kql_sql(spark, "getschema")
+    # the CLI door answers through the same kql_sql
+    cli = _kusto_cli(spark, tmp_path, "print s = 'x', n = 1 | getschema")
+    assert [r[:2] for r in cli] == [["s", "0"], ["n", "1"]]
+    assert cli[0][3] == "string"
 
 
 # ---------------------------------------------------------------------------
@@ -522,7 +546,7 @@ def test_partition_operator(spark):
         kql_to_chsql("T | partition by k ( mv-expand a )")
 
 
-def test_evaluate_pivot(spark):
+def test_evaluate_pivot(spark, tmp_path):
     """evaluate pivot(col, agg(val)): ADX auto-discovers the pivot
     columns from the data; lowered to a Spark PIVOT after a one-pass
     distinct-key discovery (capped at 200)."""
@@ -536,6 +560,8 @@ def test_evaluate_pivot(spark):
         .orderBy("k").collect()
     assert rows[0].k == "a" and rows[0].x == 1 and rows[0].y == 2
     assert rows[1].k == "b" and rows[1].x == 7 and rows[1].y is None
+    assert sorted(_kusto_cli(spark, tmp_path, "kql_pv_t | evaluate pivot(p, sum(v))")) \
+        == [["a", "1", "2"], ["b", "7", ""]]
     with pytest.raises(ChSqlError, match="last stage"):
         kql_sql(spark, "kql_pv_t | evaluate pivot(p, sum(v)) | take 1")
     with pytest.raises(ChSqlError, match="aggregates"):

@@ -180,21 +180,33 @@ def test_top_level_window_verbs(spark):
         prql_to_sql("from prql_w_t\nwindow rows:-1..0 (derive {m = sum v})")
 
 
-def test_prql_loop_semantics(spark):
+def test_prql_loop_semantics(spark, tmp_path):
+    import io
+
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
     from clickhouse_25_5_3_75_stable_spark.prql import prql_sql
 
     spark.createDataFrame([(1,), (10,)], "n int").createOrReplaceTempView(
         "prql_loop_t")
-    df = prql_sql(spark, """
+    text = """
 from prql_loop_t
 loop (
   select {n = n * 2}
   filter n < 30
 )
-""")
-    got = sorted(r.n for r in df.collect())
+"""
+    got = sorted(r.n for r in prql_sql(spark, text).collect())
     # 1 -> 2,4,8,16 (32 filtered); 10 -> 20 (40 filtered); plus base
     assert got == [1, 2, 4, 8, 10, 16, 20]
+    # the CLI door (SET dialect = 'prql') runs it through the same prql_sql
+    out = io.StringIO()
+    run_local("SET dialect = 'prql'", str(tmp_path), spark=spark, out=io.StringIO())
+    try:
+        assert run_local(text, str(tmp_path), spark=spark, out=out) == 0
+    finally:
+        run_local("SET dialect = 'clickhouse'", str(tmp_path), spark=spark,
+                  out=io.StringIO())
+    assert sorted(int(v) for v in out.getvalue().split()) == got
 
 
 def test_prql_loop_refusals(spark):
