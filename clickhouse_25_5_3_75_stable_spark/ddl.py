@@ -30,7 +30,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError, _tokenize
-from clickhouse_25_5_3_75_stable_spark.dictionary_sql import type_default_sql
 from clickhouse_25_5_3_75_stable_spark.functions.typemap import ch_type_to_spark
 from clickhouse_25_5_3_75_stable_spark.sources import catalog
 
@@ -639,10 +638,34 @@ def optimize_table(
     _rewrite(spark, base_dir, name, td, out)
 
 
-# dictionary_sql.type_default_sql's zero defaults as the literals a read
-# coalesces with
-_ZEROS = {"0": 0, "''": "", "toDate(0)": "1970-01-01",
-          "toDateTime(0)": "1970-01-01 00:00:00"}
+_NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
+_INTEGER_T = re.compile(r"^U?Int(8|16|32|64|128|256)$|^Decimal", re.IGNORECASE)
+_STRING_ZEROS = {"uuid": "00000000-0000-0000-0000-000000000000",
+                 "ipv4": "0.0.0.0", "ipv6": "::"}
+
+
+def _zero_default(ch_type: str):
+    """The reference's default for a non-Nullable column without a
+    DEFAULT clause, as the literal a read coalesces with: 0, false, the
+    epoch, '' for a string, the zero UUID / address; None where no zero
+    is known here (a composite type, an Enum)."""
+    want = ch_type_to_spark(ch_type)
+    if want in _NUMERIC or want.startswith("decimal"):
+        return 0
+    if want == "boolean":
+        return False
+    if want == "date":
+        return "1970-01-01"
+    if want == "timestamp":
+        return "1970-01-01 00:00:00"
+    if want == "string":
+        base = re.sub(r"^LowCardinality\((.*)\)$", r"\1", ch_type.strip())
+        if base == "String" or base.startswith("FixedString"):
+            return ""
+        if _INTEGER_T.match(base):
+            return "0"  # a 128/256-bit integer or wide decimal: string transport
+        return _STRING_ZEROS.get(base.lower())
+    return None
 
 
 def alter_add_column(
@@ -669,13 +692,12 @@ def alter_add_column(
         _rewrite(spark, base_dir, name, td, df.withColumn(
             col, F.lit(default).cast(ch_type_to_spark(ch_type))))
         return
-    if default is None and not ch_type.startswith("Nullable") \
-            and not ch_type_to_spark(ch_type).startswith(("array", "map", "struct")):
+    if default is None and not ch_type.startswith("Nullable"):
         # the parts that predate a non-Nullable column read its type's
         # zero, the reference's default without a DEFAULT clause. It is
         # recorded here so reads coalesce only added columns: a coalesce
         # on every column would stop parquet filter and partition pushdown
-        default = _ZEROS[type_default_sql(ch_type)]
+        default = _zero_default(ch_type)
     td.columns.append((col, ch_type))
     if default is not None:
         td.defaults[col] = default

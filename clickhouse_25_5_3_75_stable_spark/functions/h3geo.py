@@ -54,8 +54,6 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
-
 from clickhouse_25_5_3_75_stable_spark.functions.h3 import (
     PENTAGON_BASE_CELLS,
 )
@@ -1129,144 +1127,27 @@ def point_dist_rads_py(lat1, lng1, lat2, lng2):
         math.radians(lat1), math.radians(lng1),
         math.radians(lat2), math.radians(lng2),
     )
-
-
 # ---------------------------------------------------------------------------
-# Arrow-batched kernels (their pandas UDFs are rows of functions/udfs.py)
+# Result reshaping for the rows of functions/udfs.py (the ClickHouse
+# rings are sorted; the distances and areas come in several units)
 # ---------------------------------------------------------------------------
 
 
-def _u64(v):
-    return int(v) & 0xFFFFFFFFFFFFFFFF
+def k_ring_sorted_py(h, k):
+    return sorted(k_ring_py(h, k))
 
 
-def _i64(v):
-    v = int(v) & 0xFFFFFFFFFFFFFFFF
-    return v - (1 << 64) if v >= (1 << 63) else v
+def hex_ring_sorted_py(h, k):
+    return sorted(hex_ring_py(h, k))
 
 
-def _geo_to_h3_fn(lat: pd.Series, lng: pd.Series, res: pd.Series) -> pd.Series:
-    out = []
-    for la, lo, r in zip(lat, lng, res):
-        if la is None or lo is None or r is None:
-            out.append(None)
-        else:
-            out.append(_i64(geo_to_h3_py(float(la), float(lo), int(r))))
-    return pd.Series(out, dtype="object")
+def point_dist_km_py(lat1, lng1, lat2, lng2):
+    return point_dist_rads_py(lat1, lng1, lat2, lng2) * EARTH_RADIUS_KM
 
 
-def _h3_to_geo_fn(h: pd.Series) -> pd.DataFrame:
-    lats, lngs = [], []
-    for v in h:
-        if v is None:
-            lats.append(None)
-            lngs.append(None)
-        else:
-            la, lo = h3_to_geo_py(_u64(v))
-            lats.append(la)
-            lngs.append(lo)
-    return pd.DataFrame({"lat": lats, "lon": lngs})
+def point_dist_m_py(lat1, lng1, lat2, lng2):
+    return point_dist_rads_py(lat1, lng1, lat2, lng2) * (EARTH_RADIUS_KM * 1000.0)
 
 
-def _h3_boundary_fn(h: pd.Series) -> pd.Series:
-    out = []
-    for v in h:
-        if v is None:
-            out.append(None)
-        else:
-            out.append([{"lat": la, "lon": lo} for la, lo in cell_boundary_py(_u64(v))])
-    return pd.Series(out, dtype="object")
-
-
-def _k_ring_fn(h: pd.Series, k: pd.Series) -> pd.Series:
-    out = []
-    for v, kk in zip(h, k):
-        if v is None or kk is None:
-            out.append(None)
-        else:
-            out.append(sorted(_i64(x) for x in k_ring_py(_u64(v), int(kk))))
-    return pd.Series(out, dtype="object")
-
-
-def _hex_ring_fn(h: pd.Series, k: pd.Series) -> pd.Series:
-    out = []
-    for v, kk in zip(h, k):
-        if v is None or kk is None:
-            out.append(None)
-        else:
-            out.append(sorted(_i64(x) for x in hex_ring_py(_u64(v), int(kk))))
-    return pd.Series(out, dtype="object")
-
-
-def _distance_fn(a: pd.Series, b: pd.Series) -> pd.Series:
-    out = []
-    for x, y in zip(a, b):
-        out.append(
-            None if x is None or y is None else grid_distance_py(_u64(x), _u64(y))
-        )
-    return pd.Series(out, dtype="object")
-
-
-def _neighbors_fn(a: pd.Series, b: pd.Series) -> pd.Series:
-    out = []
-    for x, y in zip(a, b):
-        out.append(
-            None
-            if x is None or y is None
-            else bool(indexes_are_neighbors_py(_u64(x), _u64(y)))
-        )
-    return pd.Series(out, dtype="object")
-
-
-def _get_faces_fn(h: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if v is None else get_faces_py(_u64(v)) for v in h], dtype="object"
-    )
-
-
-def _area_m2_fn(h: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if v is None else cell_area_m2_py(_u64(v)) for v in h], dtype="object"
-    )
-
-
-def _area_rads2_fn(h: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if v is None else cell_area_rads2_py(_u64(v)) for v in h], dtype="object"
-    )
-
-
-def _point_dist_factory(scale):
-    def fn(lat1, lng1, lat2, lng2):
-        out = []
-        for a, b, c, d in zip(lat1, lng1, lat2, lng2):
-            if a is None or b is None or c is None or d is None:
-                out.append(None)
-            else:
-                out.append(
-                    point_dist_rads_py(float(a), float(b), float(c), float(d)) * scale
-                )
-        return pd.Series(out, dtype="object")
-
-    return fn
-
-
-def _hex_area_factory(km2):
-    def fn(res: pd.Series) -> pd.Series:
-        out = []
-        for r in res:
-            if r is None:
-                out.append(None)
-            else:
-                a = hexagon_area_avg_km2_py(int(r))
-                out.append(a if km2 else a * 1e6)
-        return pd.Series(out, dtype="object")
-
-    return fn
-
-
-_point_dist_m_fn = _point_dist_factory(EARTH_RADIUS_KM * 1000.0)
-_point_dist_km_fn = _point_dist_factory(EARTH_RADIUS_KM)
-_point_dist_rads_fn = _point_dist_factory(1.0)
-_hex_area_m2_fn = _hex_area_factory(False)
-_hex_area_km2_fn = _hex_area_factory(True)
+def hexagon_area_avg_m2_py(res):
+    return hexagon_area_avg_km2_py(res) * 1e6

@@ -150,21 +150,21 @@ UDFS: list[Udf] = [
     # h3 geo projection (geoToH3.cpp keeps the 25.5 LAT_LON argument
     # order; h3ToGeo returns (lat, lon))
     *[Udf(ch, ch, ret, args, len(args), "functions.h3geo", kernel) for ch, ret, args, kernel in (
-        ("geoToH3", L, (D, D, I), "_geo_to_h3_fn"),
-        ("h3ToGeo", "struct<lat: double, lon: double>", (U64,), "_h3_to_geo_fn"),
-        ("h3ToGeoBoundary", _LATLON, (U64,), "_h3_boundary_fn"),
-        ("h3kRing", "array<bigint>", (U64, I), "_k_ring_fn"),
-        ("h3HexRing", "array<bigint>", (U64, I), "_hex_ring_fn"),
-        ("h3Distance", L, (U64, U64), "_distance_fn"),
-        ("h3IndexesAreNeighbors", "boolean", (U64, U64), "_neighbors_fn"),
-        ("h3GetFaces", "array<int>", (U64,), "_get_faces_fn"),
-        ("h3CellAreaM2", D, (U64,), "_area_m2_fn"),
-        ("h3CellAreaRads2", D, (U64,), "_area_rads2_fn"),
-        ("h3PointDistM", D, (D, D, D, D), "_point_dist_m_fn"),
-        ("h3PointDistKm", D, (D, D, D, D), "_point_dist_km_fn"),
-        ("h3PointDistRads", D, (D, D, D, D), "_point_dist_rads_fn"),
-        ("h3HexAreaM2", D, (I,), "_hex_area_m2_fn"),
-        ("h3HexAreaKm2", D, (I,), "_hex_area_km2_fn"),
+        ("geoToH3", L, (D, D, I), "geo_to_h3_py"),
+        ("h3ToGeo", "struct<lat: double, lon: double>", (U64,), "h3_to_geo_py"),
+        ("h3ToGeoBoundary", _LATLON, (U64,), "cell_boundary_py"),
+        ("h3kRing", "array<bigint>", (U64, I), "k_ring_sorted_py"),
+        ("h3HexRing", "array<bigint>", (U64, I), "hex_ring_sorted_py"),
+        ("h3Distance", L, (U64, U64), "grid_distance_py"),
+        ("h3IndexesAreNeighbors", "boolean", (U64, U64), "indexes_are_neighbors_py"),
+        ("h3GetFaces", "array<int>", (U64,), "get_faces_py"),
+        ("h3CellAreaM2", D, (U64,), "cell_area_m2_py"),
+        ("h3CellAreaRads2", D, (U64,), "cell_area_rads2_py"),
+        ("h3PointDistM", D, (D, D, D, D), "point_dist_m_py"),
+        ("h3PointDistKm", D, (D, D, D, D), "point_dist_km_py"),
+        ("h3PointDistRads", D, (D, D, D, D), "point_dist_rads_py"),
+        ("h3HexAreaM2", D, (I,), "hexagon_area_avg_m2_py"),
+        ("h3HexAreaKm2", D, (I,), "hexagon_area_avg_km2_py"),
     )],
     # h3 unidirectional edges and h3Line (h3GetUnidirectionalEdge*.cpp,
     # h3Line.cpp, h3ExactEdgeLength*.cpp)

@@ -24,8 +24,6 @@ from functools import partial
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 # --------------------------------------------------------------------------
 # Hash primitives
@@ -470,16 +468,6 @@ def _jaro_series(a: pd.Series, b: pd.Series, winkler: bool) -> pd.Series:
 # functions/udfs.py (NULL -> NULL there)
 _jaro_fn = partial(_jaro_series, winkler=False)
 _jaro_winkler_fn = partial(_jaro_series, winkler=True)
-
-
-@pandas_udf(DoubleType())
-def jaro_similarity(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _jaro_series(a, b, winkler=False)
-
-
-@pandas_udf(DoubleType())
-def jaro_winkler_similarity(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _jaro_series(a, b, winkler=True)
 
 
 # --------------------------------------------------------------------------

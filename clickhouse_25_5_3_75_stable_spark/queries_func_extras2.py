@@ -8,7 +8,7 @@ mutation extras (src/Functions/URL/cut*.cpp, netloc.cpp).
 
 Everything except Jaro runs JVM-side through the dialect registry;
 Jaro/Jaro-Winkler are the documented Arrow-batched pandas-UDF slow
-path (operators/text.py) checked against DuckDB's native
+path (the functions/udfs.py rows over operators/text.py) checked against DuckDB's native
 jaro_similarity / jaro_winkler_similarity. Imported by queries.py.
 """
 
@@ -18,10 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
-from clickhouse_25_5_3_75_stable_spark.operators.text import (
-    jaro_similarity,
-    jaro_winkler_similarity,
-)
 from clickhouse_25_5_3_75_stable_spark.queries import arr_csv, arr_csv_dec, register, t
 
 _V6 = "CAST(CAST(CAST({x} AS VARCHAR) AS DECIMAL(25,6)) AS DOUBLE)"
@@ -77,8 +73,8 @@ def func_stringdist_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select(
         "doc_id",
         F.levenshtein(s1, s2).alias("lev"),
-        _v6(jaro_similarity(s1, s2)).alias("jaro"),
-        _v6(jaro_winkler_similarity(s1, s2)).alias("jaro_winkler"),
+        _v6(ch("jaroSimilarity", s1, s2)).alias("jaro"),
+        _v6(ch("jaroWinklerSimilarity", s1, s2)).alias("jaro_winkler"),
         _v6(ch("stringJaccardIndex", s1, s2)).alias("char_jaccard"),
         _v6(ch("ngramDistance", s1, s2)).alias("ngram_dist"),
     ).orderBy("doc_id")

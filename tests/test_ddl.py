@@ -498,11 +498,13 @@ def test_cli_alter_mutations(spark, tmp_path):
     assert run("SELECT k, x FROM mt ORDER BY k FORMAT CSV") == [
         "1,5", "3,5", "4,5", "5,7", "6,"]
     # a non-Nullable column added without a DEFAULT reads its type's
-    # zero, not NULL: the re-added v above, and s / z added now
-    run("ALTER TABLE mt ADD COLUMN s String")
-    run("ALTER TABLE mt ADD COLUMN z Int32")
-    assert run("SELECT k, v IS NULL, s IS NULL, z FROM mt WHERE k = 1 FORMAT CSV") == [
-        "1,False,False,0"]
+    # zero, not NULL: the re-added v above, and the columns added now
+    for c, ty in (("s", "String"), ("z", "Int32"), ("w", "Int128"),
+                  ("u", "UInt128"), ("id", "UUID"), ("ip", "IPv4")):
+        run(f"ALTER TABLE mt ADD COLUMN {c} {ty}")
+    assert run("SELECT k, toUInt8(v IS NULL), toUInt8(s IS NULL), z, w, u, id, ip "
+               "FROM mt WHERE k = 1 FORMAT TSV") == [
+        "1\t0\t0\t0\t0\t0\t00000000-0000-0000-0000-000000000000\t0.0.0.0"]
 
 
 def test_projection_ddl_and_auto_routing(spark, tmp_path):
