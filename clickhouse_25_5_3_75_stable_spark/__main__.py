@@ -23,13 +23,19 @@ import sys
 
 
 def _detect_format(sql: str) -> tuple[str, str]:
-    """Split off a trailing FORMAT <name>, the output format. An
-    INSERT's FORMAT names its input encoding, so it stays with the
-    statement."""
-    toks = sql.strip().rstrip(";").split()
-    if len(toks) >= 2 and toks[-2].upper() == "FORMAT" and toks[0].upper() != "INSERT":
-        return " ".join(toks[:-2]), toks[-1]
-    return sql, "TabSeparated"
+    """Split off a trailing FORMAT <name>, the output format, leaving the
+    rest of the text as written (string literals and line breaks
+    intact). An INSERT's FORMAT names its input encoding, so it stays
+    with the statement."""
+    m = re.search(r"\s+FORMAT\s+(\w+)\s*;?\s*$", sql, re.IGNORECASE)
+    if m is None or sql.split(None, 1)[0].upper() == "INSERT":
+        return sql, "TabSeparated"
+    return sql[:m.start()], m.group(1)
+
+
+def _text(v):
+    """A cell's text value: booleans as the reference writes them."""
+    return "true" if v is True else "false" if v is False else v
 
 
 def _emit(rows, cols, fmt: str, out) -> None:
@@ -41,19 +47,20 @@ def _emit(rows, cols, fmt: str, out) -> None:
         if f == "csvwithnames":
             w.writerow(cols)
         for r in rows:
-            w.writerow(list(r))
+            w.writerow([_text(v) for v in r])
     elif f in ("jsoneachrow", "json"):
         for r in rows:
             out.write(json.dumps(dict(zip(cols, [getattr(v, "isoformat", lambda: v)() if hasattr(v, "isoformat") else v for v in r])), default=str) + "\n")
     elif f in ("pretty", "prettycompact"):
-        widths = [max(len(str(c)), *(len(str(r[i])) for r in rows)) if rows else len(str(c)) for i, c in enumerate(cols)]
+        cells = [[str(_text(v)) for v in r] for r in rows]
+        widths = [max(len(str(c)), *(len(r[i]) for r in cells)) if cells else len(str(c)) for i, c in enumerate(cols)]
         out.write(" | ".join(str(c).ljust(w) for c, w in zip(cols, widths)) + "\n")
         out.write("-+-".join("-" * w for w in widths) + "\n")
-        for r in rows:
-            out.write(" | ".join(str(v).ljust(w) for v, w in zip(r, widths)) + "\n")
+        for r in cells:
+            out.write(" | ".join(v.ljust(w) for v, w in zip(r, widths)) + "\n")
     else:  # TabSeparated / TSV
         for r in rows:
-            out.write("\t".join("" if v is None else str(v) for v in r) + "\n")
+            out.write("\t".join("" if v is None else str(_text(v)) for v in r) + "\n")
 
 
 def _write_binary_outfile(df, rows, fmt: str, outfile: str) -> bool:

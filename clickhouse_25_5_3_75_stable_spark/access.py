@@ -84,7 +84,7 @@ def _parse_on(target: str) -> tuple[str, str]:
 def handle_access_statement(spark, sql: str):
     """Route one access statement; returns a DataFrame or None when
     the statement is not an access statement."""
-    from clickhouse_25_5_3_75_stable_spark.statements import _rows
+    from clickhouse_25_5_3_75_stable_spark.sources.catalog import local_rows
 
     s = sql.strip().rstrip(";")
 
@@ -106,7 +106,7 @@ def handle_access_statement(spark, sql: str):
                  or re.search(r"(?i)IDENTIFIED\s+BY", s) else "no_password"))
         else:
             reg[name] = {}
-        return _rows(spark, [("OK",)], "created string")
+        return local_rows(spark, [("OK",)], "created string")
 
     m = re.match(r"(?is)^DROP\s+(USER|ROLE)\s+(IF\s+EXISTS\s+)?"
                  r"([A-Za-z_]\w*)\s*$", s)
@@ -125,7 +125,7 @@ def handle_access_statement(spark, sql: str):
             REGISTRY.role_grants = [
                 rg for rg in REGISTRY.role_grants
                 if rg.user != name and rg.role != name]
-        return _rows(spark, [("OK",)], "dropped string")
+        return local_rows(spark, [("OK",)], "dropped string")
 
     m = re.match(r"(?is)^GRANT\s+(.+?)\s+ON\s+(\S+)\s+TO\s+"
                  r"([A-Za-z_]\w*)(\s+WITH\s+GRANT\s+OPTION)?\s*$", s)
@@ -143,7 +143,7 @@ def handle_access_statement(spark, sql: str):
             g = GrantDef(grantee, p, db, tbl, bool(m.group(4)))
             if not any(x == g for x in REGISTRY.grants):
                 REGISTRY.grants.append(g)
-        return _rows(spark, [("OK",)], "granted string")
+        return local_rows(spark, [("OK",)], "granted string")
 
     m = re.match(r"(?is)^GRANT\s+([A-Za-z_]\w*)\s+TO\s+([A-Za-z_]\w*)"
                  r"(\s+WITH\s+ADMIN\s+OPTION)?\s*$", s)
@@ -156,7 +156,7 @@ def handle_access_statement(spark, sql: str):
         rg = RoleGrantDef(user, role, bool(m.group(3)))
         if not any(x == rg for x in REGISTRY.role_grants):
             REGISTRY.role_grants.append(rg)
-        return _rows(spark, [("OK",)], "granted string")
+        return local_rows(spark, [("OK",)], "granted string")
 
     m = re.match(r"(?is)^REVOKE\s+(.+?)\s+ON\s+(\S+)\s+FROM\s+"
                  r"([A-Za-z_]\w*)\s*$", s)
@@ -170,7 +170,7 @@ def handle_access_statement(spark, sql: str):
                     and g.database == db and g.table == tbl)]
         if len(REGISTRY.grants) == before:
             _err(f"nothing to revoke from {m.group(3)!r}")
-        return _rows(spark, [("OK",)], "revoked string")
+        return local_rows(spark, [("OK",)], "revoked string")
 
     m = re.match(r"(?is)^REVOKE\s+([A-Za-z_]\w*)\s+FROM\s+"
                  r"([A-Za-z_]\w*)\s*$", s)
@@ -181,7 +181,7 @@ def handle_access_statement(spark, sql: str):
             if not (rg.role == m.group(1) and rg.user == m.group(2))]
         if len(REGISTRY.role_grants) == before:
             _err(f"role {m.group(1)!r} was not granted to {m.group(2)!r}")
-        return _rows(spark, [("OK",)], "revoked string")
+        return local_rows(spark, [("OK",)], "revoked string")
 
     m = re.match(r"(?is)^SHOW\s+GRANTS(?:\s+FOR\s+([A-Za-z_]\w*))?\s*$", s)
     if m:
@@ -201,12 +201,12 @@ def handle_access_statement(spark, sql: str):
             rows.append((f"GRANT {rg.role} TO {who}{opt}",))
         if who == "default" and not rows:
             rows = [(f"GRANT ALL ON *.* TO default WITH GRANT OPTION",)]
-        return _rows(spark, sorted(rows), "grants string")
+        return local_rows(spark, sorted(rows), "grants string")
 
     m = re.match(r"(?is)^SHOW\s+(USERS|ROLES)\s*$", s)
     if m:
         reg = (REGISTRY.users if m.group(1).upper() == "USERS"
                else REGISTRY.roles)
-        return _rows(spark, [(n,) for n in sorted(reg)], "name string")
+        return local_rows(spark, [(n,) for n in sorted(reg)], "name string")
 
     return None

@@ -138,25 +138,23 @@ def _cached(key, build):
     return _UDFS[key]
 
 
-def _bytes_udf(kernel, result: str = "bigint", text: bool = False, key=None):
-    """The kernel over each BINARY value (``text``: over str(value) as
-    UTF-8 — the bare spark.sql sipHash64 name); NULL -> NULL."""
+def _bytes_udf(kernel, result: str = "bigint", key=None):
+    """The kernel over each BINARY value; NULL -> NULL."""
 
     def build():
-        to_bytes = (lambda v: str(v).encode("utf-8")) if text else bytes
         np_type, pd_type = (np.int32, "Int32") if result == "int" else (np.int64, "Int64")
 
         @pandas_udf(result)
         def hash_bytes(s: pd.Series) -> pd.Series:
             null = np.array([v is None for v in s], dtype=bool)
-            hashed = kernel([b"" if v is None else to_bytes(v) for v in s])
+            hashed = kernel([b"" if v is None else bytes(v) for v in s])
             out = pd.array(hashed.view(np.int64).astype(np_type), dtype=pd_type)
             out[null] = pd.NA
             return pd.Series(out, dtype=pd_type)
 
         return hash_bytes
 
-    return _cached(("bytes", key or kernel, result, text), build)
+    return _cached(("bytes", key or kernel, result), build)
 
 
 def _bytes16_udf(kernel, key=None):
@@ -598,8 +596,6 @@ def _bin(name: str) -> str:
 SQL_UDFS: list[tuple[str, Callable[[], object]]] = [
     *[(_bin(name), partial(_bytes_udf, fam.kernel, fam.result))
       for name, fam in FAMILIES.items()],
-    # the bare name for direct spark.sql users: str(value) as UTF-8
-    ("sipHash64", partial(_bytes_udf, _siphash64_np, "bigint", True)),
     (_F64_BITS, partial(_bits_udf, 64)),
     (_F32_BITS, partial(_bits_udf, 32)),
     ("ch_inthash64", partial(_inthash_udf, 64)),

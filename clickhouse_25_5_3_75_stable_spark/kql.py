@@ -2687,7 +2687,7 @@ def kql_sql(spark, text: str, params=None):
     ADX schema table (ColumnName/ColumnOrdinal/DataType/ColumnType)
     comes from its plan."""
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
-    from clickhouse_25_5_3_75_stable_spark.statements import _rows
+    from clickhouse_25_5_3_75_stable_spark.sources.catalog import local_rows
 
     stages = _split_pipeline(text.strip().rstrip(";"))
     for k, st in enumerate(stages):
@@ -2709,8 +2709,8 @@ def kql_sql(spark, text: str, params=None):
             else:
                 dn, ct = _KQL_TYPES.get(base, ("System.Object", "dynamic"))
             rows.append((f.name, i, dn, ct))
-        return _rows(spark, rows, "ColumnName string, ColumnOrdinal int, "
-                                  "DataType string, ColumnType string")
+        return local_rows(spark, rows, "ColumnName string, ColumnOrdinal int, "
+                                       "DataType string, ColumnType string")
     # `evaluate pivot(col, agg(val))` also needs runtime state: ADX
     # auto-discovers the pivot columns from the DATA, so the prefix
     # runs once for the distinct key set (capped — a pivot into

@@ -21,7 +21,7 @@ from clickhouse_25_5_3_75_stable_spark.operators.projections import (
 )
 from clickhouse_25_5_3_75_stable_spark.operators.sampling import sample_by_key
 from clickhouse_25_5_3_75_stable_spark.queries import arr_csv, arr_csv_dec, register, t
-from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_columns
+from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
 
 @register(
@@ -173,9 +173,8 @@ def system_columns_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """system.columns (reference src/Storages/System/
     StorageSystemColumns.cpp) — catalog metadata from parquet footers,
     cross-checked against the oracle's information_schema."""
-    return system_columns(spark, sf_dir).select("table_name", "column_name", "pos").orderBy(
-        "table_name", "pos"
-    )
+    return system_table(spark, "columns", sf_dir).select(
+        "table_name", "column_name", "pos").orderBy("table_name", "pos")
 
 
 @register(
@@ -595,11 +594,7 @@ def system_tables_full_introspect(spark: SparkSession, sf_dir: str) -> DataFrame
     reference's quick-stat contract), never a scan. The full 38-column
     surface (uuid, data_paths, keys, mutation counters, the `table`
     alias) is shape-asserted in tests/test_storage_ops.py."""
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_tables_full,
-    )
-
-    return system_tables_full(spark, sf_dir).select(
+    return system_table(spark, "tables", sf_dir).select(
         "database", "name", "engine", "is_temporary", "total_rows",
         "has_own_data",
         F.col("active_parts").cast("bigint").alias("active_parts"),
@@ -1016,11 +1011,6 @@ def system_tables_final_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_dropped_tables_parts,
-        system_iceberg_history_catalog,
-    )
-
     rows = []
     z = ch_sql(spark, """
         SELECT sum(zero) AS s, count() AS c
@@ -1046,7 +1036,7 @@ def system_tables_final_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.range(4).coalesce(1).write.parquet(os.path.join(park, "p1"))
         # direct builder call: the fixture lives in tmp, not the
         # catalog dir the SQL route registers views over
-        got = system_dropped_tables_parts(spark, tmp).agg(
+        got = system_table(spark, "dropped_tables_parts", tmp).agg(
             F.sum("rows").alias("r"), F.count(F.lit(1)).alias("p")
         ).collect()[0]
         rows.append(("dropped_parts", "parked_rows_parts",
@@ -1070,7 +1060,7 @@ def system_tables_final_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         json.dump(meta, open(os.path.join(ice, "v1.metadata.json"), "w"))
         open(os.path.join(ice, "version-hint.text"), "w").write("1")
-        hist = system_iceberg_history_catalog(spark, tmp).agg(
+        hist = system_table(spark, "iceberg_history", tmp).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("is_current_ancestor").cast("long")).alias("anc"),
         ).collect()[0]

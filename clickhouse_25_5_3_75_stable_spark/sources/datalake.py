@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_25_5_3_75_stable_spark.sources.catalog import local_rows
+
 _PROBE_CLASSES = {
     "delta": "org.apache.spark.sql.delta.sources.DeltaDataSource",
     "iceberg": "org.apache.iceberg.spark.source.IcebergSource",
@@ -436,9 +438,7 @@ def delta_history(spark: SparkSession, path: str) -> DataFrame:
                     op = ci.get("operation")
                     ts = ci.get("timestamp")
         rows.append((v, ts, op))
-    return spark.createDataFrame(
-        rows, "version int, timestamp long, operation string"
-    )
+    return local_rows(spark, rows, "version int, timestamp long, operation string")
 
 
 # ---------------------------------------------------------------------------
@@ -762,16 +762,16 @@ def iceberg_snapshots(spark: SparkSession, path: str) -> DataFrame:
          s.get("timestamp-ms"), (s.get("summary") or {}).get("operation"))
         for s in meta.get("snapshots") or []
     ]
-    return spark.createDataFrame(
-        rows,
+    return local_rows(
+        spark, rows,
         "snapshot_id long, parent_id long, timestamp_ms long, operation string",
     )
 
 
-def iceberg_history(spark: SparkSession, path: str) -> DataFrame:
-    """system.iceberg_history with the REFERENCE's column set (round-8;
-    src/Storages/System/StorageSystemIcebergHistory.cpp: database,
-    table, made_current_at, snapshot_id, parent_id,
+def iceberg_history_rows(path: str) -> list[tuple]:
+    """system.iceberg_history rows of one table, with the REFERENCE's
+    column set (round-8; src/Storages/System/StorageSystemIcebergHistory.cpp:
+    database, table, made_current_at, snapshot_id, parent_id,
     is_current_ancestor) — is_current_ancestor walks the parent chain
     from the current snapshot, exactly the reference's ancestry test."""
     import datetime as dt
@@ -785,7 +785,7 @@ def iceberg_history(spark: SparkSession, path: str) -> DataFrame:
     while sid in by_id:
         ancestors.add(sid)
         sid = by_id[sid].get("parent-snapshot-id")
-    rows = [
+    return [
         ("default", os.path.basename(path.rstrip("/")),
          dt.datetime.utcfromtimestamp(s["timestamp-ms"] / 1000.0)
          if s.get("timestamp-ms") else None,
@@ -793,11 +793,16 @@ def iceberg_history(spark: SparkSession, path: str) -> DataFrame:
          s["snapshot-id"] in ancestors)
         for s in snaps
     ]
-    return spark.createDataFrame(
-        rows,
-        "database string, table string, made_current_at timestamp, "
-        "snapshot_id long, parent_id long, is_current_ancestor boolean",
+
+
+def iceberg_history(spark: SparkSession, path: str) -> DataFrame:
+    """system.iceberg_history of one table (iceberg_history_rows)."""
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
+        SYSTEM_TABLES,
     )
+
+    return local_rows(spark, iceberg_history_rows(path),
+                      SYSTEM_TABLES["iceberg_history"].schema)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_25_5_3_75_stable_spark.sources.catalog import local_rows
+
 _SCHEMA = (
     "file string, row_group int, column string, n_rows long, "
     "total_bytes long, min_value string, max_value string, null_count long"
@@ -58,7 +60,7 @@ def parquet_index(spark: SparkSession, path: str) -> DataFrame:
                         None if st is None else st.null_count,
                     )
                 )
-    return spark.createDataFrame(rows, _SCHEMA)
+    return local_rows(spark, rows, _SCHEMA)
 
 
 def prunable_row_groups(

@@ -1,770 +1,44 @@
 """``system.*`` introspection tables.
 
-The reference exposes ~218 system tables (/root/reference/src/Storages/
-System/); the universally-used ones are ``system.tables``,
-``system.columns``, ``system.numbers`` and ``system.one``. We expose
-the same surface as DataFrames derived from the parquet catalog —
-schema comes from parquet footers (no data scan), so these stay O(1)
-at any data scale.
+The reference declares each system table once, as an
+IStorageSystemOneBlock (src/Storages/System/IStorageSystemOneBlock.h):
+a column description plus a ``fillData`` row filler. Here every table
+is one ``SYSTEM_TABLES`` row: its Spark DDL schema and a rows function
+``(spark, data_dir) -> list[tuple]`` (an always-empty table has none).
+``system_table`` reads a row as a local relation
+(``catalog.local_rows``), so a system-table read runs no Spark job.
+Rows come from parquet footers, the filesystem and the session's
+registries — never a data scan — so these stay O(1) at any data scale.
+The numbers/zeros generators are the exception: lazy ``spark.range``
+plans.
+
+``SELECT ... FROM system.<name>``: Spark temp views have no schema
+qualifier, so ch_sql rewrites ``system.X`` to ``__system_X``
+(``rewrite_system_refs``) and ``materialize_system_views`` backs each
+referenced name with a temp view built on demand.
 """
 
 from __future__ import annotations
 
 import os
+from collections import deque as _deque
+from datetime import datetime as _dt
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from clickhouse_25_5_3_75_stable_spark.sources import catalog
 
-_COLS_SCHEMA = T.StructType(
-    [
-        T.StructField("table_name", T.StringType(), False),
-        T.StructField("column_name", T.StringType(), False),
-        T.StructField("pos", T.IntegerType(), False),
-        T.StructField("data_type", T.StringType(), False),
-    ]
-)
 
+class SystemTable(NamedTuple):
+    schema: str  # Spark DDL; UInt64 travels as BIGINT, UUIDs as strings
+    # (spark, data_dir) -> list[tuple]; None: the table is always empty.
+    # A generator's rows function returns its lazy DataFrame instead.
+    rows: Callable | None = None
+    needs_dir: bool = False  # rows read the data dir
 
-def system_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """system.columns analogue (reference src/Storages/System/
-    StorageSystemColumns.cpp): one row per column of every catalog
-    table, with 1-based ordinal position and Spark type name."""
-    rows = []
-    for name in catalog.sync(spark, sf_dir):
-        for i, f in enumerate(spark.table(name).schema.fields, start=1):
-            rows.append((name, f.name, i, f.dataType.simpleString()))
-    return spark.createDataFrame(rows, _COLS_SCHEMA)
 
-
-def _table_parts(data_dir: str, name: str) -> list[tuple[str, list]]:
-    """A catalog table's non-empty parts as (partition, [(file, footer
-    metadata)]): a flat file is the one part `all`; a table dir has
-    `all` for its root files plus one part per partition dir (names
-    starting with `_` are detached parts and projections)."""
-    import pyarrow.parquet as pq
-
-    def files_of(d: str) -> list[str]:
-        return [os.path.join(d, f) for f in sorted(os.listdir(d))
-                if f.endswith(".parquet") and not f.startswith(("_", "."))]
-
-    path = catalog.table_path(data_dir, name)
-    if not os.path.isdir(path):
-        groups = [("all", [path])]
-    else:
-        groups = [("all", files_of(path))] + [
-            (d, files_of(os.path.join(path, d)))
-            for d in sorted(os.listdir(path))
-            if not d.startswith(("_", ".")) and os.path.isdir(os.path.join(path, d))
-        ]
-    parts = []
-    for partition, files in groups:
-        metas = [(f, pq.read_metadata(f)) for f in files]
-        if sum(m.num_rows for _f, m in metas):
-            parts.append((partition, metas))
-    return parts
-
-
-def system_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """system.tables analogue: table name + column count (the compact
-    round-3 shape; the reference-parity column set is
-    system_tables_full below)."""
-    cols = system_columns(spark, sf_dir)
-    return cols.groupBy("table_name").agg(F.count(F.lit(1)).alias("n_columns"))
-
-
-# the reference's full system.tables column list
-# (StorageSystemTables.cpp ColumnsDescription, 25.5) — Spark DDL types;
-# UInt64 travels as BIGINT (the repo convention), UUID/keys as strings
-_TABLES_FULL_SCHEMA = (
-    "database string, name string, uuid string, engine string, "
-    "is_temporary tinyint, data_paths array<string>, "
-    "metadata_path string, metadata_modification_time timestamp, "
-    "metadata_version int, dependencies_database array<string>, "
-    "dependencies_table array<string>, create_table_query string, "
-    "engine_full string, as_select string, "
-    "parameterized_view_parameters array<struct<name string, type string>>, "
-    "partition_key string, sorting_key string, primary_key string, "
-    "sampling_key string, storage_policy string, total_rows bigint, "
-    "total_bytes bigint, total_bytes_uncompressed bigint, parts bigint, "
-    "active_parts bigint, total_marks bigint, "
-    "active_on_fly_data_mutations bigint, "
-    "active_on_fly_alter_mutations bigint, "
-    "active_on_fly_metadata_mutations bigint, lifetime_rows bigint, "
-    "lifetime_bytes bigint, comment string, has_own_data tinyint, "
-    "loading_dependencies_database array<string>, "
-    "loading_dependencies_table array<string>, "
-    "loading_dependent_database array<string>, "
-    "loading_dependent_table array<string>"
-)
-
-_NIL_UUID = "00000000-0000-0000-0000-000000000000"
-
-
-def system_tables_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """system.tables with the REFERENCE's full column set
-    (StorageSystemTables.cpp:152-210, incl. the `table` alias — round-6
-    judge ask #9). Values are honest engine facts, all from parquet
-    FOOTER metadata (no data scan, the reference's own quick-stat
-    contract for total_rows/total_bytes/total_marks):
-
-    - engine/engine_full/keys come from stored DDL metadata when the
-      table was CREATEd through ddl.py, else the catalog default
-      (parquet tables present as plain MergeTree analogues);
-    - total_rows = footer num_rows; total_bytes = bytes on disk;
-      total_bytes_uncompressed = sum of row-group uncompressed sizes;
-      total_marks = row-group count (the granule analogue);
-    - uuid is the nil UUID (no Atomic database here),
-      replication/buffer/mutation counters are 0/NULL exactly like the
-      reference reports for engines without them.
-    """
-    import datetime
-
-    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
-
-    rows = []
-    for name in catalog.sync(spark, sf_dir):
-        path = catalog.table_path(sf_dir, name)
-        parts = _table_parts(sf_dir, name)
-        metas = [(f, m) for _p, fm in parts for f, m in fm]
-        n_rows = sum(m.num_rows for _f, m in metas)
-        n_bytes = sum(os.path.getsize(f) for f, _m in metas)
-        uncomp = sum(
-            m.row_group(g).total_byte_size
-            for _f, m in metas for g in range(m.num_row_groups)
-        )
-        marks = sum(m.num_row_groups for _f, m in metas)
-        mtime = datetime.datetime.fromtimestamp(os.path.getmtime(path))
-        td = load_table_def(sf_dir, name)
-        engine = td.engine if td else "MergeTree"
-        order_by = ", ".join(td.order_by) if td and td.order_by else ""
-        partition_by = (td.partition_by or "") if td else ""
-        cols_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in spark.table(name).schema.fields
-        )
-        create_q = f"CREATE TABLE default.{name} ({cols_ddl}) ENGINE = {engine}"
-        engine_full = engine + (f" ORDER BY ({order_by})" if order_by else "")
-        rows.append((
-            "default", name, _NIL_UUID, engine, 0, [path],
-            "", mtime, 0, [], [], create_q, engine_full, "", [],
-            partition_by, order_by, order_by, "", "default",
-            n_rows, n_bytes, uncomp, len(parts), len(parts), marks,
-            0, 0, 0, None, None, "", 1, [], [], [], [],
-        ))
-    out = spark.createDataFrame(rows, _TABLES_FULL_SCHEMA)
-    # the reference aliases `table` -> name
-    return out.withColumn("table", F.col("name"))
-
-
-def system_numbers(spark: SparkSession, n: int) -> DataFrame:
-    """system.numbers / numbers(n) (also in sources/table_functions.py)."""
-    return spark.range(n).withColumnRenamed("id", "number")
-
-
-def system_one(spark: SparkSession) -> DataFrame:
-    """system.one: single row, single UInt8 zero — SELECT 1 support."""
-    return spark.range(1).select(F.lit(0).cast("tinyint").alias("dummy"))
-
-
-# the reference's tables are UNBOUNDED (StorageSystemNumbers.cpp
-# pulls blocks forever; queries pair them with LIMIT). spark.range is
-# LAZY — LIMIT n takes n rows without materializing — so a very large
-# bounded range gives the same usable contract; the bound exists only
-# because Spark ranges need one (2^40 rows ~ 35 years of generation at
-# 1M rows/s — beyond any non-LIMITed intent)
-_NUMBERS_BOUND = 1 << 40
-
-
-def system_numbers_unbounded(spark: SparkSession) -> DataFrame:
-    """system.numbers (StorageSystemNumbers.cpp): number UInt64
-    ascending from 0; use with LIMIT like the reference."""
-    return spark.range(_NUMBERS_BOUND).select(F.col("id").alias("number"))
-
-
-def system_zeros_unbounded(spark: SparkSession) -> DataFrame:
-    """system.zeros (StorageSystemZeros.cpp): zero UInt8 — the
-    reference's cheapest row generator."""
-    return spark.range(_NUMBERS_BOUND).select(
-        F.lit(0).cast("tinyint").alias("zero"))
-
-
-def system_functions(spark: SparkSession) -> DataFrame:
-    """system.functions analogue (reference src/Storages/System/
-    StorageSystemFunctions.cpp): every ClickHouse function name this
-    engine's dialect resolves, with its origin — 'direct' (one Spark
-    expression), 'composed' (built from several), or 'excluded' (with
-    the documented reason). Driver-built from the registries: O(names),
-    no data scan."""
-    from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS
-    from clickhouse_25_5_3_75_stable_spark.functions.dialect_extras import (
-        CH_FUNCTIONS_EXCLUDED,
-    )
-
-    rows = [(name, "direct", None) for name in CH_FUNCTIONS]
-    rows += [(name, "excluded", reason) for name, reason in CH_FUNCTIONS_EXCLUDED.items()
-             if name not in CH_FUNCTIONS]
-    return spark.createDataFrame(
-        rows, "name string, origin string, exclusion_reason string"
-    )
-
-
-def system_parts(spark: SparkSession, layout_dir: str) -> DataFrame:
-    """system.parts analogue over a MergeTree-style layout written by
-    sources/layout.py (reference StorageSystemParts.cpp): one row per
-    partition directory with file count and bytes — from filesystem
-    metadata only."""
-    import os
-
-    rows = []
-    for part in sorted(os.listdir(layout_dir)):
-        p = os.path.join(layout_dir, part)
-        if not os.path.isdir(p) or part.startswith("_"):
-            continue
-        files = [f for f in os.listdir(p) if f.endswith(".parquet")]
-        size = sum(os.path.getsize(os.path.join(p, f)) for f in files)
-        rows.append((part, len(files), size))
-    return spark.createDataFrame(rows, "partition string, n_files int, bytes_on_disk long")
-
-
-def system_settings(spark: SparkSession) -> DataFrame:
-    """system.settings analogue: the live Spark SQL conf (the engine's
-    runtime settings surface)."""
-    conf = spark.sparkContext.getConf().getAll()
-    sql_conf = [(k, v) for k, v in conf]
-    return spark.createDataFrame(sql_conf, "name string, value string")
-
-
-def system_databases(spark: SparkSession) -> DataFrame:
-    """system.databases (reference StorageSystemDatabases.cpp): the
-    Spark catalog's database list."""
-    rows = [(d.name, d.locationUri or "") for d in spark.catalog.listDatabases()]
-    return spark.createDataFrame(rows, "name string, data_path string")
-
-
-def system_data_type_families(spark: SparkSession) -> DataFrame:
-    """system.data_type_families (reference
-    StorageSystemDataTypeFamilies.cpp): every ClickHouse type name the
-    engine's type map resolves, with case sensitivity and the Spark
-    type it maps to in 'exact' mode."""
-    from clickhouse_25_5_3_75_stable_spark.functions.typemap import (
-        _SCALARS,
-        ch_type_to_spark,
-    )
-
-    canonical = {
-        "int8": "Int8", "int16": "Int16", "int32": "Int32", "int64": "Int64",
-        "int128": "Int128", "int256": "Int256", "uint8": "UInt8",
-        "uint16": "UInt16", "uint32": "UInt32", "uint64": "UInt64",
-        "uint128": "UInt128", "uint256": "UInt256", "float32": "Float32",
-        "float64": "Float64", "bfloat16": "BFloat16", "bool": "Bool",
-        "string": "String", "date": "Date", "date32": "Date32",
-        "datetime": "DateTime", "datetime32": "DateTime32", "uuid": "UUID",
-        "ipv4": "IPv4", "ipv6": "IPv6", "json": "JSON", "dynamic": "Dynamic",
-        "nothing": "Nothing",
-    }
-    rows = [
-        (canonical.get(name, name), 1, _SCALARS[name][0])
-        for name in sorted(_SCALARS)
-    ]
-    for comp in ("Array(Int64)", "Tuple(Int64, String)", "Map(String, Int64)",
-                 "Nullable(Int64)", "LowCardinality(String)"):
-        rows.append((comp.split("(")[0], 1, ch_type_to_spark(comp)))
-    return spark.createDataFrame(
-        rows, "name string, case_sensitive int, spark_type string"
-    )
-
-
-def system_formats(spark: SparkSession) -> DataFrame:
-    """system.formats (reference StorageSystemFormats.cpp): format name
-    + is_input/is_output flags for every format the engine reads or
-    writes, plus excluded reference formats with their reasons."""
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        FORMAT_EXCLUSIONS,
-    )
-
-    native = [
-        ("Parquet", 1, 1), ("ORC", 1, 1), ("CSV", 1, 1),
-        ("CSVWithNames", 1, 1), ("TSV", 1, 1), ("TabSeparated", 1, 1),
-        ("JSONEachRow", 1, 1), ("JSONLines", 1, 1), ("Avro", 1, 1),
-        ("LineAsString", 1, 1), ("RawBLOB", 1, 1), ("XML", 1, 1),
-        ("Arrow", 1, 1), ("ArrowStream", 1, 1), ("Npy", 1, 1),
-        ("Regexp", 1, 0), ("Values", 1, 0), ("RowBinary", 1, 1),
-        ("Native", 1, 1), ("Pretty", 0, 1), ("Vertical", 0, 1),
-        # round 3: MsgPack implemented from the public spec
-        ("MsgPack", 1, 1),
-        # round 5: BSON/Template/Avro-shim + the long-tail batch
-        # (sources/formats_longtail.py)
-        ("BSONEachRow", 1, 1), ("Template", 1, 1),
-        ("CustomSeparated", 1, 1), ("TSKV", 1, 1),
-        ("JSONAsString", 1, 0), ("JSONCompactEachRow", 1, 1),
-        ("JSONCompact", 1, 0), ("JSONColumns", 1, 0),
-        ("JSONCompactColumns", 1, 0), ("JSONObjectEachRow", 1, 0),
-        ("HiveText", 1, 1), ("One", 1, 0), ("Form", 1, 0),
-        ("Null", 0, 1), ("Markdown", 0, 1), ("SQLInsert", 0, 1),
-        ("ParquetMetadata", 1, 0), ("CapnProto", 1, 1),
-        ("MySQLDump", 1, 0), ("Prometheus", 0, 1),
-    ]
-    rows = [(n, i, o, None) for n, i, o in native]
-    # Protobuf is honest about the classpath: supported when the
-    # spark-protobuf jar is loadable, excluded-with-reason otherwise
-    # (review finding: an unconditional is_input=1 row pointed users
-    # at a NotImplementedError)
-    from clickhouse_25_5_3_75_stable_spark.sources.protobuf_shim import (
-        protobuf_available,
-    )
-
-    if protobuf_available(spark):
-        rows += [("Protobuf", 1, 1, None), ("ProtobufSingle", 1, 0, None)]
-    else:
-        why = "spark-protobuf jar not on the classpath (sources/protobuf_shim.py has the recipe)"
-        rows += [("Protobuf", 0, 0, why), ("ProtobufSingle", 0, 0, why)]
-    rows += [(n, 0, 0, why) for n, why in sorted(FORMAT_EXCLUSIONS.items())]
-    return spark.createDataFrame(
-        rows, "name string, is_input int, is_output int, exclusion_reason string"
-    )
-
-
-def system_table_functions(spark: SparkSession) -> DataFrame:
-    """system.table_functions (reference
-    StorageSystemTableFunctions.cpp): introspected from the
-    table_functions module."""
-    import inspect
-
-    from clickhouse_25_5_3_75_stable_spark.sources import table_functions as tf
-
-    rows = [
-        (name,)
-        for name, fn in inspect.getmembers(tf, inspect.isfunction)
-        if not name.startswith("_") and fn.__module__ == tf.__name__
-    ]
-    return spark.createDataFrame(rows, "name string")
-
-
-def system_aggregate_function_combinators(spark: SparkSession) -> DataFrame:
-    """system.aggregate_function_combinators (reference
-    StorageSystemAggregateFunctionCombinators.cpp): the combinator
-    suffixes the engine's aggregate layer supports."""
-    rows = [
-        ("-If", 0), ("-Array", 0), ("-Map", 0), ("-ForEach", 0),
-        ("-Resample", 0), ("-State", 0), ("-Merge", 0), ("-Distinct", 0),
-        ("-OrNull", 0), ("-SimpleState", 1), ("-MergeState", 1),
-    ]
-    return spark.createDataFrame(rows, "name string, is_internal int")
-
-
-def system_collations(spark: SparkSession) -> DataFrame:
-    """system.collations (reference StorageSystemCollations.cpp): the
-    collation names ORDER BY ... COLLATE accepts — engine aliases plus
-    the Spark 4 natives they resolve to."""
-    from clickhouse_25_5_3_75_stable_spark.operators.collation import _ALIASES
-
-    rows = [(alias, native) for alias, native in sorted(_ALIASES.items())]
-    rows += [(n, n) for n in ("UTF8_BINARY", "UTF8_LCASE", "UNICODE",
-                              "UNICODE_CI", "UNICODE_AI", "UNICODE_CI_AI")]
-    return spark.createDataFrame(rows, "name string, resolves_to string")
-
-
-def system_backups(spark: SparkSession) -> DataFrame:
-    """system.backups (reference StorageSystemBackups.cpp reads the
-    BackupsWorker registry — round-6): one row per BACKUP/RESTORE this
-    process ran, with the reference's core columns (id, name = the
-    File(...) spec, status per BackupStatus.h, error, start/end time,
-    num_files, total_size)."""
-    from clickhouse_25_5_3_75_stable_spark.ddl import BACKUP_LOG
-
-    rows = [
-        (e["id"], e["name"], e["status"], e["error"], e["start_time"],
-         e["end_time"], e["num_files"], e["total_size"])
-        for e in BACKUP_LOG
-    ]
-    return spark.createDataFrame(
-        rows,
-        "id string, name string, status string, error string, "
-        "start_time timestamp, end_time timestamp, num_files bigint, "
-        "total_size bigint",
-    )
-
-
-def system_time_zones(spark: SparkSession) -> DataFrame:
-    """system.time_zones (reference StorageSystemTimeZones.cpp): the
-    IANA zone names available to toTimeZone()/convert_timezone."""
-    import zoneinfo
-
-    rows = [(z,) for z in sorted(zoneinfo.available_timezones())]
-    return spark.createDataFrame(rows, "time_zone string")
-
-
-def system_detached_parts(spark: SparkSession, layout_dir: str) -> DataFrame:
-    """system.detached_parts compact shape (round-5); the
-    reference-parity column set is system_detached_parts_full below."""
-    import os
-
-    rows = []
-    det = os.path.join(layout_dir, "_detached")
-    if os.path.isdir(det):
-        for part in sorted(os.listdir(det)):
-            p = os.path.join(det, part)
-            if not os.path.isdir(p):
-                continue
-            files = [f for f in os.listdir(p) if f.endswith(".parquet")]
-            size = sum(os.path.getsize(os.path.join(p, f)) for f in files)
-            rows.append((part, len(files), size))
-    return spark.createDataFrame(
-        rows, "partition string, n_files int, bytes_on_disk long"
-    )
-
-
-# the detach-reason prefixes the reference parses off a detached part's
-# directory name (DetachedPartInfo::DETACH_REASONS, MergeTreePartInfo.h)
-_DETACH_REASONS = (
-    "broken-on-start", "covered-by-broken", "merge-not-byte-identical",
-    "mutate-not-byte-identical", "broken-from-backup", "broken",
-    "unexpected", "noquorum", "ignored", "clone", "attaching",
-    "deleting", "tmp-fetch",
-)
-
-
-def system_detached_parts_full(spark: SparkSession, layout_dir: str,
-                               table: str = "") -> DataFrame:
-    """system.detached_parts with the REFERENCE's column set
-    (StorageSystemDetachedParts.cpp:260-272 — round-6 judge ask #9):
-    database/table/partition_id/name/bytes_on_disk/modification_time/
-    disk/path/reason/min_block_number/max_block_number/level. The
-    reason comes from the directory-name prefix exactly like the
-    reference's DetachedPartInfo parser (a healthy DETACH PARTITION
-    writes no prefix -> NULL); block numbers/level are NULL — this
-    engine's parts carry no merge lineage, the same NULL the reference
-    emits for unparsable names."""
-    import datetime
-    import os
-
-    rows = []
-    det = os.path.join(layout_dir, "_detached")
-    if os.path.isdir(det):
-        for part in sorted(os.listdir(det)):
-            p = os.path.join(det, part)
-            if not os.path.isdir(p):
-                continue
-            files = [f for f in os.listdir(p) if f.endswith(".parquet")]
-            size = sum(os.path.getsize(os.path.join(p, f)) for f in files)
-            reason = next(
-                (r for r in _DETACH_REASONS if part.startswith(r + "_")), None
-            )
-            bare = part[len(reason) + 1:] if reason else part
-            rows.append((
-                "default",
-                table or os.path.basename(layout_dir.rstrip("/")),
-                bare, part, size,
-                datetime.datetime.fromtimestamp(os.path.getmtime(p)),
-                "default", p, reason, None, None, None,
-            ))
-    return spark.createDataFrame(
-        rows,
-        "database string, table string, partition_id string, name string, "
-        "bytes_on_disk bigint, modification_time timestamp, disk string, "
-        "path string, reason string, min_block_number bigint, "
-        "max_block_number bigint, level int",
-    )
-
-
-def system_parts_columns(spark: SparkSession, layout_dir: str) -> DataFrame:
-    """system.parts_columns (reference StorageSystemPartsColumns.cpp):
-    per-partition per-column min/max/null-count from parquet footers —
-    the statistics MergeTree keeps per part, read without scanning
-    data. Footer reads are O(parts), driver-side, same as the
-    reference's metadata path."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    rows = []
-    for part in sorted(os.listdir(layout_dir)):
-        p = os.path.join(layout_dir, part)
-        if not os.path.isdir(p) or part.startswith("_"):
-            continue
-        for fname in sorted(os.listdir(p)):
-            if not fname.endswith(".parquet"):
-                continue
-            meta = pq.read_metadata(os.path.join(p, fname))
-            for rg in range(meta.num_row_groups):
-                g = meta.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    st = col.statistics
-                    rows.append((
-                        part,
-                        fname,
-                        rg,
-                        col.path_in_schema,
-                        str(st.min) if st and st.has_min_max else None,
-                        str(st.max) if st and st.has_min_max else None,
-                        int(st.null_count) if st and st.null_count is not None else None,
-                    ))
-    return spark.createDataFrame(
-        rows,
-        "partition string, file string, row_group int, column string, "
-        "min_value string, max_value string, null_count long",
-    )
-
-
-def system_disks(spark: SparkSession, path: str = "/") -> DataFrame:
-    """system.disks (reference StorageSystemDisks.cpp): free/total
-    bytes of the storage path."""
-    import shutil
-
-    u = shutil.disk_usage(path)
-    return spark.createDataFrame(
-        [("default", path, u.free, u.total)],
-        "name string, path string, free_space long, total_space long",
-    )
-
-
-def system_clusters(spark: SparkSession) -> DataFrame:
-    """system.clusters (reference StorageSystemClusters.cpp): one row
-    per executor of the live Spark application (local mode: the driver
-    doubles as the single executor)."""
-    sc = spark.sparkContext
-    try:  # executor list via the JVM status tracker (cluster mode)
-        infos = sc._jsc.sc().statusTracker().getExecutorInfos()
-        rows = [
-            ("default", i + 1, e.host(), int(e.numRunningTasks()))
-            for i, e in enumerate(infos)
-        ]
-    except Exception:  # local fallback: the driver is the one executor
-        rows = [("default", 1, sc.master, 0)]
-    return spark.createDataFrame(
-        rows, "cluster string, shard_num int, host_name string, running_tasks int"
-    )
-
-
-def system_build_options(spark: SparkSession) -> DataFrame:
-    """system.build_options (reference StorageSystemBuildOptions.cpp):
-    engine build/runtime identity."""
-    import platform
-    import sys
-
-    import pyspark
-
-    rows = [
-        ("SPARK_VERSION", pyspark.__version__),
-        ("PYTHON_VERSION", sys.version.split()[0]),
-        ("PLATFORM", platform.platform()),
-        ("REFERENCE", "ClickHouse-25.5.3.75-stable"),
-    ]
-    return spark.createDataFrame(rows, "name string, value string")
-
-
-def system_processes(spark: SparkSession) -> DataFrame:
-    """system.processes (reference StorageSystemProcesses.cpp): the
-    Spark scheduler's currently-active jobs."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    rows = []
-    for jid in tracker.getActiveJobsIds():
-        info = tracker.getJobInfo(jid)
-        if info:
-            rows.append((int(jid), str(info.status), len(info.stageIds)))
-    return spark.createDataFrame(rows, "job_id int, status string, n_stages int")
-
-
-# ---------------------------------------------------------------------------
-# Round-5 batch: metadata/introspection long tail
-# (reference src/Storages/System/StorageSystem{Keywords,TableEngines,
-# DatabaseEngines,MergeTreeSettings,StoragePolicies,Users,Roles,Grants,
-# Privileges,Zeros,Warnings,Licenses,Events,Metrics}.cpp + the
-# query_log service table). Static tables reflect THIS engine's real
-# capabilities — no row claims a feature the repo doesn't implement.
-# ---------------------------------------------------------------------------
-
-from collections import deque as _deque
-from datetime import datetime as _dt
-
-
-def system_keywords(spark: SparkSession) -> DataFrame:
-    """system.keywords (StorageSystemKeywords.cpp): the SQL keywords
-    the chsql transpiler recognizes."""
-    kws = sorted({
-        "SELECT", "FROM", "WHERE", "PREWHERE", "GROUP", "BY", "HAVING",
-        "QUALIFY", "ORDER", "LIMIT", "OFFSET", "WITH", "TOTALS", "TIES",
-        "DISTINCT", "ON", "AS", "JOIN", "INNER", "LEFT", "RIGHT", "FULL",
-        "CROSS", "SEMI", "ANTI", "ANY", "ASOF", "PASTE", "USING", "UNION",
-        "ALL", "INTERSECT", "EXCEPT", "ARRAY", "SAMPLE", "FINAL",
-        "SETTINGS", "FORMAT", "INTO", "OUTFILE", "VALUES", "INSERT",
-        "CREATE", "TABLE", "VIEW", "MATERIALIZED", "FUNCTION", "DROP",
-        "ALTER", "UPDATE", "DELETE", "OPTIMIZE", "DEDUPLICATE", "TTL",
-        "PARTITION", "PRIMARY", "KEY", "ENGINE", "IF", "NOT", "EXISTS",
-        "AND", "OR", "IN", "BETWEEN", "LIKE", "ILIKE", "IS", "NULL",
-        "CASE", "WHEN", "THEN", "ELSE", "END", "CAST", "INTERVAL",
-        "ASC", "DESC", "NULLS", "FIRST", "LAST", "COLLATE", "FILL",
-        "INTERPOLATE", "STEP", "ROLLUP", "CUBE", "GROUPING", "SETS",
-        "WINDOW", "OVER", "ROWS", "RANGE", "GROUPS", "PRECEDING",
-        "FOLLOWING", "CURRENT", "ROW", "UNBOUNDED",
-    })
-    return spark.createDataFrame([(k,) for k in kws], "keyword string")
-
-
-def system_table_engines(spark: SparkSession) -> DataFrame:
-    """system.table_engines (StorageSystemTableEngines.cpp): the engines
-    this repo implements (sources/engines.py, operators/mergetree.py,
-    ddl.py), with the reference's capability flags."""
-    #       name, supports_ttl, supports_sort, supports_skip_idx, supports_dedup
-    rows = [
-        ("MergeTree", 1, 1, 1, 1),
-        ("ReplacingMergeTree", 1, 1, 1, 1),
-        ("SummingMergeTree", 1, 1, 1, 1),
-        ("AggregatingMergeTree", 1, 1, 1, 1),
-        ("CollapsingMergeTree", 1, 1, 1, 1),
-        ("VersionedCollapsingMergeTree", 1, 1, 1, 1),
-        ("GraphiteMergeTree", 1, 1, 1, 1),
-        ("Memory", 0, 0, 0, 0),
-        ("Set", 0, 0, 0, 0),
-        ("Join", 0, 0, 0, 0),
-        ("Buffer", 0, 0, 0, 0),
-        ("Null", 0, 0, 0, 0),
-        ("Merge", 0, 0, 0, 0),
-        ("File", 0, 0, 0, 0),
-        ("URL", 0, 0, 0, 0),
-        ("Distributed", 0, 0, 0, 0),
-        ("View", 0, 0, 0, 0),
-        ("MaterializedView", 0, 0, 0, 0),
-        ("Kafka", 0, 0, 0, 0),
-    ]
-    return spark.createDataFrame(
-        rows,
-        "name string, supports_ttl int, supports_sort_order int, "
-        "supports_skipping_indices int, supports_deduplication int",
-    )
-
-
-def system_database_engines(spark: SparkSession) -> DataFrame:
-    """system.database_engines (StorageSystemDatabaseEngines.cpp)."""
-    return spark.createDataFrame(
-        [("Atomic",), ("Memory",)], "name string"
-    )
-
-
-def system_merge_tree_settings(spark: SparkSession) -> DataFrame:
-    """system.merge_tree_settings (StorageSystemMergeTreeSettings.cpp):
-    the layout knobs sources/layout.py actually honors, with their
-    Spark-side meaning."""
-    rows = [
-        ("index_granularity", "8192",
-         "row-group size target passed to the parquet writer"),
-        ("max_file_rows", "1048576",
-         "rows per part file before the writer rolls (maxRecordsPerFile)"),
-        ("partition_by", "",
-         "directory-encoded partition expression of the layout"),
-        ("order_by", "",
-         "sortWithinPartitions order applied at layout-write time"),
-        ("ttl_column", "",
-         "TTL expression column consulted by operators/ttl.py"),
-    ]
-    return spark.createDataFrame(rows, "name string, value string, description string")
-
-
-def system_storage_policies(spark: SparkSession) -> DataFrame:
-    """system.storage_policies (StorageSystemStoragePolicies.cpp)."""
-    return spark.createDataFrame(
-        [("default", "default", 0)],
-        "policy_name string, volume_name string, volume_priority int",
-    )
-
-
-def system_users(spark: SparkSession) -> DataFrame:
-    """system.users (StorageSystemUsers.cpp): the live access registry
-    (round-9 access.py — CREATE USER adds rows); the implicit default
-    user matches the reference's fresh install."""
-    from clickhouse_25_5_3_75_stable_spark.access import REGISTRY
-
-    return spark.createDataFrame(
-        [(u.name, u.auth_type, 1 if u.name == "default" else 0)
-         for u in (REGISTRY.users[n] for n in sorted(REGISTRY.users))],
-        "name string, auth_type string, is_default int",
-    )
-
-
-def system_roles(spark: SparkSession) -> DataFrame:
-    """system.roles (StorageSystemRoles.cpp): the live access registry
-    (round-9 access.py — CREATE ROLE adds rows)."""
-    from clickhouse_25_5_3_75_stable_spark.access import REGISTRY
-
-    return spark.createDataFrame(
-        [(n, n) for n in sorted(REGISTRY.roles)], "name string, id string")
-
-
-def system_grants(spark: SparkSession) -> DataFrame:
-    """system.grants (StorageSystemGrants.cpp): the live GRANT
-    registry; the implicit default user holds ALL on *.*
-    (fresh-install reference semantics)."""
-    from clickhouse_25_5_3_75_stable_spark.access import REGISTRY
-
-    rows = [("default", "ALL", "*", "*", 1)]
-    rows += [
-        (g.grantee, g.access_type, g.database, g.table,
-         1 if g.grant_option else 0)
-        for g in REGISTRY.grants
-    ]
-    return spark.createDataFrame(
-        sorted(rows),
-        "user_name string, access_type string, database string, "
-        "table string, grant_option int",
-    )
-
-
-def system_privileges(spark: SparkSession) -> DataFrame:
-    """system.privileges (StorageSystemPrivileges.cpp): the access
-    types the reference models, flagged by whether this engine
-    enforces them (none — catalog-delegated)."""
-    kinds = ["SELECT", "INSERT", "ALTER", "CREATE", "DROP", "TRUNCATE",
-             "OPTIMIZE", "SHOW", "KILL QUERY", "ACCESS MANAGEMENT"]
-    return spark.createDataFrame(
-        [(k, 0) for k in kinds], "privilege string, enforced int"
-    )
-
-
-def system_zeros(spark: SparkSession, n: int) -> DataFrame:
-    """system.zeros (StorageSystemZeros.cpp)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.table_functions import zeros
-
-    return zeros(spark, n)
-
-
-def system_warnings(spark: SparkSession) -> DataFrame:
-    """system.warnings (StorageSystemWarnings.cpp): environment
-    capability warnings the session would surface at startup."""
-    rows = []
-    from clickhouse_25_5_3_75_stable_spark.sources.protobuf_shim import (
-        protobuf_available,
-    )
-
-    if not protobuf_available(spark):
-        rows.append(("spark-protobuf jar absent: Protobuf formats are "
-                     "capability-gated (sources/protobuf_shim.py has the recipe)",))
-    return spark.createDataFrame(rows, "message string")
-
-
-def system_licenses(spark: SparkSession) -> DataFrame:
-    """system.licenses (StorageSystemLicenses.cpp): the runtime
-    dependencies of THIS engine and their public licenses."""
-    rows = [
-        ("pyspark", "Apache-2.0"),
-        ("pyarrow", "Apache-2.0"),
-        ("pandas", "BSD-3-Clause"),
-        ("numpy", "BSD-3-Clause"),
-        ("duckdb (test oracle only)", "MIT"),
-        ("CityHash v1.0.2 (algorithm)", "MIT"),
-        ("SipHash (algorithm)", "CC0/public domain reference"),
-        ("xxHash (algorithm)", "BSD-2-Clause"),
-        ("S2 geometry (cell model)", "Apache-2.0"),
-        ("H3 (index bit layout)", "Apache-2.0"),
-    ]
-    return spark.createDataFrame(rows, "library_name string, license_type string")
-
-
-# --- session query log + counters ------------------------------------------
+# --- session registries -----------------------------------------------------
 
 _QUERY_LOG: _deque = _deque(maxlen=10_000)
 _EVENT_COUNTERS: dict[str, int] = {}
@@ -781,9 +55,24 @@ _CURRENT_QUERY: dict = {"id": "", "start_time": None}
 # system.macros (StorageSystemMacros.cpp)
 MACROS: dict[str, str] = {}
 
+# session registry for CREATE NAMED COLLECTION (reference
+# src/Common/NamedCollections/; StorageSystemNamedCollections.cpp)
+NAMED_COLLECTIONS: dict[str, dict[str, str]] = {}
+
+# session error registry: name -> [code, count, last_time_iso, last_msg]
+_ERROR_COUNTERS: dict[str, list] = {}
+
 
 def set_macro(name: str, value: str) -> None:
     MACROS[name] = value
+
+
+def create_named_collection(name: str, kv: dict[str, str]) -> None:
+    NAMED_COLLECTIONS[name] = dict(kv)
+
+
+def drop_named_collection(name: str) -> None:
+    NAMED_COLLECTIONS.pop(name, None)
 
 
 def begin_query(query: str) -> str:
@@ -829,115 +118,276 @@ def record_query(query: str, normalized: str | None = None,
     _EVENT_COUNTERS[key] = _EVENT_COUNTERS.get(key, 0) + 1
 
 
-def system_query_log(spark: SparkSession) -> DataFrame:
-    """system.query_log analogue: the session-local ring buffer of
-    chsql/profiler activity (the reference persists per-query rows via
-    its log queue — here the session IS the scope)."""
-    schema = (
-        "event_time string, type string, query string, "
-        "normalized_query string, query_duration_ms double, "
-        "result_rows bigint, query_id string"
-    )
-    return spark.createDataFrame(list(_QUERY_LOG) if _QUERY_LOG else [], schema)
+def record_error(name: str, code: int, message: str) -> None:
+    """Feed system.errors (called by record_chsql_error at the public
+    API boundary — round-8: construction-time recording over-counted
+    internal control-flow errors)."""
+    ent = _ERROR_COUNTERS.setdefault(name, [code, 0, None, ""])
+    ent[1] += 1
+    ent[2] = _dt.now().isoformat(sep=" ", timespec="seconds")
+    ent[3] = message[:500]
 
 
-def system_dictionaries(spark: SparkSession) -> DataFrame:
-    """system.dictionaries (StorageSystemDictionaries.cpp): the LIVE
-    named dictionary objects — layout, key, attribute names/types, and
-    loaded row count (the count reflects the current source, computed
-    on query like the reference's loaded state)."""
-    from clickhouse_25_5_3_75_stable_spark.operators.dictionary import (
-        DICTIONARY_REGISTRY,
-    )
-
-    rows = []
-    for nm in sorted(DICTIONARY_REGISTRY):
-        d = DICTIONARY_REGISTRY[nm]
-        fields = d.source.schema.fields
-        attr_names = ",".join(f.name for f in fields if f.name != d.key)
-        attr_types = ",".join(
-            f.dataType.simpleString() for f in fields if f.name != d.key)
-        key_type = next(
-            (f.dataType.simpleString() for f in fields if f.name == d.key), "")
-        # round-9: SQL-created dictionaries carry their origin
-        # (SOURCE clause) so the reference's `source` column renders
-        src = ""
-        from clickhouse_25_5_3_75_stable_spark.dictionary_sql import (
-            SQL_DICTIONARIES,
-        )
-
-        sd = SQL_DICTIONARIES.get(nm)
-        if sd is not None:
-            src = (f"File: {sd.source_file[0]}" if sd.source_file
-                   else f"ClickHouse: {sd.source_table}")
-        rows.append((
-            "default", nm, "LOADED", d.layout, d.key, key_type,
-            attr_names, attr_types, d.source.count(), src,
-        ))
-    return spark.createDataFrame(
-        rows or [],
-        "database string, name string, status string, type string, "
-        "key string, key_type string, attribute_names string, "
-        "attribute_types string, element_count bigint, source string",
-    )
+# --- the catalog: tables, columns, parts ------------------------------------
 
 
-def system_detached_tables(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
-    """system.detached_tables (StorageSystemDetachedTables.cpp, new in
-    the reference line): tables parked by DETACH TABLE, with their
-    on-disk location."""
-    import os
-
-    rows = []
-    if sf_dir:
-        det = os.path.join(sf_dir, "_detached_tables")
-        if os.path.isdir(det):
-            for name in sorted(os.listdir(det)):
-                rows.append(("default", name, os.path.join(det, name), 0))
-    return spark.createDataFrame(
-        rows or [],
-        "database string, table string, metadata_path string, "
-        "is_permanently bigint",
-    )
-
-
-def system_macros(spark: SparkSession) -> DataFrame:
-    """system.macros (StorageSystemMacros.cpp): the session's macro
-    substitutions (reference: server-config <macros>; here set_macro)."""
-    return spark.createDataFrame(
-        sorted(MACROS.items()) if MACROS else [], "macro string, substitution string"
-    )
-
-
-def system_events(spark: SparkSession) -> DataFrame:
-    """system.events (StorageSystemEvents.cpp): cumulative session
-    counters fed by record_query."""
-    return spark.createDataFrame(
-        sorted(_EVENT_COUNTERS.items()) or [],
-        "event string, value bigint",
-    ) if _EVENT_COUNTERS else spark.createDataFrame([], "event string, value bigint")
-
-
-def system_metrics(spark: SparkSession) -> DataFrame:
-    """system.metrics (StorageSystemMetrics.cpp): instantaneous
-    scheduler gauges from the live SparkContext."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    rows = [
-        ("ActiveJobs", len(tracker.getActiveJobsIds())),
-        ("ActiveStages", len(tracker.getActiveStageIds())),
-        ("DefaultParallelism", sc.defaultParallelism),
-        ("QueryLogEntries", len(_QUERY_LOG)),
+def _columns(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.columns (StorageSystemColumns.cpp): one row per column of
+    every catalog table, with 1-based ordinal position and Spark type
+    name."""
+    return [
+        (name, f.name, i, f.dataType.simpleString())
+        for name in catalog.sync(spark, data_dir)
+        for i, f in enumerate(spark.table(name).schema.fields, start=1)
     ]
-    return spark.createDataFrame(rows, "metric string, value bigint")
 
 
-def system_projections(spark: SparkSession, data_dir: str) -> DataFrame:
-    """system.projections analogue (reference
-    src/Storages/System/StorageSystemProjections.cpp): one row per
+def _table_parts(data_dir: str, name: str) -> list[tuple[str, list]]:
+    """A catalog table's non-empty parts as (partition, [(file, footer
+    metadata)]): a flat file is the one part `all`; a table dir has
+    `all` for its root files plus one part per partition dir (names
+    starting with `_` are detached parts and projections)."""
+    import pyarrow.parquet as pq
+
+    def files_of(d: str) -> list[str]:
+        return [os.path.join(d, f) for f in sorted(os.listdir(d))
+                if f.endswith(".parquet") and not f.startswith(("_", "."))]
+
+    path = catalog.table_path(data_dir, name)
+    if not os.path.isdir(path):
+        groups = [("all", [path])]
+    else:
+        groups = [("all", files_of(path))] + [
+            (d, files_of(os.path.join(path, d)))
+            for d in sorted(os.listdir(path))
+            if not d.startswith(("_", ".")) and os.path.isdir(os.path.join(path, d))
+        ]
+    parts = []
+    for partition, files in groups:
+        metas = [(f, pq.read_metadata(f)) for f in files]
+        if sum(m.num_rows for _f, m in metas):
+            parts.append((partition, metas))
+    return parts
+
+
+# the reference's full system.tables column list
+# (StorageSystemTables.cpp ColumnsDescription, 25.5) plus its `table`
+# alias of name
+_TABLES_SCHEMA = (
+    "database string, name string, uuid string, engine string, "
+    "is_temporary tinyint, data_paths array<string>, "
+    "metadata_path string, metadata_modification_time timestamp, "
+    "metadata_version int, dependencies_database array<string>, "
+    "dependencies_table array<string>, create_table_query string, "
+    "engine_full string, as_select string, "
+    "parameterized_view_parameters array<struct<name string, type string>>, "
+    "partition_key string, sorting_key string, primary_key string, "
+    "sampling_key string, storage_policy string, total_rows bigint, "
+    "total_bytes bigint, total_bytes_uncompressed bigint, parts bigint, "
+    "active_parts bigint, total_marks bigint, "
+    "active_on_fly_data_mutations bigint, "
+    "active_on_fly_alter_mutations bigint, "
+    "active_on_fly_metadata_mutations bigint, lifetime_rows bigint, "
+    "lifetime_bytes bigint, comment string, has_own_data tinyint, "
+    "loading_dependencies_database array<string>, "
+    "loading_dependencies_table array<string>, "
+    "loading_dependent_database array<string>, "
+    "loading_dependent_table array<string>, table string"
+)
+
+_NIL_UUID = "00000000-0000-0000-0000-000000000000"
+
+
+def _tables(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.tables with the reference's full column set
+    (StorageSystemTables.cpp:152-210). Values are engine facts from
+    parquet FOOTER metadata (no data scan, the reference's own
+    quick-stat contract for total_rows/total_bytes/total_marks):
+
+    - engine/engine_full/keys come from stored DDL metadata when the
+      table was CREATEd through ddl.py, else the catalog default
+      (parquet tables present as plain MergeTree analogues);
+    - total_rows = footer num_rows; total_bytes = bytes on disk;
+      total_bytes_uncompressed = sum of row-group uncompressed sizes;
+      total_marks = row-group count (the granule analogue);
+    - uuid is the nil UUID (no Atomic database here),
+      replication/buffer/mutation counters are 0/NULL exactly like the
+      reference reports for engines without them.
+    """
+    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
+
+    rows = []
+    for name in catalog.sync(spark, data_dir):
+        path = catalog.table_path(data_dir, name)
+        parts = _table_parts(data_dir, name)
+        metas = [(f, m) for _p, fm in parts for f, m in fm]
+        td = load_table_def(data_dir, name)
+        engine = td.engine if td else "MergeTree"
+        order_by = ", ".join(td.order_by) if td and td.order_by else ""
+        cols_ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in spark.table(name).schema.fields
+        )
+        rows.append((
+            "default", name, _NIL_UUID, engine, 0, [path],
+            "", _dt.fromtimestamp(os.path.getmtime(path)), 0, [], [],
+            f"CREATE TABLE default.{name} ({cols_ddl}) ENGINE = {engine}",
+            engine + (f" ORDER BY ({order_by})" if order_by else ""), "", [],
+            (td.partition_by or "") if td else "", order_by, order_by, "",
+            "default",
+            sum(m.num_rows for _f, m in metas),
+            sum(os.path.getsize(f) for f, _m in metas),
+            sum(m.row_group(g).total_byte_size
+                for _f, m in metas for g in range(m.num_row_groups)),
+            len(parts), len(parts), sum(m.num_row_groups for _f, m in metas),
+            0, 0, 0, None, None, "", 1, [], [], [], [], name,
+        ))
+    return rows
+
+
+def _parts(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.parts (StorageSystemParts.cpp, the user-facing core
+    columns): one row per data part across the whole catalog. A flat
+    parquet table is a single always-active part; a table directory
+    contributes one part for its root files and one per partition
+    directory."""
+    rows = []
+    for name in catalog.list_tables(data_dir):
+        for partition, metas in _table_parts(data_dir, name):
+            mtime = max(os.path.getmtime(f) for f, _m in metas)
+            rows.append((
+                "default", name, partition, f"{partition}_1_1_0", "Wide", True,
+                sum(m.num_rows for _f, m in metas),
+                sum(os.path.getsize(f) for f, _m in metas),
+                sum(m.num_row_groups for _f, m in metas),
+                _dt.fromtimestamp(mtime).isoformat(sep=" ", timespec="seconds"),
+            ))
+    return rows
+
+
+def _ddl_tables(data_dir: str) -> list[tuple[str, str]]:
+    """(name, dir) of every DDL-managed table in the catalog."""
+    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
+
+    return [(n, os.path.join(data_dir, n)) for n in catalog.list_tables(data_dir)
+            if load_table_def(data_dir, n) is not None]
+
+
+# the detach-reason prefixes the reference parses off a detached part's
+# directory name (DetachedPartInfo::DETACH_REASONS, MergeTreePartInfo.h)
+_DETACH_REASONS = (
+    "broken-on-start", "covered-by-broken", "merge-not-byte-identical",
+    "mutate-not-byte-identical", "broken-from-backup", "broken",
+    "unexpected", "noquorum", "ignored", "clone", "attaching",
+    "deleting", "tmp-fetch",
+)
+
+
+def _detached_parts(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.detached_parts (StorageSystemDetachedParts.cpp:260-272)
+    over every DDL-managed table. The reason comes from the
+    directory-name prefix exactly like the reference's DetachedPartInfo
+    parser (a healthy DETACH PARTITION writes no prefix -> NULL); block
+    numbers/level are NULL — this engine's parts carry no merge lineage,
+    the same NULL the reference emits for unparsable names."""
+    rows = []
+    for table, tdir in _ddl_tables(data_dir):
+        det = os.path.join(tdir, "_detached")
+        if not os.path.isdir(det):
+            continue
+        for part in sorted(os.listdir(det)):
+            p = os.path.join(det, part)
+            if not os.path.isdir(p):
+                continue
+            size = sum(os.path.getsize(os.path.join(p, f))
+                       for f in os.listdir(p) if f.endswith(".parquet"))
+            reason = next(
+                (r for r in _DETACH_REASONS if part.startswith(r + "_")), None)
+            rows.append((
+                "default", table, part[len(reason) + 1:] if reason else part,
+                part, size, _dt.fromtimestamp(os.path.getmtime(p)),
+                "default", p, reason, None, None, None,
+            ))
+    return rows
+
+
+def _footer_stats(pdir: str):
+    """(file, row group, column, min, max, null count) of every parquet
+    file directly in `pdir`, from the footers — the statistics MergeTree
+    keeps per part, read without scanning data."""
+    import pyarrow.parquet as pq
+
+    for fname in sorted(os.listdir(pdir)):
+        if not fname.endswith(".parquet"):
+            continue
+        meta = pq.read_metadata(os.path.join(pdir, fname))
+        for rg in range(meta.num_row_groups):
+            g = meta.row_group(rg)
+            for ci in range(g.num_columns):
+                col = g.column(ci)
+                st = col.statistics
+                yield (
+                    fname, rg, col.path_in_schema,
+                    str(st.min) if st and st.has_min_max else None,
+                    str(st.max) if st and st.has_min_max else None,
+                    int(st.null_count) if st and st.null_count is not None else None,
+                )
+
+
+def _parts_columns(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.parts_columns (StorageSystemPartsColumns.cpp core):
+    per-partition per-column footer stats of every DDL-managed table."""
+    return [
+        ("default", table, part, *stats)
+        for table, tdir in _ddl_tables(data_dir)
+        for part in sorted(os.listdir(tdir))
+        if not part.startswith("_") and os.path.isdir(os.path.join(tdir, part))
+        for stats in _footer_stats(os.path.join(tdir, part))
+    ]
+
+
+def _projection_dirs(data_dir: str):
+    """(table, projection name, dir) of every materialized projection —
+    the `_projection_*` dirs ddl.add_projection writes beside the data."""
+    for table, tdir in _ddl_tables(data_dir):
+        for d in sorted(os.listdir(tdir)):
+            if d.startswith("_projection_") and os.path.isdir(os.path.join(tdir, d)):
+                yield table, d[len("_projection_"):], os.path.join(tdir, d)
+
+
+def _projection_parts(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.projection_parts (StorageSystemProjectionParts.cpp,
+    user-facing core columns): one row per materialized projection per
+    table, from footer metadata."""
+    import pyarrow.parquet as pq
+
+    rows = []
+    for table, name, pdir in _projection_dirs(data_dir):
+        files = [os.path.join(pdir, f) for f in os.listdir(pdir)
+                 if f.endswith(".parquet")]
+        rows.append((
+            name, "all_1_1_0", "default", table, "all", True,
+            sum(pq.read_metadata(f).num_rows for f in files),
+            sum(os.path.getsize(f) for f in files),
+            _dt.fromtimestamp(os.path.getmtime(pdir)),
+        ))
+    return rows
+
+
+def _projection_parts_columns(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.projection_parts_columns
+    (StorageSystemProjectionPartsColumns.cpp core): per-projection
+    per-column footer stats."""
+    return [
+        ("default", table, name, *stats[2:])
+        for table, name, pdir in _projection_dirs(data_dir)
+        for stats in _footer_stats(pdir)
+    ]
+
+
+def _projections(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.projections (StorageSystemProjections.cpp): one row per
     stored projection of every DDL-managed table in data_dir."""
-    import os
-
     from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
 
     rows = []
@@ -951,19 +401,15 @@ def system_projections(spark: SparkSession, data_dir: str) -> DataFrame:
                 ",".join(p["keys"]), ",".join(p["sums"]),
                 ",".join(p["minmaxs"]),
             ))
-    schema = ("database string, table string, name string, type string, "
-              "sorting_key string, sum_columns string, minmax_columns string")
-    return spark.createDataFrame(rows, schema)
+    return rows
 
 
-def system_mutations(spark: SparkSession, data_dir: str) -> DataFrame:
-    """system.mutations analogue (reference
-    src/Storages/System/StorageSystemMutations.cpp): the mutation
+def _mutations(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.mutations (StorageSystemMutations.cpp): the mutation
     journal ddl.mutate_table appends per table. Copy-on-write rewrites
     complete synchronously, so is_done is always 1 — the column exists
     for schema parity."""
     import json
-    import os
 
     rows = []
     for entry in sorted(os.listdir(data_dir)):
@@ -973,24 +419,443 @@ def system_mutations(spark: SparkSession, data_dir: str) -> DataFrame:
         with open(j) as fh:
             for line in fh:
                 m = json.loads(line)
+                rows.append(("default", entry, m["mutation_id"], m["command"],
+                             m["create_time"], 1))
+    return rows
+
+
+def _detached_tables(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.detached_tables (StorageSystemDetachedTables.cpp): tables
+    parked by DETACH TABLE, with their on-disk location."""
+    det = os.path.join(data_dir, "_detached_tables")
+    if not os.path.isdir(det):
+        return []
+    return [("default", name, os.path.join(det, name), 0)
+            for name in sorted(os.listdir(det))]
+
+
+def _dropped_tables(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.dropped_tables (StorageSystemDroppedTables.cpp): tables
+    parked by a non-SYNC DROP awaiting UNDROP or GC — the
+    `_dropped/<name>.<ns>` parking area ddl.drop_table writes."""
+    park = os.path.join(data_dir, "_dropped")
+    rows = []
+    if os.path.isdir(park):
+        for i, d in enumerate(sorted(os.listdir(park))):
+            name, _, ns = d.rpartition(".")
+            try:
+                ts = _dt.utcfromtimestamp(int(ns) / 1e9)
+            except ValueError:
+                name, ts = d, None
+            rows.append((i, "default", name, "", "MergeTree",
+                         os.path.join(park, d), ts))
+    return rows
+
+
+def _dropped_tables_parts(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.dropped_tables_parts (StorageSystemDroppedTablesParts.h —
+    the system.parts column core over dropped-but-parked tables):
+    parquet footers of the parts inside the `_dropped/<name>.<ns>`
+    parking area."""
+    import pyarrow.parquet as pq
+
+    rows = []
+    park = os.path.join(data_dir, "_dropped")
+    if os.path.isdir(park):
+        for d in sorted(os.listdir(park)):
+            name = d.rpartition(".")[0] or d
+            tdir = os.path.join(park, d)
+            parts = [os.path.join(root, f)
+                     for root, _dirs, fnames in os.walk(tdir)
+                     for f in fnames if f.endswith(".parquet")]
+            for i, p in enumerate(sorted(parts)):
+                meta = pq.read_metadata(p)
+                partition = (os.path.dirname(os.path.relpath(p, tdir))
+                             or "all").replace(os.sep, "/")
                 rows.append((
-                    "default", entry, m["mutation_id"], m["command"],
-                    m["create_time"], 1,
+                    "default", name, partition, f"{partition}_{i+1}_{i+1}_0",
+                    "Wide", True, meta.num_rows, os.path.getsize(p),
+                    meta.num_row_groups,
+                    _dt.fromtimestamp(os.path.getmtime(p))
+                    .isoformat(sep=" ", timespec="seconds"),
                 ))
-    schema = ("database string, table string, mutation_id string, "
-              "command string, create_time string, is_done int")
-    return spark.createDataFrame(rows, schema)
+    return rows
 
 
-def system_asynchronous_metrics(spark: SparkSession) -> DataFrame:
-    """system.asynchronous_metrics (round-7; reference
-    src/Storages/System/StorageSystemAsynchronousMetrics.cpp — columns
-    metric/value/description with the `name` alias): the periodically
-    refreshed host+server gauges. The reference samples ~400 metrics
-    from its own allocator/replication internals; this engine serves
-    the host-level subset measurable in-process (/proc + catalog),
-    each under the reference's metric name."""
-    import os
+def _data_skipping_indices(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.data_skipping_indices (StorageSystemDataSkippingIndices.cpp):
+    one row per tokenbf/ngrambf/gin sidecar directory
+    (sources/text_index.py) next to a table. Sidecars are
+    uncompressed-on-disk parquet, so compressed == on-disk; marks have
+    no analogue and report 0 like the reference does for absent
+    granules."""
+    suffix_types = (
+        ("__tokenbf", "tokenbf_v1", "tokenbf_v1(1024, 3, 0)"),
+        ("__ngrambf", "ngrambf_v1", "ngrambf_v1(3, 1024, 3, 0)"),
+        ("__gin", "gin", "gin(0)"),
+    )
+    rows = []
+    if os.path.isdir(data_dir):
+        for entry in sorted(os.listdir(data_dir)):
+            for suffix, typ, type_full in suffix_types:
+                if not entry.endswith(suffix):
+                    continue
+                sidecar = os.path.join(data_dir, entry)
+                for col in sorted(os.listdir(sidecar)):
+                    cdir = os.path.join(sidecar, col)
+                    if not os.path.isdir(cdir):
+                        continue
+                    nbytes = sum(
+                        os.path.getsize(os.path.join(r, f))
+                        for r, _d, fs in os.walk(cdir) for f in fs)
+                    rows.append(("default", entry[: -len(suffix)],
+                                 f"{col}_{typ}", typ, type_full, col, 1,
+                                 nbytes, nbytes, 0))
+    return rows
+
+
+def _iceberg_history(spark: SparkSession, data_dir: str) -> list[tuple]:
+    """system.iceberg_history (StorageSystemIcebergHistory.cpp):
+    snapshot history of every Iceberg table — any directory under the
+    data dir with metadata/version-hint.text, plus CLI-attached
+    ENGINE = Iceberg tables — replayed with its parent-chain ancestry."""
+    from clickhouse_25_5_3_75_stable_spark.sources.datalake import (
+        LAKE_TABLES,
+        iceberg_history_rows,
+    )
+
+    paths = []
+    if os.path.isdir(data_dir):
+        paths = [os.path.join(data_dir, e) for e in sorted(os.listdir(data_dir))
+                 if os.path.exists(os.path.join(data_dir, e, "metadata",
+                                                "version-hint.text"))]
+    paths += [p for _n, (fmt, p) in sorted(LAKE_TABLES.items()) if fmt == "iceberg"]
+    return [r for p in paths for r in iceberg_history_rows(p)]
+
+
+# --- the engine's own surface -----------------------------------------------
+
+
+def _functions(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.functions (StorageSystemFunctions.cpp): every ClickHouse
+    function name this engine's dialect resolves, plus the excluded ones
+    with the documented reason."""
+    from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS
+    from clickhouse_25_5_3_75_stable_spark.functions.dialect_extras import (
+        CH_FUNCTIONS_EXCLUDED,
+    )
+
+    rows = [(name, "direct", None) for name in CH_FUNCTIONS]
+    return rows + [(name, "excluded", reason)
+                   for name, reason in CH_FUNCTIONS_EXCLUDED.items()
+                   if name not in CH_FUNCTIONS]
+
+
+def _data_type_families(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.data_type_families (StorageSystemDataTypeFamilies.cpp):
+    every ClickHouse type name the engine's type map resolves, with the
+    Spark type it maps to in 'exact' mode."""
+    from clickhouse_25_5_3_75_stable_spark.functions.typemap import (
+        _SCALARS,
+        ch_type_to_spark,
+    )
+
+    canonical = {
+        "int8": "Int8", "int16": "Int16", "int32": "Int32", "int64": "Int64",
+        "int128": "Int128", "int256": "Int256", "uint8": "UInt8",
+        "uint16": "UInt16", "uint32": "UInt32", "uint64": "UInt64",
+        "uint128": "UInt128", "uint256": "UInt256", "float32": "Float32",
+        "float64": "Float64", "bfloat16": "BFloat16", "bool": "Bool",
+        "string": "String", "date": "Date", "date32": "Date32",
+        "datetime": "DateTime", "datetime32": "DateTime32", "uuid": "UUID",
+        "ipv4": "IPv4", "ipv6": "IPv6", "json": "JSON", "dynamic": "Dynamic",
+        "nothing": "Nothing",
+    }
+    rows = [(canonical.get(name, name), 1, _SCALARS[name][0])
+            for name in sorted(_SCALARS)]
+    return rows + [
+        (comp.split("(")[0], 1, ch_type_to_spark(comp))
+        for comp in ("Array(Int64)", "Tuple(Int64, String)", "Map(String, Int64)",
+                     "Nullable(Int64)", "LowCardinality(String)")
+    ]
+
+
+def _formats(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.formats (StorageSystemFormats.cpp): every format the
+    engine reads or writes, plus the excluded reference formats with
+    their reasons. Protobuf is supported only when the spark-protobuf
+    jar is loadable."""
+    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
+        FORMAT_EXCLUSIONS,
+    )
+    from clickhouse_25_5_3_75_stable_spark.sources.protobuf_shim import (
+        protobuf_available,
+    )
+
+    native = [
+        ("Parquet", 1, 1), ("ORC", 1, 1), ("CSV", 1, 1),
+        ("CSVWithNames", 1, 1), ("TSV", 1, 1), ("TabSeparated", 1, 1),
+        ("JSONEachRow", 1, 1), ("JSONLines", 1, 1), ("Avro", 1, 1),
+        ("LineAsString", 1, 1), ("RawBLOB", 1, 1), ("XML", 1, 1),
+        ("Arrow", 1, 1), ("ArrowStream", 1, 1), ("Npy", 1, 1),
+        ("Regexp", 1, 0), ("Values", 1, 0), ("RowBinary", 1, 1),
+        ("Native", 1, 1), ("Pretty", 0, 1), ("Vertical", 0, 1),
+        ("MsgPack", 1, 1), ("BSONEachRow", 1, 1), ("Template", 1, 1),
+        ("CustomSeparated", 1, 1), ("TSKV", 1, 1),
+        ("JSONAsString", 1, 0), ("JSONCompactEachRow", 1, 1),
+        ("JSONCompact", 1, 0), ("JSONColumns", 1, 0),
+        ("JSONCompactColumns", 1, 0), ("JSONObjectEachRow", 1, 0),
+        ("HiveText", 1, 1), ("One", 1, 0), ("Form", 1, 0),
+        ("Null", 0, 1), ("Markdown", 0, 1), ("SQLInsert", 0, 1),
+        ("ParquetMetadata", 1, 0), ("CapnProto", 1, 1),
+        ("MySQLDump", 1, 0), ("Prometheus", 0, 1),
+    ]
+    rows = [(n, i, o, None) for n, i, o in native]
+    # Protobuf is honest about the classpath: supported when the
+    # spark-protobuf jar is loadable, excluded-with-reason otherwise
+    # (review finding: an unconditional is_input=1 row pointed users
+    # at a NotImplementedError)
+    if protobuf_available(spark):
+        rows += [("Protobuf", 1, 1, None), ("ProtobufSingle", 1, 0, None)]
+    else:
+        why = "spark-protobuf jar not on the classpath (sources/protobuf_shim.py has the recipe)"
+        rows += [("Protobuf", 0, 0, why), ("ProtobufSingle", 0, 0, why)]
+    return rows + [(n, 0, 0, why) for n, why in sorted(FORMAT_EXCLUSIONS.items())]
+
+
+def _time_zones(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.time_zones (StorageSystemTimeZones.cpp): the IANA zone
+    names available to toTimeZone()/convert_timezone."""
+    import zoneinfo
+
+    return [(z,) for z in sorted(zoneinfo.available_timezones())]
+
+
+def _table_functions(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.table_functions (StorageSystemTableFunctions.cpp):
+    introspected from the table_functions module."""
+    import inspect
+
+    from clickhouse_25_5_3_75_stable_spark.sources import table_functions as tf
+
+    return [(name,) for name, fn in inspect.getmembers(tf, inspect.isfunction)
+            if not name.startswith("_") and fn.__module__ == tf.__name__]
+
+
+def _collations(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.collations (StorageSystemCollations.cpp): the collation
+    names ORDER BY ... COLLATE accepts — engine aliases plus the Spark 4
+    natives they resolve to."""
+    from clickhouse_25_5_3_75_stable_spark.operators.collation import _ALIASES
+
+    return sorted(_ALIASES.items()) + [
+        (n, n) for n in ("UTF8_BINARY", "UTF8_LCASE", "UNICODE",
+                         "UNICODE_CI", "UNICODE_AI", "UNICODE_CI_AI")]
+
+
+_KEYWORDS = sorted({
+    "SELECT", "FROM", "WHERE", "PREWHERE", "GROUP", "BY", "HAVING",
+    "QUALIFY", "ORDER", "LIMIT", "OFFSET", "WITH", "TOTALS", "TIES",
+    "DISTINCT", "ON", "AS", "JOIN", "INNER", "LEFT", "RIGHT", "FULL",
+    "CROSS", "SEMI", "ANTI", "ANY", "ASOF", "PASTE", "USING", "UNION",
+    "ALL", "INTERSECT", "EXCEPT", "ARRAY", "SAMPLE", "FINAL",
+    "SETTINGS", "FORMAT", "INTO", "OUTFILE", "VALUES", "INSERT",
+    "CREATE", "TABLE", "VIEW", "MATERIALIZED", "FUNCTION", "DROP",
+    "ALTER", "UPDATE", "DELETE", "OPTIMIZE", "DEDUPLICATE", "TTL",
+    "PARTITION", "PRIMARY", "KEY", "ENGINE", "IF", "NOT", "EXISTS",
+    "AND", "OR", "IN", "BETWEEN", "LIKE", "ILIKE", "IS", "NULL",
+    "CASE", "WHEN", "THEN", "ELSE", "END", "CAST", "INTERVAL",
+    "ASC", "DESC", "NULLS", "FIRST", "LAST", "COLLATE", "FILL",
+    "INTERPOLATE", "STEP", "ROLLUP", "CUBE", "GROUPING", "SETS",
+    "WINDOW", "OVER", "ROWS", "RANGE", "GROUPS", "PRECEDING",
+    "FOLLOWING", "CURRENT", "ROW", "UNBOUNDED",
+})
+
+# the engines sources/engines.py, operators/mergetree.py and ddl.py
+# implement, with the reference's capability flags
+_TABLE_ENGINES = [
+    #  name, supports_ttl, supports_sort, supports_skip_idx, supports_dedup
+    ("MergeTree", 1, 1, 1, 1),
+    ("ReplacingMergeTree", 1, 1, 1, 1),
+    ("SummingMergeTree", 1, 1, 1, 1),
+    ("AggregatingMergeTree", 1, 1, 1, 1),
+    ("CollapsingMergeTree", 1, 1, 1, 1),
+    ("VersionedCollapsingMergeTree", 1, 1, 1, 1),
+    ("GraphiteMergeTree", 1, 1, 1, 1),
+    ("Memory", 0, 0, 0, 0),
+    ("Set", 0, 0, 0, 0),
+    ("Join", 0, 0, 0, 0),
+    ("Buffer", 0, 0, 0, 0),
+    ("Null", 0, 0, 0, 0),
+    ("Merge", 0, 0, 0, 0),
+    ("File", 0, 0, 0, 0),
+    ("URL", 0, 0, 0, 0),
+    ("Distributed", 0, 0, 0, 0),
+    ("View", 0, 0, 0, 0),
+    ("MaterializedView", 0, 0, 0, 0),
+    ("Kafka", 0, 0, 0, 0),
+]
+
+# the layout knobs sources/layout.py honors, with their Spark-side meaning
+_MERGE_TREE_SETTINGS = [
+    ("index_granularity", "8192",
+     "row-group size target passed to the parquet writer"),
+    ("max_file_rows", "1048576",
+     "rows per part file before the writer rolls (maxRecordsPerFile)"),
+    ("partition_by", "", "directory-encoded partition expression of the layout"),
+    ("order_by", "", "sortWithinPartitions order applied at layout-write time"),
+    ("ttl_column", "", "TTL expression column consulted by operators/ttl.py"),
+]
+
+# the runtime dependencies of this engine and their public licenses
+_LICENSES = [
+    ("pyspark", "Apache-2.0"),
+    ("pyarrow", "Apache-2.0"),
+    ("pandas", "BSD-3-Clause"),
+    ("numpy", "BSD-3-Clause"),
+    ("duckdb (test oracle only)", "MIT"),
+    ("CityHash v1.0.2 (algorithm)", "MIT"),
+    ("SipHash (algorithm)", "CC0/public domain reference"),
+    ("xxHash (algorithm)", "BSD-2-Clause"),
+    ("S2 geometry (cell model)", "Apache-2.0"),
+    ("H3 (index bit layout)", "Apache-2.0"),
+]
+
+# this engine's own monitoring set over the system tables it serves
+# (StorageSystemDashboards.cpp shape)
+_DASHBOARDS = [
+    ("overview", "Queries over time",
+     "SELECT event_time, query_duration_ms FROM system.query_log"),
+    ("overview", "Error counts", "SELECT name, value FROM system.errors"),
+    ("overview", "Profile events", "SELECT event, value FROM system.events"),
+    ("storage", "Part sizes",
+     "SELECT table, name, bytes_on_disk FROM system.parts"),
+]
+
+# The engine's own behaviour-affecting default changes, one entry per
+# documented semantic pin (MIGRATION.md / round verdicts). The
+# reference's table carries ITS release history out of
+# Core/SettingsChangesHistory.cpp — same structure, per-version rows
+# of (name, previous_value, new_value, reason) tuples.
+_SETTINGS_CHANGES = [
+    ("Session", "round-3", [
+        ("intdiv_rounding", "floor", "truncate",
+         "DivisionUtils.h checkedDivision is C++ integer division "
+         "(truncates toward zero); the intDiv docstring claiming floor "
+         "is wrong"),
+        ("order_by_nulls", "nulls_first", "nulls_last",
+         "ClickHouse ASC places NULLs last; Spark default is first"),
+        ("to_start_of_week_mode", "monday", "sunday",
+         "toStartOfWeek/toWeek default mode 0 is Sunday-first"),
+    ]),
+    ("Session", "round-5", [
+        ("int128_transport", "double", "decimal38",
+         "Int128 aggregates travel as DECIMAL(38) instead of lossy "
+         "double"),
+        ("uint64_transport", "bigint", "two_complement",
+         "UInt64 values beyond 2^63 travel as BIGINT two's-complement"),
+    ]),
+    ("Session", "round-6", [
+        ("length_unit", "characters", "bytes",
+         "length(String) counts BYTES everywhere (octet_length); "
+         "lengthUTF8 counts characters"),
+    ]),
+]
+
+
+def _settings_changes(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.settings_changes (StorageSystemSettingsChanges.cpp — type,
+    version, changes Array(Tuple(name, previous_value, new_value,
+    reason))): this engine's documented behaviour pins in the structure
+    the reference uses for its release history."""
+    return [
+        (typ, ver, [{"name": n, "previous_value": p, "new_value": v, "reason": r}
+                    for n, p, v, r in changes])
+        for typ, ver, changes in _SETTINGS_CHANGES
+    ]
+
+
+# --- the live session --------------------------------------------------------
+
+
+def _processes(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.processes (StorageSystemProcesses.cpp): the Spark
+    scheduler's currently-active jobs."""
+    tracker = spark.sparkContext.statusTracker()
+    infos = [(jid, tracker.getJobInfo(jid)) for jid in tracker.getActiveJobsIds()]
+    return [(int(jid), str(info.status), len(info.stageIds))
+            for jid, info in infos if info]
+
+
+def _clusters(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.clusters (StorageSystemClusters.cpp): one row per executor
+    of the live Spark application (local mode: the driver doubles as the
+    single executor)."""
+    sc = spark.sparkContext
+    try:  # executor list via the JVM status tracker (cluster mode)
+        infos = sc._jsc.sc().statusTracker().getExecutorInfos()
+        return [("default", i + 1, e.host(), int(e.numRunningTasks()))
+                for i, e in enumerate(infos)]
+    except Exception:  # local fallback: the driver is the one executor
+        return [("default", 1, sc.master, 0)]
+
+
+def _build_options(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.build_options (StorageSystemBuildOptions.cpp): engine
+    build/runtime identity."""
+    import platform
+    import sys
+
+    import pyspark
+
+    return [
+        ("SPARK_VERSION", pyspark.__version__),
+        ("PYTHON_VERSION", sys.version.split()[0]),
+        ("PLATFORM", platform.platform()),
+        ("REFERENCE", "ClickHouse-25.5.3.75-stable"),
+    ]
+
+
+def _disks(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.disks (StorageSystemDisks.cpp): free/total bytes of the
+    storage path."""
+    import shutil
+
+    u = shutil.disk_usage("/")
+    return [("default", "/", u.free, u.total)]
+
+
+def _warnings(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.warnings (StorageSystemWarnings.cpp): environment
+    capability warnings the session would surface at startup."""
+    from clickhouse_25_5_3_75_stable_spark.sources.protobuf_shim import (
+        protobuf_available,
+    )
+
+    if protobuf_available(spark):
+        return []
+    return [("spark-protobuf jar absent: Protobuf formats are "
+             "capability-gated (sources/protobuf_shim.py has the recipe)",)]
+
+
+def _metrics(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.metrics (StorageSystemMetrics.cpp): instantaneous
+    scheduler gauges from the live SparkContext."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    return [
+        ("ActiveJobs", len(tracker.getActiveJobsIds())),
+        ("ActiveStages", len(tracker.getActiveStageIds())),
+        ("DefaultParallelism", sc.defaultParallelism),
+        ("QueryLogEntries", len(_QUERY_LOG)),
+    ]
+
+
+def _asynchronous_metrics(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.asynchronous_metrics (StorageSystemAsynchronousMetrics.cpp
+    — metric/value/description): the host-level subset of the
+    reference's periodically refreshed gauges measurable in-process
+    (/proc + catalog), each under the reference's metric name."""
     import time
 
     rows: list[tuple[str, float, str]] = []
@@ -1045,408 +910,44 @@ def system_asynchronous_metrics(spark: SparkSession) -> DataFrame:
         "Total number of tables summed across the databases on the server, excluding the databases that cannot contain MergeTree tables.")
     add("CPUCount", float(os.cpu_count() or 0),
         "The number of logical CPU cores available to the server.")
-    return spark.createDataFrame(
-        rows, "metric string, value double, description string"
-    )
+    return rows
 
 
-# The engine's own behaviour-affecting default changes, one entry per
-# documented semantic pin (MIGRATION.md / round verdicts). The
-# reference's table carries ITS release history out of
-# Core/SettingsChangesHistory.cpp — same structure, per-version rows
-# of (name, previous_value, new_value, reason) tuples.
-_SETTINGS_CHANGES = [
-    ("Session", "round-3", [
-        ("intdiv_rounding", "floor", "truncate",
-         "DivisionUtils.h checkedDivision is C++ integer division "
-         "(truncates toward zero); the intDiv docstring claiming floor "
-         "is wrong"),
-        ("order_by_nulls", "nulls_first", "nulls_last",
-         "ClickHouse ASC places NULLs last; Spark default is first"),
-        ("to_start_of_week_mode", "monday", "sunday",
-         "toStartOfWeek/toWeek default mode 0 is Sunday-first"),
-    ]),
-    ("Session", "round-5", [
-        ("int128_transport", "double", "decimal38",
-         "Int128 aggregates travel as DECIMAL(38) instead of lossy "
-         "double"),
-        ("uint64_transport", "bigint", "two_complement",
-         "UInt64 values beyond 2^63 travel as BIGINT two's-complement"),
-    ]),
-    ("Session", "round-6", [
-        ("length_unit", "characters", "bytes",
-         "length(String) counts BYTES everywhere (octet_length); "
-         "lengthUTF8 counts characters"),
-    ]),
-]
-
-
-def system_settings_changes(spark: SparkSession) -> DataFrame:
-    """system.settings_changes (round-7; reference
-    src/Storages/System/StorageSystemSettingsChanges.cpp — columns
-    type Enum8, version String, changes Array(Tuple(name,
-    previous_value, new_value, reason))): the reference replays its
-    release history from Core/SettingsChangesHistory.cpp; this engine
-    serves its own documented behaviour pins in the same structure."""
-    rows = [
-        (typ, ver, [
-            {"name": n, "previous_value": p, "new_value": v, "reason": r}
-            for n, p, v, r in changes
-        ])
-        for typ, ver, changes in _SETTINGS_CHANGES
-    ]
-    return spark.createDataFrame(
-        rows,
-        "type string, version string, changes array<struct<name:string,"
-        "previous_value:string,new_value:string,reason:string>>",
-    )
-
-
-def system_quotas(spark: SparkSession) -> DataFrame:
-    """system.quotas (round-7; reference
-    src/Storages/System/StorageSystemQuotas.cpp): the default server
-    exposes the users.xml `default` quota — keyed by user name, one
-    3600-second interval, applied to the default user. UUIDs are
-    deterministic (UUID5 over the quota name) since this engine has no
-    access-entity store."""
-    import uuid
-
-    rows = [(
-        "default",
-        str(uuid.uuid5(uuid.NAMESPACE_OID, "quota:default")),
-        "users.xml",
-        ["user_name"],
-        [3600],
-        False,
-        ["default"],
-        [],
-    )]
-    return spark.createDataFrame(
-        rows,
-        "name string, id string, storage string, keys array<string>, "
-        "durations array<int>, apply_to_all boolean, "
-        "apply_to_list array<string>, apply_to_except array<string>",
-    )
-
-
-def system_parts_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """system.parts on the SQL route (round-7; reference
-    StorageSystemParts.cpp — the user-facing core columns): one row
-    per data part across the whole catalog. A flat parquet table is a
-    single always-active part; a table directory contributes one part
-    for its root files and one per partition directory. All values
-    come from filesystem/footer metadata — never a data scan (the
-    reference's quick-stat contract)."""
-    import datetime
-
-    rows = []
-    for name in catalog.list_tables(sf_dir):
-        for partition, metas in _table_parts(sf_dir, name):
-            mtime = max(os.path.getmtime(f) for f, _m in metas)
-            rows.append((
-                "default", name, partition, f"{partition}_1_1_0", "Wide", True,
-                sum(m.num_rows for _f, m in metas),
-                sum(os.path.getsize(f) for f, _m in metas),
-                sum(m.num_row_groups for _f, m in metas),
-                datetime.datetime.fromtimestamp(mtime)
-                .isoformat(sep=" ", timespec="seconds"),
-            ))
-    return spark.createDataFrame(
-        rows,
-        "database string, table string, partition string, name string, "
-        "part_type string, active boolean, rows bigint, "
-        "bytes_on_disk bigint, marks bigint, modification_time string",
-    )
-
-
-# Quota resource kinds (reference src/Access/Common/QuotaDefs.h:11-26,
-# lowercased names per QuotaTypeInfo; execution_time renders as Float64
-# seconds — output_denominator 1e9 — the rest as UInt64)
-_QUOTA_TYPES = [
-    ("queries", False), ("query_selects", False), ("query_inserts", False),
-    ("errors", False), ("result_rows", False), ("result_bytes", False),
-    ("read_rows", False), ("read_bytes", False), ("execution_time", True),
-    ("written_bytes", False), ("failed_sequential_authentications", False),
-]
-
-
-# session error registry: name -> [code, count, last_time_iso, last_msg]
-_ERROR_COUNTERS: dict[str, list] = {}
-
-
-def record_error(name: str, code: int, message: str) -> None:
-    """Feed system.errors (called by record_chsql_error at the public
-    API boundary — round-8: construction-time recording over-counted
-    internal control-flow errors)."""
-    ent = _ERROR_COUNTERS.setdefault(name, [code, 0, None, ""])
-    ent[1] += 1
-    ent[2] = _dt.now().isoformat(sep=" ", timespec="seconds")
-    ent[3] = message[:500]
-
-
-def system_errors(spark: SparkSession) -> DataFrame:
-    """system.errors (round-7; reference
-    src/Storages/System/StorageSystemErrors.cpp — name/code/value/
-    last_error_time/last_error_message/last_error_trace/remote/
-    query_id): per-error-code counters since session start. This
-    engine's failure surface maps onto NOT_IMPLEMENTED(48) and
-    SYNTAX_ERROR(62); traces stay empty (no physical addresses in a
-    JVM/Python runtime) and remote is always false (no distributed
-    exception transport)."""
-    rows = [
-        (name, ent[0], ent[1], ent[2], ent[3], [], False,
-         current_query_id())
-        for name, ent in sorted(_ERROR_COUNTERS.items())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "name string, code int, value bigint, last_error_time string, "
-        "last_error_message string, last_error_trace array<bigint>, "
-        "remote boolean, query_id string",
-    )
-
-
-def system_settings_profile_elements(spark: SparkSession) -> DataFrame:
-    """system.settings_profile_elements (round-7; reference
-    src/Storages/System/StorageSystemSettingsProfileElements.cpp):
-    the elements of the served profiles — the readonly profile's
-    single readonly=1 element, writability CONST (the reference's
-    enum for unchangeable)."""
-    rows = [(
-        "readonly", None, None, 0, "readonly", "1", None, None,
-        "CONST", None,
-    )]
-    return spark.createDataFrame(
-        rows,
-        "profile_name string, user_name string, role_name string, "
-        "index bigint, setting_name string, value string, min string, "
-        "max string, writability string, inherit_profile string",
-    )
-
-
-def system_merges(spark: SparkSession) -> DataFrame:
-    """system.merges (round-7; reference
-    src/Storages/System/StorageSystemMerges.cpp): in-flight merges.
-    This engine's OPTIMIZE rewrites run synchronously inside the
-    statement, so the table is always empty — served with the
-    user-facing column core for schema parity."""
-    return spark.createDataFrame(
-        [],
-        "database string, table string, elapsed double, progress double, "
-        "num_parts bigint, result_part_name string, is_mutation boolean, "
-        "total_size_bytes_compressed bigint, rows_read bigint, "
-        "rows_written bigint",
-    )
-
-
-def system_quota_limits(spark: SparkSession) -> DataFrame:
-    """system.quota_limits (round-7; reference
-    src/Storages/System/StorageSystemQuotaLimits.cpp): one row per
-    (quota, interval) with a nullable max_<type> column per QuotaType.
-    The default users.xml quota has one non-randomized 3600s interval
-    with every limit unset."""
-    schema = ("quota_name string, duration int, is_randomized_interval "
-              "boolean, " + ", ".join(
-                  f"max_{n} {'double' if f else 'bigint'}"
-                  for n, f in _QUOTA_TYPES))
-    rows = [tuple(["default", 3600, False] + [None] * len(_QUOTA_TYPES))]
-    return spark.createDataFrame(rows, schema)
-
-
-def system_quota_usage(spark: SparkSession) -> DataFrame:
-    """system.quota_usage (round-7; reference
-    src/Storages/System/StorageSystemQuotaUsage.cpp): the current
-    session's consumption against its quota intervals. queries/errors
-    come from the live query log; byte/row counters this engine does
-    not meter stay NULL (the reference also emits NULL for untracked
-    kinds)."""
-    import datetime as dt
-
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    start = now.replace(minute=0, second=0, microsecond=0)
-    end = start + dt.timedelta(seconds=3600)
-    queries = len(_QUERY_LOG)
-    # log entries are tuples (ts, kind, query, ...); exception kinds
-    # follow the reference's type names
-    errors = sum(1 for q in _QUERY_LOG if "Exception" in str(q[1]))
-    vals: list = []
-    for n, f in _QUOTA_TYPES:
-        if n == "queries":
-            vals.append(queries)
-        elif n == "errors":
-            vals.append(errors)
-        elif n == "failed_sequential_authentications":
-            vals.append(0)
-        else:
-            vals.append(None)
-        vals.append(None)  # max_<type>: unset on the default quota
-    cols = ", ".join(
-        f"{n} {'double' if f else 'bigint'}, "
-        f"max_{n} {'double' if f else 'bigint'}"
-        for n, f in _QUOTA_TYPES
-    )
-    schema = ("quota_name string, quota_key string, start_time timestamp, "
-              "end_time timestamp, duration int, " + cols)
-    row = tuple(["default", "default", start, end, 3600] + vals)
-    return spark.createDataFrame([row], schema)
-
-
-def system_settings_profiles(spark: SparkSession) -> DataFrame:
-    """system.settings_profiles (round-7; reference
-    src/Storages/System/StorageSystemSettingsProfiles.cpp): the default
-    server exposes the users.xml `default` profile (applied to the
-    default user) and `readonly` (one element: readonly=1, applied to
-    nobody). Deterministic UUID5 ids, as in system.quotas."""
-    import uuid
-
-    rows = [
-        ("default", str(uuid.uuid5(uuid.NAMESPACE_OID, "profile:default")),
-         "users.xml", 0, False, ["default"], []),
-        ("readonly", str(uuid.uuid5(uuid.NAMESPACE_OID, "profile:readonly")),
-         "users.xml", 1, False, [], []),
-    ]
-    return spark.createDataFrame(
-        rows,
-        "name string, id string, storage string, num_elements bigint, "
-        "apply_to_all boolean, apply_to_list array<string>, "
-        "apply_to_except array<string>",
-    )
-
-
-def system_row_policies(spark: SparkSession) -> DataFrame:
-    """system.row_policies (round-7; reference
-    src/Storages/System/StorageSystemRowPolicies.cpp): no policies on a
-    default server — the full column surface over zero rows."""
-    return spark.createDataFrame(
-        [],
-        "name string, short_name string, database string, table string, "
-        "id string, storage string, select_filter string, "
-        "is_restrictive boolean, apply_to_all boolean, "
-        "apply_to_list array<string>, apply_to_except array<string>",
-    )
-
-
-def system_dropped_tables(spark: SparkSession, base_dir: str) -> DataFrame:
-    """system.dropped_tables (round-8; reference
-    src/Storages/System/StorageSystemDroppedTables.cpp): tables parked
-    by a non-SYNC DROP awaiting UNDROP or GC. REAL content: the
-    `_dropped/<name>.<ns>` parking area ddl.drop_table writes."""
-    import datetime as dt
-
-    park = os.path.join(base_dir, "_dropped")
-    rows = []
-    if os.path.isdir(park):
-        for i, d in enumerate(sorted(os.listdir(park))):
-            name, _, ns = d.rpartition(".")
-            try:
-                ts = dt.datetime.utcfromtimestamp(int(ns) / 1e9)
-            except ValueError:
-                name, ts = d, None
-            rows.append((i, "default", name, "", "MergeTree",
-                         os.path.join(park, d), ts))
-    return spark.createDataFrame(
-        rows,
-        "index bigint, database string, table string, uuid string, "
-        "engine string, metadata_dropped_path string, "
-        "table_dropped_time timestamp",
-    )
-
-
-def system_data_skipping_indices(spark: SparkSession, base_dir: str) -> DataFrame:
-    """system.data_skipping_indices (round-8; reference
-    src/Storages/System/StorageSystemDataSkippingIndices.cpp): one row
-    per skip index. REAL content: the tokenbf/ngrambf/gin sidecar
-    directories (sources/text_index.py) found next to tables under the
-    data dir — sizes from the sidecar parquet files (this engine's
-    sidecars are uncompressed-on-disk parquet, so compressed==on-disk;
-    marks have no analogue and report 0 like the reference does for
-    absent granules)."""
-    suffix_types = (
-        ("__tokenbf", "tokenbf_v1", "tokenbf_v1(1024, 3, 0)"),
-        ("__ngrambf", "ngrambf_v1", "ngrambf_v1(3, 1024, 3, 0)"),
-        ("__gin", "gin", "gin(0)"),
-    )
-    rows = []
-    if os.path.isdir(base_dir):
-        for entry in sorted(os.listdir(base_dir)):
-            for suffix, typ, type_full in suffix_types:
-                if not entry.endswith(suffix):
-                    continue
-                table = entry[: -len(suffix)]
-                sidecar = os.path.join(base_dir, entry)
-                for col in sorted(os.listdir(sidecar)):
-                    cdir = os.path.join(sidecar, col)
-                    if not os.path.isdir(cdir):
-                        continue
-                    nbytes = sum(
-                        os.path.getsize(os.path.join(r, f))
-                        for r, _d, fs in os.walk(cdir) for f in fs)
-                    rows.append(("default", table, f"{col}_{typ}", typ,
-                                 type_full, col, 1, nbytes, nbytes, 0))
-    return spark.createDataFrame(
-        rows,
-        "database string, table string, name string, type string, "
-        "type_full string, expr string, granularity bigint, "
-        "data_compressed_bytes bigint, data_uncompressed_bytes bigint, "
-        "marks_bytes bigint",
-    )
-
-
-def system_server_settings(spark: SparkSession) -> DataFrame:
-    """system.server_settings (round-8; reference
-    src/Storages/System/StorageSystemServerSettings.cpp): the
-    process-level knobs of THIS engine — the Spark session settings
-    that play the reference's server-config role, with `changed`
-    computed against the engine's documented defaults."""
-    defaults = {
-        "spark.sql.shuffle.partitions": "32",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.files.maxPartitionBytes": "134217728b",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.parquet.compression.codec": "snappy",
-    }
-    descs = {
-        "spark.sql.shuffle.partitions": "Partitions for shuffles (the reference's max_threads analogue)",
-        "spark.sql.session.timeZone": "Session time zone (reference: timezone)",
-        "spark.sql.adaptive.enabled": "Runtime re-optimization (AQE)",
-        "spark.sql.files.maxPartitionBytes": "Max bytes per scan partition (reference: max_block_size analogue)",
-        "spark.sql.execution.arrow.pyspark.enabled": "Arrow transfer for Python UDFs",
-        "spark.sql.parquet.compression.codec": "Part compression codec (reference: compression method)",
+def _server_settings(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.server_settings (StorageSystemServerSettings.cpp): the
+    Spark session settings that play the reference's server-config
+    role, with `changed` computed against the engine's documented
+    defaults."""
+    settings = {  # name: (default, description)
+        "spark.sql.shuffle.partitions": (
+            "32", "Partitions for shuffles (the reference's max_threads analogue)"),
+        "spark.sql.session.timeZone": (
+            "UTC", "Session time zone (reference: timezone)"),
+        "spark.sql.adaptive.enabled": (
+            "true", "Runtime re-optimization (AQE)"),
+        "spark.sql.files.maxPartitionBytes": (
+            "134217728b", "Max bytes per scan partition (reference: max_block_size analogue)"),
+        "spark.sql.execution.arrow.pyspark.enabled": (
+            "true", "Arrow transfer for Python UDFs"),
+        "spark.sql.parquet.compression.codec": (
+            "snappy", "Part compression codec (reference: compression method)"),
     }
     rows = []
-    for name, dflt in defaults.items():
+    for name, (dflt, desc) in settings.items():
         try:
             val = spark.conf.get(name)
         except Exception:
             val = dflt
-        rows.append((name, str(val), dflt, int(str(val) != dflt),
-                     descs[name], "String", "Yes", 0))
-    return spark.createDataFrame(
-        rows,
-        "name string, value string, default string, changed int, "
-        "description string, type string, "
-        "changeable_without_restart string, is_obsolete int",
-    )
+        rows.append((name, str(val), dflt, int(str(val) != dflt), desc,
+                     "String", "Yes", 0))
+    return rows
 
 
-def system_user_directories(spark: SparkSession) -> DataFrame:
-    """system.user_directories (round-8; reference
-    src/Storages/System/StorageSystemUserDirectories.cpp): where access
-    entities come from — this library engine has the single implicit
-    users.xml-equivalent directory."""
-    return spark.createDataFrame(
-        [("users_xml", "users_xml", "{}", 0)],
-        "name string, type string, params string, precedence bigint",
-    )
-
-
-def system_contributors(spark: SparkSession) -> DataFrame:
-    """system.contributors (round-8; reference
-    src/Storages/System/StorageSystemContributors.generated.cpp is
-    produced from the project's git history): THIS engine's authorship
-    from its own git log when available, else the static project
-    author."""
+def _contributors(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.contributors (the reference generates
+    StorageSystemContributors.generated.cpp from its git history): this
+    engine's authors from its own git log when available, else the
+    static project author."""
     names = []
     try:
         import subprocess
@@ -1461,230 +962,184 @@ def system_contributors(spark: SparkSession) -> DataFrame:
             names = sorted(set(out.stdout.split()))
     except Exception:
         pass
-    if not names:
-        names = ["spark-graft"]
-    return spark.createDataFrame([(n,) for n in names], "name string")
+    return [(n,) for n in names or ["spark-graft"]]
 
 
-def system_current_roles(spark: SparkSession) -> DataFrame:
-    """system.current_roles (reference StorageSystemCurrentRoles.cpp):
-    none — the implicit default user carries direct grants, no roles
-    (matches the empty system.roles)."""
-    return spark.createDataFrame(
-        [], "role_name string, with_admin_option boolean, is_default boolean")
+def _backups(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.backups (StorageSystemBackups.cpp reads the BackupsWorker
+    registry): one row per BACKUP/RESTORE this process ran — id, name =
+    the File(...) spec, status per BackupStatus.h, error, start/end
+    time, num_files, total_size."""
+    from clickhouse_25_5_3_75_stable_spark.ddl import BACKUP_LOG
+
+    return [(e["id"], e["name"], e["status"], e["error"], e["start_time"],
+             e["end_time"], e["num_files"], e["total_size"]) for e in BACKUP_LOG]
 
 
-def system_enabled_roles(spark: SparkSession) -> DataFrame:
-    """system.enabled_roles (reference StorageSystemEnabledRoles.cpp):
-    empty, like current_roles."""
-    return spark.createDataFrame(
-        [], "role_name string, with_admin_option boolean, "
-            "is_current boolean, is_default boolean")
+def _dictionaries(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.dictionaries (StorageSystemDictionaries.cpp): the live
+    named dictionary objects — layout, key, attribute names/types, the
+    SOURCE of SQL-created ones, and the loaded row count (the count
+    reflects the current source, computed on query like the reference's
+    loaded state)."""
+    from clickhouse_25_5_3_75_stable_spark.dictionary_sql import SQL_DICTIONARIES
+    from clickhouse_25_5_3_75_stable_spark.operators.dictionary import (
+        DICTIONARY_REGISTRY,
+    )
+
+    rows = []
+    for nm in sorted(DICTIONARY_REGISTRY):
+        d = DICTIONARY_REGISTRY[nm]
+        fields = d.source.schema.fields
+        sd = SQL_DICTIONARIES.get(nm)
+        src = "" if sd is None else (f"File: {sd.source_file[0]}" if sd.source_file
+                                     else f"ClickHouse: {sd.source_table}")
+        rows.append((
+            "default", nm, "LOADED", d.layout, d.key,
+            next((f.dataType.simpleString() for f in fields if f.name == d.key), ""),
+            ",".join(f.name for f in fields if f.name != d.key),
+            ",".join(f.dataType.simpleString() for f in fields if f.name != d.key),
+            d.source.count(), src,
+        ))
+    return rows
 
 
-def system_role_grants(spark: SparkSession) -> DataFrame:
-    """system.role_grants (reference StorageSystemRoleGrants.cpp):
-    the live GRANT <role> TO <user> registry (round-9 access.py)."""
+def _users(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.users (StorageSystemUsers.cpp): the live access registry
+    (CREATE USER adds rows); the implicit default user matches the
+    reference's fresh install."""
     from clickhouse_25_5_3_75_stable_spark.access import REGISTRY
 
-    return spark.createDataFrame(
-        [(rg.user, None, rg.role, rg.role, True, rg.admin_option)
-         for rg in sorted(REGISTRY.role_grants,
-                          key=lambda r: (r.user, r.role))],
-        "user_name string, role_name string, granted_role_name string, "
-        "granted_role_id string, granted_role_is_default boolean, "
-        "with_admin_option boolean")
+    return [(u.name, u.auth_type, 1 if u.name == "default" else 0)
+            for u in (REGISTRY.users[n] for n in sorted(REGISTRY.users))]
 
 
-def system_moves(spark: SparkSession) -> DataFrame:
-    """system.moves (round-8; reference
-    src/Storages/System/StorageSystemMoves.cpp): in-flight part moves.
-    This engine's MOVE PARTITION is a synchronous O(1) directory move
-    completing inside the statement, so the table is ALWAYS empty —
-    semantically true, not a stub."""
-    return spark.createDataFrame(
-        [], "database string, table string, elapsed double, "
-            "target_disk_name string, target_disk_path string, "
-            "part_name string, part_size bigint, thread_id bigint")
+def _roles(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.roles (StorageSystemRoles.cpp): CREATE ROLE adds rows."""
+    from clickhouse_25_5_3_75_stable_spark.access import REGISTRY
+
+    return [(n, n) for n in sorted(REGISTRY.roles)]
 
 
-def system_view_refreshes(spark: SparkSession) -> DataFrame:
-    """system.view_refreshes (round-8; reference
-    src/Storages/System/StorageSystemViewRefreshes.cpp, states from
-    MaterializedView/RefreshTask.h RefreshState): REAL content — the
-    session's LIVE VIEW registry (streaming/liveview.py). A dirty view
-    is 'Scheduled' (it refreshes on next read), a clean one 'Disabled'
-    (insert-triggered, nothing pending)."""
-    from clickhouse_25_5_3_75_stable_spark.streaming.liveview import (
-        LIVE_VIEWS,
-    )
+def _grants(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.grants (StorageSystemGrants.cpp): the live GRANT registry;
+    the implicit default user holds ALL on *.* (fresh-install reference
+    semantics)."""
+    from clickhouse_25_5_3_75_stable_spark.access import REGISTRY
 
-    rows = [
-        ("default", lv.name, "", "Scheduled" if lv._dirty else "Disabled",
-         int(lv._version), None)
-        for lv in LIVE_VIEWS.values()
+    return sorted([("default", "ALL", "*", "*", 1)] + [
+        (g.grantee, g.access_type, g.database, g.table, 1 if g.grant_option else 0)
+        for g in REGISTRY.grants
+    ])
+
+
+def _role_grants(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.role_grants (StorageSystemRoleGrants.cpp): the live
+    GRANT <role> TO <user> registry."""
+    from clickhouse_25_5_3_75_stable_spark.access import REGISTRY
+
+    return [(rg.user, None, rg.role, rg.role, True, rg.admin_option)
+            for rg in sorted(REGISTRY.role_grants, key=lambda r: (r.user, r.role))]
+
+
+def _quotas(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.quotas (StorageSystemQuotas.cpp): the users.xml `default`
+    quota — keyed by user name, one 3600-second interval, applied to the
+    default user. The UUID is deterministic (UUID5 over the quota name)
+    since this engine has no access-entity store."""
+    import uuid
+
+    return [("default", str(uuid.uuid5(uuid.NAMESPACE_OID, "quota:default")),
+             "users.xml", ["user_name"], [3600], False, ["default"], [])]
+
+
+# Quota resource kinds (reference src/Access/Common/QuotaDefs.h:11-26,
+# lowercased names per QuotaTypeInfo; execution_time renders as Float64
+# seconds — output_denominator 1e9 — the rest as UInt64)
+_QUOTA_TYPES = [
+    ("queries", False), ("query_selects", False), ("query_inserts", False),
+    ("errors", False), ("result_rows", False), ("result_bytes", False),
+    ("read_rows", False), ("read_bytes", False), ("execution_time", True),
+    ("written_bytes", False), ("failed_sequential_authentications", False),
+]
+
+
+def _quota_ddl(n: str, f: bool) -> str:
+    return f"{n} {'double' if f else 'bigint'}"
+
+
+_QUOTA_USAGE_SCHEMA = (
+    "quota_name string, quota_key string, start_time timestamp, "
+    "end_time timestamp, duration int, " + ", ".join(
+        f"{_quota_ddl(n, f)}, {_quota_ddl('max_' + n, f)}" for n, f in _QUOTA_TYPES))
+
+
+def _quota_usage(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.quota_usage (StorageSystemQuotaUsage.cpp): the session's
+    consumption against its quota interval. queries/errors come from the
+    live query log; byte/row counters this engine does not meter stay
+    NULL (the reference also emits NULL for untracked kinds), and every
+    max_<type> is unset on the default quota."""
+    import datetime as dt
+
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    start = now.replace(minute=0, second=0, microsecond=0)
+    used = {
+        "queries": len(_QUERY_LOG),
+        # log entries are tuples (ts, kind, query, ...); exception kinds
+        # follow the reference's type names
+        "errors": sum(1 for q in _QUERY_LOG if "Exception" in str(q[1])),
+        "failed_sequential_authentications": 0,
+    }
+    vals = [v for n, _f in _QUOTA_TYPES for v in (used.get(n), None)]
+    return [("default", "default", start, start + dt.timedelta(seconds=3600),
+             3600, *vals)]
+
+
+def _settings_profiles(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.settings_profiles (StorageSystemSettingsProfiles.cpp): the
+    users.xml `default` profile (applied to the default user) and
+    `readonly` (one element: readonly=1, applied to nobody), with
+    deterministic UUID5 ids as in system.quotas."""
+    import uuid
+
+    return [
+        ("default", str(uuid.uuid5(uuid.NAMESPACE_OID, "profile:default")),
+         "users.xml", 0, False, ["default"], []),
+        ("readonly", str(uuid.uuid5(uuid.NAMESPACE_OID, "profile:readonly")),
+         "users.xml", 1, False, [], []),
     ]
-    return spark.createDataFrame(
-        rows,
-        "database string, view string, uuid string, status string, "
-        "refresh_count bigint, exception string",
-    )
 
 
-# ---------------------------------------------------------------------------
-# Round-9 batch. Real content where the engine has the state; the
-# replication/keeper/cache tier serves the REFERENCE column sets with
-# zero rows — semantically true in a single-process library engine
-# (no replicas, no zookeeper, no interserver fetches), the same class
-# as the always-empty system.moves.
-# ---------------------------------------------------------------------------
+def _errors(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.errors (StorageSystemErrors.cpp): per-error-code counters
+    since session start. This engine's failure surface maps onto
+    NOT_IMPLEMENTED(48) and SYNTAX_ERROR(62); traces stay empty (no
+    physical addresses in a JVM/Python runtime) and remote is always
+    false (no distributed exception transport)."""
+    return [(name, ent[0], ent[1], ent[2], ent[3], [], False, current_query_id())
+            for name, ent in sorted(_ERROR_COUNTERS.items())]
 
 
-def _ddl_tables(data_dir: str) -> list[tuple[str, str]]:
-    """(name, dir) of every DDL-managed table in the catalog."""
-    from clickhouse_25_5_3_75_stable_spark.ddl import load_table_def
+def _view_refreshes(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.view_refreshes (StorageSystemViewRefreshes.cpp, states
+    from MaterializedView/RefreshTask.h RefreshState): the session's
+    LIVE VIEW registry. A dirty view is 'Scheduled' (it refreshes on
+    next read), a clean one 'Disabled' (insert-triggered, nothing
+    pending)."""
+    from clickhouse_25_5_3_75_stable_spark.streaming.liveview import LIVE_VIEWS
 
-    return [(n, os.path.join(data_dir, n)) for n in catalog.list_tables(data_dir)
-            if load_table_def(data_dir, n) is not None]
-
-
-def system_detached_parts_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """system.detached_parts on the SQL route: the reference column
-    set (system_detached_parts_full) unioned across every DDL-managed
-    table in the catalog dir."""
-    out = None
-    for entry, tdir in _ddl_tables(sf_dir):
-        df = system_detached_parts_full(spark, tdir, entry)
-        out = df if out is None else out.unionByName(df)
-    if out is None:
-        return system_detached_parts_full(spark, os.path.join(sf_dir, "__none__"))
-    return out
+    return [("default", lv.name, "", "Scheduled" if lv._dirty else "Disabled",
+             int(lv._version), None) for lv in LIVE_VIEWS.values()]
 
 
-def system_parts_columns_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """system.parts_columns on the SQL route (reference
-    StorageSystemPartsColumns.cpp core: per-part per-column footer
-    stats): database/table prepended, unioned across DDL tables."""
-    from pyspark.sql import functions as F
-
-    out = None
-    for entry, tdir in _ddl_tables(sf_dir):
-        df = system_parts_columns(spark, tdir).select(
-            F.lit("default").alias("database"), F.lit(entry).alias("table"), "*"
-        )
-        out = df if out is None else out.unionByName(df)
-    if out is None:
-        return spark.createDataFrame(
-            [],
-            "database string, table string, partition string, file string, "
-            "row_group int, column string, min_value string, "
-            "max_value string, null_count long",
-        )
-    return out
-
-
-def system_projection_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """system.projection_parts (reference
-    StorageSystemProjectionParts.cpp, user-facing core columns): one
-    row per materialized projection per table — the `_projection_*`
-    dirs ddl.add_projection writes beside the data. Footer metadata
-    only, never a data scan."""
-    import datetime
-
-    import pyarrow.parquet as pq
-
-    rows = []
-    for entry, tdir in _ddl_tables(sf_dir):
-        for d in sorted(os.listdir(tdir)):
-            if not d.startswith("_projection_"):
-                continue
-            pdir = os.path.join(tdir, d)
-            if not os.path.isdir(pdir):
-                continue
-            n_rows = 0
-            size = 0
-            for f in os.listdir(pdir):
-                if f.endswith(".parquet"):
-                    n_rows += pq.read_metadata(os.path.join(pdir, f)).num_rows
-                    size += os.path.getsize(os.path.join(pdir, f))
-            rows.append((
-                d[len("_projection_"):], "all_1_1_0", "default", entry, "all",
-                True, n_rows, size,
-                datetime.datetime.fromtimestamp(os.path.getmtime(pdir)),
-            ))
-    return spark.createDataFrame(
-        rows,
-        "name string, parent_name string, database string, table string, "
-        "partition string, active boolean, rows bigint, "
-        "bytes_on_disk bigint, modification_time timestamp",
-    )
-
-
-def system_projection_parts_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """system.projection_parts_columns (reference
-    StorageSystemProjectionPartsColumns.cpp core): per-projection
-    per-column footer stats."""
-    from pyspark.sql import functions as F
-
-    out = None
-    for entry, tdir in _ddl_tables(sf_dir):
-        for d in sorted(os.listdir(tdir)):
-            if not d.startswith("_projection_") or not os.path.isdir(
-                os.path.join(tdir, d)
-            ):
-                continue
-            # reuse the parts_columns footer walker over the projection
-            # dir by treating it as a single-part layout
-            df = _footer_columns_of_dir(spark, os.path.join(tdir, d)).select(
-                F.lit("default").alias("database"),
-                F.lit(entry).alias("table"),
-                F.lit(d[len("_projection_"):]).alias("name"),
-                "*",
-            )
-            out = df if out is None else out.unionByName(df)
-    if out is None:
-        return spark.createDataFrame(
-            [],
-            "database string, table string, name string, column string, "
-            "min_value string, max_value string, null_count long",
-        )
-    return out
-
-
-def _footer_columns_of_dir(spark: SparkSession, pdir: str) -> DataFrame:
-    import os
-
-    import pyarrow.parquet as pq
-
-    rows = []
-    for fname in sorted(os.listdir(pdir)):
-        if not fname.endswith(".parquet"):
-            continue
-        meta = pq.read_metadata(os.path.join(pdir, fname))
-        for rg in range(meta.num_row_groups):
-            g = meta.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                st = col.statistics
-                rows.append((
-                    col.path_in_schema,
-                    str(st.min) if st and st.has_min_max else None,
-                    str(st.max) if st and st.has_min_max else None,
-                    int(st.null_count) if st and st.null_count is not None else None,
-                ))
-    return spark.createDataFrame(
-        rows, "column string, min_value string, max_value string, null_count long"
-    )
-
-
-def system_query_result_cache_table(spark: SparkSession) -> DataFrame:
-    """system.query_cache (reference
-    StorageSystemQueryResultCache.cpp column set): live entries of the
-    process-wide result cache (operators/result_cache.py) that
-    `SETTINGS use_query_cache=1` populates. result_size is the
-    optimizer-estimated plan size (the engine persists plans, not
-    serialized blocks); key_hash is sipHash64 of the canonical plan
-    key — the same keying idea as the reference's AST hash."""
+def _query_cache(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.query_cache (StorageSystemQueryResultCache.cpp column
+    set): live entries of the process-wide result cache
+    (operators/result_cache.py) that `SETTINGS use_query_cache=1`
+    populates. result_size is the optimizer-estimated plan size (the
+    engine keeps plans, not serialized blocks); key_hash is sipHash64 of
+    the canonical plan key — the reference's AST-hash keying idea."""
     import datetime
     from decimal import Decimal
 
@@ -1700,9 +1155,7 @@ def system_query_result_cache_table(spark: SparkSession) -> DataFrame:
         meta = cache.entry_meta(key)
         est = 0
         try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
+            est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         except Exception:
             pass
         expires = meta["inserted_at"] + datetime.timedelta(seconds=60)
@@ -1711,121 +1164,59 @@ def system_query_result_cache_table(spark: SparkSession) -> DataFrame:
             now > expires, True, False, expires,
             Decimal(siphash64_py(key.encode())),
         ))
-    return spark.createDataFrame(
-        rows,
-        "query string, query_id string, result_size bigint, tag string, "
-        "stale boolean, shared boolean, compressed boolean, "
-        "expires_at timestamp, key_hash decimal(20,0)",
-    )
+    return rows
 
 
-# session registry for CREATE NAMED COLLECTION (reference
-# src/Common/NamedCollections/; StorageSystemNamedCollections.cpp)
-NAMED_COLLECTIONS: dict[str, dict[str, str]] = {}
+def _named_collections(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.named_collections: the session's named-collection
+    registry, values masked like the reference masks sensitive keys
+    ([HIDDEN] for password-ish names)."""
+    sensitive = ("password", "secret", "key", "token")
+    return [
+        (name,
+         {k: "[HIDDEN]" if any(s in k.lower() for s in sensitive) else v
+          for k, v in kv.items()},
+         "SQL",
+         "CREATE NAMED COLLECTION " + name + " AS " + ", ".join(
+             f"{k} = '{v}'" for k, v in sorted(kv.items())))
+        for name, kv in sorted(NAMED_COLLECTIONS.items())
+    ]
 
 
-def create_named_collection(name: str, kv: dict[str, str]) -> None:
-    NAMED_COLLECTIONS[name] = dict(kv)
-
-
-def drop_named_collection(name: str) -> None:
-    NAMED_COLLECTIONS.pop(name, None)
-
-
-def system_named_collections(spark: SparkSession) -> DataFrame:
-    """system.named_collections (reference column set): the session's
-    named-collection registry. Values are masked like the reference
-    masks sensitive keys ([HIDDEN] for password-ish names)."""
-    rows = []
-    for name, kv in sorted(NAMED_COLLECTIONS.items()):
-        masked = {
-            k: ("[HIDDEN]" if any(s in k.lower() for s in
-                                  ("password", "secret", "key", "token"))
-                else v)
-            for k, v in kv.items()
-        }
-        create = "CREATE NAMED COLLECTION " + name + " AS " + ", ".join(
-            f"{k} = '{v}'" for k, v in sorted(kv.items())
-        )
-        rows.append((name, masked, "SQL", create))
-    return spark.createDataFrame(
-        rows,
-        "name string, collection map<string,string>, source string, "
-        "create_query string",
-    )
-
-
-def system_asynchronous_inserts(spark: SparkSession) -> DataFrame:
-    """system.asynchronous_inserts (reference column set): pending
-    RAM-buffered inserts. In this engine the Buffer engine
-    (sources/engines.py BufferTable) is the async-insert analogue —
-    each registered buffer with unflushed rows is one row here."""
-    import datetime
-    import os
-
+def _asynchronous_inserts(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.asynchronous_inserts: pending RAM-buffered inserts. The
+    Buffer engine (sources/engines.py BufferTable) is the async-insert
+    analogue — each buffer with unflushed rows is one row here."""
     from clickhouse_25_5_3_75_stable_spark.sources.engines import BUFFER_TABLES
 
-    rows = []
-    for buf in BUFFER_TABLES:
-        if buf._pending_rows <= 0:
-            continue
-        rows.append((
-            "", "default",
-            os.path.basename(buf.target.rstrip("/")).removesuffix(".parquet"),
-            "Native",
-            buf._first_pending_at or datetime.datetime.now(),
-            int(buf._pending_rows),
-        ))
-    return spark.createDataFrame(
-        rows,
-        "query string, database string, table string, format string, "
-        "first_update timestamp, total_bytes bigint",
-    )
+    return [
+        ("", "default",
+         os.path.basename(buf.target.rstrip("/")).removesuffix(".parquet"),
+         "Native", buf._first_pending_at or _dt.now(), int(buf._pending_rows))
+        for buf in BUFFER_TABLES if buf._pending_rows > 0
+    ]
 
 
-def system_user_processes(spark: SparkSession) -> DataFrame:
-    """system.user_processes (reference column set): one row for the
-    library process's user with real RSS readings."""
+def _user_processes(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.user_processes: one row for the library process's user
+    with real RSS readings."""
     import getpass
     import resource
 
     peak_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
     try:
         with open("/proc/self/statm") as fh:
-            rss_pages = int(fh.read().split()[1])
-        rss = rss_pages * resource.getpagesize()
+            rss = int(fh.read().split()[1]) * resource.getpagesize()
     except OSError:
         rss = peak_kb * 1024
-    return spark.createDataFrame(
-        [(getpass.getuser(), rss, peak_kb * 1024)],
-        "user string, memory_usage bigint, peak_memory_usage bigint",
-    )
+    return [(getpass.getuser(), rss, peak_kb * 1024)]
 
 
-def system_dashboards(spark: SparkSession) -> DataFrame:
-    """system.dashboards (reference StorageSystemDashboards.cpp shape:
-    dashboard/title/query): this engine's own monitoring set over the
-    system tables it actually serves."""
-    rows = [
-        ("overview", "Queries over time",
-         "SELECT event_time, query_duration_ms FROM system.query_log"),
-        ("overview", "Error counts",
-         "SELECT name, value FROM system.errors"),
-        ("overview", "Profile events",
-         "SELECT event, value FROM system.events"),
-        ("storage", "Part sizes",
-         "SELECT table, name, bytes_on_disk FROM system.parts"),
-    ]
-    return spark.createDataFrame(
-        rows, "dashboard string, title string, query string"
-    )
-
-
-def system_stack_trace(spark: SparkSession) -> DataFrame:
-    """system.stack_trace (reference serves per-thread server stacks;
-    here: REAL per-thread Python stacks of the driver process via
-    sys._current_frames — thread_name/thread_id/query_id/trace as the
-    reference lays it out, trace rendered as frame strings)."""
+def _stack_trace(spark: SparkSession, data_dir) -> list[tuple]:
+    """system.stack_trace: the driver process's per-thread Python stacks
+    (sys._current_frames) laid out as the reference lays out its
+    server threads' — thread_name/thread_id/query_id/trace, the trace
+    rendered as frame strings."""
     import sys
     import threading
 
@@ -1835,273 +1226,10 @@ def system_stack_trace(spark: SparkSession) -> DataFrame:
         trace = []
         f = frame
         while f is not None and len(trace) < 64:
-            trace.append(f"{f.f_code.co_filename}:{f.f_lineno} "
-                         f"{f.f_code.co_name}")
+            trace.append(f"{f.f_code.co_filename}:{f.f_lineno} {f.f_code.co_name}")
             f = f.f_back
         rows.append((names.get(tid, ""), int(tid), "", trace))
-    return spark.createDataFrame(
-        rows,
-        "thread_name string, thread_id bigint, query_id string, "
-        "trace array<string>",
-    )
-
-
-def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    return spark.createDataFrame([], schema)
-
-
-def system_dns_cache(spark: SparkSession) -> DataFrame:
-    """Empty: the library resolves via the OS, keeping no cache."""
-    return _empty(spark, "hostname string, ip_address string, "
-                         "cached_at timestamp")
-
-
-def system_transactions(spark: SparkSession) -> DataFrame:
-    """Empty: no experimental transactions in library mode."""
-    return _empty(spark, "tid string, tid_hash decimal(20,0), "
-                         "elapsed double, is_readonly boolean, state string")
-
-
-def system_replicas(spark: SparkSession) -> DataFrame:
-    """Empty: single-process engine, no Replicated* tables (reference
-    StorageSystemReplicas.cpp column core)."""
-    return _empty(
-        spark,
-        "database string, table string, engine string, is_leader boolean, "
-        "can_become_leader boolean, is_readonly boolean, "
-        "is_session_expired boolean, future_parts int, parts_to_check int, "
-        "zookeeper_name string, zookeeper_path string, replica_name string, "
-        "replica_path string, columns_version int, queue_size int, "
-        "inserts_in_queue int, merges_in_queue int, "
-        "part_mutations_in_queue int, queue_oldest_time timestamp, "
-        "inserts_oldest_time timestamp, merges_oldest_time timestamp, "
-        "part_mutations_oldest_time timestamp, oldest_part_to_get string, "
-        "total_replicas int, active_replicas int",
-    )
-
-
-def system_replication_queue(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "database string, table string, replica_name string, position int, "
-        "node_name string, type string, create_time timestamp, "
-        "required_quorum int, source_replica string, new_part_name string, "
-        "parts_to_merge array<string>, is_detach boolean, "
-        "is_currently_executing boolean, num_tries int, "
-        "last_exception string, last_exception_time timestamp, "
-        "last_attempt_time timestamp, num_postponed int, "
-        "postpone_reason string, last_postpone_time timestamp, "
-        "merge_type string",
-    )
-
-
-def system_replicated_fetches(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "database string, table string, elapsed double, progress double, "
-        "result_part_name string, result_part_path string, "
-        "partition_id string, total_size_bytes_compressed bigint, "
-        "bytes_read_compressed bigint, source_replica_path string, "
-        "source_replica_hostname string, source_replica_port int, "
-        "interserver_scheme string, to_detached boolean, thread_id bigint",
-    )
-
-
-def system_distribution_queue(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "database string, table string, data_path string, "
-        "is_blocked boolean, error_count bigint, data_files bigint, "
-        "data_compressed_bytes bigint, broken_data_files bigint, "
-        "broken_data_compressed_bytes bigint, last_exception string, "
-        "last_exception_time timestamp",
-    )
-
-
-def system_part_moves_between_shards(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "database string, table string, task_name string, task_uuid string, "
-        "create_time timestamp, part_name string, part_uuid string, "
-        "to_shard string, dst_part_name string, update_time timestamp, "
-        "state string, rollback boolean, num_tries int, "
-        "last_exception string",
-    )
-
-
-def system_zookeeper_connection(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "name string, host string, port int, index int, "
-        "connected_time timestamp, session_uptime_elapsed_seconds bigint, "
-        "is_expired boolean, keeper_api_version int, client_id bigint, "
-        "xid bigint, enabled_feature_flags array<string>, "
-        "availability_zone string",
-    )
-
-
-def system_kafka_consumers(spark: SparkSession) -> DataFrame:
-    """Empty unless the jar-gated Kafka shim is active (environmental)."""
-    return _empty(
-        spark,
-        "database string, table string, consumer_id string, "
-        "assignments_topic array<string>, assignments_partition_id array<int>, "
-        "assignments_current_offset array<bigint>, "
-        "last_poll_time timestamp, num_messages_read bigint, "
-        "last_commit_time timestamp, num_commits bigint, "
-        "last_rebalance_time timestamp, num_rebalance_revocations bigint, "
-        "num_rebalance_assignments bigint, is_currently_used boolean, "
-        "last_used timestamp, rdkafka_stat string",
-    )
-
-
-def system_filesystem_cache(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "cache_name string, cache_base_path string, cache_path string, "
-        "key string, file_segment_range_begin bigint, "
-        "file_segment_range_end bigint, size bigint, state string, "
-        "cache_hits bigint, references bigint, downloaded_size bigint, "
-        "kind string, unbound boolean, user_id string, file_size bigint",
-    )
-
-
-def system_certificates(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "version int, serial_number string, signature_algo string, "
-        "issuer string, not_before string, not_after string, "
-        "subject string, pkey_algo string, path string, default boolean",
-    )
-
-
-def system_models(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "model_path string, type string, loading_start_time timestamp, "
-        "loading_duration float",
-    )
-
-
-def system_remote_data_paths(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "disk_name string, path string, cache_base_path string, "
-        "local_path string, remote_path string, size bigint, "
-        "common_prefix_for_blobs string, cache_paths array<string>",
-    )
-
-
-def system_query_condition_cache(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "table_uuid string, part_name string, condition string, "
-        "condition_hash decimal(20,0), entry_size bigint, "
-        "matching_marks string",
-    )
-
-
-def system_schema_inference_cache(spark: SparkSession) -> DataFrame:
-    return _empty(
-        spark,
-        "storage string, source string, format string, "
-        "additional_format_info string, registration_time timestamp, "
-        "schema string, number_of_rows bigint, "
-        "schema_inference_mode string",
-    )
-
-
-def system_quotas_usage(spark: SparkSession) -> DataFrame:
-    """system.quotas_usage: the per-user view over the same quota
-    registry system.quota_usage serves (reference
-    StorageSystemQuotasUsage.cpp adds is_current)."""
-    from pyspark.sql import functions as F
-
-    return system_quota_usage(spark).select(
-        "*", F.lit(True).alias("is_current")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-9 FINAL batch: the last 17 names from the reference's
-# attachSystemTables.cpp registration list. With these, every table
-# the reference registers at startup resolves on the SQL route.
-# ---------------------------------------------------------------------------
-
-
-def system_iceberg_history_catalog(spark: SparkSession, base_dir: str) -> DataFrame:
-    """system.iceberg_history (reference
-    src/Storages/System/StorageSystemIcebergHistory.cpp): snapshot
-    history of every Iceberg table in the catalog. REAL content: any
-    directory under the data dir with metadata/version-hint.text is an
-    Iceberg table; each is replayed via datalake.iceberg_history
-    (parent-chain ancestry included)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.datalake import (
-        LAKE_TABLES,
-        iceberg_history,
-    )
-
-    out = None
-    if os.path.isdir(base_dir):
-        for entry in sorted(os.listdir(base_dir)):
-            hint = os.path.join(base_dir, entry, "metadata",
-                                "version-hint.text")
-            if os.path.exists(hint):
-                df = iceberg_history(spark, os.path.join(base_dir, entry))
-                out = df if out is None else out.unionByName(df)
-    # CLI-attached ENGINE = Iceberg tables (round-9) report too
-    for _name, (fmt, lpath) in sorted(LAKE_TABLES.items()):
-        if fmt == "iceberg":
-            df = iceberg_history(spark, lpath)
-            out = df if out is None else out.unionByName(df)
-    if out is not None:
-        return out
-    return _empty(
-        spark,
-        "database string, table string, made_current_at timestamp, "
-        "snapshot_id long, parent_id long, is_current_ancestor boolean",
-    )
-
-
-def system_dropped_tables_parts(spark: SparkSession, base_dir: str) -> DataFrame:
-    """system.dropped_tables_parts (reference
-    src/Storages/System/StorageSystemDroppedTablesParts.h — the
-    system.parts column core over dropped-but-parked tables). REAL
-    content: parquet footers of parts inside the `_dropped/<name>.<ns>`
-    parking area ddl.drop_table writes (awaiting UNDROP/GC)."""
-    import datetime
-
-    import pyarrow.parquet as pq
-
-    rows = []
-    park = os.path.join(base_dir, "_dropped")
-    if os.path.isdir(park):
-        for d in sorted(os.listdir(park)):
-            name = d.rpartition(".")[0] or d
-            tdir = os.path.join(park, d)
-            parts = []
-            for root, _dirs, fnames in os.walk(tdir):
-                parts.extend(
-                    os.path.join(root, f) for f in fnames
-                    if f.endswith(".parquet"))
-            for i, p in enumerate(sorted(parts)):
-                meta = pq.read_metadata(p)
-                rel = os.path.relpath(p, tdir)
-                partition = (os.path.dirname(rel) or "all").replace(
-                    os.sep, "/")
-                rows.append((
-                    "default", name, partition, f"{partition}_{i+1}_{i+1}_0",
-                    "Wide", True, meta.num_rows, os.path.getsize(p),
-                    meta.num_row_groups,
-                    datetime.datetime.fromtimestamp(os.path.getmtime(p))
-                    .isoformat(sep=" ", timespec="seconds"),
-                ))
-    return spark.createDataFrame(
-        rows,
-        "database string, table string, partition string, name string, "
-        "part_type string, active boolean, rows bigint, "
-        "bytes_on_disk bigint, marks int, modification_time string",
-    )
+    return rows
 
 
 # The reference's bucket-bound tables for every latency event
@@ -2129,40 +1257,382 @@ _LATENCY_EVENTS = {
     )
 }
 
-
-def system_latency_buckets(spark: SparkSession) -> DataFrame:
-    """system.latency_buckets (reference
-    src/Storages/System/StorageSystemLatencyBuckets.cpp): ONE row whose
-    columns are the configured bucket bounds per latency event —
-    transcribed from the APPLY_FOR_LATENCY_EVENTS defaults."""
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    schema = StructType([
-        StructField(f"LatencyEvent_{name}", ArrayType(LongType()), False)
-        for name in _LATENCY_EVENTS
-    ])
-    return spark.createDataFrame(
-        [tuple(_LATENCY_EVENTS.values())], schema)
+# the reference's tables are UNBOUNDED (StorageSystemNumbers.cpp pulls
+# blocks forever; queries pair them with LIMIT). spark.range is LAZY —
+# LIMIT n takes n rows without materializing — so a very large bounded
+# range gives the same usable contract; the bound exists only because
+# Spark ranges need one (2^40 rows ~ 35 years of generation at 1M
+# rows/s — beyond any non-LIMITed intent). Spark ranges are already
+# parallel, so the *_mt variants (attachSystemTables.cpp:131-133; order
+# not guaranteed) are the same plans.
+_NUMBERS_BOUND = 1 << 40
 
 
-def system_numbers_mt(spark: SparkSession) -> DataFrame:
-    """system.numbers_mt (attachSystemTables.cpp:131): multithreaded
-    numbers — order not guaranteed; here the same distributed range
-    (Spark ranges are already parallel)."""
-    return system_numbers_unbounded(spark)
+def _numbers(spark: SparkSession, data_dir) -> DataFrame:
+    return spark.range(_NUMBERS_BOUND).toDF("number")
 
 
-def system_zeros_mt(spark: SparkSession) -> DataFrame:
-    """system.zeros_mt (attachSystemTables.cpp:133)."""
-    return system_zeros_unbounded(spark)
+def _zeros(spark: SparkSession, data_dir) -> DataFrame:
+    return spark.range(_NUMBERS_BOUND).selectExpr("CAST(0 AS TINYINT) AS zero")
 
 
-def system_asynchronous_loader(spark: SparkSession) -> DataFrame:
-    """Empty (semantically true: tables load eagerly in library mode —
-    no async loader jobs). Reference StorageSystemAsyncLoader.cpp
-    column set, arrays as CSV per repo convention."""
-    return _empty(
-        spark,
+_T = SystemTable
+
+# One row per system table on the SQL route; the reference's
+# StorageSystem<Name>.cpp is named at the rows function. A table with no
+# rows function serves the reference column set over zero rows: it is
+# empty by construction in a single-process library engine (the comment
+# says why). Arrays the reference types as Array travel as CSV strings
+# where noted in the DDL.
+SYSTEM_TABLES: dict[str, SystemTable] = {
+    # StorageSystemOne.cpp: single row, single UInt8 zero — SELECT 1 support
+    "one": _T("dummy tinyint not null", lambda spark, d: [(0,)]),
+    "numbers": _T("number bigint not null", _numbers),
+    "zeros": _T("zero tinyint not null", _zeros),
+    "numbers_mt": _T("number bigint not null", _numbers),
+    "zeros_mt": _T("zero tinyint not null", _zeros),
+    "tables": _T(_TABLES_SCHEMA, _tables, True),
+    "columns": _T(
+        "table_name string not null, column_name string not null, "
+        "pos int not null, data_type string not null", _columns, True),
+    "parts": _T(
+        "database string, table string, partition string, name string, "
+        "part_type string, active boolean, rows bigint, "
+        "bytes_on_disk bigint, marks bigint, modification_time string",
+        _parts, True),
+    "detached_parts": _T(
+        "database string, table string, partition_id string, name string, "
+        "bytes_on_disk bigint, modification_time timestamp, disk string, "
+        "path string, reason string, min_block_number bigint, "
+        "max_block_number bigint, level int", _detached_parts, True),
+    "parts_columns": _T(
+        "database string not null, table string not null, "
+        "partition string, file string, "
+        "row_group int, column string, min_value string, "
+        "max_value string, null_count long", _parts_columns, True),
+    "projection_parts": _T(
+        "name string, parent_name string, database string, table string, "
+        "partition string, active boolean, rows bigint, "
+        "bytes_on_disk bigint, modification_time timestamp",
+        _projection_parts, True),
+    "projection_parts_columns": _T(
+        "database string not null, table string not null, "
+        "name string not null, column string, "
+        "min_value string, max_value string, null_count long",
+        _projection_parts_columns, True),
+    "projections": _T(
+        "database string, table string, name string, type string, "
+        "sorting_key string, sum_columns string, minmax_columns string",
+        _projections, True),
+    "mutations": _T(
+        "database string, table string, mutation_id string, "
+        "command string, create_time string, is_done int", _mutations, True),
+    "detached_tables": _T(
+        "database string, table string, metadata_path string, "
+        "is_permanently bigint", _detached_tables, True),
+    "dropped_tables": _T(
+        "index bigint, database string, table string, uuid string, "
+        "engine string, metadata_dropped_path string, "
+        "table_dropped_time timestamp", _dropped_tables, True),
+    "dropped_tables_parts": _T(
+        "database string, table string, partition string, name string, "
+        "part_type string, active boolean, rows bigint, "
+        "bytes_on_disk bigint, marks int, modification_time string",
+        _dropped_tables_parts, True),
+    "data_skipping_indices": _T(
+        "database string, table string, name string, type string, "
+        "type_full string, expr string, granularity bigint, "
+        "data_compressed_bytes bigint, data_uncompressed_bytes bigint, "
+        "marks_bytes bigint", _data_skipping_indices, True),
+    "iceberg_history": _T(
+        "database string, table string, made_current_at timestamp, "
+        "snapshot_id long, parent_id long, is_current_ancestor boolean",
+        _iceberg_history, True),
+    # StorageSystemDatabases.cpp: the Spark catalog's database list
+    "databases": _T("name string, data_path string", lambda spark, d: [
+        (db.name, db.locationUri or "") for db in spark.catalog.listDatabases()]),
+    "functions": _T("name string, origin string, exclusion_reason string",
+                    _functions),
+    "formats": _T(
+        "name string, is_input int, is_output int, exclusion_reason string",
+        _formats),
+    # the live Spark conf: the engine's runtime settings surface
+    "settings": _T("name string, value string", lambda spark, d: [
+        tuple(kv) for kv in spark.sparkContext.getConf().getAll()]),
+    "data_type_families": _T(
+        "name string, case_sensitive int, spark_type string",
+        _data_type_families),
+    "table_functions": _T("name string", _table_functions),
+    # StorageSystemAggregateFunctionCombinators.cpp: the combinator
+    # suffixes the engine's aggregate layer supports
+    "aggregate_function_combinators": _T(
+        "name string, is_internal int", lambda spark, d: [
+            ("-If", 0), ("-Array", 0), ("-Map", 0), ("-ForEach", 0),
+            ("-Resample", 0), ("-State", 0), ("-Merge", 0), ("-Distinct", 0),
+            ("-OrNull", 0), ("-SimpleState", 1), ("-MergeState", 1)]),
+    "collations": _T("name string, resolves_to string", _collations),
+    "backups": _T(
+        "id string, name string, status string, error string, "
+        "start_time timestamp, end_time timestamp, num_files bigint, "
+        "total_size bigint", _backups),
+    "time_zones": _T("time_zone string", _time_zones),
+    "disks": _T(
+        "name string, path string, free_space long, total_space long", _disks),
+    "clusters": _T(
+        "cluster string, shard_num int, host_name string, running_tasks int",
+        _clusters),
+    "build_options": _T("name string, value string", _build_options),
+    "processes": _T("job_id int, status string, n_stages int", _processes),
+    # StorageSystemKeywords.cpp: the keywords the chsql transpiler knows
+    "keywords": _T("keyword string", lambda spark, d: [(k,) for k in _KEYWORDS]),
+    "table_engines": _T(
+        "name string, supports_ttl int, supports_sort_order int, "
+        "supports_skipping_indices int, supports_deduplication int",
+        lambda spark, d: _TABLE_ENGINES),
+    "database_engines": _T("name string", lambda spark, d: [
+        ("Atomic",), ("Memory",)]),
+    "merge_tree_settings": _T(
+        "name string, value string, description string",
+        lambda spark, d: _MERGE_TREE_SETTINGS),
+    "storage_policies": _T(
+        "policy_name string, volume_name string, volume_priority int",
+        lambda spark, d: [("default", "default", 0)]),
+    "users": _T("name string, auth_type string, is_default int", _users),
+    "roles": _T("name string, id string", _roles),
+    "grants": _T(
+        "user_name string, access_type string, database string, "
+        "table string, grant_option int", _grants),
+    # StorageSystemPrivileges.cpp: the access types the reference
+    # models; none is enforced here (catalog-delegated)
+    "privileges": _T("privilege string, enforced int", lambda spark, d: [
+        (k, 0) for k in ("SELECT", "INSERT", "ALTER", "CREATE", "DROP",
+                         "TRUNCATE", "OPTIMIZE", "SHOW", "KILL QUERY",
+                         "ACCESS MANAGEMENT")]),
+    "warnings": _T("message string", _warnings),
+    "licenses": _T("library_name string, license_type string",
+                   lambda spark, d: _LICENSES),
+    # the session-local ring buffer of chsql/profiler activity (the
+    # reference persists per-query rows via its log queue — here the
+    # session IS the scope)
+    "query_log": _T(
+        "event_time string, type string, query string, "
+        "normalized_query string, query_duration_ms double, "
+        "result_rows bigint, query_id string",
+        lambda spark, d: list(_QUERY_LOG)),
+    # StorageSystemEvents.cpp: cumulative counters fed by record_query
+    "events": _T("event string, value bigint",
+                 lambda spark, d: sorted(_EVENT_COUNTERS.items())),
+    "metrics": _T("metric string, value bigint", _metrics),
+    "macros": _T("macro string, substitution string",
+                 lambda spark, d: sorted(MACROS.items())),
+    "dictionaries": _T(
+        "database string, name string, status string, type string, "
+        "key string, key_type string, attribute_names string, "
+        "attribute_types string, element_count bigint, source string",
+        _dictionaries),
+    "asynchronous_metrics": _T(
+        "metric string, value double, description string",
+        _asynchronous_metrics),
+    "settings_changes": _T(
+        "type string, version string, changes array<struct<name:string,"
+        "previous_value:string,new_value:string,reason:string>>",
+        _settings_changes),
+    "quotas": _T(
+        "name string, id string, storage string, keys array<string>, "
+        "durations array<int>, apply_to_all boolean, "
+        "apply_to_list array<string>, apply_to_except array<string>", _quotas),
+    # StorageSystemQuotaLimits.cpp: the default quota's one
+    # non-randomized 3600 s interval with every limit unset
+    "quota_limits": _T(
+        "quota_name string, duration int, is_randomized_interval boolean, "
+        + ", ".join(_quota_ddl("max_" + n, f) for n, f in _QUOTA_TYPES),
+        lambda spark, d: [("default", 3600, False) + (None,) * len(_QUOTA_TYPES)]),
+    "quota_usage": _T(_QUOTA_USAGE_SCHEMA, _quota_usage),
+    # StorageSystemQuotasUsage.cpp: quota_usage per user, plus is_current
+    "quotas_usage": _T(
+        _QUOTA_USAGE_SCHEMA + ", is_current boolean not null",
+        lambda spark, d: [r + (True,) for r in _quota_usage(spark, d)]),
+    "settings_profiles": _T(
+        "name string, id string, storage string, num_elements bigint, "
+        "apply_to_all boolean, apply_to_list array<string>, "
+        "apply_to_except array<string>", _settings_profiles),
+    # the readonly profile's single readonly=1 element, writability
+    # CONST (the reference's enum for unchangeable)
+    "settings_profile_elements": _T(
+        "profile_name string, user_name string, role_name string, "
+        "index bigint, setting_name string, value string, min string, "
+        "max string, writability string, inherit_profile string",
+        lambda spark, d: [("readonly", None, None, 0, "readonly", "1", None,
+                           None, "CONST", None)]),
+    # no row policies on a default server
+    "row_policies": _T(
+        "name string, short_name string, database string, table string, "
+        "id string, storage string, select_filter string, "
+        "is_restrictive boolean, apply_to_all boolean, "
+        "apply_to_list array<string>, apply_to_except array<string>"),
+    "errors": _T(
+        "name string, code int, value bigint, last_error_time string, "
+        "last_error_message string, last_error_trace array<bigint>, "
+        "remote boolean, query_id string", _errors),
+    # OPTIMIZE rewrites run synchronously inside the statement
+    "merges": _T(
+        "database string, table string, elapsed double, progress double, "
+        "num_parts bigint, result_part_name string, is_mutation boolean, "
+        "total_size_bytes_compressed bigint, rows_read bigint, "
+        "rows_written bigint"),
+    "server_settings": _T(
+        "name string, value string, default string, changed int, "
+        "description string, type string, "
+        "changeable_without_restart string, is_obsolete int", _server_settings),
+    # the single implicit users.xml-equivalent directory
+    "user_directories": _T(
+        "name string, type string, params string, precedence bigint",
+        lambda spark, d: [("users_xml", "users_xml", "{}", 0)]),
+    "contributors": _T("name string", _contributors),
+    # the implicit default user holds direct grants, no roles
+    "current_roles": _T(
+        "role_name string, with_admin_option boolean, is_default boolean"),
+    "enabled_roles": _T(
+        "role_name string, with_admin_option boolean, "
+        "is_current boolean, is_default boolean"),
+    "role_grants": _T(
+        "user_name string, role_name string, granted_role_name string, "
+        "granted_role_id string, granted_role_is_default boolean, "
+        "with_admin_option boolean", _role_grants),
+    # MOVE PARTITION is a synchronous O(1) directory move
+    "moves": _T(
+        "database string, table string, elapsed double, "
+        "target_disk_name string, target_disk_path string, "
+        "part_name string, part_size bigint, thread_id bigint"),
+    "view_refreshes": _T(
+        "database string, view string, uuid string, status string, "
+        "refresh_count bigint, exception string", _view_refreshes),
+    "query_cache": _T(
+        "query string, query_id string, result_size bigint, tag string, "
+        "stale boolean, shared boolean, compressed boolean, "
+        "expires_at timestamp, key_hash decimal(20,0)", _query_cache),
+    "named_collections": _T(
+        "name string, collection map<string,string>, source string, "
+        "create_query string", _named_collections),
+    "asynchronous_inserts": _T(
+        "query string, database string, table string, format string, "
+        "first_update timestamp, total_bytes bigint", _asynchronous_inserts),
+    "user_processes": _T(
+        "user string, memory_usage bigint, peak_memory_usage bigint",
+        _user_processes),
+    "dashboards": _T("dashboard string, title string, query string",
+                     lambda spark, d: _DASHBOARDS),
+    "stack_trace": _T(
+        "thread_name string, thread_id bigint, query_id string, "
+        "trace array<string>", _stack_trace),
+    # StorageSystemLatencyBuckets.cpp: one row of configured bounds
+    "latency_buckets": _T(
+        ", ".join(f"LatencyEvent_{n} array<bigint> not null"
+                  for n in _LATENCY_EVENTS),
+        lambda spark, d: [tuple(_LATENCY_EVENTS.values())]),
+    # the library resolves via the OS, keeping no DNS cache
+    "dns_cache": _T("hostname string, ip_address string, cached_at timestamp"),
+    # no experimental transactions in library mode
+    "transactions": _T(
+        "tid string, tid_hash decimal(20,0), elapsed double, "
+        "is_readonly boolean, state string"),
+    # no Replicated* tables (StorageSystemReplicas.cpp column core)
+    "replicas": _T(
+        "database string, table string, engine string, is_leader boolean, "
+        "can_become_leader boolean, is_readonly boolean, "
+        "is_session_expired boolean, future_parts int, parts_to_check int, "
+        "zookeeper_name string, zookeeper_path string, replica_name string, "
+        "replica_path string, columns_version int, queue_size int, "
+        "inserts_in_queue int, merges_in_queue int, "
+        "part_mutations_in_queue int, queue_oldest_time timestamp, "
+        "inserts_oldest_time timestamp, merges_oldest_time timestamp, "
+        "part_mutations_oldest_time timestamp, oldest_part_to_get string, "
+        "total_replicas int, active_replicas int"),
+    # no replicas, so no replication queue
+    "replication_queue": _T(
+        "database string, table string, replica_name string, position int, "
+        "node_name string, type string, create_time timestamp, "
+        "required_quorum int, source_replica string, new_part_name string, "
+        "parts_to_merge array<string>, is_detach boolean, "
+        "is_currently_executing boolean, num_tries int, "
+        "last_exception string, last_exception_time timestamp, "
+        "last_attempt_time timestamp, num_postponed int, "
+        "postpone_reason string, last_postpone_time timestamp, "
+        "merge_type string"),
+    # no interserver part fetches
+    "replicated_fetches": _T(
+        "database string, table string, elapsed double, progress double, "
+        "result_part_name string, result_part_path string, "
+        "partition_id string, total_size_bytes_compressed bigint, "
+        "bytes_read_compressed bigint, source_replica_path string, "
+        "source_replica_hostname string, source_replica_port int, "
+        "interserver_scheme string, to_detached boolean, thread_id bigint"),
+    # no Distributed tables, so no async send queue
+    "distribution_queue": _T(
+        "database string, table string, data_path string, "
+        "is_blocked boolean, error_count bigint, data_files bigint, "
+        "data_compressed_bytes bigint, broken_data_files bigint, "
+        "broken_data_compressed_bytes bigint, last_exception string, "
+        "last_exception_time timestamp"),
+    # no shards
+    "part_moves_between_shards": _T(
+        "database string, table string, task_name string, task_uuid string, "
+        "create_time timestamp, part_name string, part_uuid string, "
+        "to_shard string, dst_part_name string, update_time timestamp, "
+        "state string, rollback boolean, num_tries int, "
+        "last_exception string"),
+    # no [Zoo]Keeper
+    "zookeeper_connection": _T(
+        "name string, host string, port int, index int, "
+        "connected_time timestamp, session_uptime_elapsed_seconds bigint, "
+        "is_expired boolean, keeper_api_version int, client_id bigint, "
+        "xid bigint, enabled_feature_flags array<string>, "
+        "availability_zone string"),
+    # no Kafka consumers outside the jar-gated Kafka shim
+    "kafka_consumers": _T(
+        "database string, table string, consumer_id string, "
+        "assignments_topic array<string>, assignments_partition_id array<int>, "
+        "assignments_current_offset array<bigint>, "
+        "last_poll_time timestamp, num_messages_read bigint, "
+        "last_commit_time timestamp, num_commits bigint, "
+        "last_rebalance_time timestamp, num_rebalance_revocations bigint, "
+        "num_rebalance_assignments bigint, is_currently_used boolean, "
+        "last_used timestamp, rdkafka_stat string"),
+    # no filesystem cache configured
+    "filesystem_cache": _T(
+        "cache_name string, cache_base_path string, cache_path string, "
+        "key string, file_segment_range_begin bigint, "
+        "file_segment_range_end bigint, size bigint, state string, "
+        "cache_hits bigint, references bigint, downloaded_size bigint, "
+        "kind string, unbound boolean, user_id string, file_size bigint"),
+    # no TLS server, so no certificates
+    "certificates": _T(
+        "version int, serial_number string, signature_algo string, "
+        "issuer string, not_before string, not_after string, "
+        "subject string, pkey_algo string, path string, default boolean"),
+    # no CatBoost models loaded
+    "models": _T(
+        "model_path string, type string, loading_start_time timestamp, "
+        "loading_duration float"),
+    # no remote (object-storage) disks
+    "remote_data_paths": _T(
+        "disk_name string, path string, cache_base_path string, "
+        "local_path string, remote_path string, size bigint, "
+        "common_prefix_for_blobs string, cache_paths array<string>"),
+    # Spark's scan keeps no query condition cache
+    "query_condition_cache": _T(
+        "table_uuid string, part_name string, condition string, "
+        "condition_hash decimal(20,0), entry_size bigint, "
+        "matching_marks string"),
+    # schemas come from parquet footers per read, never cached
+    "schema_inference_cache": _T(
+        "storage string, source string, format string, "
+        "additional_format_info string, registration_time timestamp, "
+        "schema string, number_of_rows bigint, "
+        "schema_inference_mode string"),
+    # tables load eagerly in library mode: no async loader jobs
+    # (StorageSystemAsyncLoader.cpp; arrays as CSV)
+    "asynchronous_loader": _T(
         "job string, job_id decimal(20,0), dependencies string, "
         "dependencies_left decimal(20,0), status string, "
         "is_executing boolean, is_blocked boolean, is_ready boolean, "
@@ -2172,31 +1642,18 @@ def system_asynchronous_loader(spark: SparkSession) -> DataFrame:
         "ready_seqno decimal(20,0), waiters decimal(20,0), "
         "exception string, schedule_time timestamp, "
         "enqueue_time timestamp, start_time timestamp, "
-        "finish_time timestamp",
-    )
-
-
-def system_distributed_ddl_queue(spark: SparkSession) -> DataFrame:
-    """Empty: no ON CLUSTER coordination in a single-process engine
-    (reference StorageSystemDDLWorkerQueue.cpp columns)."""
-    return _empty(
-        spark,
+        "finish_time timestamp"),
+    # no ON CLUSTER coordination (StorageSystemDDLWorkerQueue.cpp)
+    "distributed_ddl_queue": _T(
         "entry string, entry_version tinyint, initiator_host string, "
         "initiator_port int, cluster string, query string, "
         "settings map<string,string>, query_create_time timestamp, "
         "host string, port int, status string, exception_code int, "
         "exception_text string, query_finish_time timestamp, "
-        "query_duration_ms decimal(20,0)",
-    )
-
-
-def system_filesystem_cache_settings(spark: SparkSession) -> DataFrame:
-    """Empty: no filesystem cache configured (reference
-    StorageSystemFilesystemCacheSettings.cpp — columns are
-    FileCacheSettings::getColumnsDescription(): cache_name + every
-    cache setting + runtime size gauges)."""
-    return _empty(
-        spark,
+        "query_duration_ms decimal(20,0)"),
+    # no filesystem cache configured (StorageSystemFilesystemCacheSettings
+    # .cpp: cache_name + every FileCacheSettings field + size gauges)
+    "filesystem_cache_settings": _T(
         "cache_name string, path string, max_size decimal(20,0), "
         "max_elements decimal(20,0), max_file_segment_size decimal(20,0), "
         "boundary_alignment decimal(20,0), "
@@ -2216,64 +1673,31 @@ def system_filesystem_cache_settings(spark: SparkSession) -> DataFrame:
         "write_cache_per_user_id_directory boolean, "
         "allow_dynamic_cache_resize boolean, "
         "max_size_ratio_to_total_space double, is_initialized boolean, "
-        "current_size decimal(20,0), current_elements_num decimal(20,0)",
-    )
-
-
-def system_graphite_retentions(spark: SparkSession) -> DataFrame:
-    """Empty: no graphite_rollup config (reference
-    StorageSystemGraphite.cpp; Tables.* arrays as CSV)."""
-    return _empty(
-        spark,
+        "current_size decimal(20,0), current_elements_num decimal(20,0)"),
+    # no graphite_rollup config (StorageSystemGraphite.cpp; Tables.*
+    # arrays as CSV)
+    "graphite_retentions": _T(
         "config_name string, rule_type string, regexp string, "
         "function string, age decimal(20,0), precision decimal(20,0), "
         "priority int, is_default boolean, tables_database string, "
-        "tables_table string",
-    )
-
-
-def system_histogram_metrics(spark: SparkSession) -> DataFrame:
-    """Empty: no keeper, so no histogram metrics are exported
-    (reference StorageSystemHistogramMetrics.cpp)."""
-    return _empty(
-        spark,
+        "tables_table string"),
+    # no keeper, so no histogram metrics are exported
+    "histogram_metrics": _T(
         "metric string, value bigint, description string, "
-        "labels map<string,string>",
-    )
-
-
-def system_jemalloc_bins(spark: SparkSession) -> DataFrame:
-    """Empty: CPython/JVM allocators, not jemalloc (reference
-    StorageSystemJemalloc.cpp)."""
-    return _empty(
-        spark,
+        "labels map<string,string>"),
+    # CPython/JVM allocators, not jemalloc
+    "jemalloc_bins": _T(
         "index int, large boolean, size decimal(20,0), "
-        "allocations bigint, deallocations bigint",
-    )
-
-
-def system_resources(spark: SparkSession) -> DataFrame:
-    """Empty: no CREATE RESOURCE objects (reference
-    StorageSystemResources.cpp; disk arrays as CSV)."""
-    return _empty(
-        spark,
+        "allocations bigint, deallocations bigint"),
+    # no CREATE RESOURCE objects (disk arrays as CSV)
+    "resources": _T(
         "name string, read_disks string, write_disks string, "
-        "unit string, create_query string",
-    )
-
-
-def system_workloads(spark: SparkSession) -> DataFrame:
-    """Empty: no CREATE WORKLOAD objects (reference
-    StorageSystemWorkloads.cpp)."""
-    return _empty(spark, "name string, parent string, create_query string")
-
-
-def system_scheduler(spark: SparkSession) -> DataFrame:
-    """Empty: Spark's own scheduler replaces the IO scheduling
-    hierarchy; no nodes without resources/workloads (reference
-    StorageSystemScheduler.cpp column core)."""
-    return _empty(
-        spark,
+        "unit string, create_query string"),
+    # no CREATE WORKLOAD objects
+    "workloads": _T("name string, parent string, create_query string"),
+    # Spark's own scheduler replaces the IO scheduling hierarchy; no
+    # nodes without resources/workloads
+    "scheduler": _T(
         "resource string, path string, type string, weight double, "
         "priority bigint, is_active boolean, "
         "active_children decimal(20,0), dequeued_requests decimal(20,0), "
@@ -2284,161 +1708,38 @@ def system_scheduler(spark: SparkSession) -> DataFrame:
         "queue_cost bigint, budget bigint, is_satisfied boolean, "
         "inflight_requests bigint, inflight_cost bigint, "
         "max_requests bigint, max_cost bigint, max_speed double, "
-        "max_burst double, throttling_us bigint, tokens double",
-    )
-
-
-def system_rocksdb(spark: SparkSession) -> DataFrame:
-    """Empty: no EmbeddedRocksDB tables (reference
-    src/Storages/RocksDB/StorageSystemRocksDB.cpp)."""
-    return _empty(
-        spark,
-        "database string, table string, name string, "
-        "value decimal(20,0)",
-    )
-
-
-def system_symbols(spark: SparkSession) -> DataFrame:
-    """Empty: a Python/JVM engine has no native symbol table to walk
-    (reference StorageSystemSymbols.cpp reads the ELF of the running
-    binary)."""
-    return _empty(
-        spark,
+        "max_burst double, throttling_us bigint, tokens double"),
+    # no EmbeddedRocksDB tables
+    "rocksdb": _T(
+        "database string, table string, name string, value decimal(20,0)"),
+    # a Python/JVM engine has no native symbol table to walk (the
+    # reference reads the ELF of the running binary)
+    "symbols": _T(
         "symbol string, address_begin decimal(20,0), "
-        "address_end decimal(20,0)",
-    )
-
-
-def system_zookeeper_nodes(spark: SparkSession) -> DataFrame:
-    """Empty: no [Zoo]Keeper (reference StorageSystemZooKeeper.cpp;
-    the reference additionally REQUIRES a WHERE path = ... filter —
-    with no keeper every path resolves to zero rows)."""
-    return _empty(
-        spark,
+        "address_end decimal(20,0)"),
+    # no [Zoo]Keeper: every path (the reference requires a WHERE
+    # path = ... filter) resolves to zero rows
+    "zookeeper": _T(
         "name string, value string, czxid bigint, mzxid bigint, "
         "ctime timestamp, mtime timestamp, version int, cversion int, "
         "aversion int, ephemeralOwner bigint, dataLength int, "
-        "numChildren int, pzxid bigint, path string",
-    )
-
-
-# ---------------------------------------------------------------------------
-# SQL-text access: `SELECT ... FROM system.<name>` (round-6). Spark temp
-# views have no schema qualifier, so ch_sql rewrites `system.X` to
-# `__system_X` and calls materialize_system_views to back each
-# referenced name with a temp view built on demand.
-# ---------------------------------------------------------------------------
-
-# zero-extra-arg builders; (builder, needs_sf_dir)
-_SQL_SYSTEM_TABLES = {
-    "one": (system_one, False),
-    "numbers": (system_numbers_unbounded, False),
-    "zeros": (system_zeros_unbounded, False),
-    "tables": (system_tables_full, True),
-    "columns": (system_columns, True),
-    "databases": (system_databases, False),
-    "functions": (system_functions, False),
-    "formats": (system_formats, False),
-    "settings": (system_settings, False),
-    "data_type_families": (system_data_type_families, False),
-    "table_functions": (system_table_functions, False),
-    "aggregate_function_combinators": (
-        system_aggregate_function_combinators, False),
-    "collations": (system_collations, False),
-    "backups": (system_backups, False),
-    "time_zones": (system_time_zones, False),
-    "disks": (system_disks, False),
-    "clusters": (system_clusters, False),
-    "build_options": (system_build_options, False),
-    "processes": (system_processes, False),
-    "keywords": (system_keywords, False),
-    "table_engines": (system_table_engines, False),
-    "database_engines": (system_database_engines, False),
-    "merge_tree_settings": (system_merge_tree_settings, False),
-    "storage_policies": (system_storage_policies, False),
-    "users": (system_users, False),
-    "roles": (system_roles, False),
-    "grants": (system_grants, False),
-    "privileges": (system_privileges, False),
-    "warnings": (system_warnings, False),
-    "licenses": (system_licenses, False),
-    "query_log": (system_query_log, False),
-    "events": (system_events, False),
-    "metrics": (system_metrics, False),
-    "macros": (system_macros, False),
-    "dictionaries": (system_dictionaries, False),
-    "detached_tables": (system_detached_tables, True),
-    "projections": (system_projections, True),
-    "mutations": (system_mutations, True),
-    "asynchronous_metrics": (system_asynchronous_metrics, False),
-    "settings_changes": (system_settings_changes, False),
-    "quotas": (system_quotas, False),
-    "quota_limits": (system_quota_limits, False),
-    "quota_usage": (system_quota_usage, False),
-    "settings_profiles": (system_settings_profiles, False),
-    "settings_profile_elements": (system_settings_profile_elements, False),
-    "row_policies": (system_row_policies, False),
-    "errors": (system_errors, False),
-    "merges": (system_merges, False),
-    "parts": (system_parts_catalog, True),
-    "dropped_tables": (system_dropped_tables, True),
-    "data_skipping_indices": (system_data_skipping_indices, True),
-    "server_settings": (system_server_settings, False),
-    "user_directories": (system_user_directories, False),
-    "contributors": (system_contributors, False),
-    "current_roles": (system_current_roles, False),
-    "enabled_roles": (system_enabled_roles, False),
-    "role_grants": (system_role_grants, False),
-    "moves": (system_moves, False),
-    "view_refreshes": (system_view_refreshes, False),
-    # round-9 batch
-    "detached_parts": (system_detached_parts_catalog, True),
-    "parts_columns": (system_parts_columns_catalog, True),
-    "projection_parts": (system_projection_parts, True),
-    "projection_parts_columns": (system_projection_parts_columns, True),
-    "query_cache": (system_query_result_cache_table, False),
-    "named_collections": (system_named_collections, False),
-    "asynchronous_inserts": (system_asynchronous_inserts, False),
-    "user_processes": (system_user_processes, False),
-    "dashboards": (system_dashboards, False),
-    "stack_trace": (system_stack_trace, False),
-    "dns_cache": (system_dns_cache, False),
-    "transactions": (system_transactions, False),
-    "replicas": (system_replicas, False),
-    "replication_queue": (system_replication_queue, False),
-    "replicated_fetches": (system_replicated_fetches, False),
-    "distribution_queue": (system_distribution_queue, False),
-    "part_moves_between_shards": (system_part_moves_between_shards, False),
-    "zookeeper_connection": (system_zookeeper_connection, False),
-    "kafka_consumers": (system_kafka_consumers, False),
-    "filesystem_cache": (system_filesystem_cache, False),
-    "certificates": (system_certificates, False),
-    "models": (system_models, False),
-    "remote_data_paths": (system_remote_data_paths, False),
-    "query_condition_cache": (system_query_condition_cache, False),
-    "schema_inference_cache": (system_schema_inference_cache, False),
-    "quotas_usage": (system_quotas_usage, False),
-    # round-9 FINAL batch — completes the attachSystemTables.cpp list
-    "numbers_mt": (system_numbers_mt, False),
-    "zeros_mt": (system_zeros_mt, False),
-    "iceberg_history": (system_iceberg_history_catalog, True),
-    "dropped_tables_parts": (system_dropped_tables_parts, True),
-    "latency_buckets": (system_latency_buckets, False),
-    "asynchronous_loader": (system_asynchronous_loader, False),
-    "distributed_ddl_queue": (system_distributed_ddl_queue, False),
-    "filesystem_cache_settings": (system_filesystem_cache_settings, False),
-    "graphite_retentions": (system_graphite_retentions, False),
-    "histogram_metrics": (system_histogram_metrics, False),
-    "jemalloc_bins": (system_jemalloc_bins, False),
-    "resources": (system_resources, False),
-    "workloads": (system_workloads, False),
-    "scheduler": (system_scheduler, False),
-    "rocksdb": (system_rocksdb, False),
-    "symbols": (system_symbols, False),
-    "zookeeper": (system_zookeeper_nodes, False),
+        "numChildren int, pzxid bigint, path string"),
 }
 
-_SYSTEM_REF_RE = None
+
+def system_table(spark: SparkSession, name: str, data_dir: str | None = None) -> DataFrame:
+    """system.<name> as a DataFrame: its rows as a local relation (a
+    generator's lazy range as it is)."""
+    table = SYSTEM_TABLES[name]
+    if table.needs_dir and data_dir is None:
+        from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError
+
+        raise ChSqlError(f"system.{name} needs a data directory — call "
+                         "ch_sql(spark, sql, sf_dir)")
+    rows = table.rows(spark, data_dir) if table.rows else []
+    if isinstance(rows, DataFrame):
+        return rows
+    return catalog.local_rows(spark, rows, table.schema)
 
 
 def rewrite_system_refs(sql: str):
@@ -2450,7 +1751,7 @@ def rewrite_system_refs(sql: str):
 
     def sub(m):
         name = m.group(1).lower()
-        if name in _SQL_SYSTEM_TABLES:
+        if name in SYSTEM_TABLES:
             names.add(name)
             return f"__system_{name}"
         return m.group(0)  # unknown system table: leave for a clear error
@@ -2464,16 +1765,5 @@ def rewrite_system_refs(sql: str):
 
 
 def materialize_system_views(spark: SparkSession, names, sf_dir=None) -> None:
-    from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError
-
     for name in names:
-        builder, needs_sf = _SQL_SYSTEM_TABLES[name]
-        if needs_sf:
-            if sf_dir is None:
-                raise ChSqlError(
-                    f"system.{name} needs a data directory — call "
-                    "ch_sql(spark, sql, sf_dir)")
-            df = builder(spark, sf_dir)
-        else:
-            df = builder(spark)
-        df.createOrReplaceTempView(f"__system_{name}")
+        system_table(spark, name, sf_dir).createOrReplaceTempView(f"__system_{name}")

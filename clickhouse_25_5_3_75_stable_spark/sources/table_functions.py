@@ -76,7 +76,9 @@ def generate_random(
 
 def values(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """VALUES table function: inline literal rows."""
-    return spark.createDataFrame(rows, schema=schema)
+    from clickhouse_25_5_3_75_stable_spark.sources.catalog import local_rows
+
+    return local_rows(spark, rows, schema)
 
 
 def merge(spark: SparkSession, sf_dir: str, table_regex: str) -> DataFrame:

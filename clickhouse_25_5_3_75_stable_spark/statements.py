@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 
 from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError
 from clickhouse_25_5_3_75_stable_spark.sources import catalog
+from clickhouse_25_5_3_75_stable_spark.sources.catalog import local_rows
+from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
 
 class _Stmt:
@@ -55,32 +57,7 @@ class _Stmt:
         return self.data_dir
 
     def ok(self, name: str) -> DataFrame:
-        return _rows(self.spark, [(name, "Ok")], "table string, status string")
-
-
-def _literal(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _rows(spark, rows: list[tuple], schema: str) -> DataFrame:
-    """A statement's result rows as an inline VALUES table: a local
-    relation, so collecting it runs no Spark job (createDataFrame of a
-    Python list parallelizes it over every core)."""
-    cols = [c.split() for c in schema.split(",")]
-    values = ", ".join(
-        "(" + ", ".join(_literal(v) for v in r) + ")"
-        for r in rows or [(None,) * len(cols)])
-    return spark.sql(
-        "SELECT " + ", ".join(f"CAST(c{i} AS {t}) AS `{n}`"
-                              for i, (n, t) in enumerate(cols))
-        + f" FROM VALUES {values} AS v({', '.join(f'c{i}' for i in range(len(cols)))})"
-        + ("" if rows else " WHERE FALSE"))
+        return local_rows(self.spark, [(name, "Ok")], "table string, status string")
 
 
 def execute(spark, sql: str, data_dir: str | None, query) -> DataFrame | None:
@@ -123,20 +100,12 @@ def _show(st: _Stmt):
         from clickhouse_25_5_3_75_stable_spark.sources.datalake import LAKE_TABLES
 
         names = sorted({*catalog.list_tables(st.dir), *LAKE_TABLES})
-        return _rows(spark, [(n,) for n in names], "name string")
+        return local_rows(spark, [(n,) for n in names], "name string")
     if what.startswith("DATABASE"):
-        from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-            system_databases,
-        )
-
-        return system_databases(spark).select("name")
+        return system_table(spark, "databases").select("name")
     if what == "PROCESSLIST":
         # InterpreterShowProcesslistQuery.cpp: SELECT * FROM system.processes
-        from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-            system_processes,
-        )
-
-        return system_processes(spark)
+        return system_table(spark, "processes")
     show_set = re.match(
         r"(?is)^SHOW\s+(CHANGED\s+)?SETTINGS(?:\s+(I?LIKE)\s+('[^']*'))?$",
         st.sql)
@@ -171,7 +140,7 @@ def _show_settings(spark, changed, op, pattern):
         val = cur if cur is not None else defaults.get(s, "")
         changed_ = cur is not None and cur != defaults.get(s, cur)
         rows.append((s, str(val), bool(changed_)))
-    df = _rows(spark, rows, "name string, value string, changed boolean")
+    df = local_rows(spark, rows, "name string, value string, changed boolean")
     if changed:
         df = df.filter("changed")
     if pattern:
@@ -224,7 +193,7 @@ def _show_create_table(st: _Stmt, name: str):
             cols.append(f"{f.name} {t}")
         stmt = (f"CREATE TABLE {name} ({', '.join(cols)}) ENGINE = MergeTree "
                 "ORDER BY tuple()")
-    return _rows(st.spark, [(stmt,)], "statement string")
+    return local_rows(st.spark, [(stmt,)], "statement string")
 
 
 def _exists(st: _Stmt):
@@ -236,12 +205,12 @@ def _exists(st: _Stmt):
     if m is None:
         raise ValueError("unsupported EXISTS shape (EXISTS [TABLE] t)")
     found = st.spark.catalog.tableExists(m.group(1))
-    return _rows(st.spark, [(int(found),)], "result tinyint")
+    return local_rows(st.spark, [(int(found),)], "result tinyint")
 
 
 def _describe(st: _Stmt):
     df = st.spark.table(st.last)
-    return _rows(
+    return local_rows(
         st.spark, [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
         "name string, type string")
 
@@ -254,8 +223,8 @@ def _explain(st: _Stmt):
     if not em:
         raise ValueError("unsupported EXPLAIN shape")
     text = ch_explain(st.spark, em.group(2), (em.group(1) or "PLAN").upper())
-    return _rows(st.spark, [(ln,) for ln in text.splitlines()],
-                                    "explain string")
+    return local_rows(st.spark, [(ln,) for ln in text.splitlines()],
+                      "explain string")
 
 
 # --- access entities and dictionaries ---------------------------------------
@@ -276,18 +245,18 @@ def _dictionary(st: _Stmt):
     spark = st.spark
     if st.word(0) == "CREATE":
         ds.register_dictionary(spark, ds.parse_create_dictionary(st.sql))
-        return _rows(spark, [("OK",)], "created string")
+        return local_rows(spark, [("OK",)], "created string")
     m = re.match(r"(?is)^DROP\s+DICTIONARY\s+(IF\s+EXISTS\s+)?([A-Za-z_]\w*)$",
                  st.sql)
     if m is not None:
         ds.drop_dictionary(spark, m.group(2), bool(m.group(1)))
-        return _rows(spark, [("OK",)], "dropped string")
+        return local_rows(spark, [("OK",)], "dropped string")
     m = re.match(r"(?is)^EXISTS\s+DICTIONARY\s+([A-Za-z_]\w*)$", st.sql)
     if m is not None:
-        return _rows(
+        return local_rows(
             spark, [(int(m.group(1) in ds.SQL_DICTIONARIES),)], "result tinyint")
     if re.match(r"(?is)^SHOW\s+DICTIONARIES$", st.sql):
-        return _rows(
+        return local_rows(
             spark, [(n,) for n in sorted(ds.SQL_DICTIONARIES)], "name string")
     m = re.match(r"(?is)^SHOW\s+CREATE\s+DICTIONARY\s+([A-Za-z_]\w*)$", st.sql)
     if m is None:
@@ -313,7 +282,7 @@ def _dictionary(st: _Stmt):
             f"LAYOUT({d.layout.upper()}())")
     if d.range_min:
         stmt += f" RANGE(MIN {d.range_min} MAX {d.range_max})"
-    return _rows(spark, [(stmt,)], "statement string")
+    return local_rows(spark, [(stmt,)], "statement string")
 
 
 # --- CREATE / DROP and table lifecycle ---------------------------------------
@@ -536,7 +505,7 @@ def _check(st: _Stmt):
             bad.append((rel, str(e)[:80]))
     rows = ([(tname, 0, f"{p}: {why}") for p, why in bad]
             or [(tname, 1, f"{total} parts ok")])
-    df = _rows(st.spark, rows, "table string, result int, message string")
+    df = local_rows(st.spark, rows, "table string, result int, message string")
     df._ch_exit_code = 1 if bad else 0
     return df
 
@@ -555,7 +524,7 @@ def _watch(st: _Stmt):
     rows = [tuple(r) + (ver,)
             for rs, ver in lvv.watch(st.spark, limit=n, timeout_s=0.5)
             for r in rs]
-    return st.spark.createDataFrame(rows, lvv._schema)
+    return local_rows(st.spark, rows, lvv._schema)
 
 
 def _kill(st: _Stmt):
@@ -564,7 +533,7 @@ def _kill(st: _Stmt):
     query to kill — the reference's response shape with zero rows."""
     if st.word(1) != "QUERY":
         raise ValueError("KILL: only KILL QUERY is recognized")
-    return _rows(
+    return local_rows(
         st.spark, [], "kill_status string, query_id string, user string, query string")
 
 
@@ -872,8 +841,8 @@ def _alter_partition(st: _Stmt, tname: str, action: str):
         if val is not None and not td.partition_by:
             raise ValueError(f"{tname} has no PARTITION BY")
         snap = layout.freeze_partition(tpath, td.partition_by, val, fm.group(2))
-        return _rows(st.spark, [(tname, snap)],
-                                        "table string, backup_path string")
+        return local_rows(st.spark, [(tname, snap)],
+                          "table string, backup_path string")
     if not td.partition_by:
         raise ValueError(f"{tname} has no PARTITION BY")
     mv = re.match(r"(?is)^MOVE\s+PARTITION\s+(.+?)\s+TO\s+TABLE\s+(\w+)\s*$", action)
@@ -927,8 +896,8 @@ def _backup(st: _Stmt):
         restore_table(st.spark, st.dir, tname, path)
         return st.ok(tname)
     man = backup_table(st.dir, tname, path)
-    return _rows(st.spark, [(tname, man["files"], man["bytes"])],
-                                    "table string, files bigint, bytes bigint")
+    return local_rows(st.spark, [(tname, man["files"], man["bytes"])],
+                      "table string, files bigint, bytes bigint")
 
 
 # --- session statements -------------------------------------------------------
@@ -982,15 +951,15 @@ def _system(st: _Stmt):
             if os.path.isdir(snap):
                 shutil.rmtree(snap)
                 removed += 1
-        return _rows(spark, [(cmd, f"Ok ({removed} snapshots)")],
-                                     "command string, status string")
+        return local_rows(spark, [(cmd, f"Ok ({removed} snapshots)")],
+                          "command string, status string")
     else:
         raise ValueError(
             f"SYSTEM {cmd}: no analogue in this engine (supported: "
             "DROP QUERY/MARK/UNCOMPRESSED/FILESYSTEM CACHE, "
             "STOP/START MERGES, FLUSH LOGS, RELOAD DICTIONARIES, "
             "UNFREEZE WITH NAME)")
-    return _rows(spark, [(cmd, "Ok")], "command string, status string")
+    return local_rows(spark, [(cmd, "Ok")], "command string, status string")
 
 
 def _set(st: _Stmt):
@@ -1000,7 +969,7 @@ def _set(st: _Stmt):
     if not m:
         raise ValueError("expected SET <name> = <value>")
     applied = apply_settings(st.spark, {m.group(1).lower(): m.group(2)})
-    return _rows(
+    return local_rows(
         st.spark, [(m.group(1), m.group(2), len(applied))],
         "setting string, value string, confs_changed int")
 

@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_25_5_3_75_stable_spark.sources.catalog import local_rows
+
 # name -> LiveView, the session's registry (serves WATCH by name)
 LIVE_VIEWS: dict[str, "LiveView"] = {}
 
@@ -76,7 +78,7 @@ class LiveView:
                 self._materialize(spark)
             rows = [r + (self._version,) for r in self._rows]
             schema = self._schema
-        return spark.createDataFrame(rows, schema)
+        return local_rows(spark, rows, schema)
 
     def watch(self, spark: SparkSession, limit: int | None = None,
               timeout_s: float = 30.0):

@@ -101,6 +101,9 @@ _SLOW_NODEIDS = {
     "tests/test_streaming.py::test_sessionize_closed_sessions_match_batch",
     "tests/test_streaming.py::test_stateful_counts_stream",
     "tests/test_streaming.py::test_window_view_allowed_lateness_update_and_drop",
+    "tests/test_system_tables.py::test_catalog_tables_over_a_ddl_dir",
+    "tests/test_system_tables.py::test_every_system_table_builds_with_its_declared_columns",
+    "tests/test_system_tables.py::test_system_table_reads_run_no_spark_job",
 }
 
 

@@ -269,6 +269,16 @@ def test_local_entrypoint_formats(spark):
     run_local("SELECT 1 AS x FORMAT Pretty", SF_SMOKE, spark=spark, out=out3)
     assert "x" in out3.getvalue()
 
+    # FORMAT is cut off the text as written: runs of spaces inside a
+    # literal survive, and booleans print as the reference prints them
+    out4 = io.StringIO()
+    run_local("SELECT 'a  b' AS s, length('a  b') AS n,\n1 = 1 AS t FORMAT CSV",
+              SF_SMOKE, spark=spark, out=out4)
+    assert out4.getvalue().splitlines() == ["a  b,4,true"]
+    out5 = io.StringIO()
+    run_local("SELECT 1 = 2 AS f FORMAT TabSeparated", SF_SMOKE, spark=spark, out=out5)
+    assert out5.getvalue() == "false\n"
+
 
 def test_http_interface(spark):
     """HTTP entry point (SURVEY §3 B): /ping, GET ?query=, POST body,

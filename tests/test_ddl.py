@@ -213,7 +213,7 @@ def test_query_log(spark, tmp_path):
                "AND query IN ('SELECT 1 AS x', 'SELECT 2 AS y') "
                "ORDER BY query FORMAT CSV")
     lines = body.strip().splitlines()
-    assert lines[-2:] == ["SELECT 1 AS x,1,True", "SELECT 2 AS y,1,True"]
+    assert lines[-2:] == ["SELECT 1 AS x,1,true", "SELECT 2 AS y,1,true"]
 
 
 def test_out_of_band_writes_seen_by_next_statement(spark, tmp_path):
@@ -580,10 +580,7 @@ def test_system_projections_and_mutations(spark, tmp_path):
     import io
 
     from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_mutations,
-        system_projections,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
     d = str(tmp_path)
     out = io.StringIO()
@@ -597,10 +594,10 @@ def test_system_projections_and_mutations(spark, tmp_path):
     run_local("ALTER TABLE sm DELETE WHERE k = 2", d, spark=spark, out=out)
     run_local("OPTIMIZE TABLE sm FINAL", d, spark=spark, out=out)
 
-    projs = system_projections(spark, d).collect()
+    projs = system_table(spark, "projections", d).collect()
     assert [(r.table, r.name, r.sum_columns) for r in projs] == [("sm", "p", "x")]
 
-    muts = [r.command for r in system_mutations(spark, d)
+    muts = [r.command for r in system_table(spark, "mutations", d)
             .orderBy("create_time", "mutation_id").collect()]
     assert muts == ["UPDATE x = x + 1 WHERE k = 1", "DELETE WHERE k = 2"]
 

@@ -274,13 +274,19 @@ def test_siphash64_exact_reference_values(spark):
     assert (v == s).all()
 
     # DataFrame expression and SQL name agree
+    from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
+
     df = spark.createDataFrame([("hello",), ("",), ("Ж",)], "s string")
     a = [r.h for r in df.select(siphash64("s").alias("h")).collect()]
-    b = [r.h for r in spark.sql(
-        "SELECT sipHash64(s) AS h FROM VALUES ('hello'), (''), ('Ж') AS t(s)"
+    b = [r.h for r in ch_sql(
+        spark, "SELECT sipHash64(s) AS h FROM VALUES ('hello'), (''), ('Ж') AS t(s)"
     ).collect()]
     assert a == b
     assert a[1] == np.int64(np.uint64(siphash64_py(b""))).item()
+    # the bare name is not a Spark SQL function: ClickHouse text goes
+    # through ch_sql, which types each argument
+    with pytest.raises(Exception, match="UNRESOLVED_ROUTINE"):
+        spark.sql("SELECT sipHash64(CAST(1 AS BIGINT)) AS h").collect()
 
     # dialect name routes to the exact implementation now
     from clickhouse_25_5_3_75_stable_spark.functions.dialect import ch
@@ -697,7 +703,7 @@ def test_query_id_family_and_macros(spark):
     from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError, ch_sql
     from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
         set_macro,
-        system_macros,
+        system_table,
     )
 
     r = ch_sql(
@@ -716,7 +722,7 @@ def test_query_id_family_and_macros(spark):
 
     set_macro("layer", "L7")
     assert ch_sql(spark, "SELECT getMacro('layer') AS m").collect()[0].m == "L7"
-    assert ("layer", "L7") in [tuple(x) for x in system_macros(spark).collect()]
+    assert ("layer", "L7") in [tuple(x) for x in system_table(spark, "macros").collect()]
     with pytest.raises(ChSqlError, match="no macro"):
         ch_sql(spark, "SELECT getMacro('missing_macro') AS m")
 
@@ -735,13 +741,11 @@ def test_query_finish_attribution(spark):
     other queries transpiled in between (review-found)."""
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
     from clickhouse_25_5_3_75_stable_spark.profiler import explain_analyze
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_query_log,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
     df = ch_sql(spark, "SELECT 41 AS x")
     first_id = df._ch_query_id
     ch_sql(spark, "SELECT 42 AS y")  # moves the current-query scope
     explain_analyze(df)
-    fin = [r for r in system_query_log(spark).collect() if r.type == "QueryFinish"]
+    fin = [r for r in system_table(spark, "query_log").collect() if r.type == "QueryFinish"]
     assert fin and fin[-1].query_id == first_id

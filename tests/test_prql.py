@@ -200,13 +200,18 @@ loop (
     assert got == [1, 2, 4, 8, 10, 16, 20]
     # the CLI door (SET dialect = 'prql') runs it through the same prql_sql
     out = io.StringIO()
+    out_csv = io.StringIO()
     run_local("SET dialect = 'prql'", str(tmp_path), spark=spark, out=io.StringIO())
     try:
         assert run_local(text, str(tmp_path), spark=spark, out=out) == 0
+        # a trailing FORMAT comes off without joining the PRQL lines
+        assert run_local(text + "FORMAT CSV", str(tmp_path), spark=spark,
+                         out=out_csv) == 0
     finally:
         run_local("SET dialect = 'clickhouse'", str(tmp_path), spark=spark,
                   out=io.StringIO())
     assert sorted(int(v) for v in out.getvalue().split()) == got
+    assert sorted(int(v) for v in out_csv.getvalue().split()) == got
 
 
 def test_prql_loop_refusals(spark):

@@ -571,11 +571,9 @@ def test_hudi_cow_timeline_replay(spark, tmp_path):
 def test_system_asynchronous_metrics_values(spark):
     """Round-7 system.asynchronous_metrics: deterministic name set is
     driver-gated; the machine-state VALUES get sanity pins here."""
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_asynchronous_metrics,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    m = {r.metric: r.value for r in system_asynchronous_metrics(spark).collect()}
+    m = {r.metric: r.value for r in system_table(spark, "asynchronous_metrics").collect()}
     assert m["MemoryResident"] > 1e6  # a JVM+Python process is >1 MB
     assert m["OSMemoryTotal"] > m["OSMemoryAvailable"] > 0
     assert m["Uptime"] > 0 and m["OSUptime"] > 0
@@ -583,11 +581,9 @@ def test_system_asynchronous_metrics_values(spark):
 
 
 def test_system_settings_changes_structure(spark):
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_settings_changes,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    df = system_settings_changes(spark)
+    df = system_table(spark, "settings_changes")
     assert df.columns == ["type", "version", "changes"]
     rows = df.collect()
     assert all(r.type == "Session" for r in rows)
@@ -598,11 +594,9 @@ def test_system_settings_changes_structure(spark):
 
 
 def test_system_quotas_default_row(spark):
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_quotas,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    r = system_quotas(spark).collect()[0]
+    r = system_table(spark, "quotas").collect()[0]
     assert r.name == "default" and r.storage == "users.xml"
     assert r.keys == ["user_name"] and r.durations == [3600]
     assert r.apply_to_all is False and r.apply_to_list == ["default"]
@@ -611,11 +605,9 @@ def test_system_quotas_default_row(spark):
 
 
 def test_system_quota_usage_live_counters(spark):
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_quota_usage,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    df = system_quota_usage(spark)
+    df = system_table(spark, "quota_usage")
     # full reference column surface: key/interval + one (<type>,
     # max_<type>) pair per QuotaDefs.h kind
     assert df.columns[:5] == [
@@ -628,11 +620,9 @@ def test_system_quota_usage_live_counters(spark):
 
 
 def test_system_row_policies_empty_with_schema(spark):
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_row_policies,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    df = system_row_policies(spark)
+    df = system_table(spark, "row_policies")
     assert df.count() == 0
     assert set(df.columns) >= {
         "name", "short_name", "database", "table", "id", "storage",
@@ -647,14 +637,12 @@ def test_system_errors_counts_chsql_refusals(spark):
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError, ch_sql
     from clickhouse_25_5_3_75_stable_spark.kql import kql_sql
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_errors,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
     spark.createDataFrame([(1,)], "x int").createOrReplaceTempView("err_t")
     with pytest.raises(ChSqlError):
         kql_sql(spark, "err_t | evaluate autocluster()")  # subset refusal
-    m = {r.name: r for r in system_errors(spark).collect()}
+    m = {r.name: r for r in system_table(spark, "errors").collect()}
     assert "NOT_IMPLEMENTED" in m
     assert m["NOT_IMPLEMENTED"].code == 48 and m["NOT_IMPLEMENTED"].value >= 1
     assert "evaluate" in m["NOT_IMPLEMENTED"].last_error_message
@@ -667,15 +655,12 @@ def test_system_errors_counts_chsql_refusals(spark):
 
 
 def test_system_profile_elements_and_merges(spark):
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_merges,
-        system_settings_profile_elements,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    r = system_settings_profile_elements(spark).collect()[0]
+    r = system_table(spark, "settings_profile_elements").collect()[0]
     assert (r.profile_name, r.setting_name, r.value, r.writability) == (
         "readonly", "readonly", "1", "CONST")
-    m = system_merges(spark)
+    m = system_table(spark, "merges")
     assert m.count() == 0 and "result_part_name" in m.columns
 
 
@@ -1496,7 +1481,7 @@ def test_system_tables_complete_vs_attach_list(spark):
     import pytest
 
     from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        _SQL_SYSTEM_TABLES,
+        SYSTEM_TABLES,
     )
 
     ref = "/root/reference/src/Storages/System/attachSystemTables.cpp"
@@ -1505,7 +1490,7 @@ def test_system_tables_complete_vs_attach_list(spark):
     names = set(re.findall(
         r'attach\w*<[^>]+>\(context, \w+, "([^"]+)"', open(ref).read()))
     assert len(names) >= 100
-    missing = sorted(names - set(_SQL_SYSTEM_TABLES))
+    missing = sorted(names - set(SYSTEM_TABLES))
     assert not missing, f"system tables not on the SQL route: {missing}"
 
 
@@ -1514,14 +1499,9 @@ def test_system_tables_final_batch_builders(spark, tmp_path):
     APPLY_FOR_LATENCY_EVENTS bounds; dropped_tables_parts reads parked
     parquet footers; iceberg_history walks the parent chain; the empty
     tier serves the reference column sets with zero rows."""
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_dropped_tables_parts,
-        system_latency_buckets,
-        system_scheduler,
-        system_zookeeper_nodes,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    lat = system_latency_buckets(spark)
+    lat = system_table(spark, "latency_buckets")
     assert len(lat.columns) == 14
     row = lat.collect()[0]
     assert row["LatencyEvent_S3ConnectMicroseconds"] == [
@@ -1531,12 +1511,12 @@ def test_system_tables_final_batch_builders(spark, tmp_path):
     park = tmp_path / "_dropped" / "t9.1700000000000000000"
     park.mkdir(parents=True)
     spark.range(6).coalesce(1).write.parquet(str(park / "p0"))
-    parts = system_dropped_tables_parts(spark, str(tmp_path)).collect()
+    parts = system_table(spark, "dropped_tables_parts", str(tmp_path)).collect()
     assert len(parts) == 1 and parts[0]["rows"] == 6
     assert parts[0]["table"] == "t9" and parts[0]["active"]
 
-    assert system_scheduler(spark).count() == 0
-    zk = system_zookeeper_nodes(spark)
+    assert system_table(spark, "scheduler").count() == 0
+    zk = system_table(spark, "zookeeper")
     assert zk.count() == 0 and "ephemeralOwner" in zk.columns
 
 

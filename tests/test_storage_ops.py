@@ -102,18 +102,17 @@ def test_projection_routing_matches_direct(spark):
 
 
 def test_system_tables(spark):
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_columns,
-        system_one,
-        system_tables,
-    )
+    from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
     sf = "/root/testdata/sf0.001"
-    cols = system_columns(spark, sf)
+    cols = system_table(spark, "columns", sf)
     assert cols.filter(F.col("table_name") == "region").count() == 2
-    tabs = {r.table_name: r.n_columns for r in system_tables(spark, sf).collect()}
+    tabs = {r.table_name: r.n for r in ch_sql(
+        spark, "SELECT table_name, count() AS n FROM system.columns "
+        "GROUP BY table_name", sf).collect()}
     assert tabs["lineitem"] >= 10 and len(tabs) == 10
-    assert system_one(spark).collect()[0].dummy == 0
+    assert system_table(spark, "one").collect()[0].dummy == 0
 
 
 def test_catalog_enumerations_see_ddl_tables(spark, tmp_path):
@@ -316,25 +315,22 @@ def test_special_engines_memory_set_join_buffer_null(spark, tmp_path):
 
 
 def test_system_functions_and_settings(spark):
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_functions,
-        system_settings,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    fns = system_functions(spark)
+    fns = system_table(spark, "functions")
     names = {r.name for r in fns.collect()}
     assert "todateorzero" in names or "toDateOrZero" in names
     excl = fns.filter(F.col("origin") == "excluded")
     assert excl.count() > 0
     assert excl.filter(F.col("exclusion_reason").isNull()).count() == 0
-    st = system_settings(spark)
+    st = system_table(spark, "settings")
     assert st.filter(F.col("name") == "spark.app.name").count() == 1
 
 
 def test_system_parts_over_mergetree_layout(spark, tmp_path):
     from clickhouse_25_5_3_75_stable_spark.sources.catalog import load_table
     from clickhouse_25_5_3_75_stable_spark.sources.layout import write_mergetree_layout
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_parts
+    from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
     from tests.conftest import SF_SMOKE
 
     ev = load_table(spark, SF_SMOKE, "events").limit(500)
@@ -343,9 +339,10 @@ def test_system_parts_over_mergetree_layout(spark, tmp_path):
         ev.withColumn("d", F.col("ts").cast("date")), out, partition_by=["d"],
         order_by=["user_id"],
     )
-    parts = system_parts(spark, out)
+    parts = ch_sql(spark, "SELECT name, bytes_on_disk FROM system.parts "
+                   "WHERE table = 'mt'", str(tmp_path))
     assert parts.count() > 0
-    assert parts.agg(F.sum("n_files")).collect()[0][0] > 0
+    assert parts.agg(F.sum("bytes_on_disk")).collect()[0][0] > 0
 
 
 def test_ttl_rollup_partitions_fresh_and_expired(spark):
@@ -402,32 +399,18 @@ def test_system_tables_wide_surface(spark, tmp_path):
     """The round-3 system.* batch: each table materializes with its
     declared schema and plausible contents (reference exposes 208
     system tables — src/Storages/System/)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.layout import (
-        detach_partition,
-        write_mergetree_layout,
-    )
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_aggregate_function_combinators,
-        system_build_options,
-        system_clusters,
-        system_collations,
-        system_data_type_families,
-        system_databases,
-        system_detached_parts,
-        system_disks,
-        system_formats,
-        system_parts_columns,
-        system_processes,
-        system_table_functions,
-        system_time_zones,
-    )
+    import io
 
-    assert "default" in {r.name for r in system_databases(spark).collect()}
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+    from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    fams = {r.name: r.spark_type for r in system_data_type_families(spark).collect()}
+    assert "default" in {r.name for r in system_table(spark, "databases").collect()}
+
+    fams = {r.name: r.spark_type for r in system_table(spark, "data_type_families").collect()}
     assert fams["UInt64"] and fams["Array"] == "array<bigint>"
 
-    fmts = {r.name: r for r in system_formats(spark).collect()}
+    fmts = {r.name: r for r in system_table(spark, "formats").collect()}
     assert fmts["Parquet"].is_input == 1 and fmts["Pretty"].is_input == 0
     # MsgPack graduated to a real shim in round 3; Protobuf reports
     # honestly based on whether the spark-protobuf jar is loadable
@@ -444,41 +427,48 @@ def test_system_tables_wide_surface(spark, tmp_path):
     # CapnProto graduated to a real shim in round 5 (capnproto_fmt.py)
     assert fmts["CapnProto"].is_input == 1
 
-    tf_names = {r.name for r in system_table_functions(spark).collect()}
+    tf_names = {r.name for r in system_table(spark, "table_functions").collect()}
     assert {"numbers", "generate_series", "values", "merge", "view"} <= tf_names
 
-    combs = {r.name for r in system_aggregate_function_combinators(spark).collect()}
+    combs = {r.name for r in system_table(spark, "aggregate_function_combinators").collect()}
     assert {"-If", "-State", "-Merge", "-Resample"} <= combs
 
-    colls = {r.name: r.resolves_to for r in system_collations(spark).collect()}
+    colls = {r.name: r.resolves_to for r in system_table(spark, "collations").collect()}
     assert colls["ci"] == "UNICODE_CI" and "UTF8_BINARY" in colls
 
-    tz = system_time_zones(spark)
+    tz = system_table(spark, "time_zones")
     assert tz.filter(F.col("time_zone") == "UTC").count() == 1
 
-    # detached_parts reflects a real DETACH on a layout
-    df = spark.range(0, 60).selectExpr("id", "id % 2 AS p")
-    path = str(tmp_path / "layout")
-    write_mergetree_layout(df, path, order_by=["id"], partition_by=["p"])
-    assert system_detached_parts(spark, path).count() == 0
-    detach_partition(path, "p", 1)
-    det = system_detached_parts(spark, path).collect()
-    assert len(det) == 1 and det[0].partition == "p=1" and det[0].bytes_on_disk > 0
+    # detached_parts reflects a real DETACH on a partitioned table
+    d = str(tmp_path)
+    for stmt in ("CREATE TABLE layout (id Int64, p Int64) ENGINE = MergeTree "
+                 "ORDER BY id PARTITION BY p",
+                 "INSERT INTO layout SELECT number AS id, number % 2 AS p "
+                 "FROM numbers(60)"):
+        assert run_local(stmt, d, spark=spark, out=io.StringIO()) == 0
+    detached = ("SELECT name, bytes_on_disk FROM system.detached_parts "
+                "WHERE table = 'layout'")
+    assert ch_sql(spark, detached, d).count() == 0
+    run_local("ALTER TABLE layout DETACH PARTITION 1", d, spark=spark,
+              out=io.StringIO())
+    det = ch_sql(spark, detached, d).collect()
+    assert len(det) == 1 and det[0].name == "p=1" and det[0].bytes_on_disk > 0
 
     # parts_columns reads footer stats, never data
-    pc = system_parts_columns(spark, path).collect()
+    pc = ch_sql(spark, "SELECT column, null_count FROM system.parts_columns "
+                "WHERE table = 'layout'", d).collect()
     assert any(r.column == "id" and r.null_count == 0 for r in pc)
 
-    disks = system_disks(spark).collect()
+    disks = system_table(spark, "disks").collect()
     assert disks[0].total_space > disks[0].free_space > 0
 
-    cl = system_clusters(spark).collect()
+    cl = system_table(spark, "clusters").collect()
     assert len(cl) >= 1 and cl[0].cluster == "default"
 
-    opts = {r.name: r.value for r in system_build_options(spark).collect()}
+    opts = {r.name: r.value for r in system_table(spark, "build_options").collect()}
     assert opts["SPARK_VERSION"].startswith("4.")
 
-    assert system_processes(spark).columns == ["job_id", "status", "n_stages"]
+    assert system_table(spark, "processes").columns == ["job_id", "status", "n_stages"]
 
 
 def test_kill_query_cancels_tagged_job(spark):
@@ -522,68 +512,53 @@ def test_system_tables_round5_batch(spark):
     the session query_log)."""
     from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
         record_query,
-        system_database_engines,
-        system_events,
-        system_grants,
-        system_keywords,
-        system_licenses,
-        system_merge_tree_settings,
-        system_metrics,
-        system_privileges,
-        system_query_log,
-        system_roles,
-        system_storage_policies,
-        system_table_engines,
-        system_users,
-        system_warnings,
-        system_zeros,
+        system_table,
     )
+    from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
 
-    kws = {r.keyword for r in system_keywords(spark).collect()}
+    kws = {r.keyword for r in system_table(spark, "keywords").collect()}
     assert {"SELECT", "PREWHERE", "QUALIFY", "ASOF", "PASTE"} <= kws
 
-    engines = {r.name: r for r in system_table_engines(spark).collect()}
+    engines = {r.name: r for r in system_table(spark, "table_engines").collect()}
     assert engines["MergeTree"].supports_ttl == 1
     assert engines["Memory"].supports_ttl == 0
     assert "GraphiteMergeTree" in engines
 
-    assert {r.name for r in system_database_engines(spark).collect()} == {
+    assert {r.name for r in system_table(spark, "database_engines").collect()} == {
         "Atomic", "Memory"}
-    mts = {r.name for r in system_merge_tree_settings(spark).collect()}
+    mts = {r.name for r in system_table(spark, "merge_tree_settings").collect()}
     assert "index_granularity" in mts
-    assert system_storage_policies(spark).collect()[0].policy_name == "default"
+    assert system_table(spark, "storage_policies").collect()[0].policy_name == "default"
 
-    users = system_users(spark).collect()
+    users = system_table(spark, "users").collect()
     assert len(users) == 1 and users[0].name == "default"
-    assert system_roles(spark).count() == 0
-    assert system_grants(spark).collect()[0].access_type == "ALL"
-    assert all(r.enforced == 0 for r in system_privileges(spark).collect())
+    assert system_table(spark, "roles").count() == 0
+    assert system_table(spark, "grants").collect()[0].access_type == "ALL"
+    assert all(r.enforced == 0 for r in system_table(spark, "privileges").collect())
 
-    assert system_zeros(spark, 5).count() == 5
-    system_warnings(spark).collect()  # shape only (env-dependent rows)
-    lic = {r.library_name: r.license_type for r in system_licenses(spark).collect()}
+    assert ch_sql(spark, "SELECT zero FROM system.zeros LIMIT 5").count() == 5
+    system_table(spark, "warnings").collect()  # shape only (env-dependent rows)
+    lic = {r.library_name: r.license_type for r in system_table(spark, "licenses").collect()}
     assert lic["pyspark"] == "Apache-2.0"
 
     # query log + counters: chsql records on transpile
-    from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
-
-    before = system_query_log(spark).count()
+    before = system_table(spark, "query_log").count()
     ch_sql(spark, "SELECT 1 AS x")
-    log = system_query_log(spark)
+    log = system_table(spark, "query_log")
     assert log.count() == before + 1
     last = log.collect()[-1]
     assert last.type == "QueryStart" and "SELECT 1" in last.query
-    ev = {r.event: r.value for r in system_events(spark).collect()}
+    ev = {r.event: r.value for r in system_table(spark, "events").collect()}
     assert ev.get("Query", 0) >= 1 and ev.get("SelectQuery", 0) >= 1
 
-    mets = {r.metric for r in system_metrics(spark).collect()}
+    mets = {r.metric for r in system_table(spark, "metrics").collect()}
     assert {"ActiveJobs", "DefaultParallelism", "QueryLogEntries"} <= mets
 
     # profiler records QueryFinish with duration + result rows
     from clickhouse_25_5_3_75_stable_spark.profiler import explain_analyze
 
     explain_analyze(spark.range(10).selectExpr("sum(id) s"))
-    fin = [r for r in system_query_log(spark).collect() if r.type == "QueryFinish"]
+    fin = [r for r in system_table(spark, "query_log").collect() if r.type == "QueryFinish"]
     assert fin and fin[-1].result_rows == 1 and fin[-1].query_duration_ms > 0
 
 
@@ -629,11 +604,9 @@ def test_system_tables_full_reference_columns(spark):
     """The full system.tables surface carries the reference's column
     list (StorageSystemTables.cpp, 25.5) in order, plus the `table`
     alias; quick-stats come from parquet footers."""
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_tables_full,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
-    df = system_tables_full(spark, "/root/testdata/sf0.001")
+    df = system_table(spark, "tables", "/root/testdata/sf0.001")
     want = [
         "database", "name", "uuid", "engine", "is_temporary", "data_paths",
         "metadata_path", "metadata_modification_time", "metadata_version",
@@ -666,22 +639,24 @@ def test_system_detached_parts_full(spark, tmp_path):
     reports reason='broken' and the bare partition id."""
     import os
 
-    from clickhouse_25_5_3_75_stable_spark.sources.layout import (
-        detach_partition,
-        write_mergetree_layout,
-    )
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_detached_parts_full,
-    )
+    import io
 
-    df = spark.range(0, 40).selectExpr("id", "id % 2 AS p")
-    path = str(tmp_path / "layout")
-    write_mergetree_layout(df, path, order_by=["id"], partition_by=["p"])
-    detach_partition(path, "p", 1)
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+    from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql
+
+    d = str(tmp_path)
+    for stmt in ("CREATE TABLE layout (id Int64, p Int64) ENGINE = MergeTree "
+                 "ORDER BY id PARTITION BY p",
+                 "INSERT INTO layout SELECT number AS id, number % 2 AS p "
+                 "FROM numbers(40)",
+                 "ALTER TABLE layout DETACH PARTITION 1"):
+        assert run_local(stmt, d, spark=spark, out=io.StringIO()) == 0
+    path = os.path.join(d, "layout")
     # simulate the reference's broken-part quarantine naming
     os.rename(os.path.join(path, "p=0"),
               os.path.join(path, "_detached", "broken_p=0"))
-    rows = {r.name: r for r in system_detached_parts_full(spark, path).collect()}
+    rows = {r.name: r for r in ch_sql(
+        spark, "SELECT * FROM system.detached_parts", d).collect()}
     assert set(rows) == {"p=1", "broken_p=0"}
     clean, broken = rows["p=1"], rows["broken_p=0"]
     assert clean.reason is None and clean.partition_id == "p=1"
@@ -704,18 +679,16 @@ def test_system_backups_log(spark, tmp_path, sf_dir):
         backup_table,
         restore_table,
     )
-    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import (
-        system_backups,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
     base = tmp_path / "data"
     (base / "t1").mkdir(parents=True)
     shutil.copy(f"{sf_dir}/nation.parquet", base / "t1" / "part.parquet")
-    before = system_backups(spark).count()
+    before = system_table(spark, "backups").count()
     backup_table(str(base), "t1", str(tmp_path / "bk"))
     shutil.rmtree(base / "t1")
     restore_table(spark, str(base), "t1", str(tmp_path / "bk"))
-    rows = system_backups(spark).collect()
+    rows = system_table(spark, "backups").collect()
     assert len(rows) == before + 2
     statuses = [r.status for r in rows[-2:]]
     assert statuses == ["BACKUP_CREATED", "RESTORED"]
