@@ -16,6 +16,7 @@ supported subset.
 from __future__ import annotations
 
 import argparse
+import datetime
 import json
 import os
 import re
@@ -33,9 +34,26 @@ def _detect_format(sql: str) -> tuple[str, str]:
     return sql[:m.start()], m.group(1)
 
 
-def _text(v):
-    """A cell's text value: booleans as the reference writes them."""
-    return "true" if v is True else "false" if v is False else v
+def _text(v, nested: bool = False):
+    """A cell's text value as the reference writes it: booleans as
+    true/false, arrays as [a,b], maps as {k:v}, tuples as (a,b); inside
+    those, NULL as NULL and strings and dates single-quoted. A top-level
+    string or NULL is left to the format."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, dict):
+        return "{" + ",".join(f"{_text(k, True)}:{_text(x, True)}"
+                              for k, x in v.items()) + "}"
+    if isinstance(v, (list, tuple)):  # a struct value is a Row, a tuple
+        inner = ",".join(_text(x, True) for x in v)
+        return f"[{inner}]" if isinstance(v, list) else f"({inner})"
+    if not nested:
+        return v
+    if v is None:
+        return "NULL"
+    if isinstance(v, (str, datetime.date)):  # datetime is a date too
+        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(v)
 
 
 def _emit(rows, cols, fmt: str, out) -> None:

@@ -601,10 +601,7 @@ def apply_settings(spark, settings: dict[str, str]):
     restore: dict[str, str | None] = {}
 
     def set_conf(k: str, v: str) -> None:
-        try:
-            restore[k] = spark.conf.get(k)
-        except Exception:
-            restore[k] = None
+        restore[k] = spark.conf.get(k, None)
         spark.conf.set(k, v)
 
     for name, value in settings.items():
@@ -681,13 +678,10 @@ _MANAGED_CONFS = (
 
 
 def settings_snapshot(spark) -> dict[str, str | None]:
-    snap: dict[str, str | None] = {}
-    for k in _MANAGED_CONFS:
-        try:
-            snap[k] = spark.conf.get(k)
-        except Exception:
-            snap[k] = None
-    return snap
+    """The managed confs' values, None for an unset one. A get without a
+    default raises through py4j for an unset key, which costs 20-30 ms a
+    key; a get with a default does not."""
+    return {k: spark.conf.get(k, None) for k in _MANAGED_CONFS}
 
 
 def _rewrite_prewhere(toks: list[str]) -> list[str]:

@@ -14,7 +14,11 @@ Re-reading every table's footers for every statement cost more than
 most reads, so each table's DataFrame is remembered per SparkSession
 under a fingerprint of its files and read again only when a write
 changes them. A view's plan pins its file listing, so the fingerprint
-(not a plain cache) is what keeps views fresh.
+(not a plain cache) is what keeps views fresh. The view itself is
+replaced only when the fingerprint changed or the session no longer
+holds the view this module installed (dropped, or shadowed by another
+view of that name): replacing it runs a CreateViewCommand, about 10 ms
+a table, where checking it costs well under 1 ms.
 
 At 100 TB the layout contract is: partition by a coarse time/tenant
 key, sort-within-files by the query's PK analogue so min/max pruning
@@ -50,7 +54,7 @@ TABLES = (
     "embeddings",
 )
 
-# SparkSession -> {(data_dir, name): (fingerprint, DataFrame)}
+# SparkSession -> {(data_dir, name): (fingerprint, DataFrame, JVM view)}
 _VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -128,7 +132,9 @@ def register(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     """Register one table's temp view and return its DataFrame: the
     remembered one while the table's files are unchanged, else a fresh
     read — ``load_table`` for a flat file, ``ddl.register_table_view``
-    (declared columns, cast-on-read, rename coalescing) for a dir."""
+    (declared columns, cast-on-read, rename coalescing) for a dir. The
+    view is replaced only when the read is fresh or the session's view
+    of that name is not the one installed here."""
     from clickhouse_25_5_3_75_stable_spark import ddl
 
     path = table_path(data_dir, name)
@@ -138,10 +144,16 @@ def register(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     views = _VIEWS.setdefault(spark, {})
     key = (os.path.abspath(data_dir), name)
     hit = views.get(key)
+    temp_views = spark._jsparkSession.sessionState().catalog()
     if hit is None or hit[0] != fp:
         read = ddl.register_table_view if os.path.isdir(path) else load_table
-        hit = views[key] = (fp, read(spark, data_dir, name))
+        hit = (fp, read(spark, data_dir, name), None)
+    elif temp_views.getRawTempView(name).contains(hit[2]):
+        # the session still holds the view installed here; the case
+        # class's equals starts with an identity check, so this is cheap
+        return hit[1]
     hit[1].createOrReplaceTempView(name)
+    views[key] = (hit[0], hit[1], temp_views.getRawTempView(name).get())
     return hit[1]
 
 
@@ -152,7 +164,8 @@ def forget(spark: SparkSession, data_dir: str, name: str) -> None:
 
 
 def sync(spark: SparkSession, data_dir: str) -> list[str]:
-    """Register every table of a data dir; returns the registered names.
+    """Register every table of a data dir; returns the registered names
+    (every listed table, whether or not its view had to be replaced).
     An unreadable (corrupted) table is skipped: it must not take the
     whole session down, and CHECK TABLE needs to run to diagnose it."""
     names = []
@@ -219,3 +232,17 @@ def local_rows(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
         conv = _local_time(f.dataType)
         arrays.append(pa.array([conv(v) for v in col] if conv else col, type=typ))
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)
+
+
+def read_text(spark: SparkSession, reader, fmt: str, text: str) -> DataFrame:
+    """Inline rows (INSERT ... FORMAT <fmt>, the format() table function)
+    read by `reader` — its schema and options set — as `fmt` ('json' or
+    'csv'), one record per non-blank line. The lines reach the JVM as a
+    Dataset[String] over a local relation, so parsing and schema
+    inference run there; a parallelized Python list would start a Python
+    worker on every core (100 rows parsed and collected at local[4]:
+    about 950 ms that way, about 220 ms here)."""
+    lines = [(ln,) for ln in text.splitlines() if ln.strip()]
+    strings = spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    ds = getattr(local_rows(spark, lines, "value STRING")._jdf, "as")(strings)
+    return DataFrame(getattr(reader._jreader, fmt)(ds), spark)

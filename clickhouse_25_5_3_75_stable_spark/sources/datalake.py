@@ -787,7 +787,7 @@ def iceberg_history_rows(path: str) -> list[tuple]:
         sid = by_id[sid].get("parent-snapshot-id")
     return [
         ("default", os.path.basename(path.rstrip("/")),
-         dt.datetime.utcfromtimestamp(s["timestamp-ms"] / 1000.0)
+         dt.datetime.fromtimestamp(s["timestamp-ms"] / 1000.0, dt.timezone.utc)
          if s.get("timestamp-ms") else None,
          s["snapshot-id"], s.get("parent-snapshot-id"),
          s["snapshot-id"] in ancestors)

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 from collections import deque as _deque
 from datetime import datetime as _dt
+from datetime import timezone
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -444,7 +445,7 @@ def _dropped_tables(spark: SparkSession, data_dir: str) -> list[tuple]:
         for i, d in enumerate(sorted(os.listdir(park))):
             name, _, ns = d.rpartition(".")
             try:
-                ts = _dt.utcfromtimestamp(int(ns) / 1e9)
+                ts = _dt.fromtimestamp(int(ns) / 1e9, timezone.utc)
             except ValueError:
                 name, ts = d, None
             rows.append((i, "default", name, "", "MergeTree",
@@ -932,12 +933,14 @@ def _server_settings(spark: SparkSession, data_dir) -> list[tuple]:
         "spark.sql.parquet.compression.codec": (
             "snappy", "Part compression codec (reference: compression method)"),
     }
+    conf = spark._jsparkSession.conf()
     rows = []
     for name, (dflt, desc) in settings.items():
-        try:
-            val = spark.conf.get(name)
-        except Exception:
-            val = dflt
+        # the value in effect, Spark's own default for an unset key; an
+        # Option rather than a raising get, which crosses py4j as an
+        # exception
+        opt = conf.getOption(name)
+        val = opt.get() if opt.isDefined() else dflt
         rows.append((name, str(val), dflt, int(str(val) != dflt), desc,
                      "String", "Yes", 0))
     return rows
@@ -1082,7 +1085,7 @@ def _quota_usage(spark: SparkSession, data_dir) -> list[tuple]:
     max_<type> is unset on the default quota."""
     import datetime as dt
 
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    now = dt.datetime.now(dt.timezone.utc)
     start = now.replace(minute=0, second=0, microsecond=0)
     used = {
         "queries": len(_QUERY_LOG),

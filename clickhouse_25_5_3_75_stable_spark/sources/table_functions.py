@@ -121,19 +121,19 @@ def format_table(spark: SparkSession, fmt: str, data: str, schema: str | None = 
     src/TableFunctions/TableFunctionFormat.cpp): parse an inline
     literal as a table. Driver-side by construction (the literal lives
     in the query text), parallelism is irrelevant at literal sizes."""
+    from clickhouse_25_5_3_75_stable_spark.sources import catalog
+
     fmt_l = fmt.lower()
-    lines = [ln for ln in data.splitlines() if ln.strip()]
     if fmt_l in ("jsoneachrow", "json"):
-        df = spark.read.json(spark.sparkContext.parallelize(lines), schema=schema)
-        return df
+        reader = spark.read.schema(schema) if schema else spark.read
+        return catalog.read_text(spark, reader, "json", data)
     if fmt_l in ("csv", "csvwithnames", "tsv", "tsvwithnames"):
         sep = "\t" if fmt_l.startswith("tsv") else ","
         header = fmt_l.endswith("withnames")
-        rdd = spark.sparkContext.parallelize(lines)
         reader = spark.read.option("header", header).option("sep", sep)
         if schema:
             reader = reader.schema(schema)
         else:
             reader = reader.option("inferSchema", True)
-        return reader.csv(rdd)
+        return catalog.read_text(spark, reader, "csv", data)
     raise ValueError(f"format_table: unsupported inline format {fmt!r}")

@@ -567,13 +567,12 @@ def _insert(st: _Stmt):
     elif mode_kw == "FORMAT":
         fmt_name, _, payload = rest.partition("\n")
         fmt_name = fmt_name.strip().lower()
-        lines = spark.sparkContext.parallelize(
-            [ln for ln in payload.splitlines() if ln.strip()])
         reader = spark.read.schema(target.schema)
         if fmt_name in ("jsoneachrow", "jsonlines", "ndjson"):
-            df = reader.json(lines)
+            df = catalog.read_text(spark, reader, "json", payload)
         elif fmt_name in ("csv", "csvwithnames"):
-            df = reader.option("header", fmt_name == "csvwithnames").csv(lines)
+            reader = reader.option("header", fmt_name == "csvwithnames")
+            df = catalog.read_text(spark, reader, "csv", payload)
         else:
             raise ValueError(f"inline INSERT FORMAT {fmt_name!r} unsupported "
                              "(JSONEachRow and CSV[WithNames] are)")

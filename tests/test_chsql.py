@@ -280,6 +280,52 @@ def test_local_entrypoint_formats(spark):
     assert out5.getvalue() == "false\n"
 
 
+@pytest.mark.parametrize("fmt, line", [
+    ("TabSeparated", "[true,NULL]\t{'k':false}\t(1,'a')\t['x\\'y']\ttrue\tb\t"),
+    ("CSV", "\"[true,NULL]\",{'k':false},\"(1,'a')\",['x\\'y'],true,b,"),
+])
+def test_emit_nested_cells(fmt, line):
+    """Nested cells print as the reference prints them: booleans as
+    true/false, NULL as NULL, strings single-quoted inside a container;
+    top-level cells keep their plain text."""
+    import io
+
+    from pyspark.sql import Row
+
+    from clickhouse_25_5_3_75_stable_spark.__main__ import _emit
+
+    out = io.StringIO()
+    _emit([([True, None], {"k": False}, Row(a=1, b="a"), ["x'y"], True, "b", None)],
+          ["a", "m", "t", "s", "f", "v", "n"], fmt, out)
+    assert out.getvalue().splitlines() == [line]
+
+
+def test_statement_path_has_no_python_rdds_or_raising_conf_gets():
+    """The modules every CLI/HTTP statement runs through parallelize no
+    Python list (a Python worker per core) and read no conf without a
+    default (an unset key raises through py4j, 20-30 ms each)."""
+    import ast
+    import pathlib
+
+    import clickhouse_25_5_3_75_stable_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    bad = []
+    for rel in ("__main__.py", "http_server.py", "chsql.py", "statements.py",
+                "sources/catalog.py", "sources/table_functions.py",
+                "sources/system_tables.py"):
+        for node in ast.walk(ast.parse((root / rel).read_text())):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and isinstance(node.func.value, ast.Attribute)):
+                continue
+            owner, attr = node.func.value.attr, node.func.attr
+            if ((owner, attr) == ("sparkContext", "parallelize")
+                    or ((owner, attr) == ("conf", "get")
+                        and len(node.args) + len(node.keywords) < 2)):
+                bad.append(f"{rel}:{node.lineno} {owner}.{attr}")
+    assert bad == []
+
+
 def test_http_interface(spark):
     """HTTP entry point (SURVEY §3 B): /ping, GET ?query=, POST body,
     FORMAT honored, errors surface with 400."""
@@ -413,6 +459,7 @@ def test_settings_clause(spark):
     from clickhouse_25_5_3_75_stable_spark.chsql import (
         apply_settings,
         restore_settings,
+        settings_snapshot,
     )
 
     # max_result_rows default result_overflow_mode is THROW
@@ -449,6 +496,17 @@ def test_settings_clause(spark):
     restore = apply_settings(spark, {"max_threads": "9"})
     assert spark.conf.get("spark.sql.shuffle.partitions") == "9"
     restore_settings(spark, restore)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    # a managed key unset before a snapshot is unset after its restore
+    spark.conf.unset("spark.chspark.maxResultRows")
+    spark.conf.unset("spark.chsql.dialect")
+    snap = settings_snapshot(spark)
+    apply_settings(spark, {"max_result_rows": "3", "dialect": "kusto"})
+    assert spark.conf.get("spark.chsql.dialect") == "kusto"
+    restore_settings(spark, snap)
+    assert spark.conf.get("spark.chspark.maxResultRows", None) is None
+    assert spark.conf.get("spark.chsql.dialect", None) is None
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
@@ -1263,13 +1321,27 @@ def test_use_query_cache_populates_process_cache(spark, sf_dir):
     spark.conf.set("spark.chspark.useQueryCache", "0")
 
 
-def test_catalog_view_restored_after_shadowing(spark):
-    """Every ch_sql(..., sf_dir) re-registers the catalog's views, so a
-    table view shadowed with createOrReplaceTempView comes back."""
+def test_catalog_view_restored_after_shadowing(spark, monkeypatch):
+    """ch_sql(..., sf_dir) syncs the catalog, which replaces a table's
+    view only when its files changed or the session lost the view: a
+    second sync of an unchanged dir replaces none, and a view shadowed
+    with createOrReplaceTempView or dropped comes back."""
+    from clickhouse_25_5_3_75_stable_spark.sources import catalog
+
     ch_sql(spark, "SELECT count() AS n FROM nation", SF_SMOKE).collect()
+    replaced = []
+    DataFrame = type(spark.range(0))  # the session's concrete class
+    install = DataFrame.createOrReplaceTempView
+    monkeypatch.setattr(DataFrame, "createOrReplaceTempView",
+                        lambda df, name: (replaced.append(name), install(df, name)))
+    assert catalog.sync(spark, SF_SMOKE) and replaced == []
     spark.range(3).createOrReplaceTempView("nation")
     rows = ch_sql(spark, "SELECT count() AS n FROM nation", SF_SMOKE).collect()
     assert rows[0].n == 25
+    spark.catalog.dropTempView("nation")
+    rows = ch_sql(spark, "SELECT count() AS n FROM nation", SF_SMOKE).collect()
+    assert rows[0].n == 25
+    assert replaced == ["nation", "nation", "nation"]  # the shadow + 2 restores
 
 
 def test_system_tables_via_sql_text(spark, sf_dir):

@@ -374,11 +374,17 @@ def test_create_table_as_select(spark, tmp_path):
     assert lines[-1] == "40"  # 10 + 30
 
 
-def test_insert_inline_format_payload(spark, tmp_path):
+def test_insert_inline_format_payload(spark, tmp_path, monkeypatch):
+    """Inline rows are parsed in the JVM: no Python list is parallelized."""
     import io
     import os
 
+    from pyspark import SparkContext
+
     from clickhouse_25_5_3_75_stable_spark.__main__ import run_local, run_script
+
+    def no_rdd(*_a, **_k):
+        raise AssertionError("inline rows went through a Python RDD")
 
     data = str(tmp_path / "inline")
     os.makedirs(data)
@@ -387,13 +393,17 @@ def test_insert_inline_format_payload(spark, tmp_path):
         "CREATE TABLE ev (k Int64, v String) ENGINE = MergeTree ORDER BY k",
         data, spark=spark, out=buf,
     )
-    stmt = 'INSERT INTO ev FORMAT JSONEachRow\n{"k": 1, "v": "a"}\n{"k": 2, "v": "b"}'
+    monkeypatch.setattr(SparkContext, "parallelize", no_rdd)
+    stmt = 'INSERT INTO ev FORMAT JSONEachRow\n{"k": 1, "v": "a"}\n\n{"k": 2, "v": "b"}'
     assert run_local(stmt, data, spark=spark, out=buf) == 0
     stmt = "INSERT INTO ev FORMAT CSV\n3,c\n4,d"
     assert run_local(stmt, data, spark=spark, out=buf) == 0
+    stmt = "INSERT INTO ev FORMAT CSVWithNames\nk,v\n5,e"
+    assert run_local(stmt, data, spark=spark, out=buf) == 0
     buf = io.StringIO()
-    run_local("SELECT count() AS n, max(v) AS m FROM ev", data, spark=spark, out=buf)
-    assert buf.getvalue().strip() == "4\td"
+    run_local("SELECT k, v FROM ev ORDER BY k", data, spark=spark, out=buf)
+    assert buf.getvalue().splitlines() == [
+        "1\ta", "2\tb", "3\tc", "4\td", "5\te"]
 
 
 def test_from_final_folds_replacing_table(spark, tmp_path):

@@ -201,17 +201,28 @@ def test_lake_format_detection_and_errors(spark, tmp_path):
     assert read_lake_fallback(spark, str(d)).count() == 5
 
 
-def test_zeros_and_format_table(spark):
+def test_zeros_and_format_table(spark, monkeypatch):
+    from pyspark import SparkContext
+
     from clickhouse_25_5_3_75_stable_spark.sources.table_functions import (
         format_table,
         zeros,
     )
 
+    def no_rdd(*_a, **_k):
+        raise AssertionError("inline rows went through a Python RDD")
+
+    # the inline literal is parsed (and its schema inferred) in the JVM
+    monkeypatch.setattr(SparkContext, "parallelize", no_rdd)
     z = zeros(spark, 5)
     assert z.columns == ["zero"] and z.agg(F.sum("zero")).collect()[0][0] == 0
     j = format_table(spark, "JSONEachRow", '{"a": 1, "b": "x"}\n{"a": 2, "b": "y"}')
     assert sorted((r.a, r.b) for r in j.collect()) == [(1, "x"), (2, "y")]
+    assert j.dtypes == [("a", "bigint"), ("b", "string")]
     c = format_table(spark, "CSVWithNames", "k,v\n1,one\n2,two", schema="k int, v string")
+    assert sorted((r.k, r.v) for r in c.collect()) == [(1, "one"), (2, "two")]
+    c = format_table(spark, "CSVWithNames", "k,v\n1,one\n\n2,two")
+    assert c.dtypes == [("k", "int"), ("v", "string")]
     assert sorted((r.k, r.v) for r in c.collect()) == [(1, "one"), (2, "two")]
 
 
@@ -780,6 +791,17 @@ def test_system_server_settings_and_directories(spark):
     assert tz.value == "UTC" and tz.changed == 0
     sp = m["spark.sql.shuffle.partitions"]
     assert sp.changed == (0 if sp.value == "32" else 1)
+    # an unset key shows the value in effect: Spark's own default
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    was = spark.conf.get(arrow, None)
+    spark.conf.unset(arrow)
+    try:
+        row = ch_sql(spark, "SELECT value, changed FROM system.server_settings "
+                            f"WHERE name = '{arrow}'").collect()[0]
+    finally:
+        if was is not None:
+            spark.conf.set(arrow, was)
+    assert (row.value, row.changed) == ("false", 1)
 
     r = ch_sql(spark, "SELECT * FROM system.user_directories").collect()
     assert len(r) == 1 and r[0].type == "users_xml"
@@ -857,6 +879,43 @@ def test_iceberg_history_reference_columns(spark, tmp_path):
     assert rows[3].parent_id == 1 and rows[1].parent_id is None
     assert rows[1].made_current_at is not None
     assert rows[1].table == "t" and rows[1].database == "default"
+
+
+def test_system_table_times_keep_the_instant_under_any_tz(spark, tmp_path):
+    """Driver-built system-table times are instants: under a non-UTC
+    process TZ an Iceberg snapshot at epoch 1700000000 reads back as
+    1700000000, and the current quota interval holds now."""
+    import json
+    import os
+    import time
+
+    from clickhouse_25_5_3_75_stable_spark.sources.datalake import iceberg_history
+    from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
+
+    root = str(tmp_path / "t")
+    os.makedirs(os.path.join(root, "metadata"))
+    meta = {"format-version": 1, "current-snapshot-id": 1,
+            "schema": {"type": "struct", "fields": []},
+            "snapshots": [{"snapshot-id": 1, "timestamp-ms": 1700000000000}]}
+    json.dump(meta, open(os.path.join(root, "metadata", "v1.metadata.json"), "w"))
+    open(os.path.join(root, "metadata", "version-hint.text"), "w").write("1")
+
+    tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:  # a collected time is naive process-local: read it under the TZ
+        made = iceberg_history(spark, root).collect()[0].made_current_at.timestamp()
+        q = system_table(spark, "quota_usage").collect()[0]
+        start, end = q.start_time.timestamp(), q.end_time.timestamp()
+        now = time.time()
+    finally:
+        if tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = tz
+        time.tzset()
+    assert made == 1700000000
+    assert start <= now < end
 
 
 def test_system_detached_and_projection_parts_sql_route(spark, tmp_path):
