@@ -297,7 +297,7 @@ def register_table_view(spark: SparkSession, base_dir: str, name: str) -> DataFr
         # every partition detached/dropped: the dir holds no data files
         # — an empty view with the declared schema (fuzz-found: the
         # unguarded read surfaced UNABLE_TO_INFER_SCHEMA)
-        return spark.createDataFrame([], td.spark_schema())
+        return catalog.local_rows(spark, [], td.spark_schema())
     if td is None:
         return df
     phys = set(df.columns)
@@ -466,15 +466,12 @@ def attach_table(spark: SparkSession, base_dir: str, name: str) -> None:
 
 
 def truncate_table(spark: SparkSession, base_dir: str, name: str) -> None:
-    """TRUNCATE TABLE: keep schema (and DDL metadata), drop all rows."""
-    path = os.path.join(base_dir, name)
-    schema = spark.read.parquet(path).schema
+    """TRUNCATE TABLE: empty the active parts; the def, detached
+    partitions and FREEZE snapshots stay, as in the reference."""
     td = load_table_def(base_dir, name)
-    spark.createDataFrame([], schema).write.mode("overwrite").parquet(path)
     if td is not None:
         td.name = name  # stay correct after RENAME
-        save_table_def(base_dir, td)
-    catalog.register(spark, base_dir, name)
+    _rewrite(spark, base_dir, name, td, catalog.table(spark, base_dir, name).limit(0))
 
 
 def rename_table(spark: SparkSession, base_dir: str, old: str, new: str) -> None:

@@ -26,7 +26,7 @@ from clickhouse_25_5_3_75_stable_spark.functions.numeric import (
     dsum,
     dsum_sql,
 )
-from clickhouse_25_5_3_75_stable_spark.sources.catalog import load_table
+from clickhouse_25_5_3_75_stable_spark.sources.catalog import register_views, table as t
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -60,10 +60,6 @@ def register(
         return fn
 
     return deco
-
-
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def arr_csv(col):
@@ -310,7 +306,6 @@ from clickhouse_25_5_3_75_stable_spark.operators.limits import (  # noqa: E402
     limit_with_ties,
 )
 from clickhouse_25_5_3_75_stable_spark.operators.totals import with_totals  # noqa: E402
-from clickhouse_25_5_3_75_stable_spark.sources.catalog import register_views  # noqa: E402
 
 
 def _sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

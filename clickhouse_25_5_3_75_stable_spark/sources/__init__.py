@@ -1,3 +1,3 @@
-from clickhouse_25_5_3_75_stable_spark.sources.catalog import TABLES, load_table, register_views
+from clickhouse_25_5_3_75_stable_spark.sources.catalog import TABLES, register_views
 
-__all__ = ["TABLES", "load_table", "register_views"]
+__all__ = ["TABLES", "register_views"]

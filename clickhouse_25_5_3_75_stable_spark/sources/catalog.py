@@ -1,6 +1,7 @@
-"""The catalog of a data dir: which tables it holds and what each
-table's view is. Every front door (CLI, HTTP, ``ch_sql(..., sf_dir)``,
-SQL-path registry queries) and every write registers views here.
+"""The catalog of a data dir: which tables it holds and what each one
+reads as. It is the one table reader: every front door (CLI, HTTP,
+``ch_sql(..., sf_dir)``), every registry builder (``queries.t``) and
+every write reaches a data-dir table through ``table`` or ``register``.
 
 The reference's table abstraction is IStorage + StorageMergeTree
 (/root/reference/src/Storages/IStorage.h,
@@ -10,15 +11,17 @@ tables — min/max row-group stats + partition dirs give the same
 pruning; `spark.read.parquet` is the ReadFromMergeTree analogue
 (src/Processors/QueryPlan/ReadFromMergeTree.h:62).
 
-Re-reading every table's footers for every statement cost more than
-most reads, so each table's DataFrame is remembered per SparkSession
-under a fingerprint of its files and read again only when a write
-changes them. A view's plan pins its file listing, so the fingerprint
-(not a plain cache) is what keeps views fresh. The view itself is
-replaced only when the fingerprint changed or the session no longer
-holds the view this module installed (dropped, or shadowed by another
-view of that name): replacing it runs a CreateViewCommand, about 10 ms
-a table, where checking it costs well under 1 ms.
+A table's relation (``table``) is a DataFrame that holds the files'
+schema (inferred from their footers by a Spark job) and their listing,
+no data. Like the reference's DatabaseCatalog keeps each IStorage, it
+is remembered per SparkSession under a fingerprint of the files and
+read again only when a write changes them, so a warm build or statement
+runs no read job; the relation pins its listing, so the fingerprint
+(not a plain cache) is what keeps readers fresh. ``register`` installs
+it as the session's temp view, replaced only when the relation changed
+or the session lost the view installed here (dropped, or shadowed by
+another view of that name): replacing costs a CreateViewCommand, about
+10 ms a table, where checking costs well under 1 ms.
 
 At 100 TB the layout contract is: partition by a coarse time/tenant
 key, sort-within-files by the query's PK analogue so min/max pruning
@@ -54,8 +57,8 @@ TABLES = (
     "embeddings",
 )
 
-# SparkSession -> {(data_dir, name): (fingerprint, DataFrame, JVM view)}
-_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# SparkSession -> {(data_dir, name): [fingerprint, DataFrame, JVM view or None]}
+_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -128,38 +131,43 @@ def _fingerprint(path: str) -> tuple:
     return tuple(sorted(out))
 
 
-def register(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
-    """Register one table's temp view and return its DataFrame: the
-    remembered one while the table's files are unchanged, else a fresh
-    read — ``load_table`` for a flat file, ``ddl.register_table_view``
-    (declared columns, cast-on-read, rename coalescing) for a dir. The
-    view is replaced only when the read is fresh or the session's view
-    of that name is not the one installed here."""
+def table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
+    """One table's relation: the remembered DataFrame while the table's
+    files are unchanged, else a fresh read — ``load_table`` for a flat
+    file, ``ddl.register_table_view`` (declared columns, cast-on-read,
+    rename coalescing) for a dir."""
     from clickhouse_25_5_3_75_stable_spark import ddl
 
     path = table_path(data_dir, name)
     # taken before the read: a write racing the read leaves a stale
-    # fingerprint (a re-read next time), never a stale view
+    # fingerprint (a re-read next time), never a stale relation
     fp = _fingerprint(path)
-    views = _VIEWS.setdefault(spark, {})
+    tables = _TABLES.setdefault(spark, {})
     key = (os.path.abspath(data_dir), name)
-    hit = views.get(key)
-    temp_views = spark._jsparkSession.sessionState().catalog()
+    hit = tables.get(key)
     if hit is None or hit[0] != fp:
-        read = ddl.register_table_view if os.path.isdir(path) else load_table
-        hit = (fp, read(spark, data_dir, name), None)
-    elif temp_views.getRawTempView(name).contains(hit[2]):
-        # the session still holds the view installed here; the case
-        # class's equals starts with an identity check, so this is cheap
-        return hit[1]
-    hit[1].createOrReplaceTempView(name)
-    views[key] = (hit[0], hit[1], temp_views.getRawTempView(name).get())
+        is_dir = os.path.isdir(os.path.join(data_dir, name))
+        read = ddl.register_table_view if is_dir else load_table
+        hit = tables[key] = [fp, read(spark, data_dir, name), None]
     return hit[1]
+
+
+def register(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
+    """``table`` installed as the session's temp view, replaced only when
+    the relation changed or the session lost the view installed here."""
+    df = table(spark, data_dir, name)
+    hit = _TABLES[spark][(os.path.abspath(data_dir), name)]
+    temp_views = spark._jsparkSession.sessionState().catalog()
+    # cheap: the case class's equals starts with an identity check
+    if hit[2] is None or not temp_views.getRawTempView(name).contains(hit[2]):
+        df.createOrReplaceTempView(name)
+        hit[2] = temp_views.getRawTempView(name).get()
+    return df
 
 
 def forget(spark: SparkSession, data_dir: str, name: str) -> None:
     """Drop a table's view and its remembered DataFrame."""
-    _VIEWS.get(spark, {}).pop((os.path.abspath(data_dir), name), None)
+    _TABLES.get(spark, {}).pop((os.path.abspath(data_dir), name), None)
     spark.catalog.dropTempView(name)
 
 

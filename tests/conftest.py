@@ -130,3 +130,22 @@ def pytest_collection_modifyitems(config, items):
             item.nodeid == n or item.nodeid.startswith(n + "[") for n in named
         ):
             item.add_marker(pytest.mark.slow)
+
+
+# Budget creep shows before a run is truncated: every test that took
+# >= 5 s (setup, call and teardown) and is not in _SLOW_NODEIDS is listed
+# at the end of the run. The list is informational; it never fails a run.
+_DURATIONS: dict[str, float] = {}
+
+
+def pytest_runtest_logreport(report):
+    _DURATIONS[report.nodeid] = _DURATIONS.get(report.nodeid, 0.0) + report.duration
+
+
+def pytest_terminal_summary(terminalreporter):
+    creep = sorted(((s, n) for n, s in _DURATIONS.items()
+                    if s >= 5 and n not in _SLOW_NODEIDS), reverse=True)
+    if creep:
+        terminalreporter.section("tests >= 5 s not in _SLOW_NODEIDS")
+        for s, n in creep:
+            terminalreporter.write_line(f"{s:7.1f}s {n}")

@@ -326,6 +326,27 @@ def test_statement_path_has_no_python_rdds_or_raising_conf_gets():
     assert bad == []
 
 
+def test_one_table_reader():
+    """A data-dir table is read only through sources/catalog.py (table,
+    register), so every reader shares its remembered relation: no other
+    engine module calls load_table."""
+    import ast
+    import pathlib
+
+    import clickhouse_25_5_3_75_stable_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "sources" / "catalog.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and "load_table" in (
+                    getattr(node.func, "id", None), getattr(node.func, "attr", None)):
+                bad.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert bad == []
+
+
 def test_http_interface(spark):
     """HTTP entry point (SURVEY §3 B): /ping, GET ?query=, POST body,
     FORMAT honored, errors surface with 400."""

@@ -111,6 +111,38 @@ def test_drop_truncate_rename(spark, tmp_path):
     assert "t2" not in run("SHOW TABLES")
 
 
+def test_truncate_keeps_detached_partitions_and_snapshots(spark, tmp_path):
+    """TRUNCATE removes the active parts only (the reference's
+    truncate): a detached partition and a FREEZE snapshot survive it,
+    and the detached partition attaches again."""
+    import io
+    import os
+
+    from clickhouse_25_5_3_75_stable_spark.__main__ import run_local
+
+    d = str(tmp_path)
+
+    def run(sql):
+        out = io.StringIO()
+        assert run_local(sql, d, spark=spark, out=out) == 0
+        return out.getvalue().strip()
+
+    run("CREATE TABLE t (k UInt32, p UInt32) ENGINE = MergeTree() "
+        "ORDER BY k PARTITION BY p")
+    run("INSERT INTO t VALUES (1, 1), (2, 2)")
+    run("ALTER TABLE t DETACH PARTITION 2")
+    run("ALTER TABLE t FREEZE WITH NAME 'snap'")
+    detached = "SELECT count() AS n FROM system.detached_parts WHERE table = 't' FORMAT CSV"
+    assert run(detached) == "1"
+    run("TRUNCATE TABLE t")
+    assert run("SELECT count() AS n FROM t FORMAT CSV") == "0"
+    assert run(detached) == "1"
+    assert os.listdir(os.path.join(d, "t", "_shadow", "snap", "p=1"))
+    run("ALTER TABLE t ATTACH PARTITION 2")
+    run("INSERT INTO t VALUES (3, 1)")
+    assert run("SELECT k, p FROM t ORDER BY k FORMAT CSV").splitlines() == ["2,2", "3,1"]
+
+
 def test_parse_modifiers_and_nested_types():
     """DEFAULT/CODEC/COMMENT modifiers are skipped; nested Tuple/Map
     types with internal commas parse structurally."""
