@@ -14,8 +14,13 @@ This module is a token-level transpiler for the pragmatic subset:
             FORMAT/SETTINGS suffixes stripped
   casts     toInt*/toFloat*/toString/toDate/toDateTime[OrNull/OrZero]
             → CAST / try_cast / coalesce(try_cast, 0)
-  renames   1:1 function renames (toYear→year, uniq→
-            approx_count_distinct, arrayJoin→explode, ...)
+  functions a function's SQL text is its Column door's render: a
+            functions/dialect.py CH_FUNCTIONS name the session does not
+            resolve is applied to placeholder columns, rendered and
+            re-parsed at transpile time (_render_call; toYear(d) ->
+            year(d)). _RENAMES keeps only the exceptions, each with its
+            reason: names the registry lacks (uniq, argMax, numbers, ...)
+            and calls the Column door cannot take from SQL text
   parametric  quantile(p)(x) → percentile_approx(x, p),
             quantiles(..)(x) → percentile_approx(x, array(..))
   combinators sumIf/countIf/avgIf/minIf/maxIf → agg(CASE WHEN)
@@ -27,8 +32,10 @@ the DataFrame builders (operators/); this shim is the SQL front door.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import re
+import weakref
 
 __all__ = ["ch_sql_to_spark", "ch_sql", "ChSqlError"]
 
@@ -54,7 +61,7 @@ class ChSqlError(ValueError):
     system.errors accounting happens at the PUBLIC API boundary via
     :func:`record_chsql_error` (round-8 advisor: construction-time
     recording over-counted — ChSqlError is also internal control flow,
-    e.g. _match_paren raised and caught inside _bridge_substitute, and
+    e.g. _match_paren raised and caught inside a rewrite pass, and
     the reference's ErrorCodes.cpp counters only tick for errors that
     actually surface to the client)."""
 
@@ -211,201 +218,60 @@ _CHCONST_FNS = {
 }
 
 
+# The exceptions to "a function's SQL text is its Column door's render"
+# (_render_call): ClickHouse names CH_FUNCTIONS lacks, and names whose
+# Column definition cannot be rendered from SQL text. A plain value is a
+# 1:1 Spark rename; a value ending in __ is a structural rewrite in
+# _rewrite_functions.
 _RENAMES = {
-    "toyear": "year",
-    "tomonth": "month",
-    "todayofmonth": "day",
-    "todayofyear": "dayofyear",
-    "tohour": "hour",
-    "tominute": "minute",
-    "tosecond": "second",
-    "toquarter": "quarter",
-    "tounixtimestamp": "unix_timestamp",
-    "touuid": "string",
+    # aggregates and table functions: not in CH_FUNCTIONS
     "uniq": "approx_count_distinct",
     "uniqhll12": "approx_count_distinct",
     "uniqcombined": "approx_count_distinct",
     "uniqcombined64": "approx_count_distinct",
     "any": "any_value",
     "anylast": "last_value",
+    "anyheavy": "mode",
     "argmin": "min_by",
     "argmax": "max_by",
     "grouparray": "collect_list",
     "groupuniqarray": "collect_set",
-    "arrayjoin": "explode",
-    "lcase": "lower",
-    "ucase": "upper",
-    "mid": "substring",
-    "substr": "substring",
-    "position": "instr",  # CH arg order (haystack, needle) == Spark instr
-    "lengthutf8": "char_length",
-    "match": "rlike",
-    "multiif": "case_when__",  # handled structurally below
-    "empty": "empty__",
-    "notempty": "notempty__",
-    "length": "length__",  # CH length() covers strings AND arrays
-    "ifnull": "ifnull",
-    "assumenotnull": "identity__",  # type assertion — no-op on Spark
-    "intdiv": "div__",
-    "modulo": "binop__%",
-    "plus": "binop__+",
-    "minus": "binop__-",
-    "multiply": "binop__*",
-    "divide": "binop__/",
-    "negate": "negate__",
-    "fromunixtimestamp": "timestamp_seconds",
-    "today": "current_date",
-    "yesterday": "yesterday__",
-    "now": "current_timestamp",
-    "rand": "rand",
-    "tostartofday": "tostartofday__",
-    "tostartofmonth": "tostartofmonth__",
-    "tostartofweek": "tostartofweek__",
-    "tomonday": "tomonday__",
-    "tostartofquarter": "tostartofquarter__",
-    "tostartofyear": "tostartofyear__",
-    "tostartofhour": "tostartofhour__",
-    "tostartofminute": "tostartofminute__",
-    "datediff": "datediff",
-    "concatwithseparator": "concat_ws",
-    # space-filling curves: the literal range mask → the fixed-arity
-    # ch_* shim of their functions/udfs.py row
-    "mortonencode": "mortonencode__",
-    "mortondecode": "mortondecode__",
-    "hilbertencode": "hilbertencode__",
-    "hilbertdecode": "hilbertdecode__",
-    "splitbychar": "splitbychar__",
-    "splitbystring": "splitbystring__",
-    "range": "range__",
-    "arrayenumerate": "arrayenumerate__",
-    # round-3 widening: array / string / agg / date names that died at
-    # Spark analysis as UNRESOLVED_ROUTINE despite having exact Spark
-    # equivalents
-    "has": "array_contains",
-    "hasany": "arrays_overlap",
-    "hasall": "hasall__",
-    "indexof": "array_position",
-    "countequal": "countequal__",
-    "arraydistinct": "array_distinct",
-    "arrayreverse": "reverse",
-    "arrayflatten": "flatten",
-    "arrayzip": "arrays_zip",
-    "arrayconcat": "arrayconcat__",
-    "arrayslice": "arrayslice__",
-    "arraypushback": "array_append",
-    "arraypushfront": "array_prepend",
-    "arraypopback": "arraypopback__",
-    "arraypopfront": "arraypopfront__",
-    "arraystringconcat": "arraystringconcat__",
-    "arrayuniq": "arrayuniq__",
-    "arrayintersect": "array_intersect",
-    "arraysort": "arraysort__",
-    "arrayreversesort": "arrayreversesort__",
-    "arrayfold": "arrayfold__",
-    "arraymin": "array_min",
-    "arraymax": "array_max",
-    "extractall": "extractall__",
-    "extract": "extract__",
-    "replaceall": "replace",
-    "replaceregexpall": "regexp_replace",
-    "lowerutf8": "lower",
-    "upperutf8": "upper",
-    "substringutf8": "substring",
-    "positionutf8": "instr",
-    "positioncaseinsensitive": "positionci__",
-    "positioncaseinsensitiveutf8": "positionci__",
-    "reverseutf8": "reverse",
-    "replaceone": "replaceone__",
-    "replaceregexpone": "replaceregexpone__",
-    "trimboth": "trim",
-    "trimleft": "ltrim",
-    "trimright": "rtrim",
-    "leftpad": "lpad",
-    "rightpad": "rpad",
-    "leftpadutf8": "lpad",
-    "rightpadutf8": "rpad",
-    "bitand": "bitand__",
-    "bitor": "bitor__",
-    "bitxor": "bitxor__",
-    "bitnot": "bitnot__",
-    "bitshiftleft": "shiftleft",
-    "bitshiftright": "shiftright",
-    "bitcount": "bit_count",
-    "bittest": "bittest__",
-    "bithammingdistance": "bithamming__",
-    "base64encode": "base64",
-    "base64decode": "base64decode__",
-    "jsonextractkeys": "json_object_keys",
-    "arrayshuffle": "shuffle",
-    "arraywithconstant": "arraywithconstant__",
-    "arrayresize": "arrayresize__",
-    "basename": "basename__",
-    "mapfilter": "mapfilter__",
-    "uniqexact": "uniqexact__",
-    "anyheavy": "mode",
+    "groupbitand": "bit_and",
+    "groupbitor": "bit_or",
+    "groupbitxor": "bit_xor",
     "stddevpop": "stddev_pop",
     "stddevsamp": "stddev_samp",
     "varpop": "var_pop",
     "varsamp": "var_samp",
     "covarpop": "covar_pop",
     "covarsamp": "covar_samp",
-    "groupbitand": "bit_and",
-    "groupbitor": "bit_or",
-    "groupbitxor": "bit_xor",
-    "log": "ln",
-    "exp2": "exp2__",
-    "exp10": "exp10__",
-    "intexp2": "exp2__",
-    "intexp10": "exp10__",
-    "cbrt": "cbrt",
-    "tolowcardinality": "identity__",
-    "tonullable": "identity__",
-    "materialize": "identity__",
-    "isnull": "isnull__",
-    "isnotnull": "isnotnull__",
-    "toyyyymm": "toyyyymm__",
-    "toyyyymmdd": "toyyyymmdd__",
-    "todayofweek": "todayofweek__",
-    # add*/subtract* use timestampadd: date_add/add_months CAST TO DATE
-    # and silently drop the time-of-day CH preserves (a Date input
-    # widens to midnight timestamp — value-equal, type-widened)
-    "adddays": "adddays__",
-    "subtractdays": "subtractdays__",
-    "addmonths": "addmonths__",
-    "subtractmonths": "subtractmonths__",
-    "subtractyears": "subtractyears__",
-    "subtractweeks": "subtractweeks__",
-    "addweeks": "addweeks__",
-    "addhours": "addhours__",
-    "addminutes": "addminutes__",
-    "addseconds": "addseconds__",
-    "addyears": "addyears__",
-    "subtracthours": "subtracthours__",
-    "subtractminutes": "subtractminutes__",
-    "subtractseconds": "subtractseconds__",
-    "tuple": "tuple__",
-    "tupleelement": "tupleelement__",
+    "arrayjoin": "explode",
     "numbers": "numbers__",
-    "formatdatetime": "formatdatetime__",
-    "parsedatetime": "parsedatetime__",
-    "parsedatetimeornull": "parsedatetimeornull__",
-    "jsonextractint": "json_int__",
-    "jsonextractfloat": "json_float__",
-    "jsonextractstring": "json_str__",
-    "jsonextractbool": "json_bool__",
-    "jsonextractraw": "json_raw__",
-    "jsonhas": "json_has__",
-    "jsonlength": "json_length__",
-    "simplejsonextractint": "json_int__",
-    "simplejsonextractfloat": "json_float__",
-    "simplejsonextractstring": "json_str__",
-    "visitparamextractint": "json_int__",
-    "visitparamextractfloat": "json_float__",
-    "visitparamextractstring": "json_str__",
-    "tostartofinterval": "tostartofinterval__",
-    "tostartoffiveminutes": "tostartoffiveminutes__",
-    "tostartoftenminutes": "tostartoftenminutes__",
-    "tostartoffifteenminutes": "tostartoffifteenminutes__",
+    # CH_FUNCTIONS names the Column door cannot take from SQL text
+    "arrayfold": "arrayfold__",  # a SQL lambda is not a Python callable
+    "mapfilter": "mapfilter__",  # a SQL lambda is not a Python callable
+    "mortonencode": "mortonencode__",  # a literal range-mask tuple argument
+    "mortondecode": "mortondecode__",  # a literal range-mask tuple argument
+    "hilbertencode": "hilbertencode__",  # a literal range-mask tuple argument
+    "hilbertdecode": "hilbertdecode__",  # a literal range-mask tuple argument
+    "tostartofinterval": "tostartofinterval__",  # INTERVAL n unit; the Column door takes seconds
+    "extract": "extract__",  # also standard SQL EXTRACT(unit FROM x)
+    "range": "range__",  # Spark's range() is a table function; adds the step form
+    "empty": "empty__",  # arrays too; the Column door is string-only
+    "notempty": "notempty__",  # arrays too; the Column door is string-only
+    "length": "length__",  # arrays too; the Column door is string-only
+    "tuple": "tuple__",  # fields _1.._N, which .N reads; the Column door names them after its arguments
+    "tupleelement": "tupleelement__",  # reads field _N of tuple()
+}
+
+# CH_FUNCTIONS names Spark also resolves, with other semantics: rendered
+# through the Column door all the same (Spark's own function when the
+# call does not fit the Column definition)
+_SHADOWED = {
+    "position",  # Spark's position(substr, str) takes the needle first
+    "datediff",  # Spark's datediff(end, start) has no unit argument
+    "date_diff",  # Spark's date_diff(end, start) has no unit argument
+    "rand",  # Spark's rand() is a DOUBLE in [0, 1), the reference's a UInt32
 }
 
 # Lambda-first higher-order functions: CH puts the lambda FIRST
@@ -441,16 +307,6 @@ _CAST_TYPES = {
     "todatetime64": ("TIMESTAMP", "TIMESTAMP'1970-01-01 00:00:00'"),
     "todecimal64": ("DECIMAL(18,6)", "0"),
     "todecimal128": ("DECIMAL(38,10)", "0"),
-}
-
-# date_trunc spellings for toStartOf* rewrites
-_TRUNC_UNit = {
-    "tostartofday__": "day",
-    "tostartofmonth__": "month",
-    "tostartofquarter__": "quarter",
-    "tostartofyear__": "year",
-    "tostartofhour__": "hour",
-    "tostartofminute__": "minute",
 }
 
 # -If combinator bases (single value arg + condition)
@@ -1223,24 +1079,6 @@ _EXTRACT_UNITS = {
     "DAYOFWEEK", "DOW", "DAYOFYEAR", "DOY", "EPOCH",
 }
 
-# add<Unit>/subtract<Unit> → timestampadd(UNIT, ±n, ts)
-_TIMESTAMPADD = {
-    "addyears__": ("YEAR", 1),
-    "addmonths__": ("MONTH", 1),
-    "addweeks__": ("WEEK", 1),
-    "adddays__": ("DAY", 1),
-    "addhours__": ("HOUR", 1),
-    "addminutes__": ("MINUTE", 1),
-    "addseconds__": ("SECOND", 1),
-    "subtractyears__": ("YEAR", -1),
-    "subtractmonths__": ("MONTH", -1),
-    "subtractweeks__": ("WEEK", -1),
-    "subtractdays__": ("DAY", -1),
-    "subtracthours__": ("HOUR", -1),
-    "subtractminutes__": ("MINUTE", -1),
-    "subtractseconds__": ("SECOND", -1),
-}
-
 _INTERVAL_SECONDS = {
     "SECOND": 1, "SECONDS": 1,
     "MINUTE": 60, "MINUTES": 60,
@@ -1248,18 +1086,6 @@ _INTERVAL_SECONDS = {
     "DAY": 86400, "DAYS": 86400,
     "WEEK": 604800, "WEEKS": 604800,
 }
-
-
-def _regex_group_idx(pat_toks: list[str]) -> str:
-    """CH extract/extractAll return capture group 1 when the pattern
-    has one, else the whole match. Decidable only for literal
-    patterns; non-literals default to the whole match (group 0)."""
-    if len(pat_toks) == 1 and pat_toks[0].startswith("'"):
-        body = pat_toks[0][1:-1]
-        # an unescaped '(' not starting a non-capturing group
-        has_group = re.search(r"(?<!\\)\((?!\?)", body) is not None
-        return "1" if has_group else "0"
-    return "0"
 
 
 def _interval_floor(ts: list[str], interval: list[str], fn: str) -> list[str]:
@@ -1368,7 +1194,7 @@ def _quantile_exact_tokens(x: list[str], p: list[str], fname: str) -> list[str]:
         f"CAST(floor({level!r} * count({xt})) AS INT) + 1)")
 
 
-def _rewrite_functions(toks: list[str]) -> list[str]:
+def _rewrite_functions(toks: list[str], spark=None) -> list[str]:
     from clickhouse_25_5_3_75_stable_spark.functions import hashing, udfs
 
     out: list[str] = []
@@ -1382,7 +1208,7 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
             continue
         open_i = i + 1
         close_i = _call_end(toks, open_i)
-        args = [_rewrite_functions(a) for a in _split_args(toks, open_i, close_i)]
+        args = [_rewrite_functions(a, spark) for a in _split_args(toks, open_i, close_i)]
 
         if low == "count" and args == [[]] or low == "count" and not args:
             out += ["count", "(", "*", ")"]
@@ -1398,7 +1224,7 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
         # parametric: f(params)(real args)
         if low in _PARAMETRIC and close_i + 1 < len(toks) and toks[close_i + 1] == "(":
             close2 = _call_end(toks, close_i + 1)
-            real = [_rewrite_functions(a) for a in _split_args(toks, close_i + 1, close2)]
+            real = [_rewrite_functions(a, spark) for a in _split_args(toks, close_i + 1, close2)]
             x = real[0]
             if low in ("quantileexact", "quantilesexact"):
                 # reference QuantileExact.h:96 — the element at index
@@ -1465,13 +1291,8 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
                 out += [spark_fn, "(", *args[0], ")"]
             i = close_i + 1
             continue
-        if low == "countdistinct":
-            out += ["count", "(", "DISTINCT"]
-            for k, a in enumerate(args):
-                if k:
-                    out.append(",")
-                out += a
-            out += [")"]
+        if low in ("countdistinct", "uniqexact"):
+            out += ["count", "(", "DISTINCT", *_join_args(args), ")"]
             i = close_i + 1
             continue
         if low == "transform" and len(args) in (3, 4):
@@ -1640,67 +1461,18 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
             i = close_i + 1
             continue
         if new is None:
-            out += [tk, "("]
-            for k, a in enumerate(args):
-                if k:
-                    out.append(",")
-                out += a
-            out.append(")")
+            rendered = _render_call(spark, tk, args)
+            out += rendered if rendered is not None else [tk, "(", *_join_args(args), ")"]
             i = close_i + 1
             continue
 
         # structural rewrites flagged with trailing __
-        if new == "case_when__":  # multiIf(c1, v1, c2, v2, ..., else)
-            out.append("CASE")
-            k = 0
-            while k + 1 < len(args):
-                out += ["WHEN", *args[k], "THEN", *args[k + 1]]
-                k += 2
-            out += ["ELSE", *args[-1], "END"]
-        elif new == "empty__":
+        if new == "empty__":
             out += ["(", _len_fn(args[0]), "(", *args[0], ")", "=", "0", ")"]
         elif new == "notempty__":
             out += ["(", _len_fn(args[0]), "(", *args[0], ")", ">", "0", ")"]
         elif new == "length__":
             out += [_len_fn(args[0]), "(", *args[0], ")"]
-        elif new == "div__":
-            # CH intDiv TRUNCATES toward zero (intDiv(-7,2) = -3):
-            # DivisionUtils.h checkedDivision is plain C++ `a / b`
-            # (the intDiv.cpp docstring says "rounded down" but the
-            # code truncates — review-verified against the reference).
-            # Spark's DIV also truncates; route through DECIMAL(38,9)
-            # so fractional operands work (CH allows intDiv on floats:
-            # trunc(a/b)) and Int64 stays exact (double would lose
-            # precision past 2^53). ANSI /0 throw matches the
-            # reference's ILLEGAL_DIVISION.
-            a, b = args[0], args[1]
-            # scale 18: Int64-exact AND double-exact (shortest repr
-            # ≤17 sig digits), so operand rounding can't push the
-            # truncated quotient across an integer boundary
-            dec = "DECIMAL(38,18)"
-            out += ["(", "CAST", "(", "(", *a, ")", "AS", dec, ")", "DIV",
-                    "CAST", "(", "(", *b, ")", "AS", dec, ")", ")"]
-        elif new == "yesterday__":
-            out += ["date_sub", "(", "current_date", "(", ")", ",", "1", ")"]
-        elif new in _TRUNC_UNit:
-            out += ["date_trunc", "(", f"'{_TRUNC_UNit[new]}'", ",", *args[0], ")"]
-        elif new == "tomonday__":
-            out += ["CAST", "(", "date_trunc", "(", "'week'", ",", *args[0],
-                    ")", "AS", "DATE", ")"]
-        elif new == "tostartofweek__":
-            # default week mode 0 = SUNDAY-first (CustomWeekTransforms.h:62);
-            # Spark date_trunc('week') is Monday-first. Mode 1/3 keeps it.
-            if len(args) > 1 and args[1] and args[1][0] in ("1", "3"):
-                out += ["CAST", "(", "date_trunc", "(", "'week'", ",",
-                        *args[0], ")", "AS", "DATE", ")"]
-            else:
-                out += ["date_sub", "(", "CAST", "(", *args[0], "AS", "DATE",
-                        ")", ",", "dayofweek", "(", *args[0], ")", "-", "1",
-                        ")"]
-        elif new == "splitbychar__" or new == "splitbystring__":
-            # CH arg order is (sep, s); Spark split(s, regex) — escape sep
-            sep = args[0]
-            out += ["split", "(", *args[1], ",", *_regex_quote(sep), ")"]
         elif new == "range__":
             # CH range(n) = [0..n-1]; range(a, b[, step]) end-exclusive
             # → Spark sequence() is end-INCLUSIVE, so subtract one step
@@ -1713,11 +1485,6 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
                     "sequence", "(", *args[0], ",",
                     "(", *args[1], ")", "-", "(", *args[2], ")", ",", *args[2], ")",
                 ]
-        elif new == "arrayenumerate__":
-            # arrayEnumerate(arr) = [1..len(arr)]
-            out += ["sequence", "(", "1", ",", "size", "(", *args[0], ")", ")"]
-        elif new == "identity__":  # type-annotation no-ops
-            out += ["(", *args[0], ")"]
         elif new in ("mortonencode__", "hilbertencode__"):
             # mortonEncode(a, b, ...) / mortonEncode((r1, r2), a, b)
             # (src/Functions/mortonEncode.cpp, hilbertEncode.cpp) —
@@ -1760,11 +1527,6 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
             out += [fn, "(", "array", "(",
                     *sum(([str(r), ","] for r in ratios), [])[:-1], ")",
                     ",", "CAST", "(", *args[1], "AS", udfs.U64.upper(), ")", ")"]
-        elif new.startswith("binop__"):  # functional arithmetic forms
-            op = new[len("binop__"):]
-            out += ["(", "(", *args[0], ")", op, "(", *args[1], ")", ")"]
-        elif new == "negate__":
-            out += ["(", "-", "(", *args[0], ")", ")"]
         elif new == "numbers__":
             # table function: numbers(n) / numbers(offset, count) →
             # derived table over Spark's range() TVF, column renamed
@@ -1775,155 +1537,12 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
                 rng = ["range", "(", *args[0], ",", "(", *args[0], ")", "+",
                        "(", *args[1], ")", ")"]
             out += ["(", "SELECT", "id", "AS", "number", "FROM", *rng, ")"]
-        elif new == "isnull__":
-            out += ["(", "(", *args[0], ")", "IS", "NULL", ")"]
-        elif new == "isnotnull__":
-            out += ["(", "(", *args[0], ")", "IS", "NOT", "NULL", ")"]
-        elif new == "hasall__":  # hasAll(a, b): every elem of b in a
-            out += ["(", "size", "(", "array_except", "(", *args[1], ",",
-                    *args[0], ")", ")", "=", "0", ")"]
-        elif new == "countequal__":  # countEqual(a, v)
-            out += ["size", "(", "filter", "(", *args[0], ",",
-                    "x", "->", "x", "=", "(", *args[1], ")", ")", ")"]
-        elif new == "arrayuniq__":
-            out += ["size", "(", "array_distinct", "(", *args[0], ")", ")"]
-        elif new == "arrayslice__":  # same 1-based semantics as slice;
-            # the 2-arg CH form means "to the end" — Spark slice needs
-            # an explicit length, size(arr) is a safe upper bound
-            out += ["slice", "(", *args[0], ",", *args[1], ","]
-            if len(args) > 2:
-                out += args[2]
-            else:
-                out += ["size", "(", *args[0], ")"]
-            out.append(")")
-        elif new == "arraypopback__":
-            out += ["slice", "(", *args[0], ",", "1", ",",
-                    "greatest", "(", "size", "(", *args[0], ")", "-", "1", ",",
-                    "0", ")", ")"]
-        elif new == "arraypopfront__":
-            out += ["slice", "(", *args[0], ",", "2", ",",
-                    "greatest", "(", "size", "(", *args[0], ")", "-", "1", ",",
-                    "0", ")", ")"]
-        elif new == "arraystringconcat__":
-            sep = args[1] if len(args) > 1 else ["''"]
-            out += ["array_join", "(", *args[0], ",", *sep, ")"]
-        elif new in ("bitand__", "bitor__", "bitxor__"):
-            op = {"bitand__": "&", "bitor__": "|", "bitxor__": "^"}[new]
-            out += ["(", "(", *args[0], ")", op, "(", *args[1], ")", ")"]
-        elif new == "bitnot__":
-            out += ["~", "(", *args[0], ")"]
-        elif new == "bittest__":
-            out += ["(", "(", "shiftright", "(", *args[0], ",",
-                    "CAST", "(", *args[1], "AS", "INT", ")", ")", ")",
-                    "&", "1", ")"]
-        elif new == "bithamming__":
-            out += ["bit_count", "(", "(", *args[0], ")", "^",
-                    "(", *args[1], ")", ")"]
-        elif new == "base64decode__":
-            out += ["CAST", "(", "unbase64", "(", *args[0], ")",
-                    "AS", "STRING", ")"]
-        elif new == "arraywithconstant__":
-            # CH arg order is (length, element); Spark array_repeat is
-            # (element, count)
-            out += ["array_repeat", "(", *args[1], ",",
-                    "CAST", "(", *args[0], "AS", "INT", ")", ")"]
-        elif new == "arrayresize__":
-            # truncate or extend; extensions fill with the explicit
-            # 3rd arg, else NULL (the engine's Nullable-element array
-            # stance — the reference fills non-Nullable arrays with
-            # type defaults). Negative sizes (resize from the left)
-            # are out of the subset.
-            a_, n_ = args[0], args[1]
-            fill = args[2] if len(args) > 2 else ["NULL"]
-            if n_ and n_[0].lstrip("-").isdigit() and n_[0].startswith("-"):
-                raise ChSqlError(
-                    "arrayResize: negative sizes (resize from the left) "
-                    "need the DataFrame builder")
-            out += (["CASE", "WHEN", "size", "(", *a_, ")", ">=",
-                     "CAST", "(", *n_, "AS", "INT", ")",
-                     "THEN", "slice", "(", *a_, ",", "1", ",",
-                     "CAST", "(", *n_, "AS", "INT", ")", ")",
-                     "ELSE", "concat", "(", *a_, ",",
-                     "array_repeat", "(", *fill, ",",
-                     "CAST", "(", *n_, "AS", "INT", ")",
-                     "-", "size", "(", *a_, ")", ")", ")", "END"])
         elif new == "mapfilter__":
             # CH arg order is (lambda, map); Spark map_filter is
             # (map, lambda)
             if len(args) != 2:
                 raise ChSqlError("mapFilter takes ((k, v) -> pred, map)")
             out += ["map_filter", "(", *args[1], ",", *args[0], ")"]
-        elif new == "basename__":
-            # part after the last '/' or '\' (reference basename.cpp)
-            out += ["element_at", "(", "split", "(", *args[0], ",",
-                    "'[/\\\\\\\\]'", ")", ",", "-", "1", ")"]
-        elif new == "positionci__":
-            if len(args) != 2:
-                raise ChSqlError(f"{tk}: subset takes (haystack, needle)")
-            out += ["instr", "(", "lower", "(", *args[0], ")", ",",
-                    "lower", "(", *args[1], ")", ")"]
-        elif new == "replaceone__":
-            # exact FIRST-occurrence replace via instr splice (Spark
-            # replace() replaces all; string-fn fuzz finding, round 6).
-            # char_length, not the byte-semantics length(): instr and
-            # substring index CHARACTERS
-            s_, a_, b_ = args
-            find = ["instr", "(", *s_, ",", *a_, ")"]
-            out += (["CASE", "WHEN", "("] + a_ + [")", "!=", "''", "AND"]
-                    + find + [">", "0", "THEN", "concat", "(",
-                              "substring", "(", *s_, ",", "1", ","]
-                    + find + ["-", "1", ")", ",", *b_, ",",
-                              "substring", "(", *s_, ","]
-                    + find + ["+", "char_length", "(", *a_, ")", ")", ")",
-                              "ELSE", *s_, "END"])
-        elif new == "replaceregexpone__":
-            s_, p_, r_ = args
-            if any(re.search(r"\\\d", t) for t in r_):
-                raise ChSqlError(
-                    f"{tk}: backreferences in the replacement are out of "
-                    "the subset (replaceRegexpAll supports them via "
-                    "regexp_replace)")
-            pos = ["regexp_instr", "(", *s_, ",", *p_, ")"]
-            hit = ["regexp_extract", "(", *s_, ",", *p_, ",", "0", ")"]
-            out += (["CASE", "WHEN"] + pos + [">", "0", "THEN", "concat", "(",
-                    "substring", "(", *s_, ",", "1", ","]
-                    + pos + ["-", "1", ")", ",", *r_, ",",
-                             "substring", "(", *s_, ","]
-                    + pos + ["+", "char_length", "("] + hit + [")", ")", ")",
-                             "ELSE", *s_, "END"])
-        elif new == "arrayconcat__":
-            # flatten(array(a, b, ...)) rather than a `concat` rename:
-            # concat is the STRING head to the polymorphic length()
-            # resolver, so length(arrayConcat(..)) picked the
-            # string branch and failed analysis (array-HOF fuzz
-            # finding, round 6); flatten is unambiguous
-            out += ["flatten", "(", "array", "("]
-            for k, a in enumerate(args):
-                if k:
-                    out.append(",")
-                out += a
-            out += [")", ")"]
-        elif new in ("arraysort__", "arrayreversesort__"):
-            # depth-0 arrow only: a nested HOF inside the array ARG
-            # (arraySort(arrayMap(x -> ..., a))) is not a lambda KEY
-            # (array-HOF fuzz finding, round 6)
-            depth0_arrow = False
-            d = 0
-            for t in args[0]:
-                if t == "(":
-                    d += 1
-                elif t == ")":
-                    d -= 1
-                elif t == "->" and d == 0:
-                    depth0_arrow = True
-                    break
-            if depth0_arrow:
-                raise ChSqlError(
-                    f"{tk}: lambda keys need the DataFrame builder "
-                    "(sort by transform + arrays_zip)"
-                )
-            out += ["sort_array", "(", *args[0]]
-            out += [",", "false", ")"] if new == "arrayreversesort__" else [")"]
         elif new == "arrayfold__":
             # CH arrayFold(lambda, arr, init) -> Spark
             # aggregate(arr, init, lambda) (round-9; arrayFold.cpp —
@@ -1936,48 +1555,15 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
             out += ["aggregate", "(", *args[1], ",", *args[2], ",",
                     *args[0], ")"]
         elif new == "extract__":
-            # standard SQL EXTRACT(unit FROM x) must pass through
+            # standard SQL EXTRACT(unit FROM x) must pass through; CH
+            # extract(haystack, pattern) is the Column door's
             if any(a and a[0].upper() in _EXTRACT_UNITS for a in args[:1]) and any(
                 t.upper() == "FROM" for t in args[0]
             ):
-                out += ["extract", "("]
-                for k, a in enumerate(args):
-                    if k:
-                        out.append(",")
-                    out += a
-                out.append(")")
-            else:  # CH extract(haystack, pattern): first regex match
-                out += ["regexp_extract", "(", *args[0], ",", *args[1], ",",
-                        _regex_group_idx(args[1]), ")"]
-        elif new == "extractall__":
-            out += ["regexp_extract_all", "(", *args[0], ",", *args[1], ",",
-                    _regex_group_idx(args[1]), ")"]
-        elif new == "uniqexact__":
-            out += ["count", "(", "DISTINCT"]
-            for k, a in enumerate(args):
-                if k:
-                    out.append(",")
-                out += a
-            out.append(")")
-        elif new == "exp2__":
-            out += ["power", "(", "2", ",", *args[0], ")"]
-        elif new == "exp10__":
-            out += ["power", "(", "10", ",", *args[0], ")"]
-        elif new == "toyyyymm__":
-            out += ["CAST", "(", "date_format", "(", *args[0], ",", "'yyyyMM'",
-                    ")", "AS", "INT", ")"]
-        elif new == "toyyyymmdd__":
-            out += ["CAST", "(", "date_format", "(", *args[0], ",", "'yyyyMMdd'",
-                    ")", "AS", "INT", ")"]
-        elif new == "todayofweek__":
-            # CH: Monday=1..Sunday=7; Spark dayofweek: Sunday=1
-            out += ["(", "(", "(", "dayofweek", "(", *args[0], ")", "+", "5",
-                    ")", "%", "7", ")", "+", "1", ")"]
-        elif new in _TIMESTAMPADD:
-            unit, sign = _TIMESTAMPADD[new]
-            n = args[1]
-            qty = list(n) if sign > 0 else ["-", "(", *n, ")"]
-            out += ["timestampadd", "(", unit, ",", *qty, ",", *args[0], ")"]
+                out += ["extract", "(", *_join_args(args), ")"]
+            else:
+                out += (_render_call(spark, tk, args, force=True)
+                        or [tk, "(", *_join_args(args), ")"])
         elif new == "tuple__":
             # positional tuple: named_struct('_1', a1, ...) so CH .N /
             # tupleElement(t, N) access maps to field _N
@@ -1995,103 +1581,22 @@ def _rewrite_functions(toks: list[str]) -> list[str]:
                 out += ["(", *args[0], ")", f".{sel[0][1:-1]}"]
             else:
                 raise ChSqlError("tupleElement: index must be a literal")
-        elif new in ("formatdatetime__", "parsedatetime__", "parsedatetimeornull__"):
-            if len(args) < 2 or len(args[1]) != 1 or not args[1][0].startswith("'"):
-                raise ChSqlError(f"{tk}: the format must be a literal string")
-            from clickhouse_25_5_3_75_stable_spark.functions.dialect import (
-                mysql_format_segments,
-            )
-
-            raw = args[1][0][1:-1]
-            try:
-                segs = mysql_format_segments(raw)
-            except ValueError as ve:
-                raise ChSqlError(str(ve)) from ve
-
-            def _sql_lit(s: str) -> str:
-                return "'" + s.replace("'", "''") + "'"
-
-            if new == "formatdatetime__":
-                calls: list[str] = []
-                for s in segs:
-                    calls += ["date_format", "(", *args[0], ",", _sql_lit(s),
-                              ")", ","]
-                if len(segs) == 1:
-                    out += calls[:-1]
-                else:
-                    out += ["concat", "(", *calls[:-1], ")"]
-            else:
-                if len(segs) != 1:
-                    raise ChSqlError(
-                        f"{tk}: ambiguous parse pattern (adjacent same-field "
-                        "specifiers)"
-                    )
-                fn = ("to_timestamp" if new == "parsedatetime__"
-                      else "try_to_timestamp")
-                out += [fn, "(", *args[0], ",", _sql_lit(segs[0]), ")"]
-        elif new.startswith("json_") and new.endswith("__"):
-            # JSONExtractX(json, seg, seg, ...): CH path segments are
-            # literal keys and 1-BASED indices — composed into one JSON
-            # path ('a', 2, 'b' -> $.a[1].b). Round 6: multi-segment
-            # literal paths translate (previously single-key only);
-            # non-literal segments and negative (from-the-end) indices
-            # still need the DataFrame builder.
-            if len(args) < 2:
-                raise ChSqlError(f"{tk}: needs (json, path segments...)")
-            segs_p = []
-            for a in args[1:]:
-                if len(a) == 1 and a[0].startswith("'"):
-                    segs_p.append("." + a[0][1:-1])
-                elif len(a) == 1 and a[0].isdigit() and int(a[0]) >= 1:
-                    segs_p.append(f"[{int(a[0]) - 1}]")
-                else:
-                    raise ChSqlError(
-                        f"{tk}: path segments must be string literals or "
-                        "positive integer literals — expressions and "
-                        "negative indices need the DataFrame builder"
-                    )
-            path = "'$" + "".join(segs_p) + "'"
-            gjo = ["get_json_object", "(", *args[0], ",", path, ")"]
-            if new == "json_int__":
-                out += ["CAST", "(", *gjo, "AS", "BIGINT", ")"]
-            elif new == "json_float__":
-                out += ["CAST", "(", *gjo, "AS", "DOUBLE", ")"]
-            elif new == "json_bool__":
-                out += ["(", *gjo, "=", "'true'", ")"]
-            elif new in ("json_str__", "json_raw__"):
-                out += gjo
-            elif new == "json_has__":
-                out += ["(", *gjo, "IS", "NOT", "NULL", ")"]
-            elif new == "json_length__":
-                out += ["json_array_length", "(", *gjo, ")"]
-            i = close_i + 1
-            continue
         elif new == "tostartofinterval__":
             out += _interval_floor(args[0], args[1], tk)
-        elif new == "tostartoffiveminutes__":
-            out += _interval_floor(args[0], ["INTERVAL", "5", "MINUTE"], tk)
-        elif new == "tostartoftenminutes__":
-            out += _interval_floor(args[0], ["INTERVAL", "10", "MINUTE"], tk)
-        elif new == "tostartoffifteenminutes__":
-            out += _interval_floor(args[0], ["INTERVAL", "15", "MINUTE"], tk)
-        elif new.endswith("__nocover"):
-            raise ChSqlError(f"{tk}: not translatable 1:1")
         else:
-            out += [new, "("]
-            for k, a in enumerate(args):
-                if k:
-                    out.append(",")
-                out += a
-            out.append(")")
+            out += [new, "(", *_join_args(args), ")"]
         i = close_i + 1
     return out
 
 
-def _regex_quote(sep_toks: list[str]) -> list[str]:
-    if len(sep_toks) == 1 and sep_toks[0].startswith("'"):
-        lit = sep_toks[0][1:-1]
-        return ["'" + re.escape(lit).replace("\\", "\\\\") + "'"]
-    return sep_toks
+def _join_args(args: list[list[str]]) -> list[str]:
+    """Argument token lists joined with commas."""
+    out: list[str] = []
+    for k, a in enumerate(args):
+        if k:
+            out.append(",")
+        out += a
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2737,8 +2242,15 @@ def substitute_query_parameters(sql: str, params: dict | None) -> str:
 
 
 @records_errors
-def ch_sql_to_spark(sql: str) -> str:
-    """Translate a ClickHouse-dialect SELECT into Spark SQL text."""
+def ch_sql_to_spark(sql: str, spark=None) -> str:
+    """Translate a ClickHouse-dialect SELECT into Spark SQL text. A
+    registry function Spark does not resolve becomes its Column door's
+    render in `spark` (default: the active session); with no session
+    the call is left as written."""
+    if spark is None:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.getActiveSession()
     if re.search(r"\sINTO\s+OUTFILE\s", sql, re.IGNORECASE):
         raise ChSqlError(
             "INTO OUTFILE: an output directive, not a query — the CLI "
@@ -2788,7 +2300,7 @@ def ch_sql_to_spark(sql: str) -> str:
     toks = _rewrite_array_literals(toks)
     toks = _rewrite_in_frame(toks)
     toks = _rewrite_ternary(toks)
-    toks = _rewrite_functions(toks)
+    toks = _rewrite_functions(toks, spark)
     toks = _rewrite_tuple_access(toks)
     return _join_tokens(toks)
 
@@ -2803,17 +2315,89 @@ def _join_tokens(toks: list[str]) -> str:
     return "".join(out)
 
 
-# (name_lower, nargs) -> rendered Spark-SQL template with __brg{i}
-# placeholders, or None when the registry function cannot be rendered
-# (python-literal-only args, prefix-operator toString forms, UDF
-# backings) — those keep the pointed "use the DataFrame API" error
-_BRIDGE_CACHE: dict[tuple[str, int], str | None] = {}
-
-
 def _registry_fn(low: str):
     from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS
 
     return CH_FUNCTIONS.get(low)
+
+
+def _no_sql_text(name: str) -> str:
+    return (f"{name}: implemented as a DataFrame expression "
+            "(functions.dialect ch / functions.aggregates ch_agg) but has no "
+            "SQL-text translation yet — use the DataFrame API for this query")
+
+
+# per session: function name -> whether Spark resolves it (builtins,
+# and the session's temp functions: the hash and UDF tables, the h3
+# SQL bodies)
+_RESOLVES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _session_resolves(spark, low: str) -> bool:
+    known = _RESOLVES.get(spark)
+    if known is None:
+        jvm = spark.sparkContext._jvm
+        known = _RESOLVES[spark] = {None: (
+            spark._jsparkSession.sessionState().functionRegistry(),
+            jvm.org.apache.spark.sql.catalyst.FunctionIdentifier)}
+    if low not in known:
+        registry, ident = known[None]
+        known[low] = bool(registry.functionExists(ident(low)))
+    return known[low]
+
+
+_PLACEHOLDER_RE = re.compile(r"__brg(\d+)")
+_SIMPLE_ARG_RE = re.compile(r"[A-Za-z_][\w.]*|\d[\w.]*|'.*'|`.*`", re.DOTALL)
+
+
+def _render_call(spark, tk: str, args: list[list[str]], force: bool = False):
+    """The Column door's SQL text for a CH_FUNCTIONS call: the registry
+    function applied to the arguments and rendered (_bridge_template),
+    all-column shapes first, then literal shapes. Rendered when the
+    session cannot resolve the name (or the name is _SHADOWED, or
+    `force`); None leaves the call as written — no session, not a
+    registry name, or a name Spark resolves. A registry name with no
+    render raises the pointed use-the-DataFrame-API error."""
+    low = tk.lower()
+    if spark is None or _registry_fn(low) is None:
+        return None
+    shadowed = low in _SHADOWED
+    if not (force or shadowed) and _session_resolves(spark, low):
+        return None
+    cols = tuple(("col", None) for _ in args)
+    tmpl = _bridge_template(spark, low, cols)
+    if tmpl is None:
+        shapes = _arg_shapes(args)
+        if shapes != cols:
+            tmpl = _bridge_template(spark, low, shapes)
+    if tmpl is None:
+        if shadowed or _spark_syntax(spark, tk, args):
+            return None
+        raise ChSqlError(_no_sql_text(tk))
+    out: list[str] = []
+    for t in tmpl:
+        m = _PLACEHOLDER_RE.fullmatch(t)
+        if m is None:
+            out.append(t)
+            continue
+        a = args[int(m.group(1))]
+        bare = (len(a) == 1 and _SIMPLE_ARG_RE.fullmatch(a[0])) or (
+            a[0] == "(" and _call_end(a, 0) == len(a) - 1) or (
+            _match_call(a, 0) and _call_end(a, 1) == len(a) - 1)
+        out += a if bare else ["(", *a, ")"]
+    return out
+
+
+def _spark_syntax(spark, tk: str, args: list[list[str]]) -> bool:
+    """Whether Spark's parser reads the call as one of its own forms
+    (TIMESTAMPDIFF(HOUR, a, b), ...), not a function to look up."""
+    call = _join_tokens([tk, "(", *_join_args(args), ")"])
+    try:
+        with _quiet_analysis_errors():
+            e = spark._jsparkSession.sessionState().sqlParser().parseExpression(call)
+    except Exception:
+        return False
+    return e.getClass().getSimpleName() != "UnresolvedFunction"
 
 
 _RENDER_TOKEN_RE = re.compile(
@@ -2823,20 +2407,20 @@ _RENDER_TOKEN_RE = re.compile(
   | \d+(?:\.\d+)?(?:[eE][-+]?\d+)?[LDF]?
   | [A-Za-z_][A-Za-z0-9_]*
   | <=>|<=|>=|!=|==|->|&&|\|\|
-  | [-+*/%&|^!=<>(),.\[\]:]
+  | [-+*/%&|^!~=<>(),.\[\]:]
     """,
     re.X,
 )
 
 _PREFIX_BIN = {"+", "-", "*", "/", "%", "&", "|", "^", "=", "==", "!=",
                "<", "<=", ">", ">=", "<=>", "and", "or"}
-_PREFIX_UN = {"!", "not", "-"}
+_PREFIX_UN = {"!", "not", "-", "~"}
 
 
-def _infix_repair(txt: str) -> str | None:
+def _infix_repair(txt: str) -> list[str] | None:
     """Column.toString renders operator nodes PREFIX (`=(a, b)`,
     `!(x)`), which is not SQL. Rewrite them to fully parenthesized
-    infix — full parenthesization makes a successful re-parse
+    infix tokens — full parenthesization makes a successful re-parse
     unambiguous, and the caller's parseExpression check rejects any
     repair that went wrong (round-6: unlocks the operator-bearing half
     of the expression bridge)."""
@@ -2896,46 +2480,35 @@ def _infix_repair(txt: str) -> str | None:
         return out
 
     try:
-        fixed = repair(toks)
+        return repair(toks)
     except ValueError:
         return None
-    out = []
-    for k, tk in enumerate(fixed):
-        if k and tk not in (",", ")", ".") and fixed[k - 1] not in ("(", "."):
-            out.append(" ")
-        out.append(tk)
-    return "".join(out)
 
 
-def _bridge_template(spark, low: str, shapes: tuple) -> str | None:
+# (name, arg shapes) -> the rendered template (tokens, with __brg{k}
+# column placeholders), None when the name does not render, or
+# _DYNAMIC for a seed-bearing render. Cached for the whole process.
+_BRIDGE_CACHE: dict[tuple[str, tuple], list[str] | None | object] = {}
+_DYNAMIC = object()
+
+
+def _bridge_template(spark, low: str, shapes: tuple) -> list[str] | None:
     """Render a registry Column-function to a Spark-SQL expression
     template (round-6): apply it to __brg{i} placeholder columns —
     with ("lit"/"litlist", value) shape positions passed as PYTHON
     values, baked into the template — take the Column's SQL rendering,
     and accept it only if it (a) parses back as one expression and (b)
-    still references every column placeholder. By construction the
-    accepted template IS the DataFrame surface's semantics — the same
-    Column tree, serialized. Anything that doesn't render cleanly
-    stays on the pointed use-the-DataFrame-API error, never a silent
-    mistranslation."""
+    uses every column placeholder outside quoted literals. By
+    construction the accepted template IS the DataFrame surface's
+    semantics — the same Column tree, serialized. Anything that doesn't
+    render cleanly stays on the pointed use-the-DataFrame-API error,
+    never a silent mistranslation."""
     key = (low, shapes)
-    cached = _BRIDGE_CACHE.get(key)
-    if cached is not None:
-        kind, txt = cached
-        if kind == "static":
-            return txt
-        if kind == "none":
-            return None
-        # "dynamic": seed-bearing render (rand/shuffle bake a seed
-        # literal) — re-render per use so every query draws fresh
-        # randomness, matching the DataFrame surface
-
-    col_idx = [k for k, (kind, _v) in enumerate(shapes) if kind == "col"]
+    cached = _BRIDGE_CACHE.get(key, _DYNAMIC)
+    if cached is not _DYNAMIC:
+        return cached
 
     def _render():
-        fn = _registry_fn(low)
-        if fn is None:
-            return None
         from pyspark.sql import functions as F
 
         built = []
@@ -2946,63 +2519,99 @@ def _bridge_template(spark, low: str, shapes: tuple) -> str | None:
                 built.append(v)
             else:  # litlist
                 built.append(list(v))
-        txt = str(fn(*built))
-        if not (txt.startswith("Column<'") and txt.endswith("'>")):
-            return None
-        txt = txt[8:-2]
-        parser = spark._jsparkSession.sessionState().sqlParser()
-        # the repair pass also restores D suffixes on double literals
-        # and is the identity on operator-free renders
-        txt = _infix_repair(txt)
-        if txt is None:
-            return None
-        parser.parseExpression(txt)
-        if not all(f"__brg{k}" in txt for k in col_idx):
-            return None
-        # analysis probe with NULL args: a template can parse yet carry
-        # a non-SQL identifier render (isFinite's `Infinity` double) —
-        # reject on UNRESOLVED; type-mismatch errors are expected (the
-        # probe's NULLs are untyped) and pass
-        probe = txt
-        for k in col_idx:
-            probe = probe.replace(f"__brg{k}", "NULL")
-        try:
-            spark.sql("SELECT " + probe).schema
-        except Exception as pe:
-            # the [UNRESOLVED_*] error CLASS only — a DATATYPE_MISMATCH
-            # message embeds the plan dump, whose `unresolvedalias`
-            # nodes false-matched a substring check
-            if "[UNRESOLVED_" in str(pe):
-                return None
-        return txt
+        return str(_registry_fn(low)(*built))
 
     try:
-        t1 = _render()
-        t2 = _render() if t1 is not None else None
+        txt = _render()
+        # a seed-bearing render (rand/shuffle bake a random long seed)
+        # renders anew per use, so every query draws fresh randomness
+        dynamic = re.search(r"\d{6}", txt) is not None and txt != _render()
+        toks = _checked_template(spark, txt, shapes)
     except Exception:
-        t1 = t2 = None
-    if t1 is None:
-        _BRIDGE_CACHE[key] = ("none", None)
-        return None
-    _BRIDGE_CACHE[key] = ("static", t1) if t1 == t2 else ("dynamic", None)
-    return t1
-
-
-def _lex_spark_sql(txt: str) -> list[str] | None:
-    """Tolerant lexer for already-translated Spark SQL (the chsql
-    tokenizer rejects Spark-only operators like ^ that earlier rewrite
-    passes may have emitted)."""
-    toks, i = [], 0
-    while i < len(txt):
-        if txt[i].isspace():
-            i += 1
-            continue
-        m = _RENDER_TOKEN_RE.match(txt, i)
-        if not m:
-            return None
-        toks.append(m.group(0))
-        i = m.end()
+        dynamic, toks = False, None
+    _BRIDGE_CACHE[key] = _DYNAMIC if dynamic and toks else toks
     return toks
+
+
+def _checked_template(spark, txt: str, shapes: tuple) -> list[str] | None:
+    if not (txt.startswith("Column<'") and txt.endswith("'>")):
+        return None
+    # the repair pass also restores D suffixes on double literals
+    # and is the identity on operator-free renders
+    toks = _infix_repair(txt[8:-2])
+    if toks is None:
+        return None
+    sql = _join_tokens(toks)
+    spark._jsparkSession.sessionState().sqlParser().parseExpression(sql)
+    # a placeholder inside a quoted literal (str() of a Column the
+    # function wanted as a Python value) is not a use
+    if not all(f"__brg{k}" in toks
+               for k, (kind, _v) in enumerate(shapes) if kind == "col"):
+        return None
+    if _plainly_resolves(spark, toks):
+        return toks
+    # analysis probe with NULL args: a template can parse yet carry
+    # a non-SQL identifier render (isFinite's `Infinity` double) —
+    # reject on UNRESOLVED; type-mismatch errors are expected (the
+    # probe's NULLs are untyped) and pass
+    probe = _join_tokens(["NULL" if _PLACEHOLDER_RE.fullmatch(t) else t for t in toks])
+    try:
+        with _quiet_analysis_errors():
+            spark.sql("SELECT " + probe).schema
+    except Exception as pe:
+        # the [UNRESOLVED_*] error CLASS only — a DATATYPE_MISMATCH
+        # message embeds the plan dump, whose `unresolvedalias`
+        # nodes false-matched a substring check
+        if "[UNRESOLVED_" in str(pe):
+            return None
+    return toks
+
+
+# the words of a render that name neither a column nor a function
+_SQL_WORDS = {
+    "null", "true", "false", "case", "when", "then", "else", "end", "as", "is",
+    "not", "and", "or", "in", "like", "distinct", "cast", "try_cast", "int",
+    "bigint", "smallint", "tinyint", "double", "float", "string", "boolean",
+    "date", "timestamp", "decimal", "binary", "array", "map", "struct",
+}
+
+
+def _plainly_resolves(spark, toks: list[str]) -> bool:
+    """Whether every name in a template is a placeholder, a lambda
+    variable, a struct field, an SQL word or a function the session
+    resolves: then the analysis probe cannot fail UNRESOLVED, and its
+    ~10-30 ms a render are saved."""
+    bound = set()
+    for k, t in enumerate(toks):
+        if t == "->":
+            j = k - 1
+            if toks[j] == ")":
+                j = max(i for i in range(j) if toks[i] == "(")
+            bound.update(toks[j:k])
+    for k, t in enumerate(toks):
+        if not (t[0].isalpha() or t[0] == "_") or t in bound or (k and toks[k - 1] == "."):
+            continue
+        low = t.lower()
+        if k + 1 < len(toks) and toks[k + 1] == "(" and low not in _SQL_WORDS:
+            if not _session_resolves(spark, low):
+                return False
+        elif low not in _SQL_WORDS and not _PLACEHOLDER_RE.fullmatch(t):
+            return False
+    return True
+
+
+@contextlib.contextmanager
+def _quiet_analysis_errors():
+    """PySpark logs every analysis error with its stack trace at ERROR;
+    the render probe's expected failures are not errors."""
+    from pyspark.logger import PySparkLogger
+
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    disabled, logger.disabled = logger.disabled, True
+    try:
+        yield
+    finally:
+        logger.disabled = disabled
 
 
 def _sql_literal_value(tok: str) -> str | None:
@@ -3024,17 +2633,29 @@ def _sql_literal_value(tok: str) -> str | None:
     return "".join(out)
 
 
+def _number_value(arg: list[str]) -> int | float | None:
+    """Python value of a (signed) numeric literal argument."""
+    txt = "".join(arg)
+    if not re.fullmatch(r"-?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?", txt):
+        return None
+    try:
+        return int(txt)
+    except ValueError:
+        return float(txt)
+
+
 def _arg_shapes(args: list[list[str]]) -> tuple:
     """Per-arg descriptors for the literal-aware bridge: ("col", None)
-    for expressions, ("lit", value) for a string literal, ("litlist",
-    values) for array('a', 'b', ...) of string literals."""
+    for expressions, ("lit", value) for a string or numeric literal,
+    ("litlist", values) for array('a', 'b', ...) of string literals."""
     shapes = []
     for a in args:
-        if len(a) == 1:
-            v = _sql_literal_value(a[0])
-            if v is not None:
-                shapes.append(("lit", v))
-                continue
+        v = _sql_literal_value(a[0]) if len(a) == 1 else None
+        if v is None:
+            v = _number_value(a)
+        if v is not None:
+            shapes.append(("lit", v))
+            continue
         if len(a) >= 3 and a[0].lower() == "array" and a[1] == "(" \
                 and a[-1] == ")":
             items = _split_top_args(a[2:-1])
@@ -3047,86 +2668,6 @@ def _arg_shapes(args: list[list[str]]) -> tuple:
                 continue
         shapes.append(("col", None))
     return tuple(shapes)
-
-
-def _bridge_substitute(spark, translated: str, name: str) -> str | None:
-    """Replace every `name(args...)` call in the translated SQL with
-    the bridged expression; None when no call site could be bridged."""
-    toks = _lex_spark_sql(translated)
-    if toks is None:
-        return None
-    low = name.lower()
-    changed = False
-    i = 0
-    while i < len(toks):
-        if toks[i].lower() == low and i + 1 < len(toks) and toks[i + 1] == "(":
-            try:
-                close_i = _match_paren(toks, i + 1)
-            except ChSqlError:
-                return None
-            args = _split_top_args(toks[i + 2 : close_i])
-            if args == [[]]:
-                args = []
-            all_cols = tuple(("col", None) for _ in args)
-            tmpl = _bridge_template(spark, low, all_cols)
-            col_positions = list(range(len(args)))
-            if tmpl is None:
-                # literal fallback: registry impls that demand PYTHON
-                # literals (hasToken's needle, dateTrunc's unit,
-                # multiSearch*'s needle lists) bridge with the literal
-                # values baked into the template
-                shapes = _arg_shapes(args)
-                if any(k != "col" for k, _v in shapes):
-                    tmpl = _bridge_template(spark, low, shapes)
-                    col_positions = [
-                        k for k, (kind, _v) in enumerate(shapes)
-                        if kind == "col"
-                    ]
-            if tmpl is None:
-                i += 1
-                continue
-            expr = tmpl
-            for k in sorted(col_positions, reverse=True):
-                expr = expr.replace(
-                    f"__brg{k}", "(" + " ".join(args[k]) + ")")
-            toks = toks[:i] + ["(", expr, ")"] + toks[close_i + 1 :]
-            changed = True
-            i += 3
-        else:
-            i += 1
-    if not changed:
-        return None
-    out = []
-    for k, tk in enumerate(toks):
-        if k and tk not in (",", ")", ".") and toks[k - 1] not in ("(", "."):
-            out.append(" ")
-        out.append(tk)
-    return "".join(out)
-
-
-def _sql_with_fn_bridge(spark, translated: str):
-    """spark.sql with the registry-function bridge: UNRESOLVED names
-    that exist in the DataFrame registry get their rendered expression
-    substituted and the query retried (bounded; one attempt per
-    name)."""
-    attempted: set[str] = set()
-    while True:
-        try:
-            return spark.sql(translated)
-        except Exception as e:
-            msg = str(e)
-            if "UNRESOLVED_ROUTINE" not in msg or len(attempted) > 20:
-                raise
-            m = re.search(r"Cannot resolve routine `([^`]+)`", msg)
-            name = m.group(1) if m else None
-            if (name is None or name.lower() in attempted
-                    or _registry_fn(name.lower()) is None):
-                raise
-            attempted.add(name.lower())
-            bridged = _bridge_substitute(spark, translated, name)
-            if bridged is None:
-                raise
-            translated = bridged
 
 
 @records_errors
@@ -3271,7 +2812,7 @@ def _query(spark, sql: str, data_dir: str | None):
         joined.createOrReplaceTempView(view)
         return spark.sql(ch_sql_to_spark(
             "SELECT " + paste.group("select") + " FROM " + view
-            + (paste.group("tail") or "")
+            + (paste.group("tail") or ""), spark
         ))
     _, settings = _split_suffix_clauses(_tokenize(sql))
     if settings:
@@ -3289,12 +2830,12 @@ def _query(spark, sql: str, data_dir: str | None):
                 spark.conf.unset("spark.chspark.useQueryCache")
             else:
                 spark.conf.set("spark.chspark.useQueryCache", prev)
-    translated = ch_sql_to_spark(sql)
+    translated = ch_sql_to_spark(sql, spark)
     from clickhouse_25_5_3_75_stable_spark.sources.system_tables import record_query
 
     record_query(sql, translated)
     try:
-        df = _sql_with_fn_bridge(spark, translated)
+        df = spark.sql(translated)
         if "max_result_rows" in settings:
             cap = int(settings["max_result_rows"].strip("'\""))
             if cap > 0:  # reference: 0 means unlimited
@@ -3319,7 +2860,7 @@ def _query(spark, sql: str, data_dir: str | None):
                 df, query=sql, query_id=current_query_id()
             )
         return df
-    except Exception as e:  # upgrade unresolved CH names to a useful error
+    except Exception as e:  # an aggregate with no SQL text: a useful error
         msg = str(e)
         if "UNRESOLVED_ROUTINE" in msg:
             m = re.search(r"Cannot resolve routine `([^`]+)`", msg)
@@ -3327,21 +2868,11 @@ def _query(spark, sql: str, data_dir: str | None):
             from clickhouse_25_5_3_75_stable_spark.functions.aggregates import (
                 supported_aggregates,
             )
-            from clickhouse_25_5_3_75_stable_spark.functions.dialect import CH_FUNCTIONS
 
-            # registry keys are lowercased at registration — compare
-            # case-folded or camelCase names (base64Encode, bitAnd, …)
-            # skip the guard and surface the raw UNRESOLVED error
-            # (fuzz-audit finding, round 6)
-            low = name.lower()
-            aggs = {a.lower() for a in supported_aggregates()}
-            if low in CH_FUNCTIONS or low in aggs:
-                raise ChSqlError(
-                    f"{name}: implemented as a DataFrame expression "
-                    f"(functions.dialect ch / functions.aggregates ch_agg) but "
-                    "has no SQL-text translation yet — use the DataFrame API "
-                    "for this query"
-                ) from e
+            # compare case-folded: camelCase names (argMinIf, …) are
+            # registered lowercased (fuzz-audit finding, round 6)
+            if name.lower() in {a.lower() for a in supported_aggregates()}:
+                raise ChSqlError(_no_sql_text(name)) from e
         raise
 
 
@@ -3666,7 +3197,7 @@ def _run_asof_sql(spark, m: re.Match):
     joined.createOrReplaceTempView(view)
     text = "SELECT " + m.group("select") + " FROM " + view + (m.group("tail") or "")
     text = re.sub(rf"\b(?:{la}|{ra})\.", "", text)
-    return spark.sql(ch_sql_to_spark(text))
+    return spark.sql(ch_sql_to_spark(text, spark))
 
 
 def _apply_with_fill(spark, df, col: str, desc: bool,
@@ -3792,7 +3323,7 @@ def ch_explain(spark, sql: str, mode: str = "PLAN") -> str:
     PLAN → optimized logical plan; PIPELINE → physical plan
     (formatted, the executor pipeline); ESTIMATE → plan with stats
     (cost mode)."""
-    spark_sql = ch_sql_to_spark(sql)
+    spark_sql = ch_sql_to_spark(sql, spark)
     df = spark.sql(spark_sql)
     qe = df._jdf.queryExecution()
     m = mode.strip().upper()

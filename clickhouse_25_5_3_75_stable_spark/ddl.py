@@ -811,11 +811,11 @@ def restore_table(
     })
 
 
-def _expr_to_spark(expr: str) -> str:
+def _expr_to_spark(spark, expr: str) -> str:
     """Translate one CH-dialect scalar expression via the transpiler."""
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql_to_spark
 
-    translated = ch_sql_to_spark("SELECT " + expr)
+    translated = ch_sql_to_spark("SELECT " + expr, spark)
     return translated.split("SELECT", 1)[1].strip()
 
 
@@ -852,11 +852,11 @@ def mutate_table(
     # (review-found); the rewrite normalizes parts to the declared
     # schema, so the rename history is spent afterwards
     df = catalog.register(spark, base_dir, name)
-    pred = F.expr(_expr_to_spark(where))
+    pred = F.expr(_expr_to_spark(spark, where))
     if kind == "delete":
         out = mutate_delete(df, pred)
     elif kind == "update":
-        exprs = {c: F.expr(_expr_to_spark(e)) for c, e in (assignments or {}).items()}
+        exprs = {c: F.expr(_expr_to_spark(spark, e)) for c, e in (assignments or {}).items()}
         out = mutate_update(df, pred, exprs)
     else:
         raise ValueError(f"unknown mutation kind {kind!r}")

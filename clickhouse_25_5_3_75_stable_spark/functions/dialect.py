@@ -26,6 +26,7 @@ Notes on fidelity:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import Column
@@ -380,20 +381,33 @@ _reg("repeat")(lambda a, n: F.repeat(_c(a), n))
 _reg("space")(lambda n: F.repeat(F.lit(" "), n))
 _reg("startsWith")(lambda a, p: _c(a).startswith(_c(p)))
 _reg("endsWith")(lambda a, p: _c(a).endswith(_c(p)))
-_reg("splitByChar", "splitByString")(lambda sep, a, limit=-1: F.split(_c(a), F.lit(sep), limit))
+_reg("splitByChar", "splitByString")(
+    # the separator is a constant string, never a regex
+    lambda sep, a, limit=-1: F.split(_c(a), F.lit(re.escape(sep)), limit)
+)
 _reg("arrayStringConcat")(lambda arr, sep="": F.array_join(_c(arr), sep))
 _reg("format")(lambda fmt, *cols: F.format_string(fmt.replace("{}", "%s"), *[_c(c) for c in cols]))
 _reg("translate")(lambda a, frm, to: F.translate(_c(a), frm, to))
 _reg("position", "locate")(lambda hay, needle: F.instr(_c(hay), needle).cast("bigint"))
 _reg("positionCaseInsensitive")(
-    lambda hay, needle: F.instr(F.lower(_c(hay)), str(needle).lower()).cast("bigint")
+    lambda hay, needle: F.instr(F.lower(_c(hay)), F.lower(_c(needle))).cast("bigint")
 )
 _reg("like")(lambda a, pat: _c(a).like(pat))
 _reg("notLike")(lambda a, pat: ~_c(a).like(pat))
 _reg("ilike")(lambda a, pat: _c(a).ilike(pat))
 _reg("match")(lambda a, pat: _c(a).rlike(pat))
-_reg("extract")(lambda a, pat: F.regexp_extract(_c(a), pat, 0))
-_reg("extractAll")(lambda a, pat: F.regexp_extract_all(_c(a), F.lit(pat), F.lit(0)))
+
+
+def _regex_group(pat: str) -> int:
+    """The group extract/extractAll return: the first capturing group
+    when the pattern has one, else the whole match (extract.cpp)."""
+    return 1 if re.search(r"(?<!\\)\((?!\?)", pat) else 0
+
+
+_reg("extract")(lambda a, pat: F.regexp_extract(_c(a), pat, _regex_group(pat)))
+_reg("extractAll")(
+    lambda a, pat: F.regexp_extract_all(_c(a), F.lit(pat), F.lit(_regex_group(pat)))
+)
 def _replace_one(a, pat, rep):
     """Exact FIRST-occurrence literal replace (replaceOne.cpp): instr
     splice — the prior regexp_replace form replaced ALL occurrences
@@ -485,8 +499,8 @@ _reg("bitAnd")(lambda a, b: _c(a).bitwiseAND(_c(b)))
 _reg("bitOr")(lambda a, b: _c(a).bitwiseOR(_c(b)))
 _reg("bitXor")(lambda a, b: _c(a).bitwiseXOR(_c(b)))
 _reg("bitNot")(lambda a: F.bitwise_not(_c(a)))
-_reg("bitShiftLeft")(lambda a, n: F.shiftleft(_c(a), n))
-_reg("bitShiftRight")(lambda a, n: F.shiftright(_c(a), n))
+_reg("bitShiftLeft")(lambda a, n: F.call_function("shiftleft", _c(a), _c(n)))
+_reg("bitShiftRight")(lambda a, n: F.call_function("shiftright", _c(a), _c(n)))
 _reg("bitCount")(lambda a: F.bit_count(_c(a)))
 
 # ---------------------------------------------------------------------------
@@ -520,20 +534,20 @@ _reg("arrayAvg")(
     / F.size(_c(arr))
 )
 _reg("arraySort")(lambda arr: F.array_sort(_c(arr)))
-_reg("arrayReverseSort")(lambda arr: F.reverse(F.array_sort(_c(arr))))
+_reg("arrayReverseSort")(lambda arr: F.sort_array(_c(arr), asc=False))  # NULLs last
 _reg("arrayReverse")(lambda arr: F.reverse(_c(arr)))
 _reg("arrayDistinct")(lambda arr: F.array_distinct(_c(arr)))
 _reg("arrayUniq")(lambda arr: F.size(F.array_distinct(_c(arr))).cast("bigint"))
-_reg("arrayConcat")(lambda *arrs: F.concat(*[_c(a) for a in arrs]))
+_reg("arrayConcat")(lambda *arrs: F.flatten(F.array(*[_c(a) for a in arrs])))
 _reg("arraySlice")(lambda arr, off, ln=None: F.slice(_c(arr), off, ln) if ln is not None else F.slice(_c(arr), off, F.size(_c(arr))))
 _reg("arrayFlatten", "flatten")(lambda arr: F.flatten(_c(arr)))
 _reg("arrayZip")(lambda *arrs: F.arrays_zip(*[_c(a) for a in arrs]))
 _reg("arrayIntersect")(lambda a, b: F.array_intersect(_c(a), _c(b)))
-_reg("arrayEnumerate")(lambda arr: F.sequence(F.lit(1), F.size(_c(arr))))
-_reg("arrayPushBack")(lambda arr, v: F.concat(_c(arr), F.array(_c(v))))
-_reg("arrayPushFront")(lambda arr, v: F.concat(F.array(_c(v)), _c(arr)))
-_reg("arrayPopBack")(lambda arr: F.slice(_c(arr), 1, F.size(_c(arr)) - 1))
-_reg("arrayPopFront")(lambda arr: F.slice(_c(arr), 2, F.size(_c(arr)) - 1))
+_reg("arrayEnumerate")(lambda arr: F.transform(_c(arr), lambda _x, i: i + 1))
+_reg("arrayPushBack")(lambda arr, v: F.array_append(_c(arr), _c(v)))
+_reg("arrayPushFront")(lambda arr, v: F.array_prepend(_c(arr), _c(v)))
+_reg("arrayPopBack")(lambda arr: F.slice(_c(arr), 1, F.greatest(F.size(_c(arr)) - 1, F.lit(0))))
+_reg("arrayPopFront")(lambda arr: F.slice(_c(arr), 2, F.greatest(F.size(_c(arr)) - 1, F.lit(0))))
 _reg("arrayCompact")(
     lambda arr: F.filter(
         F.zip_with(_c(arr), F.concat(F.array(F.lit(None)), _c(arr)), lambda a, b: F.when(~a.eqNullSafe(b), a)),
@@ -582,22 +596,37 @@ _reg("tupleElement")(lambda t, name: _c(t).getField(name) if isinstance(name, st
 # toJSONString.cpp) — get_json_object / from_json / to_json
 # ---------------------------------------------------------------------------
 
-_reg("JSONExtractString", "visitParamExtractString", "simpleJSONExtractString")(
-    lambda j, key: F.get_json_object(_c(j), f"$.{key}")
-)
+
+
+def _json_at(j, path) -> Column:
+    """The value at a JSONExtract* path: literal keys and 1-based
+    indices, one JSONPath ('a', 2, 'b' -> $.a[1].b)."""
+    jp = "$"
+    for seg in path:
+        if isinstance(seg, str):
+            jp += "." + seg
+        elif isinstance(seg, int) and seg >= 1:
+            jp += f"[{seg - 1}]"
+        else:
+            raise ValueError("JSON path segments are literal keys or positive indices")
+    return F.get_json_object(_c(j), jp)
+
+
+_reg("JSONExtractString", "JSONExtractRaw", "visitParamExtractString",
+     "simpleJSONExtractString")(lambda j, *path: _json_at(j, path))
 _reg("JSONExtractInt", "visitParamExtractInt", "simpleJSONExtractInt")(
-    lambda j, key: F.get_json_object(_c(j), f"$.{key}").cast("bigint")
+    lambda j, *path: _json_at(j, path).cast("bigint")
 )
 _reg("JSONExtractFloat", "visitParamExtractFloat")(
-    lambda j, key: F.get_json_object(_c(j), f"$.{key}").cast("double")
+    lambda j, *path: _json_at(j, path).cast("double")
 )
 _reg("JSONExtractBool", "visitParamExtractBool")(
-    lambda j, key: F.get_json_object(_c(j), f"$.{key}").cast("boolean")
+    lambda j, *path: _json_at(j, path).cast("boolean")
 )
-_reg("JSONHas")(lambda j, key: F.get_json_object(_c(j), f"$.{key}").isNotNull())
+_reg("JSONHas")(lambda j, *path: _json_at(j, path).isNotNull())
 _reg("JSON_VALUE")(lambda j, path: F.get_json_object(_c(j), path))
 _reg("JSONExtractKeys", "json_object_keys")(lambda j: F.json_object_keys(_c(j)))
-_reg("JSONLength")(lambda j: F.json_array_length(_c(j)))
+_reg("JSONLength")(lambda j, *path: F.json_array_length(_json_at(j, path)))
 _reg("toJSONString")(lambda a: F.to_json(_c(a)))
 _reg("isValidJSON")(lambda j: F.get_json_object(_c(j), "$").isNotNull())
 
@@ -752,11 +781,9 @@ def _has_token(haystack, token) -> Column:
     # ITokenExtractor.cpp:115 isAlphaNumericASCII — review finding:
     # \b disagreed on both '_' and non-ASCII). Java lookarounds give
     # exact boundaries; same class as sources/text_index.py.
-    import re as _re
-
     tc = r"[^\x00-\x2f\x3a-\x40\x5b-\x60\x7b-\x7f]"  # token char
     return _c(haystack).rlike(
-        f"(?<!{tc}){_re.escape(token)}(?!{tc})"
+        f"(?<!{tc}){re.escape(token)}(?!{tc})"
     )
 
 
@@ -1123,7 +1150,7 @@ def _array_reduce(agg_name: str, arr) -> Column:
 
 @_reg("arrayResize")
 def _array_resize(arr, n, fill=None) -> Column:
-    a, nn = _c(arr), _c(n)
+    a, nn = _c(arr), _c(n).cast("int")
     pad = F.lit(0) if fill is None else _c(fill)
     return F.slice(
         F.concat(a, F.array_repeat(pad, F.greatest(nn - F.size(a), F.lit(0)))),
@@ -1134,7 +1161,7 @@ def _array_resize(arr, n, fill=None) -> Column:
 
 @_reg("arrayWithConstant")
 def _array_with_constant(n, x) -> Column:
-    return F.array_repeat(_c(x), _c(n))
+    return F.array_repeat(_c(x), _c(n).cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -1145,7 +1172,7 @@ def _array_with_constant(n, x) -> Column:
 
 @_reg("bitTest")
 def _bit_test(x, n) -> Column:
-    return F.shiftright(_c(x).cast("bigint"), n).bitwiseAND(F.lit(1))
+    return F.call_function("shiftright", _c(x).cast("bigint"), _c(n)).bitwiseAND(F.lit(1))
 
 
 @_reg("bitTestAll")

@@ -649,12 +649,17 @@ _reg("ignore")(lambda *cs: F.lit(0))
 _reg("isConstant")(lambda c: F.lit(False))
 _reg("throwIf")(lambda cond, msg="condition failed": F.when(_c(cond), F.raise_error(F.lit(msg))).otherwise(F.lit(0)))
 _reg("toInterval")(lambda n, unit="second": F.make_dt_interval(secs=_c(n)))
-_reg("toUUID")(lambda c: F.lower(_c(c).cast("string")))
 _reg("toUUIDOrNull")(
     lambda c: F.when(
         _c(c).rlike("^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"),
         F.lower(_c(c)),
     )
+)
+_reg("toUUID")(
+    lambda c: F.when(_c(c).isNull(), F.lit(None).cast("string")).otherwise(F.coalesce(
+        CH_FUNCTIONS["touuidornull"](c),
+        F.raise_error(F.concat(F.lit("toUUID: not a UUID: "), _c(c).cast("string"))),
+    ))
 )
 _reg("toUUIDOrZero", "toUUIDOrDefault")(
     lambda c, d="00000000-0000-0000-0000-000000000000": F.coalesce(

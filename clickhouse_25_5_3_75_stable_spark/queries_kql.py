@@ -53,7 +53,7 @@ def kql_summarize_bin_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT lang,
            count(*) AS count_,
-           CAST(max(length(text)) AS INT) AS max_n
+           max(length(text)) AS max_n
     FROM documents
     WHERE position(lower('DATA') IN lower(text)) > 0
        OR regexp_matches(lower(text), '(^|[^a-zA-Z0-9_])model($|[^a-zA-Z0-9_])')

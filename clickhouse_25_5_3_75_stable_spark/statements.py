@@ -315,7 +315,7 @@ def _create(st: _Stmt):
             from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql_to_spark
 
             spark.sql(f"CREATE OR REPLACE TEMP VIEW {vname} AS "
-                      + ch_sql_to_spark(body))
+                      + ch_sql_to_spark(body, spark))
         return st.ok(vname)
     # lake ENGINEs (reference registerStorages.cpp DeltaLake/Iceberg/
     # Hudi): CREATE TABLE t ENGINE = DeltaLake('path') attaches an
@@ -670,7 +670,7 @@ def _delete(st: _Stmt):
 
     if lake[0] == "hudi":
         raise ValueError("DELETE on ENGINE = Hudi needs the hudi-spark-bundle connector")
-    pred = ch_sql_to_spark(f"SELECT * FROM __x WHERE {where}").split("WHERE", 1)[1]
+    pred = ch_sql_to_spark(f"SELECT * FROM __x WHERE {where}", st.spark).split("WHERE", 1)[1]
     delete = datalake.delete_delta if lake[0] == "delta" else datalake.delete_iceberg
     delete(st.spark, lake[1], pred)
     datalake.refresh_lake_table(st.spark, tname)
@@ -1071,14 +1071,14 @@ def _resolve_final(spark, data_dir: str, sql: str) -> str:
 _INT_CH = {"int8", "int16", "int32", "int64", "uint8", "uint16", "uint32"}
 
 
-def _order_exprs(order_s: str):
+def _order_exprs(spark, order_s: str):
     """An ORDER BY list of CH text as Column sort expressions."""
     from pyspark.sql import functions as F
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql_to_spark
 
     exprs = []
-    for t in ch_sql_to_spark("SELECT " + order_s).split("SELECT", 1)[1].split(","):
+    for t in ch_sql_to_spark("SELECT " + order_s, spark).split("SELECT", 1)[1].split(","):
         t = t.strip()
         if t.upper().endswith(" DESC"):
             exprs.append(F.expr(t[: -len(" DESC")].strip()).desc())
@@ -1087,12 +1087,12 @@ def _order_exprs(order_s: str):
     return exprs
 
 
-def _where_expr(where_s: str):
+def _where_expr(spark, where_s: str):
     from pyspark.sql import functions as F
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ch_sql_to_spark
 
-    return F.expr(ch_sql_to_spark("SELECT " + where_s).split("SELECT", 1)[1])
+    return F.expr(ch_sql_to_spark("SELECT " + where_s, spark).split("SELECT", 1)[1])
 
 
 def _route_projection(spark, data_dir: str, sql: str):
@@ -1136,7 +1136,7 @@ def _route_projection(spark, data_dir: str, sql: str):
     ch_types = dict(td.columns)
     df = spark.read.parquet(_projection_path(data_dir, table, proj["name"]))
     if where_s:
-        df = df.filter(_where_expr(where_s))
+        df = df.filter(_where_expr(spark, where_s))
     agg_exprs = []
     raw_to_alias = {}
     for fn, col, alias, raw in aggs:
@@ -1172,7 +1172,7 @@ def _route_projection(spark, data_dir: str, sql: str):
             grouped = grouped.withColumnRenamed(src, alias) if src != alias else grouped
             out_cols.append(alias)
     result = grouped.select(*out_cols)
-    return result.orderBy(*_order_exprs(order_s)) if order_s else result
+    return result.orderBy(*_order_exprs(spark, order_s)) if order_s else result
 
 
 def _route_normal_projection(spark, data_dir: str, sql: str):
@@ -1209,8 +1209,8 @@ def _route_normal_projection(spark, data_dir: str, sql: str):
         if p["keys"][0] not in where_cols:
             continue  # predicate misses the sort prefix: no pruning win
         df = spark.read.parquet(_projection_path(data_dir, table, p["name"]))
-        df = df.filter(_where_expr(where_s))
+        df = df.filter(_where_expr(spark, where_s))
         if select_s.strip() != "*":
             df = df.select(*items)
-        return df.orderBy(*_order_exprs(order_s)) if order_s else df
+        return df.orderBy(*_order_exprs(spark, order_s)) if order_s else df
     return None
