@@ -7,20 +7,22 @@ server).
         "SELECT toYear(o_orderdate) AS y, count() FROM orders GROUP BY y FORMAT CSV"
 
 The statement is ClickHouse dialect (chsql shim); every parquet table
-in --data registers under its file stem. FORMAT suffix picks the
-output serialization (TabSeparated default, CSV[WithNames], JSONEachRow,
-Pretty), mirroring the reference's FORMAT clause behavior for the
-supported subset.
+in --data registers under its file stem. The FORMAT suffix picks the
+output serialization (TabSeparated by default) from the one format
+table, `sources/formats.py`, which every door reads: this FORMAT and
+INTO OUTFILE, INSERT ... FROM INFILE and INSERT ... FORMAT, file()/url(),
+format() and system.formats. An unknown name raises (the reference's
+UNKNOWN_FORMAT); a binary format writes only INTO OUTFILE.
 """
 
 from __future__ import annotations
 
 import argparse
-import datetime
-import json
 import os
 import re
 import sys
+
+from clickhouse_25_5_3_75_stable_spark.sources import formats
 
 
 def _detect_format(sql: str) -> tuple[str, str]:
@@ -34,98 +36,11 @@ def _detect_format(sql: str) -> tuple[str, str]:
     return sql[:m.start()], m.group(1)
 
 
-def _text(v, nested: bool = False):
-    """A cell's text value as the reference writes it: booleans as
-    true/false, arrays as [a,b], maps as {k:v}, tuples as (a,b); inside
-    those, NULL as NULL and strings and dates single-quoted. A top-level
-    string or NULL is left to the format."""
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, dict):
-        return "{" + ",".join(f"{_text(k, True)}:{_text(x, True)}"
-                              for k, x in v.items()) + "}"
-    if isinstance(v, (list, tuple)):  # a struct value is a Row, a tuple
-        inner = ",".join(_text(x, True) for x in v)
-        return f"[{inner}]" if isinstance(v, list) else f"({inner})"
-    if not nested:
-        return v
-    if v is None:
-        return "NULL"
-    if isinstance(v, (str, datetime.date)):  # datetime is a date too
-        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
-    return str(v)
-
-
 def _emit(rows, cols, fmt: str, out) -> None:
-    f = fmt.lower()
-    if f in ("csv", "csvwithnames"):
-        import csv
-
-        w = csv.writer(out)
-        if f == "csvwithnames":
-            w.writerow(cols)
-        for r in rows:
-            w.writerow([_text(v) for v in r])
-    elif f in ("jsoneachrow", "json"):
-        for r in rows:
-            out.write(json.dumps(dict(zip(cols, [getattr(v, "isoformat", lambda: v)() if hasattr(v, "isoformat") else v for v in r])), default=str) + "\n")
-    elif f in ("pretty", "prettycompact"):
-        cells = [[str(_text(v)) for v in r] for r in rows]
-        widths = [max(len(str(c)), *(len(r[i]) for r in cells)) if cells else len(str(c)) for i, c in enumerate(cols)]
-        out.write(" | ".join(str(c).ljust(w) for c, w in zip(cols, widths)) + "\n")
-        out.write("-+-".join("-" * w for w in widths) + "\n")
-        for r in cells:
-            out.write(" | ".join(v.ljust(w) for v, w in zip(r, widths)) + "\n")
-    else:  # TabSeparated / TSV
-        for r in rows:
-            out.write("\t".join("" if v is None else str(_text(v)) for v in r) + "\n")
-
-
-def _write_binary_outfile(df, rows, fmt: str, outfile: str) -> bool:
-    """INTO OUTFILE ... FORMAT <binary codec>: route through the
-    hand-built writers (reference: any registered output format is
-    valid after INTO OUTFILE — ParserQueryWithOutput.cpp). Returns False
-    for text formats so the caller falls back to _emit."""
-    f = fmt.lower()
-    if f == "avro":
-        from clickhouse_25_5_3_75_stable_spark.sources.avro_fmt import write_avro
-
-        write_avro(df, outfile)
-        return True
-    if f == "bsoneachrow":
-        from clickhouse_25_5_3_75_stable_spark.sources.bson_fmt import (
-            write_bson_each_row,
-        )
-
-        write_bson_each_row(df, outfile)
-        return True
-    if f == "msgpack":
-        from clickhouse_25_5_3_75_stable_spark.sources.msgpack_fmt import write_msgpack
-
-        write_msgpack(df, outfile)
-        return True
-    if f in ("rowbinary", "native"):
-        from clickhouse_25_5_3_75_stable_spark.sources.rowbinary import (
-            encode_native,
-            encode_rowbinary,
-            wire_schema,
-        )
-
-        schema = wire_schema(df.schema.fields, f"FORMAT {fmt}")
-        enc = encode_rowbinary if f == "rowbinary" else encode_native
-        with open(outfile, "wb") as fh:
-            fh.write(enc(rows, schema))
-        return True
-    if f == "parquet":
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(
-            pa.Table.from_pylist([dict(zip(df.columns, r)) for r in rows]),
-            outfile,
-        )
-        return True
-    return False
+    """Write collected rows in FORMAT `fmt` (its `formats.FORMATS`
+    encoder) to `out`; `cols` is the result's schema, or for a text
+    format just its column names."""
+    out.write(formats.output(fmt).write(rows, cols))
 
 
 def _register_dir(spark, data_dir: str) -> list[str]:
@@ -166,6 +81,7 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
         _register_dir(spark, data_dir)
         sql, fmt = _detect_format(sql)
         sql, outfile = extract_into_outfile(sql)
+        binary = formats.output(fmt, to_file=outfile is not None).binary
         # dialect routing (reference executeQuery.cpp:1044: the kusto
         # parser takes over when SET dialect = 'kusto'); statements
         # such as SET stay ClickHouse text
@@ -188,13 +104,12 @@ def run_local(sql: str, data_dir: str, spark=None, out=sys.stdout,
             if cap > 0:  # reference: 0 means unlimited
                 mode = spark.conf.get("spark.chspark.resultOverflowMode", "throw")
                 df = enforce_result_cap(df, cap, mode)
-        rows = [tuple(r) for r in df.collect()]
+        rows = df.collect()
         if outfile is None:
-            _emit(rows, df.columns, fmt, out)
+            _emit(rows, df.schema, fmt, out)
         else:
-            if not _write_binary_outfile(df, rows, fmt, outfile):
-                with open(outfile, "w") as fh:
-                    _emit(rows, df.columns, fmt, fh)
+            with open(outfile, "wb" if binary else "w") as fh:
+                _emit(rows, df.schema, fmt, fh)
             _emit([(outfile, len(rows))], ["outfile", "rows"], "TabSeparated", out)
         record_query(sql, kind="QueryFinish",
                      duration_ms=round((time.perf_counter() - t0) * 1000, 3),

@@ -126,10 +126,6 @@ def _tokenize(sql: str) -> list[str]:
     return out
 
 
-def _is_name(tok: str, *names: str) -> bool:
-    return tok.upper() in names
-
-
 # ---------------------------------------------------------------------------
 # Rewrite tables
 # ---------------------------------------------------------------------------
@@ -260,8 +256,6 @@ _RENAMES = {
     "empty": "empty__",  # arrays too; the Column door is string-only
     "notempty": "notempty__",  # arrays too; the Column door is string-only
     "length": "length__",  # arrays too; the Column door is string-only
-    "tuple": "tuple__",  # fields _1.._N, which .N reads; the Column door names them after its arguments
-    "tupleelement": "tupleelement__",  # reads field _N of tuple()
 }
 
 # CH_FUNCTIONS names Spark also resolves, with other semantics: rendered
@@ -342,27 +336,6 @@ _REFUSED = {
 # ---------------------------------------------------------------------------
 # Clause-level pass (paren-depth-aware keyword scan)
 # ---------------------------------------------------------------------------
-
-
-def _find_clauses(toks: list[str]) -> dict[str, int]:
-    """Top-level positions of clause starters (depth 0 only)."""
-    pos: dict[str, int] = {}
-    depth = 0
-    i = 0
-    while i < len(toks):
-        tk = toks[i]
-        if tk == "(":
-            depth += 1
-        elif tk == ")":
-            depth -= 1
-        elif depth == 0:
-            up = tk.upper()
-            if up in ("PREWHERE", "WHERE", "QUALIFY", "FORMAT", "SETTINGS", "LIMIT"):
-                pos.setdefault(up + f"@{i}", i)
-            elif up == "GROUP" or up == "ORDER":
-                pos.setdefault(up + f"@{i}", i)
-        i += 1
-    return pos
 
 
 def _clause_bounds(toks: list[str], start: int) -> int:
@@ -1564,23 +1537,6 @@ def _rewrite_functions(toks: list[str], spark=None) -> list[str]:
             else:
                 out += (_render_call(spark, tk, args, force=True)
                         or [tk, "(", *_join_args(args), ")"])
-        elif new == "tuple__":
-            # positional tuple: named_struct('_1', a1, ...) so CH .N /
-            # tupleElement(t, N) access maps to field _N
-            out += ["named_struct", "("]
-            for k, a in enumerate(args):
-                if k:
-                    out.append(",")
-                out += [f"'_{k + 1}'", ","] + a
-            out.append(")")
-        elif new == "tupleelement__":
-            sel = args[1]
-            if len(sel) == 1 and sel[0].isdigit():
-                out += ["(", *args[0], ")", f"._{sel[0]}"]
-            elif len(sel) == 1 and sel[0].startswith("'"):
-                out += ["(", *args[0], ")", f".{sel[0][1:-1]}"]
-            else:
-                raise ChSqlError("tupleElement: index must be a literal")
         elif new == "tostartofinterval__":
             out += _interval_floor(args[0], args[1], tk)
         else:
@@ -3059,24 +3015,6 @@ _LAKE_TF_RE = re.compile(
     re.IGNORECASE,
 )
 
-# CH format name -> self-describing Spark reader (fmt, options). Formats
-# that need an explicit schema (RowBinary/Native/MsgPack...) must go
-# through their Python APIs, which take one.
-_TF_FORMATS = {
-    "parquet": ("parquet", {}),
-    "orc": ("orc", {}),
-    "csv": ("csv", {"inferSchema": "true"}),
-    "csvwithnames": ("csv", {"header": "true", "inferSchema": "true"}),
-    "tsv": ("csv", {"sep": "\t", "inferSchema": "true"}),
-    "tabseparated": ("csv", {"sep": "\t", "inferSchema": "true"}),
-    "tsvwithnames": ("csv", {"sep": "\t", "header": "true", "inferSchema": "true"}),
-    "tabseparatedwithnames": (
-        "csv", {"sep": "\t", "header": "true", "inferSchema": "true"}),
-    "jsoneachrow": ("json", {}),
-    "ndjson": ("json", {}),
-    "json": ("json", {}),
-}
-
 _tf_counter = 0
 
 
@@ -3096,18 +3034,14 @@ def _materialize_table_functions(spark, sql: str) -> str:
             from clickhouse_25_5_3_75_stable_spark.sources.datalake import read_hudi
 
             df = read_hudi(spark, path)
-        else:  # file / url
-            from clickhouse_25_5_3_75_stable_spark.sources.object_store import read_uri
+        else:  # file / url: a format that describes its own schema
+            from clickhouse_25_5_3_75_stable_spark.sources import formats
+            from clickhouse_25_5_3_75_stable_spark.sources.object_store import normalize_uri
 
-            fmt_name = (arg2 or "Parquet").lower()
-            if fmt_name not in _TF_FORMATS:
-                raise ChSqlError(
-                    f"{fn}(..., '{arg2}'): format needs an explicit schema — "
-                    "use the Python reader (sources/rowbinary.py, "
-                    "msgpack_fmt.py, ...) which takes one"
-                )
-            fmt, opts = _TF_FORMATS[fmt_name]
-            df = read_uri(spark, path, fmt, **opts)
+            try:
+                df = formats.read(spark, arg2 or "Parquet", normalize_uri(path), sql=True)
+            except ValueError as e:
+                raise ChSqlError(f"{fn}(..., '{arg2}'): {e}") from None
         _tf_counter += 1
         view = f"__tf_{fn}_{_tf_counter}"
         df.createOrReplaceTempView(view)

@@ -253,34 +253,28 @@ _CH_TO_SPARK_T = {
 def _read_file_source(spark: SparkSession, d: SqlDictionary):
     """SOURCE(FILE(PATH .. FORMAT ..)) — reference FileDictionarySource
     (src/Dictionaries/FileDictionarySource.cpp): the file reads through
-    the matching format path and every declared column casts to its
-    declared type (the dict definition IS the schema, like the
-    reference's attribute list)."""
+    its format's Spark source in `formats.FORMATS` and every declared
+    column casts to its declared type (the dict definition IS the
+    schema, like the reference's attribute list)."""
     import os
 
     from pyspark.sql import functions as F
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
 
     path, fmt = d.source_file
     if not os.path.exists(path):
         raise ChSqlError(
             f"CREATE DICTIONARY {d.name}: source file {path!r} not found")
-    if fmt in ("csv", "csvwithnames"):
-        src = (spark.read.option("header", fmt == "csvwithnames")
-               .csv(path))
-    elif fmt in ("tsv", "tabseparated", "tsvwithnames",
-                 "tabseparatedwithnames"):
-        src = (spark.read.option("header", fmt.endswith("withnames"))
-               .option("sep", "\t").csv(path))
-    elif fmt in ("jsoneachrow", "ndjson"):
-        src = spark.read.json(path)
-    elif fmt == "parquet":
-        src = spark.read.parquet(path)
-    else:
+    # the format's Spark source, with no schema inference: a declared
+    # String keeps its text as written (007 stays 007)
+    spark_src = formats.lookup(fmt).spark
+    if spark_src is None:
         raise ChSqlError(
-            f"SOURCE(FILE(... FORMAT '{fmt}')): CSV[WithNames], "
-            "TSV[WithNames], JSONEachRow and Parquet are served")
+            f"SOURCE(FILE(... FORMAT '{fmt}')): formats a Spark source reads "
+            "(CSV, TabSeparated, JSONEachRow, Parquet, ... [WithNames]) are served")
+    src = spark.read.options(**spark_src[1]).format(spark_src[0]).load(path)
     declared = {**{k: None for k in d.keys}, **d.attrs}
     for col in declared:
         if col not in src.columns:

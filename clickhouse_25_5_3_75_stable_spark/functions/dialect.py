@@ -588,8 +588,9 @@ _reg("mapContains")(lambda m, k: F.map_contains_key(_c(m), k))
 _reg("mapFromArrays")(lambda ks, vs: F.map_from_arrays(_c(ks), _c(vs)))
 _reg("mapFilter")(lambda f, m: F.map_filter(_c(m), f))
 _reg("mapApply")(lambda f, m: F.transform_values(_c(m), f))
-_reg("tuple")(lambda *cols: F.struct(*[_c(c) for c in cols]))
-_reg("tupleElement")(lambda t, name: _c(t).getField(name) if isinstance(name, str) else _c(t).getField(f"col{name}"))
+# a tuple's fields are _1.._N, so tupleElement(t, N) and t.N read field _N
+_reg("tuple")(lambda *cols: F.struct(*[_c(c).alias(f"_{k}") for k, c in enumerate(cols, 1)]))
+_reg("tupleElement")(lambda t, name: _c(t).getField(name if isinstance(name, str) else f"_{name}"))
 
 # ---------------------------------------------------------------------------
 # JSON (src/Functions/FunctionsJSON.cpp, FunctionSQLJSON.cpp,
@@ -612,16 +613,23 @@ def _json_at(j, path) -> Column:
     return F.get_json_object(_c(j), jp)
 
 
+def _json_extract(j, path, typ: str, default) -> Column:
+    """A JSONExtract* value: the type's default when the path is
+    missing or does not cast, NULL only for a NULL document."""
+    return F.when(_c(j).isNotNull(),
+                  F.coalesce(_json_at(j, path).try_cast(typ), F.lit(default)))
+
+
 _reg("JSONExtractString", "JSONExtractRaw", "visitParamExtractString",
-     "simpleJSONExtractString")(lambda j, *path: _json_at(j, path))
+     "simpleJSONExtractString")(lambda j, *path: _json_extract(j, path, "string", ""))
 _reg("JSONExtractInt", "visitParamExtractInt", "simpleJSONExtractInt")(
-    lambda j, *path: _json_at(j, path).cast("bigint")
+    lambda j, *path: _json_extract(j, path, "bigint", 0)
 )
 _reg("JSONExtractFloat", "visitParamExtractFloat")(
-    lambda j, *path: _json_at(j, path).cast("double")
+    lambda j, *path: _json_extract(j, path, "double", 0.0)
 )
 _reg("JSONExtractBool", "visitParamExtractBool")(
-    lambda j, *path: _json_at(j, path).cast("boolean")
+    lambda j, *path: _json_extract(j, path, "boolean", False)
 )
 _reg("JSONHas")(lambda j, *path: _json_at(j, path).isNotNull())
 _reg("JSON_VALUE")(lambda j, path: F.get_json_object(_c(j), path))

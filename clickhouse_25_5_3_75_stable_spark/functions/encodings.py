@@ -51,7 +51,6 @@ from __future__ import annotations
 
 import base64
 import hashlib
-import zlib
 
 import numpy as np
 import pandas as pd
@@ -136,10 +135,6 @@ def crc64_py(data: bytes) -> int:
 
 def crc32ieee_py(data: bytes) -> int:
     return _crc_run(_CRC32IEEE_TAB, data, 0xFFFFFFFF)
-
-
-def crc32_py(data: bytes) -> int:
-    return zlib.crc32(data) & 0xFFFFFFFF
 
 
 # ---------------------------------------------------------------------------

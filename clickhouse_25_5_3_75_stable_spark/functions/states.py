@@ -105,15 +105,6 @@ def uniq_merge(state: Column | str) -> Column:
     return F.hll_sketch_estimate(F.hll_union_agg(_c(state)))
 
 
-def uniq_exact_state(col: Column | str) -> Column:
-    """uniqExactState: the exact variant is just the distinct set."""
-    return F.collect_set(_c(col))
-
-
-def uniq_exact_merge(state: Column | str) -> Column:
-    return F.size(F.array_distinct(F.flatten(F.collect_list(_c(state))))).cast("bigint")
-
-
 # --- quantileExact (sorted-sample state) ----------------------------------
 
 

@@ -73,22 +73,10 @@ def dstddev_samp(col: Column | str, alias: str | None = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-def dstddev_pop(col: Column | str, alias: str | None = None) -> Column:
-    out = F.sqrt(dvar_pop(col))
-    return out.alias(alias) if alias else out
-
-
 def dcovar_samp(a: Column | str, b: Column | str, alias: str | None = None) -> Column:
     x, y = _c(a), _c(b)
     n = _n(x)
     out = (_sp(x, y) - _s(x) * _s(y) / n) / (n - F.lit(1.0))
-    return out.alias(alias) if alias else out
-
-
-def dcovar_pop(a: Column | str, b: Column | str, alias: str | None = None) -> Column:
-    x, y = _c(a), _c(b)
-    n = _n(x)
-    out = (_sp(x, y) - _s(x) * _s(y) / n) / n
     return out.alias(alias) if alias else out
 
 
@@ -113,14 +101,6 @@ def dlinreg_slope(x: Column | str, y: Column | str, alias: str | None = None) ->
     xc, yc = _c(x), _c(y)
     n, sx, sy = _n(xc), _s(xc), _s(yc)
     out = (_sp(xc, yc) - sx * sy / n) / (_sp(xc, xc) - sx * sx / n)
-    return out.alias(alias) if alias else out
-
-
-def dlinreg_intercept(x: Column | str, y: Column | str, alias: str | None = None) -> Column:
-    xc, yc = _c(x), _c(y)
-    n, sx, sy = _n(xc), _s(xc), _s(yc)
-    slope = (_sp(xc, yc) - sx * sy / n) / (_sp(xc, xc) - sx * sx / n)
-    out = sy / n - (slope * sx) / n
     return out.alias(alias) if alias else out
 
 
@@ -161,11 +141,6 @@ def dvar_pop_sql(x: str, alias: str) -> str:
 def dstddev_samp_sql(x: str, alias: str) -> str:
     n, sx, sxx = _n_sql(x), _s_sql(x), _sp_sql(x, x)
     return f"sqrt(({sxx} - {sx} * {sx} / {n}) / ({n} - 1.0)) AS {alias}"
-
-
-def dstddev_pop_sql(x: str, alias: str) -> str:
-    n, sx, sxx = _n_sql(x), _s_sql(x), _sp_sql(x, x)
-    return f"sqrt(({sxx} - {sx} * {sx} / {n}) / {n}) AS {alias}"
 
 
 def dcovar_samp_sql(x: str, y: str, alias: str) -> str:

@@ -12,7 +12,7 @@ which is what the reference uses for most locales)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _ALIASES = {
@@ -32,14 +32,3 @@ def collate(col: Column | str, collation: str = "UNICODE_CI") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     name = _ALIASES.get(collation.lower(), collation)
     return F.collate(c, name)
-
-
-def order_by_collated(
-    df: DataFrame,
-    col: str,
-    collation: str = "UNICODE_CI",
-    *tiebreak: str,
-) -> DataFrame:
-    """ORDER BY col COLLATE collation [, tiebreak...] — a sort, fully
-    parallel (range-partitioned) like any Spark global sort."""
-    return df.orderBy(collate(col, collation), *[F.col(t) for t in tiebreak])

@@ -29,7 +29,6 @@ from clickhouse_25_5_3_75_stable_spark.operators.text import (
     portable_hash64_sql,
     tokens,
     tokens_sql,
-    word_shingles,
     word_shingles_from_tokens,
     word_shingles_sql,
 )
@@ -37,14 +36,6 @@ from clickhouse_25_5_3_75_stable_spark.operators.text import (
 # --------------------------------------------------------------------------
 # MinHash signatures + LSH banding
 # --------------------------------------------------------------------------
-
-
-def minhash_signature(col: Column, num_hashes: int = 8) -> Column:
-    """Array of `num_hashes` minima of salted portable hashes over the
-    doc's word shingles. Salting (hash of "j:shingle") replaces the
-    classic (a*h+b) mod p family — same independence, no 64-bit
-    overflow, and bit-identical in any engine with md5."""
-    return minhash_from_shingles(word_shingles(col), num_hashes)
 
 
 def minhash_from_shingles(sh: Column, num_hashes: int = 8, fast: bool = False) -> Column:

@@ -53,11 +53,6 @@ def summing_final(df: DataFrame, key: list[str], sum_cols: list[Column]) -> Data
     return df.groupBy(*key).agg(*sum_cols)
 
 
-def aggregating_final(df: DataFrame, key: list[str], aggs: list[Column]) -> DataFrame:
-    """AggregatingMergeTree FINAL — arbitrary aggregate fold per key."""
-    return df.groupBy(*key).agg(*aggs)
-
-
 def collapsing_final(
     df: DataFrame, key: list[str], sign: str, order: list[str]
 ) -> DataFrame:

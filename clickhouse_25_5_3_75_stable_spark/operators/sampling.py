@@ -139,24 +139,6 @@ def split_stable(
     return df.withColumn(out_col, expr)
 
 
-def split_stable_sql(
-    key_expr: str, weights: dict[str, int], seed: str = ""
-) -> str:
-    """DuckDB CASE expression mirroring :func:`split_stable`."""
-    from clickhouse_25_5_3_75_stable_spark.operators.text import portable_hash64_sql
-
-    total = sum(weights.values())
-    h = portable_hash64_sql(
-        f"(CAST({key_expr} AS VARCHAR) || ':{seed}')")
-    b = f"(({h} % {total} + {total}) % {total})"
-    acc = 0
-    whens = []
-    for name, w in weights.items():
-        acc += int(w)
-        whens.append(f"WHEN {b} < {acc} THEN '{name}'")
-    return "(CASE " + " ".join(whens) + " END)"
-
-
 def mixture_to_target(
     df: DataFrame,
     stratum_col: str,

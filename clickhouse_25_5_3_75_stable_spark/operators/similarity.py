@@ -28,7 +28,6 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _DEC = "decimal(20,12)"  # |element product| <= ~1; scale 12 >> double ulp
 
@@ -91,54 +90,6 @@ def cosine_topk(
         cosine_similarity(F.col(vec_col), F.col("__qvec")).alias("cosine"),
     )
     return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
-
-
-def cosine_fast(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """Production cosine: plain double fold (order-fixed, deterministic
-    but not oracle-portable) with precomputed norms — ~5× the decimal
-    path's throughput. Use for the scale path; the decimal version is
-    the correctness gate."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, p: acc + p,
-    )
-    return dot / (na * nb)
-
-
-def norm_fast(v: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, p: acc + p,
-        )
-    )
-
-
-_COS_PANDAS = None
-
-
-def cosine_pandas():
-    """Arrow-batched numpy cosine scorer — the production path for
-    pairwise vector math: einsum over the whole Arrow batch instead of
-    one interpreted lambda per element (~3-10× the HOF fold, and the
-    gap widens with batch size on a real cluster). Built lazily:
-    pandas_udf registration needs an active SparkSession."""
-    global _COS_PANDAS
-    if _COS_PANDAS is None:
-
-        @pandas_udf("double")
-        def cos_np(va: pd.Series, vb: pd.Series) -> pd.Series:
-            a = np.stack(va.values).astype(np.float64)
-            b = np.stack(vb.values).astype(np.float64)
-            dots = np.einsum("ij,ij->i", a, b)
-            na = np.sqrt(np.einsum("ij,ij->i", a, a))
-            nb = np.sqrt(np.einsum("ij,ij->i", b, b))
-            return pd.Series(dots / (na * nb))
-
-        _COS_PANDAS = cos_np
-    return _COS_PANDAS
 
 
 def capped_buckets(

@@ -62,20 +62,6 @@ def tokens_sql(expr: str) -> str:
     return f"list_filter(regexp_split_to_array({expr}, '\\s+'), x -> x <> '')"
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Distinct k-token shingles (space-joined strings).
-
-    Reference: wordShingleMinHash*
-    (/root/reference/src/Functions/FunctionsStringHash.cpp:587-632)
-    hashes word shingles exactly like this before min-hashing.
-
-    Hot-path callers should tokenize in their own projection and use
-    :func:`word_shingles_from_tokens` — expressions inside transform
-    lambdas are NOT common-subexpression-eliminated, so this inline
-    form re-splits the text once per shingle index (O(n²) per doc)."""
-    return word_shingles_from_tokens(tokens(col), k)
-
-
 def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     """Shingles from an already-materialized token array column.
 
@@ -106,14 +92,6 @@ def char_ngrams(col: Column, n: int = 4) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: F.substring(s, i, F.lit(n))))
 
 
-def char_ngrams_sql(expr: str, n: int = 4) -> str:
-    return (
-        f"list_distinct(list_transform("
-        f"range(1, greatest(length(lower({expr})) - {n - 1}, 0) + 1),"
-        f" i -> substr(lower({expr}), i, {n})))"
-    )
-
-
 # --------------------------------------------------------------------------
 # Language ID (reference: FunctionsLanguageClassification.cpp uses
 # compact n-gram language models; here a stopword-ratio heuristic — the
@@ -132,12 +110,6 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 def _stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
     wl = F.array(*[F.lit(w) for w in words])
     return F.size(F.filter(toks, lambda x: F.array_contains(wl, x))).cast("bigint")
-
-
-def lang_scores(col: Column) -> list[Column]:
-    """One stopword-hit count column per language, aliased score_<lang>."""
-    toks = tokens(F.lower(col))
-    return [_stopword_hits(toks, ws).alias(f"score_{lang}") for lang, ws in STOPWORDS.items()]
 
 
 def lang_id(col: Column) -> Column:

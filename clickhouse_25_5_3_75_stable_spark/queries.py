@@ -1059,7 +1059,7 @@ def func_math_family(spark: SparkSession, sf_dir: str) -> DataFrame:
            json_extract_string(props, '$.k') AS k_str,
            CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_int,
            json_extract_string(props, '$.k') IS NOT NULL AS has_k,
-           json_extract_string(props, '$.missing') AS missing
+           COALESCE(json_extract_string(props, '$.missing'), '') AS missing
     FROM events
     ORDER BY event_id
     """,
@@ -1067,7 +1067,8 @@ def func_math_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def func_json_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON family (/root/reference/src/Functions/FunctionsJSON.cpp):
-    JSONExtract*/JSONHas over the events.props JSON text column."""
+    JSONExtract*/JSONHas over the events.props JSON text column; a
+    missing key reads the type's default ('' for a String)."""
     ev = t(spark, sf_dir, "events")
     p = F.col("props")
     return ev.select(

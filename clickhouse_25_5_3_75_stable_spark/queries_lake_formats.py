@@ -280,10 +280,11 @@ def format_avro_container_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     """Avro Object Container roundtrip through the pure-Python codec
     (deflate blocks, schema embedded in the header, executor-side
     decode via binaryFile+mapInPandas)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.avro_fmt import read_avro, write_avro
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.avro_fmt import read_avro
 
     path = os.path.join(tempfile.mkdtemp(prefix="chspark_avro_"), "nation.avro")
-    write_avro(_nation_df(spark, sf_dir), path)
+    formats.write(_nation_df(spark, sf_dir), path, "Avro")
     return read_avro(spark, path).select("n_nationkey", "n_name", "n_regionkey")
 
 
@@ -296,13 +297,11 @@ def format_avro_container_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
 def format_bson_each_row_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BSONEachRow roundtrip through the pure-Python codec built from
     the public BSON spec (one document per row, executor-side decode)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.bson_fmt import (
-        read_bson_each_row,
-        write_bson_each_row,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.bson_fmt import read_bson_each_row
 
     path = os.path.join(tempfile.mkdtemp(prefix="chspark_bson_"), "nation.bson")
-    write_bson_each_row(_nation_df(spark, sf_dir), path)
+    formats.write(_nation_df(spark, sf_dir), path, "BSONEachRow")
     return read_bson_each_row(
         spark, path, "n_nationkey bigint, n_name string, n_regionkey bigint"
     )
@@ -318,13 +317,11 @@ def format_msgpack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MsgPack roundtrip through the pure-Python codec built from the
     public MessagePack spec (CH MsgPackRow layout: consecutive values,
     executor-side decode)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.msgpack_fmt import (
-        read_msgpack,
-        write_msgpack,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.msgpack_fmt import read_msgpack
 
     path = os.path.join(tempfile.mkdtemp(prefix="chspark_msgpack_"), "nation.msgpack")
-    write_msgpack(_nation_df(spark, sf_dir), path)
+    formats.write(_nation_df(spark, sf_dir), path, "MsgPack")
     return read_msgpack(
         spark, path, "n_nationkey bigint, n_name string, n_regionkey bigint"
     )
@@ -389,10 +386,8 @@ def format_capnproto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CapnProto framed-message roundtrip through the pure-Python codec
     (first-fit hole layout, XOR defaults, framed one-message-per-row).
     Reference: src/Processors/Formats/Impl/CapnProtoRowInputFormat.cpp."""
-    from clickhouse_25_5_3_75_stable_spark.sources.capnproto_fmt import (
-        read_capnproto,
-        write_capnproto,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.capnproto_fmt import read_capnproto
 
     schema_text = """
     struct Nation {
@@ -402,7 +397,8 @@ def format_capnproto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     """
     path = os.path.join(tempfile.mkdtemp(prefix="chspark_capnp_"), "nation.capnp.bin")
-    write_capnproto(_nation_df(spark, sf_dir), path, schema_text, "Nation")
+    formats.write(_nation_df(spark, sf_dir), path, "CapnProto",
+                  schema_text=schema_text, root="Nation")
     return read_capnproto(spark, path, schema_text, "Nation")
 
 
@@ -416,15 +412,13 @@ def format_template_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Template format roundtrip: CSV-quoted name between literal
     delimiters, resultset wrapper stripped on read.
     Reference: src/Processors/Formats/Impl/TemplateRowInputFormat.cpp."""
-    from clickhouse_25_5_3_75_stable_spark.sources.template_fmt import (
-        read_template,
-        write_template,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.template_fmt import read_template
 
     row_format = "key=${n_nationkey:Raw};name=${n_name:CSV};region=${n_regionkey:Raw}"
     path = os.path.join(tempfile.mkdtemp(prefix="chspark_tmpl_"), "nation.tpl")
-    write_template(
-        _nation_df(spark, sf_dir), path, row_format,
+    formats.write(
+        _nation_df(spark, sf_dir), path, "Template", row_format=row_format,
         resultset_format="== nation ==\n${data}\n== end ==",
     )
     return read_template(

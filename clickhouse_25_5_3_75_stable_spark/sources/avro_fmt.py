@@ -16,8 +16,8 @@ Parallelism contract (same as the other non-splittable shims): the
 unit of read parallelism is the FILE — ``binaryFile`` hands each
 container file to one task and ``mapInPandas`` decodes there (Avro
 blocks inside one file are decoded sequentially; dump many files for
-scale). The writer is export-shim tier (driver-collected, row-cap
-guarded); large outputs should stay parquet or use the jar.
+scale). The writer encodes rows collected on the driver
+(`formats.collect`); large outputs should stay parquet or use the jar.
 
 Spec coverage: null/boolean/int/long/float/double/bytes/string, record,
 array, map, union, enum (→ string), fixed (→ binary); logical types
@@ -434,24 +434,14 @@ def _encode_container(
 # ---------------------------------------------------------------------------
 
 
-def write_avro(
-    df: DataFrame, path: str, codec: str = "deflate", max_rows: int = 5_000_000
-) -> None:
-    """FORMAT Avro output without the spark-avro jar: one Object
-    Container File. Export-shim tier (driver-collected, row-cap
-    guarded) — at scale prefer ``df.write.format('avro')`` (jar) or
-    parquet."""
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        _guard_driver_export,
-    )
-
+def encode_avro(rows, schema: T.StructType, codec: str = "deflate") -> bytes:
+    """FORMAT Avro output without the spark-avro jar: collected rows as
+    one Object Container File — at scale prefer
+    ``df.write.format('avro')`` (jar) or parquet."""
     if codec not in ("null", "deflate"):
         raise ValueError("avro shim: supported codecs are 'null' and 'deflate'")
-    _guard_driver_export(df, max_rows, "write_avro")
-    avsc = _spark_to_avro(df.schema, "spark_record", nullable=False)
-    rows = [r.asDict(recursive=True) for r in df.collect()]
-    with open(path, "wb") as fh:
-        fh.write(_encode_container(rows, avsc, codec))
+    avsc = _spark_to_avro(schema, "spark_record", nullable=False)
+    return _encode_container([dict(zip(schema.names, r)) for r in rows], avsc, codec)
 
 
 def _peek_schema(path_glob: str) -> dict:

@@ -11,8 +11,8 @@ document↔0x03 (maps/structs), array↔0x04, binary↔0x05(subtype 0),
 bool↔0x08, datetime↔0x09 (int64 ms since epoch), null↔0x0A,
 int32↔0x10, int64↔0x12.
 
-Tiering matches msgpack_fmt.py: writes are the driver-collected export
-shim (row-cap guarded — big results stay parquet); reads decode in
+Tiering matches msgpack_fmt.py: writes encode rows collected on the
+driver (`formats.collect` — big results stay parquet); reads decode in
 EXECUTORS (binaryFile + mapInPandas, one task per file)."""
 
 from __future__ import annotations
@@ -134,19 +134,10 @@ def decode_document(b: bytes, pos: int = 0) -> tuple[dict, int]:
 # DataFrame surface
 # ---------------------------------------------------------------------------
 
-def write_bson_each_row(df: DataFrame, path: str, max_rows: int = 5_000_000) -> None:
-    """FORMAT BSONEachRow output: one BSON document per row,
-    concatenated. Export-shim tier (driver-collected, row-cap
-    guarded)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        _guard_driver_export,
-    )
-
-    _guard_driver_export(df, max_rows, "write_bson_each_row")
-    cols = df.columns
-    with open(path, "wb") as fh:
-        for row in df.collect():
-            fh.write(encode_document({c: row[c] for c in cols}))
+def encode_bson_each_row(rows, schema) -> bytes:
+    """FORMAT BSONEachRow output: one BSON document per collected row,
+    concatenated."""
+    return b"".join(encode_document(dict(zip(schema.names, row))) for row in rows)
 
 
 def read_bson_each_row(spark: SparkSession, path_glob: str, schema: str) -> DataFrame:

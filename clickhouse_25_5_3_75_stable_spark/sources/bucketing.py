@@ -36,10 +36,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def cobucketed_join(
     spark: SparkSession,
     left_table: str,

@@ -29,8 +29,8 @@ roundtrips (tests/test_formats.py) — stated honestly, like MsgPack.
 
 Parallelism contract: the unit of read parallelism is the FILE
 (binaryFile + mapInPandas decodes each file's message stream in the
-executor); the writer is export-shim tier (driver-collected,
-row-cap guarded). Large data should stay parquet.
+executor); the writer encodes rows collected on the driver
+(`formats.collect`). Large data should stay parquet.
 """
 
 from __future__ import annotations
@@ -41,11 +41,6 @@ import struct as _st
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-    DRIVER_EXPORT_MAX_ROWS,
-    _guard_driver_export,
-)
 
 # lg2 of field size in bits; None = pointer field
 _PRIM = {
@@ -398,14 +393,8 @@ def read_capnproto(
                        for f in target.fields])
 
 
-def write_capnproto(
-    df: DataFrame, path: str, schema_text: str, root: str,
-    max_rows: int = DRIVER_EXPORT_MAX_ROWS,
-) -> None:
-    """Write framed CapnProto messages, one per row (export-shim tier:
-    driver-collected, row-cap guarded — parquet is the scale path)."""
+def encode_capnproto(rows, schema, schema_text: str, root: str) -> bytes:
+    """Framed CapnProto messages, one per collected row (parquet is the
+    scale path)."""
     sch = parse_capnp_schema(schema_text, root)
-    _guard_driver_export(df, max_rows, "CapnProto")
-    with open(path, "wb") as fh:
-        for row in df.collect():
-            fh.write(_encode_row(row.asDict(), sch))
+    return b"".join(_encode_row(dict(zip(schema.names, row)), sch) for row in rows)

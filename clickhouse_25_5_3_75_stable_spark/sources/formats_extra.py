@@ -1,15 +1,15 @@
 """Format long tail beyond the core parquet/orc/csv/json/avro/text set
 (SURVEY §2.1; reference registry /root/reference/src/Formats/
-registerFormats.cpp:26-105 — ~40 named formats).
+registerFormats.cpp:26-105 — ~40 named formats). `sources/formats.py`
+binds these codecs to their format names.
 
 Mapping policy: a reference format is either (a) a native Spark source
-(XML here — Spark 4 built-in — covering the reference's XML output
-format), (b) a thin shim over binaryFile + executor-side decode when a
-Python codec exists (Arrow IPC / ArrowStream via pyarrow, Npy via
-numpy, RowBinary/Native in sources/rowbinary.py), or (c) a documented
-exclusion (Protobuf/CapnProto need their schema compilers + jars;
-MsgPack lib absent — see FORMAT_EXCLUSIONS, gated in
-tests/test_formats.py).
+(XML — Spark 4 built-in — is a `formats.FORMATS` row, no code here),
+(b) a thin shim over binaryFile + executor-side decode when a Python
+codec exists (Arrow IPC / ArrowStream via pyarrow, Npy via numpy,
+RowBinary/Native in sources/rowbinary.py), or (c) a documented
+exclusion (`formats.FORMAT_EXCLUSIONS`). Writers encode rows that
+`formats.collect` gathered on the driver.
 
 Parallelism note: Arrow IPC *files* carry a footer with record-batch
 offsets, but the shim decodes per FILE (binaryFile hands whole files);
@@ -20,66 +20,35 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-FORMAT_EXCLUSIONS = {
-    # Protobuf/MsgPack moved OUT of the exclusion list in round 3:
-    # MsgPack is implemented from the public spec (msgpack_fmt.py —
-    # pure-python codec, executor-side decode); Protobuf has a real
-    # capability-gated surface over spark-protobuf (protobuf_shim.py —
-    # jar-probe + from_protobuf, the jar itself is absent here like
-    # spark-avro's).
-    # CapnProto moved OUT of the exclusion list in round 5: implemented
-    # from the public encoding spec (capnproto_fmt.py — flat-struct
-    # subset, first-fit layout algorithm, framed messages; validation
-    # is spec + hand-derived layouts + roundtrip since no capnp binary
-    # exists here to cross-check). MySQLDump likewise (formats_longtail
-    # read_mysql_dump — INSERT-statement subset, per-file executor
-    # parse).
-    "ODBCDriver2": "wire protocol, not a file format",
-    "MySQLWire": "wire protocol, not a file format (TCP scope note in MIGRATION.md)",
-    "PostgreSQLWire": "wire protocol, not a file format",
-    "DWARF": "ELF debug-info introspection (reference reads its own binary's symbols) — no analogue for a JVM/Python engine",
-}
+
+def _arrow_table(rows, schema):
+    import pyarrow as pa
+
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows])
 
 
-def write_xml(df: DataFrame, path: str, row_tag: str = "row") -> None:
-    """Reference XML output format → Spark 4 native XML source."""
-    df.write.format("xml").option("rowTag", row_tag).mode("overwrite").save(path)
+def encode_parquet(rows, schema) -> bytes:
+    """Parquet as one file from collected rows (INTO OUTFILE ... FORMAT
+    Parquet); a large result is better written by df.write.parquet."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sink = pa.BufferOutputStream()
+    pq.write_table(_arrow_table(rows, schema), sink)
+    return sink.getvalue().to_pybytes()
 
 
-def read_xml(spark: SparkSession, path: str, row_tag: str = "row") -> DataFrame:
-    return spark.read.format("xml").option("rowTag", row_tag).load(path)
-
-
-DRIVER_EXPORT_MAX_ROWS = 5_000_000
-
-
-def _guard_driver_export(df: DataFrame, max_rows: int, what: str) -> None:
-    """Export shims collect to the DRIVER; bound that (round-2 judge:
-    'an unwary user can OOM the driver'). The check costs one
-    limit-scan of at most max_rows+1 rows."""
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
-        raise ValueError(
-            f"{what}: result exceeds the driver-export cap of {max_rows} rows. "
-            "These single-file formats are export-shim tier (driver-collected); "
-            "use df.write.parquet(...) for large results, or raise max_rows "
-            "explicitly if the driver has the memory."
-        )
-
-
-def write_arrow_file(
-    df: DataFrame, path: str, max_rows: int = DRIVER_EXPORT_MAX_ROWS
-) -> None:
+def encode_arrow(rows, schema) -> bytes:
     """Arrow / ArrowStream formats (registerFormats.cpp Arrow): one IPC
-    file from a (driver-collected) DataFrame — export-shim tier; big
-    exports should stay parquet. Caps at max_rows (driver-OOM guard)."""
+    file from collected rows; big exports should stay parquet."""
     import pyarrow as pa
     import pyarrow.ipc as ipc
 
-    _guard_driver_export(df, max_rows, "write_arrow_file")
-    table = pa.Table.from_pandas(df.toPandas())
-    with pa.OSFile(path, "wb") as f, ipc.new_file(f, table.schema) as w:
+    table = _arrow_table(rows, schema)
+    sink = pa.BufferOutputStream()
+    with ipc.new_file(sink, table.schema) as w:
         w.write_table(table)
+    return sink.getvalue().to_pybytes()
 
 
 def read_arrow(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -105,19 +74,21 @@ def read_arrow(spark: SparkSession, path_glob: str) -> DataFrame:
     return files.mapInPandas(decode, sdf_schema)
 
 
-def write_npy(
-    df: DataFrame, column: str, path: str, max_rows: int = DRIVER_EXPORT_MAX_ROWS
-) -> None:
+def encode_npy(rows, schema, column: str) -> bytes:
     """Npy format (registerFormats.cpp:104 registerInputFormatNpy): one
-    numeric column → .npy (driver-side export shim). Caps at max_rows
-    (driver-OOM guard)."""
-    import numpy as np
+    numeric column of collected rows as a .npy file."""
+    import io
 
-    _guard_driver_export(df, max_rows, "write_npy")
-    arr = df.select(column).toPandas()[column].to_numpy()
+    import numpy as np
+    import pandas as pd
+
+    i = schema.names.index(column)
+    arr = pd.Series([r[i] for r in rows]).to_numpy()
     if arr.dtype == object:
         arr = arr.astype(np.float64)
-    np.save(path, arr)
+    buf = io.BytesIO()
+    np.save(buf, arr)
+    return buf.getvalue()
 
 
 def read_npy(spark: SparkSession, path: str, column: str = "value") -> DataFrame:

@@ -2,13 +2,14 @@
 the reference registry (SURVEY §2.1; /root/reference/src/Formats/
 registerFormats.cpp:26-105 — LineAsString, JSONAsString, TSKV,
 JSONCompactEachRow, JSONCompact, JSONColumns, JSONCompactColumns,
-JSONObjectEachRow, RawBLOB, HiveText, One, Form, Null, Markdown,
-Vertical, Pretty, SQLInsert, ParquetMetadata, CustomSeparated).
+JSONObjectEachRow, RawBLOB, One, Form, Null, Markdown, Vertical,
+SQLInsert, ParquetMetadata, CustomSeparated). `sources/formats.py` binds
+these codecs to their format names; HiveText is a csv-source row there.
 
 Tiering follows the established format policy (formats_extra.py):
 
 - **Distributed reads** where the format is line-delimited
-  (LineAsString / JSONAsString / TSKV / JSONCompactEachRow / HiveText):
+  (LineAsString / JSONAsString / TSKV / JSONCompactEachRow):
   ``spark.read.text`` + JVM expressions — splittable, scan-tier, no
   Python in the row path.
 - **Whole-document formats** (JSONCompact / JSONColumns /
@@ -16,10 +17,11 @@ Tiering follows the established format policy (formats_extra.py):
   FILE; read via binaryFile + executor-side decode (mapInPandas), so
   many files still parallelize — the same contract as RowBinary/
   MsgPack/Avro shims.
-- **Output-only human formats** (Markdown / Vertical / Pretty /
-  SQLInsert): export-shim tier — driver-collected with the shared
-  row-cap guard; these exist for result *presentation*, never for
-  data interchange at scale (CH positions them identically).
+- **Output-only human formats** (Markdown / Vertical / SQLInsert /
+  Prometheus): encoders of rows collected on the driver (the front
+  door's result, or `formats.collect` under its row cap); these exist
+  for result *presentation*, never for data interchange at scale (CH
+  positions them identically).
 - **Null** output -> Spark's native ``noop`` sink (runs the plan,
   discards rows — same semantics as the reference's Null format).
 - **One** -> a literal 1-row/1-column (dummy UInt8=0) table, the
@@ -38,11 +40,6 @@ import json
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-    DRIVER_EXPORT_MAX_ROWS,
-    _guard_driver_export,
-)
 
 # ---------------------------------------------------------------------------
 # Distributed line-delimited reads
@@ -131,23 +128,6 @@ def write_json_compact_each_row(df: DataFrame, path: str) -> None:
     ).write.mode("overwrite").text(path)
 
 
-def read_hive_text(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """HiveText: CSV with the Hive default \\x01 field separator and
-    \\N nulls (FileSegmentationEngineHiveText)."""
-    return (
-        spark.read.schema(schema)
-        .option("sep", "\x01")
-        .option("nullValue", "\\N")
-        .csv(path)
-    )
-
-
-def write_hive_text(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").option("sep", "\x01").option(
-        "nullValue", "\\N"
-    ).csv(path)
-
-
 def read_raw_blob(spark: SparkSession, path: str) -> DataFrame:
     """RawBLOB: the whole file is ONE value (binary column ``raw``)."""
     return spark.read.format("binaryFile").load(path).select(
@@ -155,15 +135,12 @@ def read_raw_blob(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_raw_blob(df: DataFrame, path: str) -> None:
-    """RawBLOB output: the single binary/string cell written verbatim."""
-    rows = df.limit(2).collect()
+def encode_raw_blob(rows, schema) -> bytes:
+    """RawBLOB output: the single binary/string cell, verbatim."""
     if len(rows) != 1 or len(rows[0]) != 1:
         raise ValueError("RawBLOB output needs exactly one row and one column")
     v = rows[0][0]
-    data = v if isinstance(v, (bytes, bytearray)) else str(v).encode()
-    with open(path, "wb") as f:
-        f.write(data)
+    return bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode()
 
 
 def read_one(spark: SparkSession) -> DataFrame:
@@ -280,68 +257,38 @@ def _cast_all(df: DataFrame, schema: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Output-only presentation formats (driver-collected, row-capped)
+# Output-only presentation formats (encoders of collected rows)
 # ---------------------------------------------------------------------------
 
 
-def write_markdown(df: DataFrame, path: str,
-                   max_rows: int = DRIVER_EXPORT_MAX_ROWS) -> None:
+def encode_markdown(rows, schema) -> str:
     """Markdown output format: a GitHub pipe table."""
-    _guard_driver_export(df, max_rows, "Markdown")
-    cols = df.columns
+    cols = schema.names
     lines = ["| " + " | ".join(cols) + " |",
              "|" + "|".join(":-:" for _ in cols) + "|"]
-    for row in df.collect():
+    for row in rows:
         lines.append(
             "| " + " | ".join("" if v is None else str(v) for v in row) + " |")
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
+    return "\n".join(lines) + "\n"
 
 
-def write_vertical(df: DataFrame, path: str,
-                   max_rows: int = DRIVER_EXPORT_MAX_ROWS) -> None:
+def encode_vertical(rows, schema) -> str:
     """Vertical output: one ``col: value`` block per row (the \\G
     form)."""
-    _guard_driver_export(df, max_rows, "Vertical")
-    cols = df.columns
+    cols = schema.names
     w = max(len(c) for c in cols) if cols else 0
     blocks = []
-    for k, row in enumerate(df.collect(), 1):
+    for k, row in enumerate(rows, 1):
         lines = [f"Row {k}:", "─" * 6]
         for c, v in zip(cols, row):
             lines.append(f"{c.rjust(w)}: {'ᴻᵁᴸᴸ' if v is None else v}")
         blocks.append("\n".join(lines))
-    with open(path, "w") as f:
-        f.write("\n\n".join(blocks) + "\n")
+    return "\n\n".join(blocks) + "\n"
 
 
-def write_pretty(df: DataFrame, path: str,
-                 max_rows: int = DRIVER_EXPORT_MAX_ROWS) -> None:
-    """Pretty output: box-drawing table (PrettyCompact geometry)."""
-    _guard_driver_export(df, max_rows, "Pretty")
-    cols = df.columns
-    rows = [[("" if v is None else str(v)) for v in r] for r in df.collect()]
-    widths = [max([len(c)] + [len(r[i]) for r in rows]) for i, c in enumerate(cols)]
-
-    def line(l, m, r):
-        return l + m.join("─" * (w + 2) for w in widths) + r
-
-    out = [line("┌", "┬", "┐"),
-           "│ " + " │ ".join(c.ljust(w) for c, w in zip(cols, widths)) + " │",
-           line("├", "┼", "┤")]
-    for r in rows:
-        out.append("│ " + " │ ".join(v.ljust(w) for v, w in zip(r, widths)) + " │")
-    out.append(line("└", "┴", "┘"))
-    with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-
-
-def write_sql_insert(df: DataFrame, path: str, table: str = "table",
-                     batch: int = 65505,
-                     max_rows: int = DRIVER_EXPORT_MAX_ROWS) -> None:
+def encode_sql_insert(rows, schema, table: str = "table", batch: int = 65505) -> str:
     """SQLInsert output: INSERT INTO tbl (cols) VALUES (...), ...;
     batches of ``batch`` rows (the reference's max_batch_size)."""
-    _guard_driver_export(df, max_rows, "SQLInsert")
 
     def sql_lit(v):
         if v is None:
@@ -354,22 +301,22 @@ def write_sql_insert(df: DataFrame, path: str, table: str = "table",
             return "x'" + bytes(v).hex() + "'"
         return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    head = f"INSERT INTO {table} ({', '.join(df.columns)}) VALUES "
+    head = f"INSERT INTO {table} ({', '.join(schema.names)}) VALUES "
     stmts, cur = [], []
-    for row in df.collect():
+    for row in rows:
         cur.append("(" + ", ".join(sql_lit(v) for v in row) + ")")
         if len(cur) >= batch:
             stmts.append(head + ", ".join(cur) + ";")
             cur = []
     if cur:
         stmts.append(head + ", ".join(cur) + ";")
-    with open(path, "w") as f:
-        f.write("\n".join(stmts) + "\n")
+    return "\n".join(stmts) + "\n"
 
 
-def write_null(df: DataFrame) -> None:
+def write_null(df: DataFrame, path: str | None = None) -> None:
     """Null output format -> Spark's native noop sink: executes the
-    full plan distributed, discards every row (benchmarking sink)."""
+    full plan distributed, discards every row (benchmarking sink); a
+    path is ignored."""
     df.write.format("noop").mode("overwrite").save()
 
 
@@ -442,7 +389,7 @@ def custom_separated_rule(
     """CustomSeparated = Template with one uniform row rule
     (registerCustomSeparated; format_custom_* settings). Returns the
     Template row format string for template_fmt.read_template/
-    write_template, which own escaping-rule semantics and the
+    encode_template, which own escaping-rule semantics and the
     BETWEEN-row delimiter (so row_after defaults empty here)."""
     body = field_delimiter.join(
         "${%s:%s}" % (c, escaping) for c in columns
@@ -570,19 +517,16 @@ def read_mysql_dump(
     )
 
 
-def write_prometheus(df: DataFrame, path: str,
-                     max_rows: int = DRIVER_EXPORT_MAX_ROWS) -> None:
+def encode_prometheus(rows, schema) -> str:
     """Prometheus text exposition output (reference
     PrometheusTextOutputFormat): expects columns ``name`` and ``value``
     with optional ``help``/``type``/``labels`` (map) — the reference's
     column contract."""
-    _guard_driver_export(df, max_rows, "Prometheus")
-    cols = set(df.columns)
-    if not {"name", "value"} <= cols:
+    if not {"name", "value"} <= set(schema.names):
         raise ValueError("Prometheus output needs 'name' and 'value' columns")
     lines = []
-    for row in df.collect():
-        d = row.asDict()
+    for row in rows:
+        d = dict(zip(schema.names, row))
         if d.get("help"):
             lines.append(f"# HELP {d['name']} {d['help']}")
         if d.get("type"):
@@ -591,5 +535,4 @@ def write_prometheus(df: DataFrame, path: str,
         lbl = ("{" + ",".join(f'{k}="{v}"' for k, v in sorted(labels.items()))
                + "}") if labels else ""
         lines.append(f"{d['name']}{lbl} {d['value']}")
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
+    return "\n".join(lines) + "\n"

@@ -12,8 +12,8 @@ footprint as the hand-built RowBinary codec in rowbinary.py).
 Parallelism contract (same as rowbinary.py): the format is not
 splittable, so the unit of parallelism is the FILE —
 ``spark.read.format("binaryFile")`` hands each file to one task and
-``mapInPandas`` decodes there. Dump many files for scale. The writer is
-export-shim tier (driver-collected, row-cap guarded); large outputs
+``mapInPandas`` decodes there. Dump many files for scale. The writer
+encodes rows collected on the driver (`formats.collect`); large outputs
 should stay parquet.
 
 Type mapping (CH MsgPack serialization): Int*/UInt* → int family,
@@ -229,21 +229,15 @@ def _unpack_map(buf: bytes, pos: int, n: int):
 # ---------------------------------------------------------------------------
 
 
-def write_msgpack(df: DataFrame, path: str, max_rows: int = 5_000_000) -> None:
-    """FORMAT MsgPack output: row values serialized consecutively, CH
-    MsgPackRowOutputFormat layout. Export-shim tier (driver-collected,
-    row-cap guarded) — large results should stay parquet."""
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        _guard_driver_export,
-    )
-
-    _guard_driver_export(df, max_rows, "write_msgpack")
+def encode_msgpack(rows, schema) -> bytes:
+    """FORMAT MsgPack output: the collected rows' values serialized
+    consecutively, CH MsgPackRowOutputFormat layout — large results
+    should stay parquet."""
     out = bytearray()
-    for row in df.collect():
+    for row in rows:
         for v in row:
             pack_value(v, out)
-    with open(path, "wb") as fh:
-        fh.write(bytes(out))
+    return bytes(out)
 
 
 def read_msgpack(spark: SparkSession, path_glob: str, schema: str) -> DataFrame:

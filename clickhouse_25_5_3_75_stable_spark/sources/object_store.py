@@ -6,8 +6,9 @@ in registerStorages.cpp:37,105).
 Spark reads object stores through Hadoop filesystem connectors — the
 engine's job is the URI dialect and the conf knobs, not I/O:
 
-- `read_uri` normalizes the reference's URL forms (s3:// → s3a://, a
-  bare bucket/key, wasbs://, gs://) and hands Spark the right scheme;
+- `normalize_uri` maps the reference's URL forms (s3:// → s3a://, a
+  bare bucket/key, wasbs://, gs://) to the scheme Spark reads; file()
+  and url() read the result through `formats.read`;
 - `object_store_conf` returns the hadoop conf entries each store
   needs (credentials provider chain, endpoint, path-style access) so
   a cluster deployment sets them in one place.
@@ -19,8 +20,6 @@ tested — honest capability, like sources/datalake.py.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 _SCHEME_MAP = {
     "s3": "s3a",  # reference S3 engine → hadoop-aws s3a connector
@@ -63,9 +62,3 @@ def object_store_conf(kind: str, endpoint: str | None = None) -> dict[str, str]:
     if kind == "hdfs":
         return {}
     raise ValueError(f"unknown object store kind {kind!r}")
-
-
-def read_uri(spark: SparkSession, url: str, fmt: str = "parquet", **options) -> DataFrame:
-    """StorageS3/URL/File analogue: read any URI in the reference's
-    accepted forms; globs pass through (Hadoop expands them)."""
-    return spark.read.format(fmt).options(**options).load(normalize_uri(url))

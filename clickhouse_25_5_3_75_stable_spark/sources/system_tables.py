@@ -582,46 +582,24 @@ def _data_type_families(spark: SparkSession, data_dir) -> list[tuple]:
 
 
 def _formats(spark: SparkSession, data_dir) -> list[tuple]:
-    """system.formats (StorageSystemFormats.cpp): every format the
-    engine reads or writes, plus the excluded reference formats with
-    their reasons. Protobuf is supported only when the spark-protobuf
-    jar is loadable."""
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        FORMAT_EXCLUSIONS,
-    )
+    """system.formats (StorageSystemFormats.cpp): one row per name of
+    the format table, `formats.FORMATS` — is_input/is_output say a
+    reader/writer exists, exclusion_reason what the SQL doors cannot
+    reach — plus the excluded reference formats. Protobuf is supported
+    only when the spark-protobuf jar is loadable."""
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
     from clickhouse_25_5_3_75_stable_spark.sources.protobuf_shim import (
         protobuf_available,
     )
 
-    native = [
-        ("Parquet", 1, 1), ("ORC", 1, 1), ("CSV", 1, 1),
-        ("CSVWithNames", 1, 1), ("TSV", 1, 1), ("TabSeparated", 1, 1),
-        ("JSONEachRow", 1, 1), ("JSONLines", 1, 1), ("Avro", 1, 1),
-        ("LineAsString", 1, 1), ("RawBLOB", 1, 1), ("XML", 1, 1),
-        ("Arrow", 1, 1), ("ArrowStream", 1, 1), ("Npy", 1, 1),
-        ("Regexp", 1, 0), ("Values", 1, 0), ("RowBinary", 1, 1),
-        ("Native", 1, 1), ("Pretty", 0, 1), ("Vertical", 0, 1),
-        ("MsgPack", 1, 1), ("BSONEachRow", 1, 1), ("Template", 1, 1),
-        ("CustomSeparated", 1, 1), ("TSKV", 1, 1),
-        ("JSONAsString", 1, 0), ("JSONCompactEachRow", 1, 1),
-        ("JSONCompact", 1, 0), ("JSONColumns", 1, 0),
-        ("JSONCompactColumns", 1, 0), ("JSONObjectEachRow", 1, 0),
-        ("HiveText", 1, 1), ("One", 1, 0), ("Form", 1, 0),
-        ("Null", 0, 1), ("Markdown", 0, 1), ("SQLInsert", 0, 1),
-        ("ParquetMetadata", 1, 0), ("CapnProto", 1, 1),
-        ("MySQLDump", 1, 0), ("Prometheus", 0, 1),
-    ]
-    rows = [(n, i, o, None) for n, i, o in native]
-    # Protobuf is honest about the classpath: supported when the
-    # spark-protobuf jar is loadable, excluded-with-reason otherwise
-    # (review finding: an unconditional is_input=1 row pointed users
-    # at a NotImplementedError)
+    rows = formats.system_rows()
     if protobuf_available(spark):
-        rows += [("Protobuf", 1, 1, None), ("ProtobufSingle", 1, 0, None)]
-    else:
-        why = "spark-protobuf jar not on the classpath (sources/protobuf_shim.py has the recipe)"
-        rows += [("Protobuf", 0, 0, why), ("ProtobufSingle", 0, 0, why)]
-    return rows + [(n, 0, 0, why) for n, why in sorted(FORMAT_EXCLUSIONS.items())]
+        return rows
+    # without the jar, an is_input=1 row would point users at a
+    # NotImplementedError
+    why = "spark-protobuf jar not on the classpath (sources/protobuf_shim.py has the recipe)"
+    return [(n, 0, 0, why) if n.startswith("Protobuf") else (n, i, o, r)
+            for n, i, o, r in rows]
 
 
 def _time_zones(spark: SparkSession, data_dir) -> list[tuple]:

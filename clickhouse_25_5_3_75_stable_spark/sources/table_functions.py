@@ -117,23 +117,11 @@ def zeros(spark: SparkSession, n: int) -> DataFrame:
 
 
 def format_table(spark: SparkSession, fmt: str, data: str, schema: str | None = None) -> DataFrame:
-    """format('JSONEachRow'|'CSV'|'TSV', 'inline data') (reference
+    """format('<format>', 'inline data') (reference
     src/TableFunctions/TableFunctionFormat.cpp): parse an inline
-    literal as a table. Driver-side by construction (the literal lives
-    in the query text), parallelism is irrelevant at literal sizes."""
-    from clickhouse_25_5_3_75_stable_spark.sources import catalog
+    literal as a table, in any `formats.FORMATS` format a csv or json
+    source reads. The literal lives in the query text, so parallelism
+    is irrelevant at its size."""
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
 
-    fmt_l = fmt.lower()
-    if fmt_l in ("jsoneachrow", "json"):
-        reader = spark.read.schema(schema) if schema else spark.read
-        return catalog.read_text(spark, reader, "json", data)
-    if fmt_l in ("csv", "csvwithnames", "tsv", "tsvwithnames"):
-        sep = "\t" if fmt_l.startswith("tsv") else ","
-        header = fmt_l.endswith("withnames")
-        reader = spark.read.option("header", header).option("sep", sep)
-        if schema:
-            reader = reader.schema(schema)
-        else:
-            reader = reader.option("inferSchema", True)
-        return catalog.read_text(spark, reader, "csv", data)
-    raise ValueError(f"format_table: unsupported inline format {fmt!r}")
+    return formats.read_inline(spark, fmt, data, schema)

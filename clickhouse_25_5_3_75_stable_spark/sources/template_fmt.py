@@ -14,7 +14,7 @@ escaping rules (the reference's set, XML excluded — documented):
 - ``CSV``            — RFC double-quote when needed
 - ``JSON``           — json.dumps
 
-Writes are the driver-collected export shim (row-cap guarded); reads
+Writes encode rows collected on the driver (`formats.collect`); reads
 parse in EXECUTORS (binaryFile + mapInPandas) with a regex compiled
 from the row format."""
 
@@ -99,30 +99,22 @@ def format_row(row: dict, parts: list[tuple[str, str | None, str]]) -> str:
     return "".join(out)
 
 
-def write_template(
-    df: DataFrame,
-    path: str,
+def encode_template(
+    rows,
+    schema,
     row_format: str,
     resultset_format: str = "${data}",
     row_delimiter: str = "\n",
-    max_rows: int = 5_000_000,
-) -> None:
-    """FORMAT Template output (export shim, row-cap guarded)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        _guard_driver_export,
-    )
-
-    _guard_driver_export(df, max_rows, "write_template")
+) -> str:
+    """FORMAT Template output of collected rows."""
     parts = parse_row_format(row_format)
     body = row_delimiter.join(
-        format_row(r.asDict(), parts) for r in df.collect()
+        format_row(dict(zip(schema.names, r)), parts) for r in rows
     )
     m = _PLACEHOLDER.search(resultset_format)
     if not m or m.group(1) != "data":
         raise ValueError("Template: resultset format needs a ${data} placeholder")
-    text = resultset_format[:m.start()] + body + resultset_format[m.end():]
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write(text)
+    return resultset_format[:m.start()] + body + resultset_format[m.end():]
 
 
 def _row_regex(parts: list[tuple[str, str | None, str]]) -> re.Pattern:

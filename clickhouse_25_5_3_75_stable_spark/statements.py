@@ -25,7 +25,7 @@ import re
 from pyspark.sql import DataFrame
 
 from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError
-from clickhouse_25_5_3_75_stable_spark.sources import catalog
+from clickhouse_25_5_3_75_stable_spark.sources import catalog, formats
 from clickhouse_25_5_3_75_stable_spark.sources.catalog import local_rows
 from clickhouse_25_5_3_75_stable_spark.sources.system_tables import system_table
 
@@ -549,8 +549,9 @@ def _lake(name: str):
 
 def _insert(st: _Stmt):
     """INSERT INTO <t> VALUES (...) | SELECT ... | FROM INFILE 'p'
-    [FORMAT X] | FORMAT JSONEachRow/CSV <inline rows> (the
-    clickhouse-local inline-data idiom)."""
+    [FORMAT X] (the reference's client-side bulk load; Parquet when no
+    FORMAT is named) | FORMAT X <inline rows> (the clickhouse-local
+    inline-data idiom). The format comes from `formats.FORMATS`."""
     from pyspark.sql import functions as F
 
     spark = st.spark
@@ -561,21 +562,17 @@ def _insert(st: _Stmt):
     tname, mode_kw, rest = m.group(1), m.group(2).upper(), m.group(3)
     target = spark.table(tname)
     if mode_kw == "FROM":
-        df = _read_infile(spark, target.schema, rest)
+        im = re.match(r"(?is)^INFILE\s+'([^']+)'\s*(?:FORMAT\s+(\w+))?$", rest.strip())
+        if not im:
+            raise ValueError("unsupported INSERT FROM shape (need "
+                             "FROM INFILE '<path>' [FORMAT <name>])")
+        df = formats.read(spark, im.group(2) or "Parquet", im.group(1), target.schema,
+                          sql=True)
     elif mode_kw == "VALUES":
         df = spark.sql(f"SELECT * FROM VALUES {rest} AS t({', '.join(target.columns)})")
     elif mode_kw == "FORMAT":
         fmt_name, _, payload = rest.partition("\n")
-        fmt_name = fmt_name.strip().lower()
-        reader = spark.read.schema(target.schema)
-        if fmt_name in ("jsoneachrow", "jsonlines", "ndjson"):
-            df = catalog.read_text(spark, reader, "json", payload)
-        elif fmt_name in ("csv", "csvwithnames"):
-            reader = reader.option("header", fmt_name == "csvwithnames")
-            df = catalog.read_text(spark, reader, "csv", payload)
-        else:
-            raise ValueError(f"inline INSERT FORMAT {fmt_name!r} unsupported "
-                             "(JSONEachRow and CSV[WithNames] are)")
+        df = formats.read_inline(spark, fmt_name.strip(), payload, target.schema)
     else:
         df = st.query("SELECT " + rest)
     df = df.select(*[F.col(c).cast(f.dataType).alias(f.name)
@@ -607,46 +604,6 @@ def _insert(st: _Stmt):
     catalog.register(spark, st.dir, tname)
     notify_all_views(tname)
     return st.ok(tname)
-
-
-def _read_infile(spark, schema, rest: str):
-    """INSERT INTO t FROM INFILE 'path' [FORMAT X] — the reference's
-    client-side bulk load (ParserInsertQuery.cpp infile branch); the
-    FORMAT names the file's encoding (Parquet when absent)."""
-    im = re.match(r"(?is)^INFILE\s+'([^']+)'\s*(?:FORMAT\s+(\w+))?$", rest.strip())
-    if not im:
-        raise ValueError("unsupported INSERT FROM shape (need "
-                         "FROM INFILE '<path>' [FORMAT <name>])")
-    infile, in_fmt = im.group(1), (im.group(2) or "Parquet").lower()
-    ddl_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
-    if in_fmt == "parquet":
-        return spark.read.schema(schema).parquet(infile)
-    if in_fmt in ("csv", "csvwithnames"):
-        return (spark.read.schema(schema)
-                .option("header", in_fmt == "csvwithnames").csv(infile))
-    if in_fmt in ("jsoneachrow", "ndjson"):
-        return spark.read.schema(schema).json(infile)
-    if in_fmt == "avro":
-        from clickhouse_25_5_3_75_stable_spark.sources.avro_fmt import read_avro
-
-        return read_avro(spark, infile)
-    if in_fmt == "bsoneachrow":
-        from clickhouse_25_5_3_75_stable_spark.sources.bson_fmt import (
-            read_bson_each_row,
-        )
-
-        return read_bson_each_row(spark, infile, ddl_schema)
-    if in_fmt == "msgpack":
-        from clickhouse_25_5_3_75_stable_spark.sources.msgpack_fmt import read_msgpack
-
-        return read_msgpack(spark, infile, ddl_schema)
-    if in_fmt in ("rowbinary", "native"):
-        from clickhouse_25_5_3_75_stable_spark.sources import rowbinary
-
-        rd = rowbinary.read_rowbinary if in_fmt == "rowbinary" else rowbinary.read_native
-        return rd(spark, infile,
-                  rowbinary.wire_schema(schema.fields, f"INFILE FORMAT {in_fmt}"))
-    raise ValueError(f"INSERT FROM INFILE FORMAT {in_fmt!r} unsupported")
 
 
 def _delete(st: _Stmt):

@@ -40,7 +40,6 @@ _SLOW_NODEIDS = {
     "tests/test_behavioral.py::test_funnel_window_cutoff",
     "tests/test_behavioral.py::test_sequence_match_time_constraints",
     "tests/test_behavioral.py::test_window_funnel_strict_modes",
-    "tests/test_chsql.py::test_cli_outfile_binary_formats",
     "tests/test_chsql.py::test_review_findings_round3b",
     "tests/test_chsql_property.py::test_agg_shim_matches_duckdb",
     "tests/test_chsql_property.py::test_datetime_shim_matches_duckdb",

@@ -1036,12 +1036,12 @@ def test_lake_and_file_table_functions(spark, tmp_path):
     """deltaLake()/file() in the FROM clause materialize through the
     Python readers (TableFunctionObjectStorage.cpp:354-360); string
     literals containing 'file(...)' must NOT be rewritten; schema-needing
-    formats raise with a pointer to the Python API."""
+    formats raise with a pointer to INSERT ... FROM INFILE."""
     import pytest as _pytest
 
     from clickhouse_25_5_3_75_stable_spark.chsql import ChSqlError, ch_sql
 
-    # file(): CSV with header through read_uri
+    # file(): CSV with header through the format table's csv source
     csv = tmp_path / "pts.csv"
     csv.write_text("a,b\n1,x\n2,y\n3,z\n")
     r = ch_sql(
@@ -1071,7 +1071,7 @@ def test_lake_and_file_table_functions(spark, tmp_path):
     lit = ch_sql(spark, "SELECT 'file(''x'')' AS s").collect()[0]
     assert lit.s == "file('x')"
 
-    # schema-needing format -> ChSqlError naming the Python reader
+    # schema-needing format -> ChSqlError naming the door that has one
     with _pytest.raises(ChSqlError, match="explicit schema"):
         ch_sql(spark, f"SELECT * FROM file('{csv}', 'RowBinary')")
 
@@ -1113,9 +1113,10 @@ def test_column_transformers(spark):
 
 
 def test_cli_outfile_binary_formats(spark, tmp_path):
-    """INTO OUTFILE ... FORMAT <codec> routes through the hand-built
-    writers and the output decodes back exactly (reference:
-    ParserQueryWithOutput.cpp accepts any registered output format)."""
+    """INTO OUTFILE ... FORMAT <codec> encodes the collected rows with
+    the format table's writer and the output decodes back exactly
+    (reference: ParserQueryWithOutput.cpp accepts any registered output
+    format)."""
     import io
 
     from clickhouse_25_5_3_75_stable_spark.__main__ import run_local

@@ -190,62 +190,55 @@ def test_protobuf_gated_exclusion(spark):
 
 def test_xml_roundtrip(spark, tmp_path):
     """XML format via Spark 4's built-in source (registerFormats XML)."""
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        read_xml,
-        write_xml,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
 
     df = spark.range(5).selectExpr("id", "concat('name_', id) AS name")
     p = str(tmp_path / "x")
-    write_xml(df, p)
-    got = sorted((r.id, r.name) for r in read_xml(spark, p).collect())
+    formats.write(df, p, "XML")
+    got = sorted((r.id, r.name) for r in formats.read(spark, "XML", p).collect())
     assert got == [(i, f"name_{i}") for i in range(5)]
 
 
 def test_arrow_ipc_roundtrip(spark, tmp_path):
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        read_arrow,
-        write_arrow_file,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import read_arrow
 
     df = spark.range(10).selectExpr("id", "id * 2.5 AS v")
     f = str(tmp_path / "part0.arrow")
-    write_arrow_file(df, f)
+    formats.write(df, f, "Arrow")
     got = sorted((r.id, r.v) for r in read_arrow(spark, str(tmp_path)).collect())
     assert got == [(i, i * 2.5) for i in range(10)]
 
 
 def test_npy_roundtrip(spark, tmp_path):
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        read_npy,
-        write_npy,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import read_npy
 
     df = spark.range(6).selectExpr("id * 1.5 AS v")
     f = str(tmp_path / "t.npy")
-    write_npy(df, "v", f)
+    formats.write(df, f, "Npy", column="v")
     got = sorted(r.value for r in read_npy(spark, f).collect())
     assert got == [i * 1.5 for i in range(6)]
 
 
-def test_driver_export_guards_trip(spark, tmp_path):
-    """write_arrow_file / write_npy collect to the driver — the
-    row-count guard must refuse oversized exports with the parquet
-    alternative named (round-2 judge: driver-OOM risk)."""
+def test_driver_export_guards_trip(spark, tmp_path, monkeypatch):
+    """The Arrow / Npy writers encode rows collected on the driver —
+    the row-count guard of that one collection must refuse oversized
+    exports with the parquet alternative named (an unbounded collect
+    can run the driver out of memory)."""
     import pytest
 
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        write_arrow_file,
-        write_npy,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
 
     df = spark.range(10).selectExpr("id", "id * 1.0 AS v")
+    monkeypatch.setattr(formats, "DRIVER_EXPORT_MAX_ROWS", 5)
     with pytest.raises(ValueError, match="parquet"):
-        write_arrow_file(df, str(tmp_path / "cap.arrow"), max_rows=5)
+        formats.write(df, str(tmp_path / "cap.arrow"), "Arrow")
     with pytest.raises(ValueError, match="parquet"):
-        write_npy(df, "v", str(tmp_path / "cap.npy"), max_rows=5)
+        formats.write(df, str(tmp_path / "cap.npy"), "Npy", column="v")
     # under the cap still works
-    write_arrow_file(df, str(tmp_path / "ok.arrow"), max_rows=10)
+    monkeypatch.setattr(formats, "DRIVER_EXPORT_MAX_ROWS", 10)
+    formats.write(df, str(tmp_path / "ok.arrow"), "Arrow")
 
 
 def test_external_bridge_cap_trips(spark, tmp_path):
@@ -273,9 +266,7 @@ def test_external_bridge_cap_trips(spark, tmp_path):
 
 
 def test_format_exclusions_documented():
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_extra import (
-        FORMAT_EXCLUSIONS,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.formats import FORMAT_EXCLUSIONS
 
     # Protobuf/MsgPack graduated to real shims in round 3,
     # CapnProto in round 5 (capnproto_fmt.py)
@@ -292,10 +283,8 @@ def test_msgpack_roundtrip(spark, tmp_path):
     decode, including NULLs, negatives, dates, and timestamps."""
     import datetime as _dt
 
-    from clickhouse_25_5_3_75_stable_spark.sources.msgpack_fmt import (
-        read_msgpack,
-        write_msgpack,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.msgpack_fmt import read_msgpack
 
     df = spark.createDataFrame(
         [
@@ -308,7 +297,7 @@ def test_msgpack_roundtrip(spark, tmp_path):
         "k bigint, s string, v double, b boolean, d date, ts timestamp",
     )
     out = str(tmp_path / "dump.msgpack")
-    write_msgpack(df, out)
+    formats.write(df, out, "MsgPack")
     got = read_msgpack(
         spark, out, "k bigint, s string, v double, b boolean, d date, ts timestamp"
     )
@@ -345,13 +334,14 @@ def test_msgpack_codec_scalars_exhaustive():
     assert got == vals
 
 
-def test_msgpack_writer_guard_trips(spark, tmp_path):
+def test_msgpack_writer_guard_trips(spark, tmp_path, monkeypatch):
     import pytest
 
-    from clickhouse_25_5_3_75_stable_spark.sources.msgpack_fmt import write_msgpack
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
 
+    monkeypatch.setattr(formats, "DRIVER_EXPORT_MAX_ROWS", 3)
     with pytest.raises(ValueError, match="parquet"):
-        write_msgpack(spark.range(10), str(tmp_path / "cap.msgpack"), max_rows=3)
+        formats.write(spark.range(10), str(tmp_path / "cap.msgpack"), "MsgPack")
 
 
 def test_protobuf_gated_surface(spark, tmp_path):
@@ -438,11 +428,11 @@ def test_bson_each_row_roundtrip(spark, tmp_path):
     split, double, string, datetime."""
     import datetime as dt
 
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
     from clickhouse_25_5_3_75_stable_spark.sources.bson_fmt import (
         decode_document,
         encode_document,
         read_bson_each_row,
-        write_bson_each_row,
     )
 
     # codec-level roundtrip incl. nested doc/array
@@ -459,7 +449,7 @@ def test_bson_each_row_roundtrip(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, schema)
     p = str(tmp_path / "rows.bson")
-    write_bson_each_row(df, p)
+    formats.write(df, p, "BSONEachRow")
     got = sorted(
         tuple(r) for r in read_bson_each_row(spark, p, schema).collect()
     )
@@ -470,10 +460,8 @@ def test_template_roundtrip_and_escaping(spark, tmp_path):
     """FORMAT Template (sources/template_fmt.py): ${col:Rule}
     placeholders, resultset wrapper, CSV/Quoted/JSON escaping
     roundtrip."""
-    from clickhouse_25_5_3_75_stable_spark.sources.template_fmt import (
-        read_template,
-        write_template,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.template_fmt import read_template
 
     schema = "id bigint, name string, score double"
     rows = [(1, "plain", 1.5), (2, "with,comma", -2.0), (3, "it's", 0.25),
@@ -482,7 +470,7 @@ def test_template_roundtrip_and_escaping(spark, tmp_path):
     row_fmt = "id=${id:Raw}; n=${name:Quoted}; s=${score:JSON}"
     rs_fmt = "== begin ==\n${data}\n== end ==\n"
     p = str(tmp_path / "out.tpl")
-    write_template(df, p, row_fmt, rs_fmt)
+    formats.write(df, p, "Template", row_format=row_fmt, resultset_format=rs_fmt)
     text = open(p).read()
     assert text.startswith("== begin ==\n") and text.endswith("\n== end ==\n")
     assert "n='with,comma'" in text and "n='it\\'s'" in text
@@ -494,17 +482,15 @@ def test_template_roundtrip_and_escaping(spark, tmp_path):
 
 
 def test_template_csv_rule(spark, tmp_path):
-    from clickhouse_25_5_3_75_stable_spark.sources.template_fmt import (
-        read_template,
-        write_template,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.template_fmt import read_template
 
     schema = "a string, b bigint"
     rows = [("x,y", 1), ('has"quote', 2), ("plain", 3)]
     df = spark.createDataFrame(rows, schema)
     row_fmt = "${a:CSV},${b:Raw}"
     p = str(tmp_path / "c.tpl")
-    write_template(df, p, row_fmt)
+    formats.write(df, p, "Template", row_format=row_fmt)
     got = sorted(tuple(r) for r in read_template(spark, p, row_fmt, schema).collect())
     assert got == sorted(rows)
 
@@ -530,15 +516,13 @@ def test_avro_shim_roundtrip(sample, spark, tmp_path):
     src/Formats/registerFormats.cpp Avro entries; the reference links
     avro-cpp directly so Avro needs no plugin there — the shim restores
     that property here). Both spec codecs."""
-    from clickhouse_25_5_3_75_stable_spark.sources.avro_fmt import (
-        read_avro,
-        write_avro,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.avro_fmt import read_avro
 
     want = sorted(tuple(r) for r in sample.collect())
     for codec in ("deflate", "null"):
         p = str(tmp_path / f"o_{codec}.avro")
-        write_avro(sample, p, codec=codec)
+        formats.write(sample, p, "Avro", codec=codec)
         back = read_avro(spark, p)
         assert back.schema == sample.schema
         assert sorted(tuple(r) for r in back.collect()) == want
@@ -549,10 +533,8 @@ def test_avro_shim_nested_types(spark, tmp_path):
     through the container format."""
     from decimal import Decimal
 
-    from clickhouse_25_5_3_75_stable_spark.sources.avro_fmt import (
-        read_avro,
-        write_avro,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.avro_fmt import read_avro
 
     schema = (
         "id bigint, tags array<int>, attrs map<string,string>, "
@@ -567,7 +549,7 @@ def test_avro_shim_nested_types(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, schema)
     p = str(tmp_path / "nested.avro")
-    write_avro(df, p)
+    formats.write(df, p, "Avro")
     back = read_avro(spark, p)
     got = sorted(
         tuple(r) for r in back.collect()
@@ -581,6 +563,7 @@ def test_avro_shim_nested_types(spark, tmp_path):
 
 
 def test_line_as_string_and_raw_blob(spark, tmp_path):
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
     from clickhouse_25_5_3_75_stable_spark.sources import formats_longtail as L
 
     p = tmp_path / "lines.txt"
@@ -594,7 +577,7 @@ def test_line_as_string_and_raw_blob(spark, tmp_path):
     got = L.read_raw_blob(spark, str(blob)).collect()
     assert len(got) == 1 and bytes(got[0].raw) == b"\x00\x01raw\xff"
     out = tmp_path / "out.bin"
-    L.write_raw_blob(L.read_raw_blob(spark, str(blob)), str(out))
+    formats.write(L.read_raw_blob(spark, str(blob)), str(out), "RawBLOB")
     assert out.read_bytes() == b"\x00\x01raw\xff"
 
 
@@ -660,12 +643,13 @@ def test_json_document_formats(spark, tmp_path):
 
 
 def test_hive_text_one_form(spark, tmp_path):
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
     from clickhouse_25_5_3_75_stable_spark.sources import formats_longtail as L
 
     df = spark.createDataFrame([(1, "x"), (2, None)], "id int, s string")
     p = str(tmp_path / "hive")
-    L.write_hive_text(df, p)
-    back = L.read_hive_text(spark, p, "id int, s string")
+    formats.write(df, p, "HiveText")
+    back = formats.read(spark, "HiveText", p, "id int, s string")
     assert sorted(tuple(r) for r in back.collect()) == [(1, "x"), (2, None)]
 
     one = L.read_one(spark).collect()
@@ -677,25 +661,27 @@ def test_hive_text_one_form(spark, tmp_path):
 
 
 def test_presentation_writers(spark, tmp_path):
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
     from clickhouse_25_5_3_75_stable_spark.sources import formats_longtail as L
 
     df = spark.createDataFrame([(1, "a"), (2, None)], "id int, s string")
     md = tmp_path / "t.md"
-    L.write_markdown(df.orderBy("id"), str(md))
+    formats.write(df.orderBy("id"), str(md), "Markdown")
     text = md.read_text()
     assert "| id | s |" in text and "| 1 | a |" in text
 
     v = tmp_path / "t.vertical"
-    L.write_vertical(df.orderBy("id"), str(v))
+    formats.write(df.orderBy("id"), str(v), "Vertical")
     assert "Row 1:" in v.read_text() and "id: 1" in v.read_text()
 
+    # the one Pretty: a pipe table under a dashed rule
     pr = tmp_path / "t.pretty"
-    L.write_pretty(df.orderBy("id"), str(pr))
+    formats.write(df.orderBy("id"), str(pr), "Pretty")
     t = pr.read_text()
-    assert t.startswith("┌") and "│" in t
+    assert t.splitlines() == ["id | s   ", "---+-----", "1  | a   ", "2  | None"]
 
     sq = tmp_path / "t.sql"
-    L.write_sql_insert(df.orderBy("id"), str(sq), table="orders")
+    formats.write(df.orderBy("id"), str(sq), "SQLInsert", table="orders")
     t = sq.read_text()
     assert t.startswith("INSERT INTO orders (id, s) VALUES ")
     assert "(1, 'a')" in t and "(2, NULL)" in t
@@ -718,16 +704,14 @@ def test_parquet_metadata(spark, tmp_path):
 
 
 def test_custom_separated_bridge(spark, tmp_path):
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
     from clickhouse_25_5_3_75_stable_spark.sources import formats_longtail as L
-    from clickhouse_25_5_3_75_stable_spark.sources.template_fmt import (
-        read_template,
-        write_template,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources.template_fmt import read_template
 
     df = spark.createDataFrame([(1, "a;x"), (2, "b")], "id int, s string")
     rule = L.custom_separated_rule(["id", "s"], field_delimiter=";")
     p = str(tmp_path / "cs")
-    write_template(df, p, rule)
+    formats.write(df, p, "CustomSeparated", row_format=rule)
     back = read_template(spark, p, rule, "id int, s string")
     assert sorted(tuple(r) for r in back.collect()) == sorted(
         tuple(r) for r in df.collect())
@@ -771,10 +755,8 @@ def test_capnproto_roundtrip_spark(spark, tmp_path):
     """Framed messages (one per row, the reference CapnProtoRow*Format
     contract) through the Spark surface, incl. defaults (XOR encoding),
     NULL pointers, and empty lists."""
-    from clickhouse_25_5_3_75_stable_spark.sources.capnproto_fmt import (
-        read_capnproto,
-        write_capnproto,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
+    from clickhouse_25_5_3_75_stable_spark.sources.capnproto_fmt import read_capnproto
 
     df = spark.createDataFrame(
         [
@@ -785,7 +767,7 @@ def test_capnproto_roundtrip_spark(spark, tmp_path):
         "f array<double>, g binary, h tinyint",
     )
     p = str(tmp_path / "rows.capnp.bin")
-    write_capnproto(df, p, _CAPNP_SCHEMA, "Row")
+    formats.write(df, p, "CapnProto", schema_text=_CAPNP_SCHEMA, root="Row")
     back = read_capnproto(spark, p, _CAPNP_SCHEMA, "Row")
     got = sorted(
         (r.a, r.b, r.c, r.d, r.e,
@@ -839,9 +821,7 @@ INSERT INTO `other` VALUES (99,'skip',9.9);
 
 
 def test_prometheus_writer(spark, tmp_path):
-    from clickhouse_25_5_3_75_stable_spark.sources.formats_longtail import (
-        write_prometheus,
-    )
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
 
     df = spark.createDataFrame(
         [("http_requests_total", 1027.0, "Total requests.", "counter",
@@ -850,7 +830,7 @@ def test_prometheus_writer(spark, tmp_path):
         "name string, value double, help string, type string, labels map<string,string>",
     )
     p = tmp_path / "metrics.prom"
-    write_prometheus(df.orderBy("name"), str(p))
+    formats.write(df.orderBy("name"), str(p), "Prometheus")
     text = p.read_text()
     assert "# HELP http_requests_total Total requests." in text
     assert "# TYPE http_requests_total counter" in text

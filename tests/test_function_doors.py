@@ -168,9 +168,9 @@ PROBES = {
     "trimright": [("concat(' ', s, ' ')",)], "ucase": [("s",)], "upperutf8": [("s",)],
     "visitparamextractfloat": [("j", L("f"))], "visitparamextractint": [("j", L("a"))],
     "visitparamextractstring": [("j", L("b"))],
-    # the Column door's struct names its fields after its arguments,
-    # the SQL door's _1, _2: compared by value
     "tuple": [("s", "i")],
+    "tupleelement": [("named_struct('_1', s, '_2', i)", L(2)),
+                     ("named_struct('_1', s, '_2', i)", L("_1"))],
 }
 
 # values differ run to run: compared by type
@@ -184,7 +184,6 @@ SQL_ONLY = {
     "empty(s)": [False, None, True, False],
     "empty(arrayFilter(v -> v > 2, a))": [False, None, True, False],
     "notEmpty(arrayDistinct(a))": [True, None, False, True],
-    "tupleElement(tuple(s, i), 2)": [5, None, -7, 0],
 }
 
 
@@ -241,8 +240,8 @@ def test_both_doors_agree(spark, probe_view, batch):
     bad = []
     for k, (name, call) in enumerate(calls):
         c = f"r{k}"
-        if name != "tuple" and (by_column.schema[c].dataType.simpleString()
-                                != by_sql.schema[c].dataType.simpleString()):
+        if (by_column.schema[c].dataType.simpleString()
+                != by_sql.schema[c].dataType.simpleString()):
             bad.append((name, call, by_column.schema[c].dataType, by_sql.schema[c].dataType))
         if name not in VOLATILE:
             vc, vs = [_norm(r[c]) for r in got_col], [_norm(r[c]) for r in got_sql]
@@ -263,9 +262,34 @@ def test_both_doors_agree(spark, probe_view, batch):
         ("tostartofmonth", ("t",)): [datetime.date(2024, 2, 1), None,
                                      datetime.date(1999, 12, 1), datetime.date(2024, 3, 1)],
     }
+    # JSONExtract*: the type's default for a missing key ('{}', and 'a'
+    # of '[4,5]'), NULL for a NULL document
+    for name, want in [
+        ("jsonextractint", [1, None, 0, 0]), ("visitparamextractint", [1, None, 0, 0]),
+        ("simplejsonextractint", [1, None, 0, 0]), ("jsonextractfloat", [2.5, None, 0.0, 0.0]),
+        ("visitparamextractfloat", [2.5, None, 0.0, 0.0]),
+        ("jsonextractbool", [True, None, False, False]),
+        ("jsonextractstring", ["x", None, "", ""]),
+        ("visitparamextractstring", ["x", None, "", ""]),
+        ("simplejsonextractstring", ["x", None, "", ""]),
+    ]:
+        fixed[(name, PROBES[name][0])] = want
+    fixed[("jsonextractint", PROBES["jsonextractint"][1])] = [2, None, 0, 0]
     for k, call in enumerate(calls):
         if call in fixed:
             assert [r[f"r{k}"] for r in got_col] == fixed[call], call
+
+
+def test_tuple_element_of_a_tuple_agrees_across_doors(spark, probe_view):
+    """Both doors name a tuple's fields _1.._N, so tupleElement(t, N)
+    reads the same field of a tuple either door built."""
+    by_column = spark.table(probe_view).select(
+        "rid", ch("tupleElement", ch("tuple", F.col("s"), F.col("i")), 2).alias("r"))
+    by_sql = ch_sql(spark, f"SELECT rid, tupleElement(tuple(s, i), 2) AS r FROM {probe_view}")
+    want = [5, None, -7, 0]
+    assert [r.r for r in sorted(by_column.collect())] == want
+    assert [r.r for r in sorted(by_sql.collect())] == want
+    assert by_column.schema["r"].dataType == by_sql.schema["r"].dataType
 
 
 def test_sql_only_rewrites(spark, probe_view):

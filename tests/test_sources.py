@@ -227,10 +227,10 @@ def test_zeros_and_format_table(spark, monkeypatch):
 
 
 def test_object_store_uri_and_conf(spark, tmp_path):
+    from clickhouse_25_5_3_75_stable_spark.sources import formats
     from clickhouse_25_5_3_75_stable_spark.sources.object_store import (
         normalize_uri,
         object_store_conf,
-        read_uri,
     )
 
     assert normalize_uri("s3://bucket/key/*.parquet") == "s3a://bucket/key/*.parquet"
@@ -246,7 +246,7 @@ def test_object_store_uri_and_conf(spark, tmp_path):
     # same code path via file:// (Hadoop FileSystem)
     p = str(tmp_path / "t")
     spark.range(4).write.parquet(p)
-    assert read_uri(spark, p).count() == 4
+    assert formats.read(spark, "Parquet", normalize_uri(p), sql=True).count() == 4
 
 
 def test_parquet_index_mergetree_index_analogue(spark):
